@@ -4,8 +4,8 @@ import scala.annotation.tailrec
 import scala.concurrent.duration._
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 import graft.io.{LakeSink, Source}
 import graft.ops.Ingest
@@ -57,11 +57,13 @@ object NightlyEtl {
     retry(retries, delay) {
       require(sink.probe(spark), s"sink probe failed: $sink")
     }
+    // The write counts its own rows (one scan of the extract); each
+    // attempt observes through a fresh Observation, which fires once.
     val written = retry(retries, delay) {
-      val extracted = source.read(spark)
-      val partitioned = Ingest.withDateParts(extracted, col(timeCol))
-      sink.write(partitioned)
-      partitioned.count()
+      val rows = Observation("etl_rows")
+      val partitioned = Ingest.withDateParts(source.read(spark), col(timeCol))
+      sink.write(partitioned.observe(rows, count(lit(1)).as("rows")))
+      rows.get("rows").asInstanceOf[Long]
     }
     // post-write verification (L1 step 4): lake row count matches extract
     val inLake = sink.read(spark).count()

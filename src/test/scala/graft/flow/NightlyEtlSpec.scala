@@ -32,6 +32,30 @@ class NightlyEtlSpec extends SparkSpec with graft.LowStatePartitions {
     assert(d1.exists())
   }
 
+  test("the write counts the extract: one scan, returned rows equal the source count") {
+    val dir = tmp()
+    spark.range(0, 500, 1, 4)
+      .select(timestamp_seconds(lit(1735689600L) + col("id") * 3600L).cast("timestamp_ntz").as("timestamp"),
+        col("id").cast("double").as("value"))
+      .write.parquet(s"$dir/src")
+    // Every row the source yields passes a counting filter, so the
+    // accumulator is the number of rows scanned from the extract.
+    val scanned = spark.sparkContext.longAccumulator("etl_scanned")
+    val tally = udf { (_: Double) => scanned.add(1); true }.asNondeterministic()
+    val source = new graft.io.Source {
+      def read(s: org.apache.spark.sql.SparkSession) =
+        s.read.parquet(s"$dir/src").filter(tally(col("value")))
+      def readStream(s: org.apache.spark.sql.SparkSession) = sys.error("batch-only test double")
+      def probe(s: org.apache.spark.sql.SparkSession) = true
+    }
+    val sink = LakeSink(s"$dir/lake")
+    val res = NightlyEtl.runTable(spark, source, sink, "timestamp")
+    assert(res.rows === 500L)
+    assert(res.rows === spark.read.parquet(s"$dir/src").count())
+    assert(sink.read(spark).count() === res.rows)
+    assert(scanned.value === 500L, "the extract must be scanned once")
+  }
+
   test("overwrite re-run is idempotent (K4)") {
     val dir = tmp()
     Seq(("2025-03-05T00:00:00", 1.0), ("2025-03-05T01:00:00", 2.0))

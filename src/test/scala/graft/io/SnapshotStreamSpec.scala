@@ -233,7 +233,9 @@ class SnapshotStreamSpec extends SparkSpec with graft.LowStatePartitions {
     // Shape sanity: the MOR delete retracts, the overwrite emits both
     // sides, the MOR merge emits its delete + insert pair.
     val byVer = streamed.map(keyOf).groupBy(_._4)
-    assert(byVer(1L).toSeq === Seq((3L, "row3", "delete", 1L),
+    // CDF row order within a version is not part of the contract (it
+    // follows the partitioning, hence the core count): compare sorted.
+    assert(byVer(1L).toSeq.sorted === Seq((3L, "row3", "delete", 1L),
       (7L, "row7", "delete", 1L)))
     assert(byVer(2L).count(_._3 == "delete") === 28)
     assert(byVer(2L).count(_._3 == "insert") === 10)
