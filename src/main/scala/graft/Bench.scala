@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * prints one SMALL JSON line {"metric":"total","value":N,...} (suite
@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   * Between queries we clear BOTH the SQL cache catalog and every
   * persisted RDD (localCheckpoints, GraphX leftovers) — each query is
   * timed against a state-clean session. Failures are never silent: a
-  * failed query is excluded from the total and reported under "failed".
+  * failed query is excluded from the total, reported under "failed",
+  * and the run exits 1 once its files and stdout line are written.
   *
   * SPARK_GRAFT_BENCH_RUNS=n (default 3) runs the whole suite n times in
   * ROUND-ROBIN passes (pass 1 over every query, then pass 2, ...) and
@@ -74,8 +75,6 @@ object Bench {
     // 1-min-only form: the INTER-PASS gate keeps it — the bench's own
     // 32 threads push the 5/15-min fields above 4 on a quiet machine,
     // so a 3-field inter-pass gate would always burn its full budget.
-    def oneMin(s: String): Option[Double] =
-      s.split(",").headOption.flatMap(_.toDoubleOption)
     def maxField(s: String): Option[Double] = {
       val fs = s.split(",").flatMap(_.toDoubleOption)
       if (fs.isEmpty) None else Some(fs.max)
@@ -97,7 +96,34 @@ object Bench {
     val spark = GraftSession.local("graft-bench")
     // Generic warm-up only (session init, shuffle infra).
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
+    val passes = Passes(runs, quietSleepSec,
+      probes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASS_PROBES", "5").toInt.max(0),
+      extra = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA_PASSES", "2").toInt.max(0))
+    val failed = suite(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1), ".", passes,
+      loadStart, quietWaitSec, wall0)
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  private def oneMin(s: String): Option[Double] =
+    s.split(",").headOption.flatMap(_.toDoubleOption)
+
+  /** How the suite samples: `runs` round-robin passes, up to `extra`
+    * more until two agree, and before each pass after the first up to
+    * `probes` waits of `sleepSec` for a quiet machine. */
+  final case class Passes(runs: Int, sleepSec: Int, probes: Int, extra: Int)
+
+  /** Times `names` in round-robin passes, writes `BENCH_MINIMA_<sf>.json`
+    * and `BENCH_DETAIL.json` under `outDir`, prints the stdout line and
+    * returns the names of the queries that failed in every pass. */
+  def suite(spark: SparkSession, sfDir: String,
+      names: Seq[(String, (SparkSession, String) => DataFrame)], outDir: String,
+      passes: Passes, loadStart: String = loadavg(), quietWaitSec: Int = 0,
+      wall0: Long = System.nanoTime()): Seq[String] = {
+    val Passes(runs, quietSleepSec, passProbes, extraBudget) = passes
     // samples(name) accumulates (seconds, status) across passes.
     val samples = scala.collection.mutable.LinkedHashMap(
       names.map { case (n, _) => n -> Vector.empty[(Double, String)] }: _*)
@@ -115,8 +141,6 @@ object Bench {
     // waiting; the budget is capped (default 5 × 60 s) so a
     // persistently loaded machine costs ≤ 5 min per pass and the
     // waits self-report in both JSON artifacts.
-    val passProbes =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PASS_PROBES", "5").toInt.max(0)
     def quietWaitBetweenPasses(): Int = {
       var waited = 0
       var p = 0
@@ -162,8 +186,6 @@ object Bench {
     // passes, each behind the same bounded quiet wait, until two do.
     // Extra samples only improve minima; `converged` + the pass
     // arrays self-report the outcome either way.
-    val extraBudget =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRA_PASSES", "2").toInt.max(0)
     def converged: Boolean = {
       val sorted = passTotals.sorted
       sorted.size >= 2 && sorted(1) <= sorted(0) * 1.15
@@ -218,7 +240,7 @@ object Bench {
     // .json etc.) so a smoke run at another scale can never clobber
     // the recorded baseline; it is rewritten after each run — commit
     // it with each recorded round.
-    val minimaPath = java.nio.file.Paths.get(
+    val minimaPath = java.nio.file.Paths.get(outDir,
       s"BENCH_MINIMA_${new java.io.File(sfDir).getName}.json")
     val prevMinima: Map[String, Double] =
       try {
@@ -315,7 +337,7 @@ object Bench {
         s""""loadavg_start":"$loadStart","loadavg_end":"$loadEnd","sf":"$sfDir"}"""
     }
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_DETAIL.json"),
+      java.nio.file.Paths.get(outDir, "BENCH_DETAIL.json"),
       detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case t: Throwable => System.err.println(s"[bench] detail write failed: $t") }
     val line =
@@ -345,6 +367,6 @@ object Bench {
           s"${quietWaitSec}s for a quiet window) — timings include " +
           "external load; re-record on a quiet machine")
     println(line)
-    spark.stop()
+    failedNames
   }
 }

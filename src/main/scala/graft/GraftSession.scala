@@ -18,6 +18,11 @@ import org.apache.spark.sql.SparkSession
   *    100 TB-scale answer to skewed group/join keys.
   *  - a generated-class cache that holds the engine's working set
   *    ([[CodegenCacheEntries]]).
+  *  - a `file:` filesystem that forks no process per call
+  *    ([[graft.io.GraftRawLocalFileSystem]]). Hadoop caches one
+  *    `FileSystem` per scheme and user, whatever the conf, so these confs
+  *    take effect only when a session built here is the first to resolve
+  *    `file:` in the JVM.
   */
 object GraftSession {
   val Cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -101,6 +106,8 @@ object GraftSession {
       // whole-stage codegen; the default cutoff is 100 fields
       .config("spark.sql.codegen.maxFields", "220")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.GraftLocalFs].getName)
       // engine optimizer rules (top-1-per-key window → max_by rewrite)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // session-catalog tables (bucketed writes) land in tmp, not cwd

@@ -239,7 +239,7 @@ class SnapshotStreamSpec extends SparkSpec with graft.LowStatePartitions {
       (7L, "row7", "delete", 1L)))
     assert(byVer(2L).count(_._3 == "delete") === 28)
     assert(byVer(2L).count(_._3 == "insert") === 10)
-    assert(byVer(3L).toSet === Set((105L, "row105", "delete", 3L),
+    assert(byVer(3L).toSeq.sorted === Seq((105L, "row105", "delete", 3L),
       (105L, "upd105", "insert", 3L)))
 
     // BATCH CDF over the same mutating history — served through the

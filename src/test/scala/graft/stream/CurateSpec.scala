@@ -93,15 +93,15 @@ class CurateSpec extends SparkSpec with graft.LowStatePartitions {
         ms.addData(batch1); q.processAllAvailable()
         ms.addData(batch2); q.processAllAvailable()
       } finally q.stop()
-      val kept = spark.table(name).select("doc_id").as[Long].collect().toSet
+      val kept = spark.table(name).select("doc_id").as[Long].collect().sorted.toSeq
 
       // the near-dup stage really fired: only the three originals remain
-      assert(kept == Set(1L, 3L, 5L), s"kept $kept")
+      assert(kept == Seq(1L, 3L, 5L), s"kept $kept")
 
       // stream ≡ batch: the batch replica derives its survivor set from
       // Dedup.minhashPairs over the same curated rows
       val batchKept = Curate.curateNearDupBatch((batch1 ++ batch2).toDF(), evalFps)
-        .select("doc_id").as[Long].collect().toSet
+        .select("doc_id").as[Long].collect().sorted.toSeq
       assert(kept == batchKept, s"stream $kept != batch $batchKept")
     } finally {
       prev match {
@@ -131,8 +131,8 @@ class CurateSpec extends SparkSpec with graft.LowStatePartitions {
           DocMsg(t(2), 3L, "north south east west up down left wrong")))
         q.processAllAvailable()
       } finally q.stop()
-      val kept = spark.table(name).select("doc_id").as[Long].collect().toSet
-      assert(kept == Set(1L, 2L), s"kept $kept")
+      val kept = spark.table(name).select("doc_id").as[Long].collect().sorted.toSeq
+      assert(kept == Seq(1L, 2L), s"kept $kept")
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)

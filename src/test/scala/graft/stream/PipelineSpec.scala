@@ -396,9 +396,9 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     val finals = Pipeline.finalizeAggregates(merged.get)
       .select(date_format(col("window_start"), "HH:mm").as("ws"),
         col("machine_id"), col("avg_value"), col("count_readings"))
-      .as[(String, String, Double, Long)].collect().toSet
+      .as[(String, String, Double, Long)].collect().toSeq.sortBy(r => (r._1, r._2))
     // identical to the batch windowed agg over the full input
-    assert(finals == Set(
+    assert(finals == Seq(
       ("10:00", "CNC-001", 15.0, 2L),
       ("10:02", "LATHE-002", 1.5, 1L)))
   }
@@ -425,19 +425,19 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
       join = (f, d) => f.join(d, col("machine_id") === col("dim_machine_id")),
       keys = Seq("machine_type"), value = "value", scale = 2,
       checkpointDir = s"${tmp()}/ckpt", availableNow = false)
-    def snap(df: DataFrame): Set[(String, Long, Double, Double, Double)] =
+    def snap(df: DataFrame): Seq[(String, Long, Double, Double, Double)] =
       df.select(col("machine_type"), col("n"),
         col("sum_v").cast("double"), col("min_v"), col("max_v"))
-        .as[(String, Long, Double, Double, Double)].collect().toSet
+        .as[(String, Long, Double, Double, Double)].collect().toSeq.sortBy(_._1)
     try {
       batches.take(2).foreach { b => ms.addData(b); q.processAllAvailable() }
       // the cross-batch quadrant must already be in after batch 2:
       // Y = batch-1 M2 fact × batch-2 M2 dim
-      assert(snap(h.view) == Set(("X", 2L, 40.0, 10.0, 30.0),
+      assert(snap(h.view) == Seq(("X", 2L, 40.0, 10.0, 30.0),
         ("Y", 1L, 20.0, 20.0, 20.0)))
       ms.addData(batches(2)); q.processAllAvailable()
       val afterAll = snap(h.view)
-      assert(afterAll == Set(("X", 2L, 40.0, 10.0, 30.0),
+      assert(afterAll == Seq(("X", 2L, 40.0, 10.0, 30.0),
         ("Y", 2L, 60.0, 20.0, 40.0)))
       // equivalence: indistinguishable from one full join over all input
       val all = batches.flatten.toDF()
@@ -489,10 +489,10 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
         splitA(all).join(splitB(all),
           col("machine_id") === col("dim_machine_id")),
         Seq("machine_type"), "value", scale = 2)
-      def snap(df: DataFrame): Set[(String, Long, Double, Double, Double)] =
+      def snap(df: DataFrame): Seq[(String, Long, Double, Double, Double)] =
         df.select(col("machine_type"), col("n"),
           col("sum_v").cast("double"), col("min_v"), col("max_v"))
-          .as[(String, Long, Double, Double, Double)].collect().toSet
+          .as[(String, Long, Double, Double, Double)].collect().toSeq.sortBy(_._1)
       assert(snap(h.view) == snap(full))
     } finally q.stop()
   }
@@ -535,9 +535,9 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     } finally q.stop()
     val out = spark.table(name)
       .select("machine_id", "machine_type", "location")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sortBy(_._1)
     // known machine enriched; unknown keeps the reference's NULL behavior
-    assert(out == Set(
+    assert(out == Seq(
       ("CNC-001", "CNC Mill", "Assembly Line A"),
       ("UNKNOWN-9", null, null)))
   }

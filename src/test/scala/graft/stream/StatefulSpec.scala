@@ -32,8 +32,8 @@ class StatefulSpec extends SparkSpec with graft.LowStatePartitions {
       q.processAllAvailable()
     } finally q.stop()
 
-    val out = spark.table(name).as[AnomalyAlert].collect().toSet
-    assert(out == Set(
+    val out = spark.table(name).as[AnomalyAlert].collect().toSeq.sortBy(_.toString)
+    assert(out == Seq(
       AnomalyAlert("CNC-001", "temperature", 4, 10, 13),
       AnomalyAlert("WELD-004", "temperature", 3, 20, 22)))
   }
@@ -61,9 +61,9 @@ class StatefulSpec extends SparkSpec with graft.LowStatePartitions {
           r(22, 72, "WELD-004"), r(23, 85, "WELD-004")))
         q.processAllAvailable()
       } finally q.stop()
-      val out = spark.table(name).as[AnomalyAlert].collect().toSet
+      val out = spark.table(name).as[AnomalyAlert].collect().toSeq.sortBy(_.toString)
       // byte-identical to the flatMapGroupsWithState formulation
-      assert(out == Set(
+      assert(out == Seq(
         AnomalyAlert("CNC-001", "temperature", 4, 10, 13),
         AnomalyAlert("WELD-004", "temperature", 3, 20, 22)))
     } finally prev match {
