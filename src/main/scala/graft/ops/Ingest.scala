@@ -42,22 +42,21 @@ object Ingest {
     *
     * Spark's PERMISSIVE `from_json` yields an all-NULL struct (not a
     * NULL struct) on parse failure, so "malformed" is detected via the
-    * corrupt-record column, not `isNotNull`. */
+    * corrupt-record column, not `isNotNull` — filtered inside the array
+    * `inline` expands, so Catalyst cannot copy the parse into a `Filter`. */
   def decode(df: DataFrame, json: Column): DataFrame = {
-    val withCorrupt = MessageSchema.add("_corrupt", StringType)
-    df.withColumn("msg",
-        from_json(json, withCorrupt,
-          Map("columnNameOfCorruptRecord" -> "_corrupt")))
-      .filter(col("msg").isNotNull && col("msg._corrupt").isNull)
-      .select(col("msg.*")).drop("_corrupt")
+    val msg = from_json(json, MessageSchema.add("_corrupt", StringType),
+      Map("columnNameOfCorruptRecord" -> "_corrupt"))
+    df.select(inline(filter(array(msg),
+        m => m.isNotNull && m.getField("_corrupt").isNull))).drop("_corrupt")
   }
 
   /** C1 event-time projection: ISO-8601 'T'-separated string → timestamp.
-    * Keeps the reference's REPLACE form for semantic fidelity (Spark
-    * parses ISO-8601 natively, but the contract is the expression). */
+    * Keeps the reference's literal SQL `REPLACE` (`replace`, no regex;
+    * Spark parses ISO-8601 natively, but the contract is the expression). */
   def withEventTime(df: DataFrame, tsString: Column): DataFrame =
     df.withColumn("event_time",
-      to_timestamp_ntz(regexp_replace(tsString, "T", " ")))
+      to_timestamp_ntz(replace(tsString, lit("T"), lit(" "))))
 
   /** C3 date-part derivation for partitioned lake writes
     * (`spark-jobs/timescale_to_deltalake.py:36`). */

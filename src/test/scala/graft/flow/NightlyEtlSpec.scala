@@ -228,9 +228,9 @@ class NightlyEtlSpec extends SparkSpec with graft.LowStatePartitions {
     val lake = sink.read(spark)
     assert(m(sink.path) == m("packed"))
     val got = lake.select("doc_id", "n_tokens", "shard", "offset_toks",
-      "pack_seq").collect().map(_.toSeq).toSet
+      "pack_seq").collect().map(_.toString).toSeq.sorted
     val want = st.packed.select("doc_id", "n_tokens", "shard",
-      "offset_toks", "pack_seq").collect().map(_.toSeq).toSet
+      "offset_toks", "pack_seq").collect().map(_.toString).toSeq.sorted
     assert(got == want, "lake content must equal the packed frame")
     assert(new java.io.File(s"$dir/packed/shard=0").exists(), "shard partition layout")
 

@@ -91,13 +91,13 @@ class AnalyticsPropertiesSpec extends SparkSpec {
 
   test("mixture sampling is monotone in the rate: lower-rate ⊆ higher-rate") {
     val docs = (0L until 500L).map(i => (i, "s")).toDF("id", "src")
-    def kept(permille: Int): Set[Long] = {
+    def kept(permille: Int): Seq[Long] = {
       val w = Seq(("s", permille)).toDF("stratum", "permille")
       Sampling.mixtureSample(docs, col("id"), col("src"), w)
-        .select(col("id")).as[Long].collect().toSet
+        .select(col("id")).as[Long].collect().toSeq.sorted
     }
     val k100 = kept(100); val k500 = kept(500); val k1000 = kept(1000)
-    assert(k100.subsetOf(k500) && k500.subsetOf(k1000))
-    assert(k1000.size === 500) // permille 1000 keeps everything
+    assert(k100.toSet.subsetOf(k500.toSet) && k500.toSet.subsetOf(k1000.toSet))
+    assert(k1000 === (0L until 500L)) // permille 1000 keeps everything, once
   }
 }

@@ -11,10 +11,11 @@ class AsOfSpec extends SparkSpec {
       ("u2", 50L, "d")).toDF("k", "lts", "tag")
     val right = Seq(("u1", 10L, 1.0), ("u1", 20L, 2.0), ("u2", 60L, 3.0))
       .toDF("k", "rts", "rv")
-    val out = AsOf.asofJoin(left, right, "k", "lts", "rts", "rv")
-      .select(col("tag"), col("asof_ts"), col("asof_value"))
-      .collect().map(r => r.getString(0) ->
-        (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getDouble(2))))).toMap
+    val rows = AsOf.asofJoin(left, right, "k", "lts", "rts", "rv")
+      .select(col("tag"), col("asof_ts"), col("asof_value")).collect()
+    val out = rows.map(r => r.getString(0) ->
+      (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getDouble(2))))).toMap
+    assert(rows.length == 4 && out.size == 4) // one row per left row
     assert(out("a") == Some((10L, 1.0))) // equal ts matches (<= semantics)
     assert(out("b") == Some((20L, 2.0))) // latest before 25
     assert(out("c") == None)             // nothing at or before 5

@@ -55,7 +55,7 @@ class DriftSpec extends SparkSpec {
       Seq.tabulate(3)(i => ("late_only", false, i.toDouble)))
       .toDF("g", "in_a", "v")
     val out = Drift.ks(df, col("g"), col("in_a"), col("v")).collect()
-    assert(out.map(_.getString(0)).toSet == Set("both"))
+    assert(out.map(_.getString(0)).toSeq == Seq("both"))
   }
 
   test("psi: identical histograms give exactly 0; a full shift is large and positive") {

@@ -22,8 +22,8 @@ class MergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("merge applies inserts, updates, and deletes; untouched rows kept") {
     val out = Merge(snapshot, changes, "id", Seq("name", "bal"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-        r.getString(3))).toSet
-    assert(out == Set(
+        r.getString(3))).toSeq.sortBy(_._1)
+    assert(out == Seq(
       (1L, "alice", 10.0, "kept"),
       (2L, "bob2", 25.0, "updated"),
       (4L, "dave", 40.0, "kept"),
@@ -57,8 +57,8 @@ class MergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         (1L, "D", "", 0.0, 5L))
       q.processAllAvailable()
       val s1 = spark.read.parquet(snapDir).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-      assert(s1 == Set((2L, "bob2", 25.0), (4L, "dave", 40.0),
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sortBy(_._1)
+      assert(s1 == Seq((2L, "bob2", 25.0), (4L, "dave", 40.0),
         (9L, "iris", 90.0)))
 
       // batch 2: update the row inserted in batch 1, re-insert a key
@@ -66,9 +66,9 @@ class MergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       in.addData((9L, "U", "iris2", 95.0, 6L), (3L, "I", "carol2", 33.0, 7L))
       q.processAllAvailable()
       val s2 = spark.read.parquet(snapDir).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-      assert(s2 == Set((2L, "bob2", 25.0), (4L, "dave", 40.0),
-        (9L, "iris2", 95.0), (3L, "carol2", 33.0)))
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq.sortBy(_._1)
+      assert(s2 == Seq((2L, "bob2", 25.0), (3L, "carol2", 33.0),
+        (4L, "dave", 40.0), (9L, "iris2", 95.0)))
     } finally q.stop()
   }
 

@@ -19,8 +19,8 @@ class RangeJoinSpec extends SparkSpec {
     ).toDF("k", "r_id", "r_ts")
     val out = RangeJoin.within(left, right, "k", "l_ts", "r_ts", gapUs = 10L)
       .select(col("l_id"), col("r_id"), col("gap_us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(out == Set((1L, 10L, 5L), (1L, 11L, 9L), (1L, 13L, 0L), (2L, 14L, 3L)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    assert(out == Seq((1L, 10L, 5L), (1L, 11L, 9L), (1L, 13L, 0L), (2L, 14L, 3L)))
   }
 
   test("no duplicate pairs from the bucket explode") {
@@ -40,8 +40,8 @@ class RangeJoinSpec extends SparkSpec {
     ).toDF("k", "r_id", "r_ts")
     val out = RangeJoin.within(left, right, "k", "l_ts", "r_ts", gapUs = 10L)
       .select(col("l_id"), col("r_id"), col("gap_us"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(out == Set((1L, 10L, 5L), (2L, 12L, 7L), (3L, 13L, 1L)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    assert(out == Seq((1L, 10L, 5L), (2L, 12L, 7L), (3L, 13L, 1L)))
   }
 
   test("planned as a shuffle equi-join, not a nested loop") {

@@ -18,9 +18,11 @@ class SkewRetentionSpec extends SparkSpec {
         count(lit(1)).as("count_readings"))
       .collect().map(r => r.getString(0) ->
         ((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
-    val salted = Skew.saltedStandardAggs(df, Seq(col("event_type")), col("value"))
-      .collect().map(r => r.getString(0) ->
-        ((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
+    val saltedRows = Skew.saltedStandardAggs(df, Seq(col("event_type")), col("value"))
+      .collect()
+    val salted = saltedRows.map(r => r.getString(0) ->
+      ((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
+    assert(saltedRows.length == salted.size, "one row per key after the salt merge")
     assert(salted.keySet == direct.keySet)
     salted.foreach { case (k, (a, mn, mx, c)) =>
       val (da, dmn, dmx, dc) = direct(k)

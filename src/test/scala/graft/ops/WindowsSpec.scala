@@ -22,8 +22,8 @@ class WindowsSpec extends SparkSpec {
         Seq(col("machine_id"), col("sensor_type")), col("value"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(6)))
-      .toSet
-    assert(out == Set((0L, "m1", 1L), (60000000L, "m1", 2L), (0L, "m2", 1L)))
+      .toSeq.sorted
+    assert(out == Seq((0L, "m1", 1L), (0L, "m2", 1L), (60000000L, "m1", 2L)))
   }
 
   test("tumbling windows partition the input: counts sum to row count") {
@@ -60,11 +60,11 @@ class WindowsSpec extends SparkSpec {
     // window() epoch alignment matches the integer bucket math
     val viaStruct = out
       .select(unix_micros(col("window_start")), col("count_readings"))
-      .as[(Long, Long)].collect().toSet
+      .as[(Long, Long)].collect().toSeq.sorted
     val viaLongs = Windows
       .tumblingAggUs(readings, col("tus"), MinUs, Seq(col("machine_id")), col("value"))
       .select(col("window_start_us"), col("count_readings"))
-      .as[(Long, Long)].collect().toSet
+      .as[(Long, Long)].collect().toSeq.sorted
     assert(viaStruct == viaLongs)
   }
 }
