@@ -127,6 +127,42 @@ class LocalFsSpec extends SparkSpec with graft.LowStatePartitions {
       .getDefaultFileSystem.getClass === classOf[GraftLocalFs])
   }
 
+  /** What a listed status reports, the mode and owner included. */
+  private def listed(s: FileStatus): Seq[Any] =
+    Seq(s.getPath, s.isFile, s.isDirectory, s.isSymlink, s.getLen, s.getModificationTime,
+      s.getPermission, s.getOwner, s.getGroup)
+
+  test("listed statuses carry the stock filesystem's modes and owners") {
+    val dir = Files.createTempDirectory("graft-localfs").toRealPath()
+    val stock = fileSystem(new RawLocalFileSystem())
+    val file = Files.write(dir.resolve("file"), Array[Byte](1, 2))
+    for (mode <- Seq("600", "640", "755")) Files.createFile(dir.resolve(s"p$mode"))
+    Files.createDirectories(dir.resolve("sub/deeper"))
+    Files.write(dir.resolve("sub/deeper/leaf"), Array[Byte](3))
+    Files.createDirectory(dir.resolve("sticky"))
+    Files.createSymbolicLink(dir.resolve("link"), file)
+    Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
+    for (mode <- Seq("600", "640", "755")) stock.setPermission(new Path(s"$dir/p$mode"), perm(mode))
+    stock.setPermission(new Path(s"$dir/sub"), perm("750"))
+    stock.setPermission(new Path(s"$dir/sticky"), perm("1777"))
+    val root = new Path(dir.toString)
+    def located(fs: FileSystem) = {
+      val it = fs.listFiles(root, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(i => listed(i.next())).toSeq.sortBy(_.head.toString)
+    }
+    val Seq(stockFs, graftFs) = Seq(stock, fileSystem(new GraftRawLocalFileSystem()))
+    val top = stockFs.listStatus(root).map(listed).sortBy(_.head.toString).toSeq
+    assert(top.map(_(6)).contains(perm("1777")), top)
+    assert(graftFs.listStatus(root).map(listed).sortBy(_.head.toString).toSeq === top)
+    assert(located(graftFs) === located(stockFs))
+    val one = new Path(s"$dir/p640")
+    assert(graftFs.listStatus(one).map(listed).toSeq === stockFs.listStatus(one).map(listed).toSeq)
+
+    val gone = graftFs.listStatus(one).head
+    Files.delete(dir.resolve("p640"))
+    assert((gone.getPermission, gone.getOwner, gone.getGroup) === ((FsPermission.getFileDefault, "", "")))
+  }
+
   /** Process launches inside `body` whose stack passes through Hadoop's
     * `Shell`, from a JFR recording of `jdk.ProcessStart` alone. */
   private def shellLaunches(body: => Unit): Int = {
@@ -172,6 +208,23 @@ class LocalFsSpec extends SparkSpec with graft.LowStatePartitions {
       val etl = NightlyEtl.runTable(spark, ParquetSource(s"$dir/raw"), LakeSink(s"$dir/lake"), "timestamp")
       assert(etl.rows === 4)
     }
+    assert(launches === 0)
+  }
+
+  test("a lake append lists its files with no Hadoop Shell process") {
+    val dir = Files.createTempDirectory("graft-localfs").toString
+    // The recording sees a stock listing's `ls -ld`.
+    Files.createFile(Paths.get(s"$dir/probe"))
+    val stockFs = fileSystem(new LocalFileSystem())
+    assert(shellLaunches(stockFs.listFiles(new Path(dir), false).next().getPermission) === 1)
+
+    import spark.implicits._
+    val lake = Snapshot.Lake(spark, s"$dir/lake", Seq("k"))
+    val launches = shellLaunches {
+      lake.append((0L until 40L).map(k => (k, s"row$k")).toDF("k", "v").repartition(4))
+      lake.append((40L until 50L).map(k => (k, s"row$k")).toDF("k", "v"))
+    }
+    assert(lake.read().count() === 50)
     assert(launches === 0)
   }
 }

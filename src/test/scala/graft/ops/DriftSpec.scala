@@ -41,8 +41,9 @@ class DriftSpec extends SparkSpec {
     val df = (Seq.tabulate(6)(i => ("stable", i % 2 == 0, (i / 2).toDouble)) ++
       Seq.tabulate(4)(i => ("shifted", i < 2, if (i < 2) i.toDouble else 100.0 + i)))
       .toDF("g", "in_a", "v")
-    val out = Drift.ks(df, col("g"), col("in_a"), col("v"))
-      .collect().map(r => r.getString(0) -> r.getAs[Long]("d_x1e6")).toMap
+    val rows = Drift.ks(df, col("g"), col("in_a"), col("v")).collect()
+    val out = rows.map(r => r.getString(0) -> r.getAs[Long]("d_x1e6")).toMap
+    assert(rows.length == 2, "one row per key")
     assert(out("stable") == 0L)
     assert(out("shifted") == 1000000L)
   }

@@ -20,11 +20,12 @@ class FunnelSpec extends SparkSpec {
       (4L, 0L, "view"), (4L, 20L, "purchase"), (4L, 40L, "click"),
       (4L, 60L, "purchase"))
       .toDF("u", "t", "et")
-    val out = Funnel.staged(ev, col("u"), col("t"), col("et"),
+    val rows = Funnel.staged(ev, col("u"), col("t"), col("et"),
         Seq("view", "click", "purchase"), windowUs = 100L)
       .collect()
-      .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2),
+    val out = rows.map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3)))).toMap
+    assert(rows.length == 3, "one row per stage")
     assert(out(1L) == (("view", 3L, 0L)))
     // u1 lag 10, u4 lag 40 → HALF_UP mean 25
     assert(out(2L) == (("click", 2L, 25L)))
@@ -35,9 +36,10 @@ class FunnelSpec extends SparkSpec {
 
   test("staged: an empty stage reports 0 users and a null lag") {
     val ev = Seq((1L, 10L, "view")).toDF("u", "t", "et")
-    val out = Funnel.staged(ev, col("u"), col("t"), col("et"),
+    val rows = Funnel.staged(ev, col("u"), col("t"), col("et"),
         Seq("view", "click"), windowUs = 100L).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(2), r.isNullAt(3)))).toMap
+    val out = rows.map(r => r.getLong(0) -> ((r.getLong(2), r.isNullAt(3)))).toMap
+    assert(rows.length == 2, "one row per stage")
     assert(out(1L) == ((1L, false)))
     assert(out(2L) == ((0L, true)))
   }

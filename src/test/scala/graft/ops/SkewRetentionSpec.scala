@@ -11,13 +11,15 @@ class SkewRetentionSpec extends SparkSpec {
 
   test("salted aggregation equals the direct aggregation (skew path)") {
     val df = graft.Tables.events(spark, sf)
-    val direct = df.groupBy(col("event_type"))
+    val directRows = df.groupBy(col("event_type"))
       .agg(round(avg(col("value")), 4).as("avg_value"),
         min(col("value")).as("min_value"),
         max(col("value")).as("max_value"),
         count(lit(1)).as("count_readings"))
-      .collect().map(r => r.getString(0) ->
-        ((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
+      .collect()
+    val direct = directRows.map(r => r.getString(0) ->
+      ((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
+    assert(directRows.length == direct.size, "one direct row per key")
     val saltedRows = Skew.saltedStandardAggs(df, Seq(col("event_type")), col("value"))
       .collect()
     val salted = saltedRows.map(r => r.getString(0) ->
