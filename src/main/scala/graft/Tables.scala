@@ -66,11 +66,6 @@ object Tables {
     */
   val tsUs: Column = expr("ts div 1000")
 
-  /** `events` + `event_time` TimestampType column for window()/streaming
-    * paths (micros precision; Spark TimestampType is micros anyway). */
-  def eventsWithTime(s: SparkSession, d: String): DataFrame =
-    events(s, d).withColumn("event_time", timestamp_micros(tsUs))
-
   val MicrosPerSecond: Long = 1000000L
   val MicrosPerMinute: Long = 60L * MicrosPerSecond
   val MicrosPerDay: Long    = 86400L * MicrosPerSecond

@@ -380,8 +380,9 @@ object CorpusPipeline {
   /** The day-N increment topic (test-input construction): the id-tail
     * naturals with their standard plant families PLUS the four
     * cross-boundary re-fetch families derived from a 10% slice of the
-    * base — extracted (round 14) so StreamBench mode J can drive the
-    * SAME increment as a stream against the same persisted state. */
+    * base — shared with `IncCurateSpec`, which feeds the SAME
+    * increment through [[graft.stream.IncCurate]] micro-batches against
+    * the same persisted state. */
   private[graft] def dayNIncrement(docs: DataFrame, st: PriorState): DataFrame = {
     val ids = docs.select(col("doc_id"), col("text"), col("source"))
     val cut = ids.agg((max(col("doc_id")) * 4L).as("m")).head().getLong(0) / 5L

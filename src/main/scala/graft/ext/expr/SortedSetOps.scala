@@ -15,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * per CANDIDATE PAIR. `array_intersect` builds a hash set of one side
   * and MATERIALIZES the intersection array, only for `size` to throw
   * it away — measured as the dominant per-pair cost at sf0.1 (471,719
-  * candidate pairs through the J ≥ 1/2 self-join; Probe21 `verify`:
-  * the attach joins are not the bottleneck, the kernel is).
+  * candidate pairs through the J ≥ 1/2 self-join; a per-substage
+  * timing of the verify join showed the attach joins are not the
+  * bottleneck, the kernel is).
   *
   * Fix: keep each doc's shingle set SORTED (one sort at signature-
   * table build, amortized over every pair the doc appears in) and

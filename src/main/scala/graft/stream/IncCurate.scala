@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.{Contamination, CorpusPipeline, Dedup, QualityFilter, Sampling}
 
-/** Streaming incremental curation (StreamBench mode J, round 14) —
-  * the day-N increment driven as a STREAM against the persisted
-  * day-N−1 state tables, in `foreachBatch` with the
-  * `Dedup.incrementalPairs` broadcast-probe shape. Each micro-batch
+/** Streaming incremental curation — the day-N increment driven as a
+  * STREAM against the persisted day-N−1 state tables, in
+  * `foreachBatch` with the `Dedup.incrementalPairs` broadcast-probe
+  * shape. Each micro-batch
   * runs the same stage algebra as
   * [[CorpusPipeline.buildIncrementalStages]] — quality → URL dedup →
   * exact-text dedup → near dedup → decontamination → mixture — and
@@ -21,9 +21,9 @@ import graft.ext.{Contamination, CorpusPipeline, Dedup, QualityFilter, Sampling}
   * contamination line). Folding the change stream over the day-N−1
   * survivor set yields EXACTLY `buildIncrementalStages(docs, st)
   * .packed`'s id set regardless of micro-batch boundaries —
-  * StreamBench mode J REQUIREs that equality on a multi-batch drain.
+  * `IncCurateSpec` asserts that equality for one and three batches.
   *
-  * Arrival-order contract (the mode-I convention): batches must
+  * Arrival-order contract (as for the near-dup stream): batches must
   * arrive in ascending doc_id order across micro-batches (within a
   * batch any order — the stages are set algebra). Keep-first-arrival
   * then coincides with the batch path's keep-min-id, which is what
@@ -42,8 +42,8 @@ import graft.ext.{Contamination, CorpusPipeline, Dedup, QualityFilter, Sampling}
   * (a cross-boundary near-dup merge of an eval canonical), those
   * shingles are not retracted from the eval state, so a train doc
   * they contaminated stays retracted where the full recompute would
-  * keep it. The batch path's full-recompute oracle (and mode J's
-  * equality REQUIRE) fail loudly if a corpus ever trips it — none of
+  * keep it. The batch path's full-recompute oracle (and
+  * `IncCurateSpec`'s equality assert) fail loudly if a corpus ever trips it — none of
   * the driver corpora do (eval membership is id-hash-sharded;
   * dethroning requires a later-id near-dup BRIDGE to a smaller
   * canonical, which the plant families never aim at eval docs).
@@ -60,11 +60,7 @@ object IncCurate {
       var groups: DataFrame, // (node, group) near-dup canonical mapping
       var evalSh: DataFrame, // (sh)
       var shIndex: DataFrame, // (doc, sh) train inverted index
-      var tallies: DataFrame) { // (doc, n_sh, n_c)
-    def stateRows: Long =
-      Seq(urlKeys, textKeys, sigs, groups, evalSh, shIndex, tallies)
-        .map(_.count()).sum
-  }
+      var tallies: DataFrame) // (doc, n_sh, n_c)
 
   def seed(st: CorpusPipeline.PriorState): State =
     new State(st.urlKeys, st.textKeys, st.sigs, st.groups, st.evalSh,

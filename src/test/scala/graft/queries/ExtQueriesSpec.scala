@@ -27,8 +27,9 @@ class ExtQueriesSpec extends SparkSpec {
   test("near-dup pairing joins originals to their own perturbed copy only") {
     val docs = Seq((7L, "one two three four five six seven eight"))
       .toDF("doc_id", "text")
-    val both = ExtQueries.withNearDups(docs).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val rows = ExtQueries.withNearDups(docs).collect()
+    assert(rows.length == 2, rows.mkString(", "))
+    val both = rows.map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(both.keySet == Set(7L, 7L + ExtQueries.NearDupOffset))
     // perturbed copy drops the last 3 tokens
     assert(both(7L + ExtQueries.NearDupOffset) == "one two three four five")
@@ -261,11 +262,11 @@ class ExtQueriesSpec extends SparkSpec {
   test("charPairs: overlapping bigrams, repeats kept, sub-2-char words empty") {
     val out = Seq("the", "aaa", "x", "", "ab")
       .toDF("w").select(col("w"), graft.ext.TextOps.charPairs(col("w")).as("p"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(out("the") == List("th", "he"))
-    assert(out("aaa") == List("aa", "aa"), "repeated pairs keep multiplicity")
-    assert(out("x") == Nil && out("") == Nil)
-    assert(out("ab") == List("ab"))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList)
+      .toSeq.sortBy(_._1)
+    // "aaa" → [aa, aa]: repeated pairs keep multiplicity
+    assert(out == Seq("" -> Nil, "aaa" -> List("aa", "aa"), "ab" -> List("ab"),
+      "the" -> List("th", "he"), "x" -> Nil))
   }
 
   test("temp_mixture: smallest language keeps all; heads thin at sqrt(n_min/n)") {
@@ -296,10 +297,10 @@ class ExtQueriesSpec extends SparkSpec {
     val m1 = df.select(col("w"),
       TextOps.bpeSymbols(TextOps.bpeMerge(col("rep"), lit("a"), lit("a")))
         .as("sy"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
-    assert(m1("aaaa") == List("aa", "aa"))
-    assert(m1("aab") == List("aa", "b"))
-    assert(m1("xab") == List("x", "a", "b"))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList)
+      .toSeq.sortBy(_._1)
+    assert(m1 == Seq("aaaa" -> List("aa", "aa"), "aab" -> List("aa", "b"),
+      "xab" -> List("x", "a", "b")))
     // second-order merge over multi-char symbols: (aa,aa) → aaaa
     val m2 = Seq("aaaa").toDF("w")
       .select(TextOps.bpeSymbols(TextOps.bpeMerge(
@@ -419,8 +420,10 @@ class ExtQueriesSpec extends SparkSpec {
       // centroids actually moved: round-2 md5s differ from round 1
       // for at least one cluster (identical would mean a fixed point
       // on the very first update — not this data)
-      val m1 = out.filter(col("round") === 1).select("cid", "centroid_md5")
-        .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+      val r1 = out.filter(col("round") === 1).select("cid", "centroid_md5")
+        .collect()
+      val m1 = r1.map(r => r.getInt(0) -> r.getString(1)).toMap
+      assert(m1.size == r1.length, "one round-1 row per cluster")
       val moved = out.filter(col("round") === 2).collect()
         .count(r => m1.get(r.getAs[Int]("cid")).exists(_ != r.getAs[String]("centroid_md5")))
       assert(moved > 0, "no centroid moved between rounds")
@@ -681,8 +684,9 @@ class ExtQueriesSpec extends SparkSpec {
         d -> es.map(e => hub(e._1)).sum }.withDefaultValue(0L)
       hub = ids.map(id => id -> edges.filter(_._1 == id).map(e => auth(e._2)).sum).toMap
     }
-    val out = ExtQueries.queries("hits_scores")(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val rows = ExtQueries.queries("hits_scores")(spark, sf).collect()
+    assert(rows.length == ids.length, "one row per doc")
+    val out = rows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(out.keySet == ids.toSet)
     for (id <- ids)
       assert(out(id) == ((auth(id), hub(id))), s"doc $id")
@@ -716,8 +720,9 @@ class ExtQueriesSpec extends SparkSpec {
       }.toMap
     }
     val sizes = lab.values.groupBy(identity).map { case (l, vs) => l -> vs.size.toLong }
-    val out = ExtQueries.queries("label_prop")(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val rows = ExtQueries.queries("label_prop")(spark, sf).collect()
+    assert(rows.length == ids.length, "one row per doc")
+    val out = rows.map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(out.keySet == ids.toSet)
     for (id <- ids)
       assert(out(id) == ((lab(id), sizes(lab(id)))), s"doc $id")
@@ -753,8 +758,9 @@ class ExtQueriesSpec extends SparkSpec {
     val degF = ue.toSeq.filter { case (a, b) => surv(a) && surv(b) }
       .flatMap { case (a, b) => Seq(a, b) }
       .groupBy(identity).map { case (v, xs) => v -> xs.size.toLong }
-    val out = ExtQueries.queries("kcore_decomp")(spark, sf).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+    val rows = ExtQueries.queries("kcore_decomp")(spark, sf).collect()
+    assert(rows.length == surv.size, "one row per core vertex")
+    val out = rows.map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
     assert(out.keySet == surv, "4-core membership")
     surv.foreach(v => assert(out(v) == ((degF(v), true)), s"vertex $v"))
     // peeling did real work and the core is non-trivial
@@ -770,6 +776,7 @@ class ExtQueriesSpec extends SparkSpec {
     // order, sentinel arithmetic) breaks this equality.
     val rows = ExtQueries.queries("unigram_train")(spark, sf).collect()
     val vocab = rows.map(r => r.getString(0) -> r.getLong(3)).toMap
+    assert(vocab.size == rows.length, "one row per piece")
     assert(vocab.nonEmpty && vocab.keys.forall(p => p.length >= 1 && p.length <= 4))
     assert(vocab.values.forall(_ < 0), "add-1 logp cells are negative")
     assert(vocab.keys.count(_.length >= 2) <= 113, "final prune cap")
@@ -797,8 +804,9 @@ class ExtQueriesSpec extends SparkSpec {
       val toks = r.getString(1).trim.split("\\s+").filter(_.nonEmpty)
       r.getLong(0) -> ((toks.length.toLong, toks.map(nPieces).sum))
     }.toMap
-    val got = ExtQueries.queries("unigram_encode")(spark, sf).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val encoded = ExtQueries.queries("unigram_encode")(spark, sf).collect()
+    assert(encoded.length == expect.size, "one row per doc")
+    val got = encoded.map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got === expect)
     // every char that appears in a token is a retained single (the
     // fallback alphabet survives both prunes)

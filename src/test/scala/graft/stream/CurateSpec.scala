@@ -232,6 +232,52 @@ class CurateSpec extends SparkSpec with graft.LowStatePartitions {
     }
   }
 
+  test("near-dup storm: variants of one doc collapse to one survivor; state keys stay bounded") {
+    // A boilerplate storm in one micro-batch: n variants of ONE base
+    // doc, each with its own tail token (J ≈ 28/30 against each other),
+    // so the base's band buckets take far more than maxPerBucket
+    // entries inside the retention window. Every later variant
+    // near-dups an earlier one: only the first arrival survives. State
+    // is keyed by band bucket — the shared buckets plus about one
+    // singleton per variant — so the store's key count stays within
+    // 2 × input however many entries arrive.
+    val n = 300
+    val base = "the quick brown fox jumps over the lazy dog while " +
+      "seventeen boilerplate navigation links repeat across every " +
+      "page footer header sidebar copyright notice terms privacy"
+    val t0 = t(0).getTime
+    val storm = (0 until n).map(i =>
+      DocMsg(new Timestamp(t0 + i), i.toLong, s"$base tail$i"))
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val ms = MemoryStream[DocMsg](spark)
+      val out = NearDup.dedupNearDups(
+        ms.toDF().withWatermark("event_time", "10 seconds"),
+        threshold = 0.5, maxPerBucket = 64)
+      val name = s"stormneardup${System.nanoTime()}"
+      val q = out.writeStream.outputMode("append")
+        .format("memory").queryName(name).start()
+      val stateKeys =
+        try {
+          ms.addData(storm); q.processAllAvailable()
+          q.recentProgress.reverse.find(_.stateOperators.nonEmpty)
+            .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
+        } finally q.stop()
+      val kept = spark.table(name).select("doc_id").as[Long].collect().toSeq
+      assert(kept == Seq(0L), s"the storm must collapse to its first arrival: $kept")
+      assert(stateKeys > 0 && stateKeys <= 2L * n,
+        s"state keys must stay within 2 × input ($n): $stateKeys")
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None    => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("scrub-before-fingerprint: docs differing only in PII spans dedup to one") {
     val ms = MemoryStream[DocMsg](spark)
     val out = Curate.curate(ms.toDF(), evalFps, "10 seconds")

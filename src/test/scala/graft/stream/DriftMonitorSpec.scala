@@ -51,7 +51,9 @@ class DriftMonitorSpec extends SparkSpec with graft.LowStatePartitions {
       ev("2025-01-01 10:00:40", "click", 7.0))
     val w2 = Seq.tabulate(5)(i => ev(s"2025-01-01 10:02:0$i", "click", 52.0 + i % 3))
     val flush = Seq(ev("2025-01-01 10:09:00", "click", 1.0))
-    val out = runMonitor(Seq(w1, w2, flush)).toMap
+    val rows = runMonitor(Seq(w1, w2, flush))
+    val out = rows.toMap
+    assert(rows.size == out.size, s"each window must score once: $rows")
     // identical counts → every bin has ca = cb → psi exactly 0
     assert(out("10:00") == 0L, s"matching window must score 0: $out")
     // full shift → well past the 0.25 retrain threshold
@@ -110,6 +112,7 @@ class DriftMonitorSpec extends SparkSpec with graft.LowStatePartitions {
     try Seq(w1, w2, flush).foreach { b => ms.addData(b); q.processAllAvailable() }
     finally q.stop()
     val out = acc.toMap
+    assert(acc.size == out.size, s"each window must score once: $acc")
     // exact match of the reference distribution → D = 0
     assert(out("10:00") == 0L, s"matching window must score 0: $out")
     // entirely above the reference's support → D = 1 exactly

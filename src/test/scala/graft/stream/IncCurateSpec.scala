@@ -4,8 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.{SparkSpec, Tables}
 import graft.ext.CorpusPipeline
 
-/** Deterministic suite gate for [[IncCurate]] (StreamBench mode J runs
-  * the same contract at sf0.1 under a real streaming drain): the day-N
+/** The gate for [[IncCurate]]'s streaming contract: the day-N
   * increment processed as explicit ascending-id micro-batches against
   * the persisted day-N−1 state must fold — keeps minus retractions
   * over the day-N−1 survivors — to exactly the batch capstone's packed

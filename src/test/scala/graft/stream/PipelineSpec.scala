@@ -160,9 +160,13 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     val exact = run(k = 17).filter(_._1 == "10:00").toSet
     assert(exact.contains(("10:00", "CNC-001:temperature", 6L)), s"$exact")
     assert(exact.size == 4)
-    // Tight budget (k=3: ≤2 counters survive): the dominant item must
+    // Tight budget (k=3: ≤2 counters survive): the counter budget bounds
+    // the output at k − 1 rows per window, and the dominant item must
     // survive with the MG bound est ≥ true − n/k = 6 − 3 = 3.
-    val tight = run(k = 3).filter(_._1 == "10:00")
+    val tightAll = run(k = 3)
+    assert(tightAll.groupBy(_._1).values.forall(_.length <= 2),
+      s"MG output must stay within k − 1 = 2 rows per window: ${tightAll.toSeq}")
+    val tight = tightAll.filter(_._1 == "10:00")
     val top = tight.find(_._2 == "CNC-001:temperature")
     assert(top.nonEmpty && top.get._3 >= 3L,
       s"dominant item must survive a tight budget with the MG bound: ${tight.toSeq}")
@@ -322,17 +326,20 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     // At 100 TB-scale streaming, window/dedup state outgrows the JVM
     // heap; RocksDB keeps it on local disk with incremental checkpoint
     // uploads. Run the F1 aggregation under the RocksDB provider and
-    // assert identical finalized windows.
+    // assert the finalized windows equal the heap-backed run's.
+    val batches = Seq(
+      Seq(reading("2025-01-01T10:00:10"), reading("2025-01-01T10:00:30")),
+      Seq(reading("2025-01-01T10:02:00")),
+      Seq(reading("2025-01-01T10:04:00")))
+    val heap = runAgg(batches).toSeq.sorted
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     try {
       spark.conf.set(key,
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val out = runAgg(Seq(
-        Seq(reading("2025-01-01T10:00:10"), reading("2025-01-01T10:00:30")),
-        Seq(reading("2025-01-01T10:02:00")),
-        Seq(reading("2025-01-01T10:04:00"))))
-      assert(out.toSet.contains(("10:00", "CNC-001", 2L)))
+      val out = runAgg(batches).toSeq.sorted
+      assert(out.contains(("10:00", "CNC-001", 2L)))
+      assert(out == heap, s"RocksDB windows $out != heap windows $heap")
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)

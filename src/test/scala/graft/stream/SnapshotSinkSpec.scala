@@ -1,16 +1,21 @@
 package graft.stream
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 import graft.io.Snapshot
 
 /** Exactly-once contract of the streaming lake sink: each micro-batch
   * lands as one txn-stamped commit, a re-delivered batch is a no-op,
-  * and the CDC feed over the sink's commits reads back exactly the
-  * per-batch increments. */
+  * the CDC feed over the sink's commits reads back exactly the
+  * per-batch increments, and a crash between the lake commit and the
+  * engine checkpoint costs nothing on resume. */
 class SnapshotSinkSpec extends SparkSpec with graft.LowStatePartitions {
   import spark.implicits._
 
@@ -83,11 +88,15 @@ class SnapshotSinkSpec extends SparkSpec with graft.LowStatePartitions {
     } finally q.stop()
     // Merge semantics across batches: updates overwrite (incl. a
     // key the STREAM itself inserted a batch earlier), deletes hide.
-    val got = lake.read().collect().map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert(got.size === 99) // 100 − 2 deletes + 1 insert
+    val rows = lake.read().collect()
+    assert(rows.length === 99) // 100 − 2 deletes + 1 insert
+    val got = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size === 99) // one live row per key
     assert(got(5L) === 1005L && got(200L) === 1201L)
     assert(!got.contains(7L) && !got.contains(9L))
+    // One txn-stamped commit per micro-batch.
+    assert(lake.commits.flatMap(_.txn).filter(_._1 == "cdc-writer")
+      .map(_._2) === Seq(0L, 1L))
     // Merge-on-read: every seeded file is still live (masked, never
     // rewritten) and deletion vectors are engaged.
     assert(filesBefore.subsetOf(
@@ -100,5 +109,59 @@ class SnapshotSinkSpec extends SparkSpec with graft.LowStatePartitions {
       "k", "cdc-writer", lake.lastTxn("cdc-writer")).isEmpty)
     assert(lake.latestVersion === vBefore)
     assert(lake.read().filter("k = 200").head().getLong(1) === 1201L)
+  }
+
+  test("crash after the lake commit, before the checkpoint: resume skips the redelivered batch; catch-up is paced") {
+    // Lake-to-lake ETL: bronze commits stream through the snapshot
+    // source one commit per trigger into a curated silver lake. The
+    // first drain dies after batch 1's silver commit is durable but
+    // before the engine checkpoints batch 1, so the resumed query
+    // delivers batch 1 again; its txn stamp must skip it.
+    def kv(lo: Long, hi: Long) = (lo until hi).map(k => (k, k * 3)).toDF("k", "v")
+    def tmp(p: String) = Files.createTempDirectory(p).toString
+    val bronze = Snapshot.Lake(spark, tmp("lake-bronze-"))
+    (0 until 4).foreach(i => bronze.append(kv(i * 25L, i * 25L + 25L)))
+    val silver = Snapshot.Lake(spark, tmp("lake-silver-"))
+    val ckpt = tmp("lake-silver-ckpt-")
+    def curate(df: DataFrame) = df.filter(col("k") % 10 =!= 7)
+      .select(col("k"), col("v"), (col("v") * 2 + 1).as("score"))
+    def src() = spark.readStream.format("graft.io.v2.SnapshotStreamSource")
+      .option("maxCommitsPerTrigger", 1).load(bronze.root)
+    def silverTxns() =
+      silver.commits.flatMap(_.txn).filter(_._1 == "nightly").map(_._2)
+    def assertSilverIsCuratedBronze(): Unit = {
+      val expected = curate(bronze.read())
+      assert(silver.read().exceptAll(expected).isEmpty &&
+        expected.exceptAll(silver.read()).isEmpty,
+        "silver must equal the batch curation of bronze")
+    }
+    def resume(): Unit = {
+      val q = SnapshotSink.attach(curate(src()), silver, "nightly", ckpt,
+        trigger = Some(Trigger.AvailableNow()))
+      try assert(q.awaitTermination(120000)) finally q.stop()
+    }
+
+    val crashed = new AtomicBoolean(false)
+    val q1 = src().writeStream.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        if (!b.isEmpty) { silver.appendIdempotent(curate(b), "nightly", id); () }
+        if (id == 1 && crashed.compareAndSet(false, true))
+          throw new RuntimeException("injected crash after the lake commit")
+      }.start()
+    try intercept[StreamingQueryException](q1.awaitTermination(120000))
+    finally q1.stop()
+    assert(crashed.get)
+    assert(silverTxns() === Seq(0L, 1L)) // batch 1 landed before the crash
+    resume()
+    assertSilverIsCuratedBronze()
+    assert(silverTxns() === Seq(0L, 1L, 2L, 3L)) // each bronze commit once
+
+    // Nightly catch-up: four new bronze commits, one resume, paced one
+    // commit per trigger and picking up exactly the increment.
+    (4 until 8).foreach(i => bronze.append(kv(i * 25L, i * 25L + 25L)))
+    resume()
+    assertSilverIsCuratedBronze()
+    assert(silverTxns() === (0L until 8L))
   }
 }
