@@ -85,12 +85,17 @@ object GraftSession {
     *    recomputed after unpersisting", logged when state is cleared
     *    between queries: `GraftSessionSpec` checks that a query rebuilt
     *    after its checkpoints are unpersisted returns the same rows.
+    *  - `FileStreamSink` "Assume no metadata directory", logged with a
+    *    stack trace by every glob read of a sink's files: `PipelineSpec`
+    *    checks that a read of a streaming file sink's directory still
+    *    honours its `_spark_metadata` log.
     * Spark's own logging is initialised first, since its first use
     * replaces the log4j configuration. */
   private lazy val quietLoggers: Unit = {
     SparkLogging.init()
     Seq("org.apache.spark.sql.execution.window.WindowExec",
-      "org.apache.spark.rdd.MapPartitionsRDD")
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
       .foreach(Configurator.setLevel(_, Level.ERROR))
   }
 

@@ -56,34 +56,6 @@ object IIoTDemo {
     val aggN = aggSink.read(spark).count()
     println(s"[demo] stream wrote raw=$rawN agg=$aggN")
 
-    // Task 3b — the single-scan statement-set mode (J4 fidelity): ONE
-    // streaming query feeds both sinks; the raw branch is enriched
-    // in-stream (E1 realized), the agg sink merges algebraic partials.
-    // Cross-check: every finalized two-query window must match the
-    // merged-partials reconstruction exactly.
-    val raw2 = LakeSink(s"$work/db2/machine_sensors", partitionCols = Nil)
-    var partials: Option[org.apache.spark.sql.DataFrame] = None
-    val q2 = Pipeline.runSingleScan(spark,
-      JsonDirSource(s"$work/topic").readStream(spark),
-      writeRaw = b => raw2.append(
-        Enrich.enrich(b, DataGen.machineDim(spark), Seq("machine_id"))),
-      writeAggPartials = p => {
-        val pc = p.localCheckpoint(true)
-        partials = Some(partials.fold(pc)(m =>
-          Pipeline.mergePartials(m, pc).localCheckpoint(true)))
-      },
-      checkpointDir = s"$work/ckpt2")
-    q2.awaitTermination()
-    val raw2N = raw2.read(spark).count()
-    val finals = Pipeline.finalizeAggregates(partials.get)
-    val divergent = aggSink.read(spark).as("a")
-      .join(finals.as("f"), Seq("window_start", "machine_id", "sensor_type"))
-      .filter(abs(col("a.avg_value") - col("f.avg_value")) > 1e-9 ||
-        col("a.count_readings") =!= col("f.count_readings"))
-      .count()
-    println(s"[demo] single-scan mode: raw=$raw2N (enriched in-stream), " +
-      s"merged windows=${finals.count()}, divergent vs two-query=$divergent")
-
     // A1 as a first-class source: the same topic read through the
     // DataSourceV2 connector (column pruning + reader-side pushdown) —
     // must agree row-for-row with what the streaming pipeline ingested.
@@ -119,8 +91,6 @@ object IIoTDemo {
       "demo invariants violated")
     require(v2N == rawN && v2Cnc == rawN / 4,
       "V2 connector read diverged from the streaming ingest")
-    require(raw2N == rawN && divergent == 0,
-      "single-scan mode diverged from the two-query pipeline")
     println(s"[demo] OK workDir=$work")
     spark.stop()
   }

@@ -3,6 +3,10 @@ package graft.io
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{AlwaysFalse, AlwaysTrue, And,
+  EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In,
+  IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or, StringContains,
+  StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot lake: a minimal commit-log layer over the parquet seam —
@@ -392,20 +396,176 @@ object Snapshot {
     }
   }
 
-  /** Generated-column predicate REWRITE over a folded state (the
-    * point of generated columns — Delta's partition-filter
-    * derivation), shared by [[Lake.pruneFilesGenerated]] and the V2
-    * connector's scan planning: the files of `ck.state` that can hold
-    * a row with `baseCol` ∈ [qLo, qHi], decided from the GENERATED
-    * partition values alone. Monotone single expressions map the base
-    * range through two 1-row evaluations; the composite
-    * (year, month[, day]) family prunes lexicographically. Null
-    * partitions skip (null g ⇔ null base, which no BETWEEN admits);
-    * unrecorded values must-scan; unrecognized expressions simply
-    * don't prune (the row predicate always re-applies — an I/O win,
-    * never semantics). */
-  def pruneGenerated(spark: SparkSession, ck: Checkpoint,
-      baseCol: String, qLo: Any, qHi: Any): Seq[FileStat] = {
+  // ---- file skipping ---------------------------------------------------
+  // ONE evaluator decides which live files a filter conjunction can
+  // touch; the Lake's read API, DML and the V2 connector scan all prune
+  // through [[pruneFiles]]. Every tier is conservative: missing stats
+  // must-scan, and callers always re-apply the filters as row
+  // predicates, so pruning is an I/O win and never semantics.
+
+  /** Literals whose order the tiers agree with Spark's: numbers feed
+    * the long-zone, Bloom and partition tiers; date/timestamp literals
+    * feed the generated-column rewrite (the zone tiers must-scan
+    * them). Strings are handled per tier in [[admits]]. */
+  private def ordered(v: Any): Boolean =
+    v.isInstanceOf[java.lang.Number] || v.isInstanceOf[java.sql.Date] ||
+      v.isInstanceOf[java.sql.Timestamp] ||
+      v.isInstanceOf[java.time.LocalDate] ||
+      v.isInstanceOf[java.time.Instant]
+
+  /** Filters the manifest can act on. */
+  private[io] def prunable(f: Filter): Boolean = {
+    def tiered(v: Any) = ordered(v) || v.isInstanceOf[String]
+    f match {
+      case EqualTo(_, v) => tiered(v)
+      case GreaterThan(_, v) => tiered(v)
+      case GreaterThanOrEqual(_, v) => tiered(v)
+      case LessThan(_, v) => tiered(v)
+      case LessThanOrEqual(_, v) => tiered(v)
+      case IsNull(_) | IsNotNull(_) => true
+      case _ => false
+    }
+  }
+
+  /** CLOSED per-column windows in a filter conjunction — the
+    * generated-column rewrite's input. Any one bound per side is a
+    * valid window (rows must satisfy every conjunct), and a strict
+    * bound widens to closed (conservative: prunes less, never
+    * wrongly). One-sided windows are skipped — the rewrite needs both
+    * endpoints to evaluate. String bounds are skipped too: the
+    * recognized monotone shapes are monotone in a date or number, not
+    * in a string's byte order. */
+  private def closedWindows(filters: Seq[Filter])
+      : Seq[(String, (Any, Any))] = {
+    val los = scala.collection.mutable.LinkedHashMap.empty[String, Any]
+    val his = scala.collection.mutable.LinkedHashMap.empty[String, Any]
+    filters.foreach {
+      case GreaterThan(c, v) if ordered(v) => los.getOrElseUpdate(c, v)
+      case GreaterThanOrEqual(c, v) if ordered(v) =>
+        los.getOrElseUpdate(c, v)
+      case LessThan(c, v) if ordered(v) => his.getOrElseUpdate(c, v)
+      case LessThanOrEqual(c, v) if ordered(v) => his.getOrElseUpdate(c, v)
+      case EqualTo(c, v) if ordered(v) =>
+        los.getOrElseUpdate(c, v); his.getOrElseUpdate(c, v)
+      case _ => ()
+    }
+    los.keys.toSeq.filter(his.contains).map(c => c -> (los(c), his(c)))
+  }
+
+  /** Does file `f`'s manifest entry admit filter `flt`? `phys` maps a
+    * logical column to the physical name the stats are keyed by.
+    * Missing stats ⇒ must-scan (true). Tiers:
+    *  - PARTITION values answer first (a partition directory holds
+    *    ONLY its value's rows, so equality and ranges are exact at the
+    *    file level — Delta's first pruning tier). Values compare in
+    *    fragment space: the manifest stores partitionBy's escaped path
+    *    fragment verbatim ([[escapedPartValue]]). `IS NULL` admits the
+    *    null partition only; `IS NOT NULL` skips it.
+    *  - LONG zone maps answer numeric ranges and equality.
+    *  - STRING zone maps answer string ranges and equality under
+    *    UNSIGNED UTF-8 BYTE order ([[utf8Compare]]) — the order Spark's
+    *    min/max computed the stats under (Java's UTF-16 compareTo
+    *    disagrees for supplementary-plane keys).
+    *  - BLOOM filters answer equality, probing the value's string form
+    *    (the write side hashed `cast(string)`).
+    *  - NULL COUNTS answer `IS NULL` (count > 0) and `IS NOT NULL`
+    *    (count < rows: an all-null file skips) — zone ranges and
+    *    Blooms are null-blind. */
+  private def admits(f: FileStat, flt: Filter,
+      phys: String => String): Boolean = {
+    def part(c: String) = f.parts.get(phys(c))
+    def lo(c: String) = f.lo.get(phys(c))
+    def hi(c: String) = f.hi.get(phys(c))
+    def slo(c: String) = f.slo.get(phys(c))
+    def shi(c: String) = f.shi.get(phys(c))
+    def nulls(c: String) = f.nulls.get(phys(c))
+    def bloom(c: String, v: String): Boolean = f.bloom.get(phys(c)) match {
+      case Some((k, words)) => bloomMightContain(words, k, md5Hash60Jvm(v))
+      case None => true
+    }
+    // NUMERIC partition equality: spelling-insensitive (a DecimalType
+    // partition stores '5.00' but probes as '5.0' — a string-exact
+    // compare would FALSE-PRUNE, losing rows). Equal spellings answer
+    // fast; the NULL-partition sentinel prunes outright (no equality
+    // admits a null); otherwise compare as numbers, parsing the probe
+    // side ONCE per filter, and a fragment that is not numerically
+    // comparable (exotic form) must-scans.
+    def partEqNum(c: String, v: java.lang.Number): Boolean = {
+      lazy val probe = scala.util.Try(BigDecimal(v.toString)).toOption
+      part(c).forall { frag =>
+        frag == escapedPartValue(v.toString) ||
+          (frag != NullPartitionName && {
+            val s = org.apache.spark.sql.catalyst.catalog
+              .ExternalCatalogUtils.unescapePathName(frag)
+            (scala.util.Try(BigDecimal(s)).toOption, probe) match {
+              case (Some(a), Some(b)) => a.compare(b) == 0
+              case _ => true
+            }
+          })
+      }
+    }
+    // numeric partition value for range compares; None (no partition
+    // value, or non-numeric — incl. the null-partition sentinel, whose
+    // rows no comparison admits but the row predicate drops) means
+    // must-scan on this tier
+    def partLong(c: String): Option[Long] =
+      part(c).flatMap(frag =>
+        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+          .unescapePathName(frag).toLongOption)
+    def cmp(s: String, v: String) = utf8Compare(s, v)
+    flt match {
+      case EqualTo(c, v: java.lang.Number) =>
+        val x = v.longValue()
+        val zone = (lo(c), hi(c)) match {
+          case (Some(l), Some(h)) => l <= x && x <= h
+          case _ => true
+        }
+        // Bloom tier only for integral literals: only integral
+        // toString forms are canonical (a Decimal '5.0' probing a LONG
+        // column's Bloom built from '5' would false-prune).
+        val integral = v.isInstanceOf[java.lang.Long] ||
+          v.isInstanceOf[java.lang.Integer] ||
+          v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Byte]
+        partEqNum(c, v) && zone && (!integral || bloom(c, v.toString))
+      case EqualTo(c, v: String) =>
+        part(c).forall(_ == escapedPartValue(v)) && bloom(c, v) &&
+          slo(c).forall(cmp(_, v) <= 0) && shi(c).forall(cmp(_, v) >= 0)
+      case GreaterThan(c, v: java.lang.Number) =>
+        partLong(c).forall(_ > v.longValue()) &&
+          hi(c).forall(_ > v.longValue())
+      case GreaterThanOrEqual(c, v: java.lang.Number) =>
+        partLong(c).forall(_ >= v.longValue()) &&
+          hi(c).forall(_ >= v.longValue())
+      case LessThan(c, v: java.lang.Number) =>
+        partLong(c).forall(_ < v.longValue()) &&
+          lo(c).forall(_ < v.longValue())
+      case LessThanOrEqual(c, v: java.lang.Number) =>
+        partLong(c).forall(_ <= v.longValue()) &&
+          lo(c).forall(_ <= v.longValue())
+      case GreaterThan(c, v: String) => shi(c).forall(cmp(_, v) > 0)
+      case GreaterThanOrEqual(c, v: String) => shi(c).forall(cmp(_, v) >= 0)
+      case LessThan(c, v: String) => slo(c).forall(cmp(_, v) < 0)
+      case LessThanOrEqual(c, v: String) => slo(c).forall(cmp(_, v) <= 0)
+      case IsNull(c) =>
+        part(c).forall(_ == NullPartitionName) && nulls(c).forall(_ > 0)
+      case IsNotNull(c) =>
+        part(c).forall(_ != NullPartitionName) &&
+          nulls(c).forall(_ < f.rows)
+      case _ => true
+    }
+  }
+
+  /** Generated-column predicate REWRITE (the point of generated
+    * columns — Delta's partition-filter derivation): which files can
+    * hold a row with `baseCol` ∈ [qLo, qHi], decided from the
+    * GENERATED partition values alone. Monotone single expressions
+    * ([[monotoneBaseOf]]) map the base range through two 1-row
+    * evaluations; the composite (year, month[, day]) family prunes
+    * lexicographically. Null partitions skip (null g ⇔ null base,
+    * which no BETWEEN admits); unrecorded values must-scan;
+    * unrecognized expressions admit every file. */
+  private def generatedAdmits(spark: SparkSession, ck: Checkpoint,
+      baseCol: String, qLo: Any, qHi: Any): FileStat => Boolean = {
     val allGens = ck.schema.toSeq.flatMap(generatedIn)
     val mono = allGens.filter { case (_, e) =>
       monotoneBaseOf(e).contains(baseCol) }
@@ -417,7 +577,7 @@ object Snapshot {
         case (p, b) if b == baseCol => p -> g } }.toMap
     val composite = parts.contains("year") &&
       (parts.contains("month") || parts.contains("day"))
-    if (mono.isEmpty && !composite) return ck.state.map(_._1)
+    if (mono.isEmpty && !composite) return _ => true
     // Evaluate every relevant expression at both endpoints — two
     // 1-row local jobs, the whole rewrite's compute cost.
     val evalGens = (mono ++ (if (composite)
@@ -496,7 +656,56 @@ object Snapshot {
         case _ => true // unrecorded year or null bounds: must scan
       }
     }
-    ck.state.map(_._1).filter(f => monoAdmits(f) && compositeAdmits(f))
+    f => monoAdmits(f) && compositeAdmits(f)
+  }
+
+  /** The live entries of `ck` (file, deletion vector) whose manifest
+    * admits EVERY filter of the conjunction `filters` — [[admits]]'
+    * stats tiers plus the generated-column rewrite for each closed
+    * window. Filters arrive under logical names and translate to the
+    * physical names the stats are keyed by (stable across renames).
+    * Nothing prunable ⇒ all live files. The rewrite's endpoint
+    * evaluations need `spark`; every other tier is a pure manifest
+    * filter, zero data or footer I/O. */
+  def pruneFiles(spark: SparkSession, ck: Checkpoint, filters: Seq[Filter])
+      : Seq[(FileStat, Option[String])] = {
+    val pr = filters.filter(prunable)
+    if (pr.isEmpty) return ck.state
+    val mapping = ck.schema
+      .map(_.fields.map(f => f.name -> physicalName(f)).toMap)
+      .getOrElse(Map.empty[String, String])
+    val phys = (c: String) => mapping.getOrElse(c, c)
+    val rewrites = closedWindows(pr).map { case (c, (lo, hi)) =>
+      generatedAdmits(spark, ck, c, lo, hi) }
+    ck.state.filter { case (f, _) =>
+      pr.forall(admits(f, _, phys)) && rewrites.forall(_(f)) }
+  }
+
+  /** V1 filter → row predicate: how [[Lake.readWhere]] re-applies the
+    * filters it pruned with, and how the SQL `SupportsDelete` door
+    * turns pushed filters into a DELETE condition. None =
+    * untranslatable. */
+  def filterToColumn(f: Filter): Option[Column] = f match {
+    case EqualTo(a, v) => Some(col(a) === lit(v))
+    case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
+    case GreaterThan(a, v) => Some(col(a) > lit(v))
+    case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
+    case LessThan(a, v) => Some(col(a) < lit(v))
+    case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
+    case In(a, vs) => Some(col(a).isin(vs.toSeq: _*))
+    case IsNull(a) => Some(col(a).isNull)
+    case IsNotNull(a) => Some(col(a).isNotNull)
+    case StringStartsWith(a, p) => Some(col(a).startsWith(p))
+    case StringEndsWith(a, p) => Some(col(a).endsWith(p))
+    case StringContains(a, p) => Some(col(a).contains(p))
+    case Not(c) => filterToColumn(c).map(!_)
+    case And(l, r) => for {
+      lc <- filterToColumn(l); rc <- filterToColumn(r) } yield lc && rc
+    case Or(l, r) => for {
+      lc <- filterToColumn(l); rc <- filterToColumn(r) } yield lc || rc
+    case _: AlwaysTrue => Some(lit(true))
+    case _: AlwaysFalse => Some(lit(false))
+    case _ => None
   }
 
   /** The field's physical (on-disk/manifest) name. */
@@ -724,7 +933,7 @@ object Snapshot {
   }
 
   /** SESSION-FREE log replay — shared by [[Lake]] and the V2 streaming
-    * source ([[graft.io.v2.SnapshotStreamSource]]), which must read the
+    * source (`SnapshotStreamSource`), which must read the
     * log on executors and at planning time where no SparkSession
     * exists. Plain filesystem + line parsing, nothing Spark. Parses
     * EVERY commit — history-shaped consumers (describeHistory) only;
@@ -1184,11 +1393,10 @@ object Snapshot {
   /** Open (or initialize on first commit) a snapshot lake at `root`.
     * `statsCols` are LONG-typed columns to zone-map per file;
     * `bloomCols` additionally get a per-file [[BloomM]]-bit Bloom
-    * filter in the manifest for point-lookup skipping
-    * ([[Lake.pruneFilesEq]]); `strStatsCols` get base64 string zone
-    * maps ([[Lake.pruneFilesStr]]); `nullStatsCols` get per-file null
-    * counts for IS NULL / IS NOT NULL skipping
-    * ([[Lake.pruneFilesNull]]).
+    * filter in the manifest for point-lookup skipping; `strStatsCols`
+    * get base64 string zone maps; `nullStatsCols` get per-file null
+    * counts for IS NULL / IS NOT NULL skipping. Every tier prunes
+    * through [[Lake.pruneFiles]].
     *
     * '''Supported-store contract''' (the Delta LogStore semantic):
     * a commit publishes PUT-IF-ABSENT. On local (POSIX) stores the
@@ -1327,9 +1535,7 @@ object Snapshot {
       * history length). */
     def liveState(asOf: Int): Seq[(FileStat, Option[String])] = {
       if (asOf < 0) return Nil
-      val ck = ckAt(asOf)
-      require(ck.version >= 0, s"no snapshot <= $asOf at $root")
-      ck.state
+      snapshotAt(asOf).state
     }
 
     /** The live file set as of snapshot `v` (manifest level — row-level
@@ -1343,14 +1549,20 @@ object Snapshot {
     private def ckAt(v: Int): Snapshot.Checkpoint =
       gateRead(Snapshot.checkpointAt(fs, logPath, v))
 
+    /** [[ckAt]] for a snapshot that must exist. */
+    private def snapshotAt(v: Int): Snapshot.Checkpoint = {
+      val ck = ckAt(v)
+      require(ck.version >= 0, s"no snapshot <= $v at $root")
+      ck
+    }
+
     /** Time travel: the table exactly as snapshot `v` saw it —
       * deletion vectors of that snapshot applied, columns under the
       * LOGICAL names that snapshot's schema recorded (a later rename
       * never rewrites history: old versions read under old names). */
     def readAsOf(v: Int): DataFrame = {
       if (v < 0) return spark.emptyDataFrame
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
+      val ck = snapshotAt(v)
       readState(ck.state, logical = ck.schema)
     }
 
@@ -1596,233 +1808,36 @@ object Snapshot {
       frames.reduce(_ unionByName _)
     }
 
-    /** Zone-map pruning over the live manifest: the files of snapshot
-      * `v` whose [lo, hi] for `col` intersects [qLo, qHi] — the scan
-      * set a range predicate needs. With [[Compact.clusterBy]]-laid
-      * files the survivor count approaches ceil(selectivity · files)
-      * (CompactSpec's pruning experiment). */
-    def pruneFiles(v: Int, col: String, qLo: Long, qHi: Long): Seq[FileStat] = {
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
-      // Manifest stats are keyed by PHYSICAL name (stable across
-      // renames, so a rename invalidates no recorded segment); the
-      // caller's logical column translates here, in every prune tier.
-      val pc = Snapshot.physicalIn(ck.schema, col)
-      ck.state.map(_._1).filter { f =>
-        (f.lo.get(pc), f.hi.get(pc)) match {
-          case (Some(l), Some(h)) => h >= qLo && l <= qHi
-          case _ => true // no stats for col ⇒ cannot prune, must scan
-        }
-      }
-    }
+    /** File skipping over snapshot `v`'s live manifest: the files whose
+      * recorded stats admit EVERY filter of the conjunction `filters`
+      * ([[Snapshot.pruneFiles]] — partition values, long and string
+      * zone maps, Blooms, null counts and the generated-column
+      * rewrite). Filters name LOGICAL columns, e.g.
+      * `Seq(GreaterThanOrEqual("k", 100L), LessThanOrEqual("k", 199L))`
+      * for a range, `EqualTo("tag", "t7")` for a point probe,
+      * `IsNull("p")` for the null partition. Files without the stats a
+      * filter needs stay must-scan. With [[Compact.clusterBy]]-laid
+      * files a range's survivor count approaches
+      * ceil(selectivity · files). */
+    def pruneFiles(v: Int, filters: Seq[Filter]): Seq[FileStat] =
+      Snapshot.pruneFiles(spark, snapshotAt(v), filters).map(_._1)
 
-    /** Range scan through the zone-map manifest: open only the files
-      * [[pruneFiles]] keeps, then apply the row predicate — after a
-      * [[Compact.clusterBy]] the file set is ~selectivity × nFiles.
-      * This is the consumer API the manifest exists for: at 100 TB a
-      * 1% range predicate over a clustered table opens ~1% of files
-      * without any footer reads on the other 99%. */
-    def readRange(v: Int, column: String, qLo: Long, qHi: Long): DataFrame = {
-      val keep = pruneFiles(v, column, qLo, qHi).map(_.path).toSet
-      val ck = ckAt(v)
-      val entries = ck.state.filter(e => keep(e._1.path))
-      // every file pruned: an empty frame WITH the table schema (plan
-      // over the live set, zero rows scanned at runtime)
+    /** Filtered read through the manifest: open only [[pruneFiles]]'
+      * survivors (deletion vectors applied), then re-apply `filters`
+      * as row predicates ([[Snapshot.filterToColumn]]) — exact even
+      * when must-scan files contribute. Every file pruned ⇒ an empty
+      * frame WITH the table schema. This is the consumer API the
+      * manifest exists for: at 100 TB a 1% range predicate over a
+      * clustered table opens ~1% of files without any footer reads on
+      * the other 99%. */
+    def readWhere(v: Int, filters: Seq[Filter]): DataFrame = {
+      val rows = filters.map(f => Snapshot.filterToColumn(f).getOrElse(
+        throw new IllegalArgumentException(
+          s"readWhere at $root: no row predicate for filter $f")))
+      val ck = snapshotAt(v)
+      val entries = Snapshot.pruneFiles(spark, ck, filters)
       if (entries.isEmpty) readAsOf(v).filter(lit(false))
-      else readState(entries, logical = ck.schema)
-        .filter(col(column).between(qLo, qHi))
-    }
-
-    /** STRING zone-map pruning (Delta records min/max for string
-      * columns too — this is that tier for `strStatsCols`): the live
-      * files of snapshot `v` whose [slo, shi] for `c` intersects
-      * [qLo, qHi] under UNSIGNED UTF-8 BYTE order ([[utf8Compare]]) —
-      * the exact order Spark's min/max computed the stats under, so
-      * pruning can never disagree with the stats (Java compareTo's
-      * UTF-16 order would, for supplementary-plane keys). Files
-      * without a recorded range stay must-scan. */
-    def pruneFilesStr(v: Int, c: String, qLo: String, qHi: String)
-        : Seq[FileStat] = {
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
-      val pc = Snapshot.physicalIn(ck.schema, c)
-      ck.state.map(_._1).filter { f =>
-        (f.slo.get(pc), f.shi.get(pc)) match {
-          case (Some(l), Some(h)) =>
-            Snapshot.utf8Compare(h, qLo) >= 0 &&
-              Snapshot.utf8Compare(l, qHi) <= 0
-          case _ => true
-        }
-      }
-    }
-
-    /** Range scan through the string zone maps — [[readRange]]'s
-      * lexicographic twin: open only [[pruneFilesStr]]'s survivors
-      * (deletion vectors applied), then the row predicate. After a
-      * string-keyed [[Compact.clusterBy]] the opened set approaches
-      * selectivity × nFiles, decided entirely from the log. */
-    def readRangeStr(v: Int, c: String, qLo: String, qHi: String)
-        : DataFrame = {
-      val keep = pruneFilesStr(v, c, qLo, qHi).map(_.path).toSet
-      val ck = ckAt(v)
-      val entries = ck.state.filter(e => keep(e._1.path))
-      if (entries.isEmpty) readAsOf(v).filter(lit(false))
-      else readState(entries, logical = ck.schema)
-        .filter(col(c).cast("string").between(qLo, qHi))
-    }
-
-    /** Bloom pruning over the live manifest: the files of snapshot `v`
-      * whose per-file filter might contain `value` (string form — LONG
-      * columns probe with the number's decimal spelling, matching the
-      * `cast("string")` hash on the write side). Files without a
-      * filter for `column` stay must-scan. No false negatives ever
-      * (Bloom's contract), ~BloomM-tuned false positives — on a
-      * hash-scattered column where every zone map spans the domain,
-      * this is the only manifest-level skip a point lookup gets. */
-    def pruneFilesEq(v: Int, column: String, value: String): Seq[FileStat] = {
-      val h = Snapshot.md5Hash60Jvm(value)
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
-      val pc = Snapshot.physicalIn(ck.schema, column)
-      ck.state.map(_._1).filter { f =>
-        f.bloom.get(pc) match {
-          case Some((k, words)) => Snapshot.bloomMightContain(words, k, h)
-          case None => true // no filter ⇒ cannot prune, must scan
-        }
-      }
-    }
-
-    /** Point lookup through the Bloom manifest: open only the files
-      * [[pruneFilesEq]] keeps (deletion vectors applied), then the row
-      * predicate. At 100 TB a point probe on a Bloom'd column opens
-      * ~fpp × nFiles files instead of all of them. */
-    def readEq(v: Int, column: String, value: String): DataFrame = {
-      val keep = pruneFilesEq(v, column, value).map(_.path).toSet
-      val ck = ckAt(v)
-      val entries = ck.state.filter(e => keep(e._1.path))
-      if (entries.isEmpty) readAsOf(v).filter(lit(false))
-      else readState(entries, logical = ck.schema)
-        .filter(col(column).cast("string") === value)
-    }
-
-    /** Partition-tier pruning (Delta's FIRST pruning tier, consulted
-      * before zone maps or Blooms): the live files of snapshot `v`
-      * whose recorded partition value for `c` equals `value` — the
-      * caller passes the RAW value (its plain string form; `null` for
-      * the null partition) and the compare happens in manifest space:
-      * the manifest records partitionBy's ESCAPED path fragment
-      * verbatim (grammar-safe — see [[Snapshot.escapedPartValue]]), so
-      * the raw value is escaped through the SAME function before
-      * comparing, making values needing escaping (space, `=`, `:`,
-      * `%`, …) and null match exactly instead of silently pruning to
-      * nothing. Files without a recorded value — unpartitioned commits
-      * of a mixed-history table — stay must-scan. Pure manifest
-      * filter: zero data or footer I/O, exact (a partition dir holds
-      * ONLY its value's rows, unlike a zone range). */
-    def pruneFilesPartition(v: Int, c: String, value: String): Seq[FileStat] = {
-      val frag = Snapshot.escapedPartValue(value)
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
-      val pc = Snapshot.physicalIn(ck.schema, c)
-      ck.state.map(_._1).filter(f => f.parts.get(pc).forall(_ == frag))
-    }
-
-    /** Partition-pruned read: open only [[pruneFilesPartition]]'s
-      * survivors (deletion vectors applied), then re-apply the row
-      * predicate (IS NULL for the null partition) — exact even when
-      * must-scan unpartitioned files contribute. At 100 TB a
-      * one-partition read of a year/month/day-laid table opens that
-      * partition's files only, decided entirely from the log. */
-    def readPartition(v: Int, c: String, value: String): DataFrame = {
-      val keep = pruneFilesPartition(v, c, value).map(_.path).toSet
-      val ck = ckAt(v)
-      val entries = ck.state.filter(e => keep(e._1.path))
-      if (entries.isEmpty) readAsOf(v).filter(lit(false))
-      else readState(entries, logical = ck.schema).filter(
-        if (value == null) col(c).isNull
-        else col(c).cast("string") === value)
-    }
-
-    /** Null-count pruning (Delta records per-file nullCount beside
-      * min/max — this is that tier for `nullStatsCols`): the live
-      * files of snapshot `v` that CAN hold a row matching `IS NULL`
-      * (`wantNull = true`: recorded null count > 0) or `IS NOT NULL`
-      * (`wantNull = false`: null count < rows — an all-null file
-      * skips). Files without a recorded count — commits predating the
-      * tier, or a column absent from the file (reads null-filled, but
-      * unrecorded) — stay must-scan. Pure manifest filter; completes
-      * the skipping matrix (zone ranges and Blooms are null-blind:
-      * a NULL neither intersects a range nor probes a filter). */
-    def pruneFilesNull(v: Int, c: String, wantNull: Boolean): Seq[FileStat] = {
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
-      val pc = Snapshot.physicalIn(ck.schema, c)
-      ck.state.map(_._1).filter { f =>
-        f.nulls.get(pc) match {
-          case Some(n) => if (wantNull) n > 0 else n < f.rows
-          case None => true // no stat ⇒ cannot prune, must scan
-        }
-      }
-    }
-
-    /** Null-predicate read through the null-count manifest: open only
-      * [[pruneFilesNull]]'s survivors (deletion vectors applied), then
-      * re-apply the row predicate — exact even with must-scan files in
-      * the mix. At 100 TB an `IS NULL` audit of a mostly-populated
-      * column opens only the files that ever saw a null, decided
-      * entirely from the log. */
-    def readNull(v: Int, c: String, wantNull: Boolean): DataFrame = {
-      val keep = pruneFilesNull(v, c, wantNull).map(_.path).toSet
-      val ck = ckAt(v)
-      val entries = ck.state.filter(e => keep(e._1.path))
-      if (entries.isEmpty) readAsOf(v).filter(lit(false))
-      else readState(entries, logical = ck.schema)
-        .filter(if (wantNull) col(c).isNull else col(c).isNotNull)
-    }
-
-    /** Generated-column predicate REWRITE (the point of generated
-      * columns — Delta's partition-filter derivation): the live files
-      * of snapshot `v` that can hold a row with `baseCol` ∈
-      * [qLo, qHi], decided from the GENERATED partition values alone.
-      * For every generated column g = f(baseCol) whose expression is
-      * a recognized monotone shape ([[Snapshot.monotoneBaseOf]]), the
-      * base range maps to [f(qLo), f(qHi)] (two 1-row evaluations)
-      * and the manifest's `part:` tier prunes files whose recorded g
-      * is outside it — so a `ts >= X` query over a day-partitioned
-      * table opens that window's partitions only, zero data I/O on
-      * the rest. Null partitions skip (a null g means a null base,
-      * which no BETWEEN admits); files without a recorded value
-      * must-scan; unrecognized expressions simply don't prune (the
-      * row predicate always re-applies — pruning is an I/O win,
-      * never semantics). */
-    def pruneFilesGenerated(v: Int, baseCol: String, qLo: Any,
-        qHi: Any): Seq[FileStat] = {
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
-      pruneGeneratedIn(ck, baseCol, qLo, qHi)
-    }
-
-    private def pruneGeneratedIn(ck: Snapshot.Checkpoint,
-        baseCol: String, qLo: Any, qHi: Any): Seq[FileStat] =
-      Snapshot.pruneGenerated(spark, ck, baseCol, qLo, qHi)
-
-    /** Base-column range read through the generated-column rewrite:
-      * open only [[pruneFilesGenerated]]'s survivors (deletion
-      * vectors applied), then the exact row predicate. At 100 TB the
-      * reference's C3 layout (day derived from the event timestamp,
-      * `timescale_to_deltalake.py:36`) serves a time-window query by
-      * opening the window's partitions only — decided entirely from
-      * the log. */
-    def readRangeGenerated(v: Int, baseCol: String, qLo: Any,
-        qHi: Any): DataFrame = {
-      val ck = ckAt(v)
-      require(ck.version >= 0, s"no snapshot <= $v at $root")
-      val keep = pruneGeneratedIn(ck, baseCol, qLo, qHi)
-        .map(_.path).toSet
-      val entries = ck.state.filter(e => keep(e._1.path))
-      if (entries.isEmpty) readAsOf(v).filter(lit(false))
-      else readState(entries, logical = ck.schema)
-        .filter(col(baseCol).between(lit(qLo), lit(qHi)))
+      else rows.foldLeft(readState(entries, logical = ck.schema))(_ filter _)
     }
 
     /** Schema evolution on the read side (Delta's mergeSchema
@@ -1845,9 +1860,15 @@ object Snapshot {
       * read side from `_metadata.file_path`, matching the
       * `data/<commit dir>/[partition dirs/]<file>` keys DV files
       * store. Anchored on the commit-dir naming (`c<version>-<uuid>`)
-      * so partition subdirectories of any depth are captured. */
+      * so partition subdirectories of any depth are captured.
+      * `file_path` is URI-encoded (a `b%3Dc` partition directory reads
+      * as `b%253Dc`), so it is decoded first — `+` is protected, since
+      * `url_decode` would turn it into a space — or no row of a file
+      * under an escaped partition value would ever match its manifest
+      * key, and MOR deletes there would silently mask nothing. */
     private def relKey =
-      regexp_extract(col("_metadata.file_path"),
+      regexp_extract(
+        url_decode(regexp_replace(col("_metadata.file_path"), "\\+", "%2B")),
         "(data/c[0-9]+-[^/]+/.+)$", 1)
 
     /** Row-level read of a live state: files without a deletion vector
@@ -2756,19 +2777,19 @@ object Snapshot {
     }
 
     /** Merge-on-read DELETE by PREDICATE — SQL `DELETE FROM ... WHERE
-      * cond` ([[graft.io.v2.GraftSqlTable]] routes here): one scan of
+      * cond` (the SQL catalog's table routes here): one scan of
       * the candidate files with `cond` pushed into the parquet reader
       * (row-group skipping), and only files that actually carry a
       * matching LIVE row get a deletion vector — nothing rewrites, so
       * the delete costs O(matches + scan-of-candidates) at any table
       * size. `prune` carries the condition's attr-vs-literal conjuncts
       * as V1 filters (the SQL door extracts them); candidate files are
-      * resolved HERE against this op's own checkpoint fold through the
-      * connector's admits() tiers (partition/zone/Bloom/szone) — a set
-      * computed in a separate earlier fold could go stale against a
-      * concurrent append and silently miss its rows. Missing stats ⇒
-      * must-scan; empty `prune` scans all live files. Rows an existing
-      * DV already masks are
+      * resolved HERE against this op's own checkpoint fold through
+      * [[Snapshot.pruneFiles]], the evaluator reads and the connector
+      * scan prune with — a set computed in a separate earlier fold
+      * could go stale against a concurrent append and silently miss its
+      * rows. Missing stats ⇒ must-scan; empty `prune` scans all live
+      * files. Rows an existing DV already masks are
       * excluded up front, so the CDF across the commit emits each row's
       * delete exactly once. Zero matches publish an explicit no-op
       * version (the audit trail records the attempt, like
@@ -2778,7 +2799,7 @@ object Snapshot {
       val lv = latestVersion
       require(lv >= 0, s"deleteWhere on an empty lake at $root")
       val ck = gateWrite(ckAt(lv))
-      val cands = pruneCandidates(ck, prune)
+      val cands = Snapshot.pruneFiles(spark, ck, prune)
       val version = lv + 1
       def noop(): Int = noopAt(version)
       if (cands.isEmpty) return noop()
@@ -2841,7 +2862,7 @@ object Snapshot {
           s"updateWhere at $root: SET target '$c' is not a column of " +
             s"the table (${knownCols.toSeq.sorted.mkString(", ")})")
       }
-      val cands = pruneCandidates(ck, prune)
+      val cands = Snapshot.pruneFiles(spark, ck, prune)
       val version = lv + 1
       def noop(): Int = noopAt(version)
       if (cands.isEmpty) return noop()
@@ -2867,7 +2888,7 @@ object Snapshot {
 
     /** Merge-on-read MERGE with the full SQL clause algebra — `MERGE
       * INTO t USING s ON cond WHEN [NOT] MATCHED [AND c] THEN
-      * UPDATE/DELETE/INSERT` ([[graft.io.v2.GraftSqlTable]]'s SQL door
+      * UPDATE/DELETE/INSERT` (the SQL catalog's door
       * routes here; [[upsertMor]] stays the fast path for the plain
       * key-upsert shape). Column references follow
       * [[Snapshot.MergeClause]]'s convention: target columns plain,
@@ -3058,29 +3079,6 @@ object Snapshot {
           if (hitRel.isEmpty) Nil
           else morDvLinesFromHits(tEntries, hits.get, version),
         baseVersion = lv)
-    }
-
-    /** Manifest-tier candidate files for a predicate-shaped DML op:
-      * the live files whose stats tiers (partition, zone, Bloom,
-      * string-zone — [[graft.io.v2.SnapshotScan.admits]], the same
-      * tiers the connector scan prunes with) admit EVERY prunable
-      * filter of the condition's conjunction. Evaluated against the
-      * op's OWN checkpoint fold, so there is no window for a
-      * concurrent append to slip a matching file between a candidate
-      * probe and the scan. Missing stats ⇒ must-scan (a superset is
-      * always safe); nothing prunable ⇒ all live files. */
-    private def pruneCandidates(ck: Snapshot.Checkpoint,
-        prune: Seq[org.apache.spark.sql.sources.Filter])
-        : Seq[(FileStat, Option[String])] = {
-      val pr = prune.filter(graft.io.v2.SnapshotScan.prunable)
-      if (pr.isEmpty) ck.state
-      else {
-        val mapping = ck.schema
-          .map(_.fields.map(f => f.name -> Snapshot.physicalName(f)).toMap)
-          .getOrElse(Map.empty[String, String])
-        ck.state.filter { case (f, _) =>
-          pr.forall(graft.io.v2.SnapshotScan.admits(f, _, mapping)) }
-      }
     }
 
     /** Publish an explicit no-op version — the audit-trail record for

@@ -381,14 +381,14 @@ class GraftSqlTable(ident: String, root: String, versionAsOf: Int)
     * conditions V1 filters can't express. */
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    versionAsOf < 0 && filters.forall(GraftDml.filterToColumn(_).isDefined)
+    versionAsOf < 0 && filters.forall(Snapshot.filterToColumn(_).isDefined)
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     require(versionAsOf < 0,
       s"cannot DELETE FROM a time-travel relation of $ident")
     import org.apache.spark.sql.functions.lit
-    val cond = filters.toSeq.flatMap(GraftDml.filterToColumn)
+    val cond = filters.toSeq.flatMap(Snapshot.filterToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
     Snapshot.Lake(SparkSession.active, root)
       .deleteWhere(cond, filters.toSeq)

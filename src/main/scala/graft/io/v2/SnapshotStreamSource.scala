@@ -21,8 +21,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
   SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
   ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan,
-  GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{BooleanType, DateType, DoubleType,
   FloatType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -397,15 +396,15 @@ class SnapshotScanBuilder(
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Manifest-level FILE pruning (not row filtering): comparisons and
-    * equality on statted/Bloom'd LONG columns skip files whose zone
-    * map / Bloom filter cannot match — decided at planning from the
-    * log alone, zero footer reads on skipped files. EVERY filter is
+  /** Manifest-level FILE pruning (not row filtering): the filters
+    * [[Snapshot.prunable]] accepts skip files whose manifest stats
+    * cannot match ([[Snapshot.pruneFiles]]) — decided at planning from
+    * the log alone, zero footer reads on skipped files. EVERY filter is
     * returned as residual (the readers decode whole files and do not
     * evaluate predicates), so Spark re-applies them post-scan —
     * pruning is purely an I/O win, semantics never depend on it. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(SnapshotScan.prunable)
+    pushed = filters.filter(Snapshot.prunable)
     filters // all residual: Spark still evaluates everything
   }
 
@@ -425,145 +424,6 @@ class SnapshotScanBuilder(
     mapping = SnapshotStreamSource.logicalSchemaAndMap(root,
         SnapshotStreamSource.resolveAsOf(options))
       .map(_._2).getOrElse(Map.empty))
-}
-
-object SnapshotScan {
-  /** Values the pruning tiers can reason about: numbers feed the
-    * zone/Bloom/partition tiers; date/timestamp literals feed the
-    * GENERATED-COLUMN rewrite (the zone tiers must-scan them). */
-  private def comparable(v: Any): Boolean =
-    v.isInstanceOf[java.lang.Number] || v.isInstanceOf[java.sql.Date] ||
-      v.isInstanceOf[java.sql.Timestamp] ||
-      v.isInstanceOf[java.time.LocalDate] ||
-      v.isInstanceOf[java.time.Instant]
-
-  /** Filters the manifest can act on. */
-  private[io] def prunable(f: Filter): Boolean = f match {
-    case EqualTo(_, v) => comparable(v) || v.isInstanceOf[String]
-    case GreaterThan(_, v) => comparable(v)
-    case GreaterThanOrEqual(_, v) => comparable(v)
-    case LessThan(_, v) => comparable(v)
-    case LessThanOrEqual(_, v) => comparable(v)
-    case _ => false
-  }
-
-  /** CLOSED per-column windows in a pushed-filter conjunction — the
-    * generated-column rewrite's input. Any one bound per side is a
-    * valid window (rows must satisfy every conjunct), and a strict
-    * bound widens to closed (conservative: prunes less, never
-    * wrongly). One-sided windows are skipped — the rewrite needs both
-    * endpoints to evaluate. */
-  private[v2] def closedWindows(filters: Array[Filter])
-      : Seq[(String, (Any, Any))] = {
-    val los = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    val his = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-    filters.foreach {
-      case GreaterThan(c, v) if comparable(v) =>
-        los.getOrElseUpdate(c, v)
-      case GreaterThanOrEqual(c, v) if comparable(v) =>
-        los.getOrElseUpdate(c, v)
-      case LessThan(c, v) if comparable(v) => his.getOrElseUpdate(c, v)
-      case LessThanOrEqual(c, v) if comparable(v) =>
-        his.getOrElseUpdate(c, v)
-      case EqualTo(c, v) if comparable(v) =>
-        los.getOrElseUpdate(c, v); his.getOrElseUpdate(c, v)
-      case _ => ()
-    }
-    los.keys.toSeq.filter(his.contains)
-      .map(c => c -> (los(c), his(c)))
-  }
-
-  /** Does `stat`'s manifest entry admit filter `f`? Missing stats ⇒
-    * must-scan (true). The PARTITION tier answers first (a partition
-    * directory holds ONLY its value's rows, so equality and ranges
-    * are exact at the file level — Delta's first pruning tier, now on
-    * the connector path too); zone maps answer ranges; Blooms answer
-    * equality (via the same string-form md5 the write side hashed). */
-  private[io] def admits(stat: Snapshot.FileStat, f: Filter,
-      mapping: Map[String, String] = Map.empty): Boolean = {
-    // manifest stats key by PHYSICAL name; filters arrive logical
-    def phys(c: String) = mapping.getOrElse(c, c)
-    def lo(c: String) = stat.lo.get(phys(c))
-    def hi(c: String) = stat.hi.get(phys(c))
-    // exact recorded partition value, compared in fragment space (the
-    // manifest stores partitionBy's escaped path fragment verbatim)
-    def partEq(c: String, raw: String): Boolean =
-      stat.parts.get(phys(c))
-        .forall(_ == Snapshot.escapedPartValue(raw))
-    // NUMERIC partition equality: spelling-insensitive (a DecimalType
-    // partition stores '5.00' but probes as '5.0' — a string-exact
-    // compare would FALSE-PRUNE, losing rows). Equal spellings answer
-    // fast; the NULL-partition sentinel prunes outright (no equality
-    // admits a null — the string-exact form always pruned it, and
-    // must-scan here would admit every numeric probe into the null
-    // partition); otherwise compare as numbers, parsing the probe side
-    // ONCE per filter, and a fragment that is not numerically
-    // comparable (exotic form) must-scans — the residual filter drops
-    // its rows, mirroring partLong.
-    def partEqNum(c: String, v: java.lang.Number): Boolean = {
-      lazy val probe = scala.util.Try(BigDecimal(v.toString)).toOption
-      stat.parts.get(phys(c)).forall { frag =>
-        frag == Snapshot.escapedPartValue(v.toString) ||
-          (frag != Snapshot.NullPartitionName && {
-            val s = org.apache.spark.sql.catalyst.catalog
-              .ExternalCatalogUtils.unescapePathName(frag)
-            (scala.util.Try(BigDecimal(s)).toOption, probe) match {
-              case (Some(a), Some(b)) => a.compare(b) == 0
-              case _ => true
-            }
-          })
-      }
-    }
-    // numeric partition value for range compares; None (no partition
-    // value, or non-numeric — incl. the null-partition sentinel,
-    // whose rows no comparison admits but the residual filter drops)
-    // means must-scan on this tier
-    def partLong(c: String): Option[Long] =
-      stat.parts.get(phys(c)).flatMap(frag =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(frag).toLongOption)
-    f match {
-      case EqualTo(c, v: java.lang.Number) =>
-        val x = v.longValue()
-        val zone = (lo(c), hi(c)) match {
-          case (Some(l), Some(h)) => l <= x && x <= h
-          case _ => true
-        }
-        // Bloom tier only for integral literals: the write side hashed
-        // cast-to-string values, and only integral toString forms are
-        // canonical (a Decimal '5.0' probing a LONG column's bloom
-        // built from '5' would false-prune). Non-integral ⇒ must-scan
-        // on this tier; zone + partition tiers still apply.
-        val integral = v.isInstanceOf[java.lang.Long] ||
-          v.isInstanceOf[java.lang.Integer] ||
-          v.isInstanceOf[java.lang.Short] || v.isInstanceOf[java.lang.Byte]
-        partEqNum(c, v) && zone &&
-          (!integral || bloomAdmits(stat, phys(c), v.toString))
-      case EqualTo(c, v: String) =>
-        partEq(c, v) && bloomAdmits(stat, phys(c), v)
-      case GreaterThan(c, v: java.lang.Number) =>
-        partLong(c).forall(_ > v.longValue()) &&
-          hi(c).forall(_ > v.longValue())
-      case GreaterThanOrEqual(c, v: java.lang.Number) =>
-        partLong(c).forall(_ >= v.longValue()) &&
-          hi(c).forall(_ >= v.longValue())
-      case LessThan(c, v: java.lang.Number) =>
-        partLong(c).forall(_ < v.longValue()) &&
-          lo(c).forall(_ < v.longValue())
-      case LessThanOrEqual(c, v: java.lang.Number) =>
-        partLong(c).forall(_ <= v.longValue()) &&
-          lo(c).forall(_ <= v.longValue())
-      case _ => true
-    }
-  }
-
-  private def bloomAdmits(stat: Snapshot.FileStat, c: String,
-      v: String): Boolean =
-    stat.bloom.get(c) match {
-      case Some((k, words)) =>
-        Snapshot.bloomMightContain(words, k, Snapshot.md5Hash60Jvm(v))
-      case None => true
-    }
 }
 
 class SnapshotScan(root: String, required: StructType,
@@ -625,27 +485,12 @@ class SnapshotScan(root: String, required: StructType,
           s"versionAsOf=$versionAsOf: no such snapshot at $root")
         SnapshotStreamSource.ckAt(root, versionAsOf)
       }
-    val state = ck.state
-    // GENERATED-COLUMN partition rewrite through the connector (the
-    // Delta partition-filter derivation, round 19): a closed window
-    // on a base column maps through recorded monotone/composite
-    // generation expressions and prunes the generated `part:` tier —
-    // `WHERE odate BETWEEN x AND y` through SQL opens only that
-    // window's year partitions, same as Lake.readRangeGenerated. The
-    // two 1-row endpoint evaluations need a session (driver-side
-    // planning has one; absent ⇒ skip, pruning is never semantics).
-    val genKeep: Option[Set[String]] =
-      org.apache.spark.sql.SparkSession.getActiveSession.flatMap { sp =>
-        val windows = SnapshotScan.closedWindows(pruneFilters)
-          .map { case (c, w) =>
-            // filters arrive logical; pruneGenerated's baseCol is
-            // logical too — no translation needed
-            (c, w) }
-        if (windows.isEmpty || ck.schema.isEmpty) None
-        else Some(windows.map { case (c, (lo, hi)) =>
-          Snapshot.pruneGenerated(sp, ck, c, lo, hi)
-            .map(_.path).toSet }.reduce(_ intersect _))
-      }
+    // File skipping: the same evaluator the Lake's reads and DML use
+    // (partition, long/string zone, Bloom, null-count tiers and the
+    // generated-column rewrite, whose two 1-row endpoint evaluations
+    // run on the planning session).
+    val state = Snapshot.pruneFiles(
+      org.apache.spark.sql.SparkSession.active, ck, pruneFilters.toSeq)
     // One planning-time pass over the DV files (deletion-sized; the
     // common all-plain state pays nothing), keyed by data rel path —
     // the same key the Lake's anti-join form uses.
@@ -653,9 +498,6 @@ class SnapshotScan(root: String, required: StructType,
       if (state.forall(_._2.isEmpty)) Map.empty
       else SnapshotStreamSource.dvPositions(root, state.flatMap(_._2))
     state
-      .filter { case (f, _) =>
-        pruneFilters.forall(SnapshotScan.admits(f, _, mapping)) &&
-          genKeep.forall(_.contains(f.path)) }
       .map { case (f, dv) => LakeFilePartition(
         new Path(root, f.path).toString,
         masked = if (dv.isEmpty) Array.empty[Long]

@@ -10,7 +10,6 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.{ColumnBridge, PlanBridge}
 import org.apache.spark.sql.{sources => sf}
 
@@ -43,32 +42,6 @@ import graft.io.Snapshot
   * conditions refuse loudly (rewrite as MERGE with a source table). */
 object GraftDml {
 
-  /** V1 filter → Column, for [[GraftSqlTable]]'s `SupportsDelete`
-    * door. None = untranslatable (canDeleteWhere then refuses and the
-    * extension path, when installed, handles it instead). */
-  def filterToColumn(f: sf.Filter): Option[Column] = f match {
-    case sf.EqualTo(a, v) => Some(col(a) === lit(v))
-    case sf.EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
-    case sf.GreaterThan(a, v) => Some(col(a) > lit(v))
-    case sf.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case sf.LessThan(a, v) => Some(col(a) < lit(v))
-    case sf.LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case sf.In(a, vs) => Some(col(a).isin(vs.toSeq: _*))
-    case sf.IsNull(a) => Some(col(a).isNull)
-    case sf.IsNotNull(a) => Some(col(a).isNotNull)
-    case sf.StringStartsWith(a, p) => Some(col(a).startsWith(p))
-    case sf.StringEndsWith(a, p) => Some(col(a).endsWith(p))
-    case sf.StringContains(a, p) => Some(col(a).contains(p))
-    case sf.Not(c) => filterToColumn(c).map(!_)
-    case sf.And(l, r) => for {
-      lc <- filterToColumn(l); rc <- filterToColumn(r) } yield lc && rc
-    case sf.Or(l, r) => for {
-      lc <- filterToColumn(l); rc <- filterToColumn(r) } yield lc || rc
-    case _: sf.AlwaysTrue => Some(lit(true))
-    case _: sf.AlwaysFalse => Some(lit(false))
-    case _ => None
-  }
-
   /** Conjuncts of a catalyst predicate. */
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -76,9 +49,9 @@ object GraftDml {
   }
 
   /** The PRUNABLE V1 filters hiding in a resolved DML condition —
-    * attr-vs-literal comparisons only (exactly the shapes the manifest
-    * tiers reason about). Conservative: anything else contributes no
-    * filter, never a wrong one. */
+    * attr-vs-literal comparisons and null tests (the shapes the
+    * manifest tiers reason about). Conservative: anything else
+    * contributes no filter, never a wrong one. */
   def pruneFiltersOf(e: Expression,
       tgt: Map[ExprId, String]): Seq[sf.Filter] = {
     def name(x: Expression): Option[String] = x match {
@@ -113,6 +86,8 @@ object GraftDml {
           yield sf.LessThanOrEqual(n, v))
           .orElse(for { n <- name(r); v <- value(l) }
             yield sf.GreaterThanOrEqual(n, v))
+      case cexpr.IsNull(a) => name(a).map(sf.IsNull).toSeq
+      case cexpr.IsNotNull(a) => name(a).map(sf.IsNotNull).toSeq
       case _ => Nil
     }
   }

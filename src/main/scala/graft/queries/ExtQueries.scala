@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, IsNotNull,
+  IsNull, LessThanOrEqual}
 
 import graft.Tables
 import graft.ext.{Bloom, Contamination, CountMin, Dedup, FeatureSelect, Fuzzy, Multimodal, Packing, QualityFilter, Repetition, Retrieval, Sampling, SubstringScrub, TextOps, VectorOps, Winnow, ZOrder}
@@ -1915,7 +1917,7 @@ object ExtQueries {
     // columns too; this puts that manifest tier on the correctness
     // gate: the fixture lake lays customers in c_name range order
     // (each file a tight lexicographic box), and the query reads a
-    // name range through Lake.readRangeStr — files are pruned by the
+    // name range through Lake.readWhere — files are pruned by the
     // log's base64 szone segments before any footer or data I/O, the
     // row predicate re-applied after. The `pruned` cell pins that the
     // manifest DID drop files (range order makes a narrow name range a
@@ -1928,8 +1930,10 @@ object ExtQueries {
       val lo = "Customer#000000010"
       val hi = "Customer#000000099"
       val nAll = lake.liveFiles(v).size
-      val nKept = lake.pruneFilesStr(v, "c_name", lo, hi).size
-      lake.readRangeStr(v, "c_name", lo, hi)
+      val range = Seq(GreaterThanOrEqual("c_name", lo),
+        LessThanOrEqual("c_name", hi))
+      val nKept = lake.pruneFiles(v, range).size
+      lake.readWhere(v, range)
         .agg(count(lit(1)).as("n_rows"),
           coalesce(sum(col("cents")), lit(0L)).as("sum_cents"))
         .withColumn("pruned", lit(nKept < nAll))
@@ -1985,7 +1989,7 @@ object ExtQueries {
     // Bloom on o_custkey (hash-SCATTERED across files — every file's
     // zone map on it would span the domain, so range pruning gets
     // nothing; the Bloom is the only manifest-level skip a point
-    // lookup has). Four probes through Lake.readEq — three present
+    // lookup has). Four probes through Lake.readWhere — three present
     // keys and one absent — each an as-of-7 aggregate, so the oracle
     // (relational WHERE o_custkey = k over the replayed v7 membership)
     // hash-fails on any false NEGATIVE (a lost file = lost rows) while
@@ -1996,7 +2000,7 @@ object ExtQueries {
     "lake_bloom_point" -> { (s, d) =>
       val lake = ordersLake(s, d)
       Seq(1L, 7L, 42L, 999999999L).map { k =>
-        lake.readEq(7, "o_custkey", k.toString)
+        lake.readWhere(7, Seq(EqualTo("o_custkey", k)))
           .agg(count(lit(1)).as("n_rows"),
             coalesce(sum(col("cents")), lit(0L)).as("sum_cents"))
           .select(lit(k).as("probe_custkey"), col("n_rows"),
@@ -2050,10 +2054,10 @@ object ExtQueries {
       val lv = lake.latestVersion
       val all = lake.liveFiles(lv).size
       Seq(1996L, 1999L).map { y =>
-        val kept = lake.pruneFilesPartition(lv, "yr", y.toString)
+        val kept = lake.pruneFiles(lv, Seq(EqualTo("yr", y)))
         val strict = kept.nonEmpty && kept.size < all &&
           kept.forall(_.parts.get("yr").contains(y.toString))
-        lake.readPartition(lv, "yr", y.toString)
+        lake.readWhere(lv, Seq(EqualTo("yr", y)))
           .agg(count(lit(1)).as("n_rows"),
             coalesce(sum(col("cents")), lit(0L)).as("sum_cents"))
           .select(lit(y).as("yr"), col("n_rows"), col("sum_cents"),
@@ -2065,7 +2069,7 @@ object ExtQueries {
     // on the correctness gate: the fixture lake records nullcnt
     // segments for `note` (one all-non-null commit, one all-null, one
     // mixed), and both IS NULL and IS NOT NULL reads go through
-    // Lake.readNull — files are skipped from the log alone (an
+    // Lake.readWhere — files are skipped from the log alone (an
     // all-populated file cannot satisfy IS NULL; an all-null file
     // cannot satisfy IS NOT NULL; the mixed file must-scans for
     // both). The `pruned_*` cells pin that each side DID drop files
@@ -2079,14 +2083,14 @@ object ExtQueries {
       val lake = nullLake(s, d)
       val v = lake.latestVersion
       val all = lake.liveFiles(v).size
-      val keptNull = lake.pruneFilesNull(v, "note", wantNull = true)
-      val keptNot = lake.pruneFilesNull(v, "note", wantNull = false)
+      val keptNull = lake.pruneFiles(v, Seq(IsNull("note")))
+      val keptNot = lake.pruneFiles(v, Seq(IsNotNull("note")))
       val strictNull = keptNull.nonEmpty && keptNull.size < all
       val strictNot = keptNot.nonEmpty && keptNot.size < all
-      val a = lake.readNull(v, "note", wantNull = true)
+      val a = lake.readWhere(v, Seq(IsNull("note")))
         .agg(count(lit(1)).as("n_null_rows"),
           coalesce(sum(col("cents")), lit(0L)).as("null_cents"))
-      val b = lake.readNull(v, "note", wantNull = false)
+      val b = lake.readWhere(v, Seq(IsNotNull("note")))
         .agg(count(lit(1)).as("n_notnull_rows"),
           coalesce(sum(col("note")), lit(0L)).as("notnull_note_sum"))
       a.crossJoin(broadcast(b))
@@ -2113,7 +2117,7 @@ object ExtQueries {
       val lake = renameLake(s, d)
       val v = lake.latestVersion
       val all = lake.liveFiles(v).size
-      val kept = lake.pruneFiles(v, "k", 1L, 1L).size
+      val kept = lake.pruneFiles(v, Seq(EqualTo("k", 1L))).size
       val strict = kept > 0 && kept < all
       val a = lake.read().agg(
         count(lit(1)).as("n_rows"),
@@ -2151,14 +2155,16 @@ object ExtQueries {
       val all = lake.liveFiles(v)
       val lo = java.sql.Date.valueOf("1994-06-01")
       val hi = java.sql.Date.valueOf("1996-03-15")
-      val kept = lake.pruneFilesGenerated(v, "odate", lo, hi)
+      val window = Seq(GreaterThanOrEqual("odate", lo),
+        LessThanOrEqual("odate", hi))
+      val kept = lake.pruneFiles(v, window)
       val strict = kept.nonEmpty && kept.size < all.size &&
         kept.forall(_.parts.get("yr").forall(y =>
           y.toLong >= 1994L && y.toLong <= 1996L))
       val nParts = all.flatMap(_.parts.get("yr")).distinct.size.toLong
       val mismatches = lake.read()
         .filter(col("yr") =!= year(col("odate"))).count()
-      lake.readRangeGenerated(v, "odate", lo, hi)
+      lake.readWhere(v, window)
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
         .withColumn("pruned_generated", lit(strict))
         .withColumn("n_year_parts", lit(nParts))

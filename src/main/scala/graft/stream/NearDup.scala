@@ -16,7 +16,7 @@ import graft.ext.{Dedup, TextOps}
   * TTL of its original is dropped at ingest instead of waiting for the
   * nightly batch pass.
   *
-  * Two chained `transformWithState` stages (the AnomalyRunProcessor
+  * Two chained `transformWithState` stages (the DeadSensorProcessor
   * pattern, Spark 4's arbitrary-state API, RocksDB-backed):
   *
   *  1. keyed by LSH BAND BUCKET ([[BandDedupProcessor]]): state is the

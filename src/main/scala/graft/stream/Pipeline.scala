@@ -15,12 +15,10 @@ import graft.ops.{Ingest, Windows}
   *    their window's state is evicted (J2/J3) — `outputMode(append)`
   *    emits each finalized window exactly once;
   *  - dual-sink fan-out (J4): Flink's statement set optimizes two
-  *    INSERTs into one source scan. Two mappings are provided: [[run]]
-  *    (two queries over the same prepared frame — finalized append-mode
-  *    windows, source read once per query) and [[runSingleScan]] (ONE
-  *    query, foreachBatch persists each micro-batch and feeds both
-  *    sinks — the faithful single-scan statement-set semantics, with
-  *    the agg sink merging algebraic partials).
+  *    INSERTs into one source scan. [[run]] maps it to two queries over
+  *    the same prepared frame — finalized append-mode windows, source
+  *    read once per query. The queries run concurrently, so neither
+  *    sink's writes wait for the other's.
   *  - checkpointing → exactly-once into files, at-least-once into
   *    JDBC-shaped sinks (J6), matching the reference's guarantees.
   *
@@ -195,87 +193,5 @@ object Pipeline {
       "full_outer")
       .withColumn(key, coalesce(col(key), col("__rk")))
       .drop("__rk")
-  }
-
-  // ---- single-scan dual-sink (J4, statement-set fidelity) --------------
-
-  /** Per-batch PARTIAL window aggregates: algebraic (sum/count/min/max)
-    * so any later merge — across micro-batches or across partitions —
-    * reconstructs the exact final AVG/MIN/MAX/COUNT. */
-  def partialWindowAggregates(batch: DataFrame, size: String = "1 minute"): DataFrame =
-    batch.groupBy(window(col("event_time"), size).as("window"),
-        col("machine_id"), col("sensor_type"))
-      .agg(sum(col("value")).as("sum_value"),
-        count(lit(1)).as("count_readings"),
-        min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .withColumn("window_start", col("window.start"))
-      .withColumn("window_end", col("window.end"))
-      .drop("window")
-
-  /** Merge partial-aggregate frames (the sink-side combine of an
-    * upsert: sums add, counts add, min/max fold). Associative and
-    * commutative — replay-safe per micro-batch id. */
-  def mergePartials(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("window_start"), col("window_end"),
-        col("machine_id"), col("sensor_type"))
-      .agg(sum(col("sum_value")).as("sum_value"),
-        sum(col("count_readings")).as("count_readings"),
-        min(col("min_value")).as("min_value"),
-        max(col("max_value")).as("max_value"))
-
-  /** Finalize merged partials into the sensor_aggregates shape
-    * ([[windowedAggregates]]' exact schema and rounding). */
-  def finalizeAggregates(partials: DataFrame): DataFrame =
-    partials.select(
-      col("machine_id"), col("sensor_type"),
-      round(col("sum_value") / col("count_readings"), 4).as("avg_value"),
-      col("min_value"), col("max_value"), col("count_readings"),
-      col("window_start"), col("window_end"))
-
-  /** The reference's statement set reads Kafka ONCE for both INSERTs
-    * (`flink-jobs/sensor_aggregation.py:73,120` — one job graph, two
-    * sinks). [[run]]'s two independent queries scan the source twice;
-    * this variant is the faithful single-scan mapping: ONE streaming
-    * query, each micro-batch persisted and fanned out to (a) the raw
-    * append sink and (b) per-batch partial window aggregates that the
-    * agg sink MERGES (upsert keyed on window×machine×sensor — the JDBC
-    * `ON CONFLICT` the reference's sink tables already imply).
-    *
-    * Trade-off vs [[run]]: aggregates arrive as mergeable partials
-    * (update-shaped, converging to the same final rows) instead of
-    * watermark-finalized appends; source offsets, though, are read and
-    * tracked exactly once. At 100 TB the single scan halves source I/O
-    * and the persisted batch is reused by both branches.
-    *
-    * @param writeAggPartials receives per-batch partials to merge into
-    *                         the agg store ([[mergePartials]] +
-    *                         [[finalizeAggregates]] reconstruct finals)
-    */
-  def runSingleScan(
-      spark: SparkSession,
-      decoded: DataFrame,
-      writeRaw: DataFrame => Unit,
-      writeAggPartials: DataFrame => Unit,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val prepared = prepare(decoded)
-    val writer = prepared.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointDir/single")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          writeRaw(batch.select(
-            col("machine_id"), col("sensor_type"), col("value"),
-            col("event_time").as("timestamp")))
-          writeAggPartials(partialWindowAggregates(batch))
-        } finally {
-          batch.unpersist()
-          ()
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 }

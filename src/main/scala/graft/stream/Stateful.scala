@@ -67,65 +67,6 @@ object Stateful {
       }
   }
 
-  /** The same detector on Spark 4's `transformWithState` — the
-    * successor arbitrary-state API: typed `ValueState` handles instead
-    * of one opaque state object, per-state TTL, timers, and RocksDB-only
-    * backing (the API is built for state that outgrows the heap). Kept
-    * alongside [[anomalyRuns]] so both stateful surfaces are exercised;
-    * StatefulSpec asserts they produce identical alerts.
-    *
-    * Requires `spark.sql.streaming.stateStore.providerClass =
-    * ...RocksDBStateStoreProvider`. */
-  class AnomalyRunProcessor(lo: Double, hi: Double, minRun: Int)
-      extends StatefulProcessor[(String, String), Keyed, AnomalyAlert] {
-    @transient private var run: ValueState[RunState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      run = getHandle.getValueState[RunState](
-        "run", Encoders.product[RunState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: (String, String),
-        rows: Iterator[Keyed],
-        timerValues: TimerValues): Iterator[AnomalyAlert] = {
-      val (m, st) = key
-      val sorted = rows.toSeq.sortBy(_.tus)
-      var cur = if (run.exists()) Some(run.get()) else None
-      val alerts = Seq.newBuilder[AnomalyAlert]
-      sorted.foreach { r =>
-        val anomalous = r.value < lo || r.value > hi
-        cur match {
-          case Some(open) if anomalous =>
-            cur = Some(RunState(open.count + 1, open.startUs, r.tus))
-          case Some(open) =>
-            if (open.count >= minRun)
-              alerts += AnomalyAlert(m, st, open.count, open.startUs, open.lastUs)
-            cur = None
-          case None if anomalous =>
-            cur = Some(RunState(1, r.tus, r.tus))
-          case None => ()
-        }
-      }
-      cur match {
-        case Some(open) => run.update(open)
-        case None       => run.clear()
-      }
-      alerts.result().iterator
-    }
-  }
-
-  /** [[anomalyRuns]] via `transformWithState` (see [[AnomalyRunProcessor]]). */
-  def anomalyRunsTws(
-      spark: SparkSession,
-      readings: Dataset[Keyed],
-      lo: Double, hi: Double, minRun: Int): Dataset[AnomalyAlert] = {
-    import spark.implicits._
-    readings
-      .groupByKey(r => (r.machine_id, r.sensor_type))
-      .transformWithState(new AnomalyRunProcessor(lo, hi, minRun),
-        TimeMode.None(), OutputMode.Append())
-  }
-
   case class DeadSensorAlert(
       machine_id: String, sensor_type: String,
       last_seen_us: Long, silent_for_us: Long)

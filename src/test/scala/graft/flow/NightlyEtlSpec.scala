@@ -5,6 +5,7 @@ import java.nio.file.Files
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
 import graft.SparkSpec
 import graft.io.{LakeSink, ParquetSource}
@@ -99,7 +100,8 @@ class NightlyEtlSpec extends SparkSpec with graft.LowStatePartitions {
     assert(lake.read().select("k").distinct().count() === 1200)
     // The clustered rewrite preserved the zone-map discipline: a range
     // predicate still prunes through the manifest.
-    val pruned = lake.pruneFiles(lake.latestVersion, "k", 0, 99)
+    val pruned = lake.pruneFiles(lake.latestVersion,
+      Seq(GreaterThanOrEqual("k", 0), LessThanOrEqual("k", 99)))
     assert(pruned.size <= files)
     // Every night's append stage verified its own increment.
     trails.zipWithIndex.foreach { case (t, i) =>

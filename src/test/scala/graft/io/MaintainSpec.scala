@@ -3,6 +3,7 @@ package graft.io
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
 import graft.SparkSpec
 
@@ -28,7 +29,8 @@ class MaintainSpec extends SparkSpec with graft.LowStatePartitions {
     assert(r.filesBefore === before && r.filesAfter < before / 2)
     assert(lake.read().count() === 2000)
     // Clustered rewrite: the zone maps prune again.
-    val pruned = lake.pruneFiles(lake.latestVersion, "k", 0, 99)
+    val pruned = lake.pruneFiles(lake.latestVersion,
+      Seq(GreaterThanOrEqual("k", 0), LessThanOrEqual("k", 99)))
     assert(pruned.size < r.filesAfter)
     // Second run: healthy, no new version.
     val v = lake.latestVersion

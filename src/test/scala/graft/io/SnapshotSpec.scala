@@ -3,6 +3,8 @@ package graft.io
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, IsNotNull,
+  IsNull, LessThanOrEqual}
 import graft.SparkSpec
 
 /** Snapshot-lake contract: as-of reads replay the log exactly, delta
@@ -16,6 +18,10 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
   private def freshLake(statsCols: Seq[String] = Seq("k")) =
     Snapshot.Lake(spark,
       Files.createTempDirectory("snap-spec-").toString, statsCols)
+
+  /** `lo ≤ c ≤ hi` as a filter conjunction. */
+  private def between(c: String, lo: Any, hi: Any) =
+    Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
 
   private def fsOf(root: String) =
     new org.apache.hadoop.fs.Path(root)
@@ -100,7 +106,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     val lake = freshLake()
     // Round-robin layout: 16 files each spanning ~the whole k range.
     lake.append(kv(0, 1600).repartition(16))
-    val before = lake.pruneFiles(lake.latestVersion, "k", 100, 199)
+    val before = lake.pruneFiles(lake.latestVersion, between("k", 100, 199))
     val allBefore = lake.liveFiles(lake.latestVersion)
     assert(allBefore.size === 16)
     // Hash-round-robin files each span nearly the full range — pruning
@@ -118,14 +124,14 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     }
     // The pruning experiment: a 1/16-selectivity range now touches ~1
     // file (±1 for a boundary straddle) instead of ~16.
-    val after = lake.pruneFiles(v, "k", 100, 199)
+    val after = lake.pruneFiles(v, between("k", 100, 199))
     assert(after.size <= 2, s"clustered layout should prune to ~1 file, got ${after.size}")
-    // And the pruned read is correct: the readRange API yields every
+    // And the pruned read is correct: readWhere yields every
     // qualifying row from just the survivor files.
-    assert(lake.readRange(v, "k", 100, 199).count() === 100)
+    assert(lake.readWhere(v, between("k", 100, 199)).count() === 100)
     // Boundary straddle + fully-out-of-range: exact rows / empty-with-schema.
-    assert(lake.readRange(v, "k", 1590, 9999).count() === 10)
-    val out = lake.readRange(v, "k", 100000, 200000)
+    assert(lake.readWhere(v, between("k", 1590, 9999)).count() === 10)
+    val out = lake.readWhere(v, between("k", 100000, 200000))
     assert(out.count() === 0 && out.columns.toSeq === Seq("k", "v"))
     // Pre-compact snapshots still read the old layout (time travel
     // across a compact).
@@ -140,24 +146,24 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     lake.append(grid.toDF("x", "y").repartition(16))
     val v0 = lake.latestVersion
     // Round-robin layout: slices on either dimension touch ~every file.
-    assert(lake.pruneFiles(v0, "x", 8, 23).size >= 14)
-    assert(lake.pruneFiles(v0, "y", 8, 23).size >= 14)
+    assert(lake.pruneFiles(v0, between("x", 8, 23)).size >= 14)
+    assert(lake.pruneFiles(v0, between("y", 8, 23)).size >= 14)
     // 1-D clusterBy on x: x prunes hard, y not at all.
     val v1 = Compact.clusterBy(lake, "x", 16)
-    assert(lake.pruneFiles(v1, "x", 8, 23).size <= 6)
-    assert(lake.pruneFiles(v1, "y", 8, 23).size >= 15,
+    assert(lake.pruneFiles(v1, between("x", 8, 23)).size <= 6)
+    assert(lake.pruneFiles(v1, between("y", 8, 23)).size >= 15,
       "x-clustered files all span the full y range")
     // Z-order: BOTH dimensions prune (files are ~16×16 Morton tiles;
     // a 16-wide slice crosses ~2 of 4 tile columns/rows ⇒ ~8 files).
     val v2 = Compact.zOrderBy(lake, "x", "y", 16)
     assert(lake.read().count() === 64 * 64)
-    val px = lake.pruneFiles(v2, "x", 8, 23).size
-    val py = lake.pruneFiles(v2, "y", 8, 23).size
+    val px = lake.pruneFiles(v2, between("x", 8, 23)).size
+    val py = lake.pruneFiles(v2, between("y", 8, 23)).size
     assert(px <= 10 && py <= 10,
       s"z-order must prune both dimensions: x=$px y=$py of 16")
     // The pruned read is still exact.
-    assert(lake.readRange(v2, "x", 8, 23).count() === 16 * 64)
-    assert(lake.readRange(v2, "y", 8, 23).count() === 16 * 64)
+    assert(lake.readWhere(v2, between("x", 8, 23)).count() === 16 * 64)
+    assert(lake.readWhere(v2, between("y", 8, 23)).count() === 16 * 64)
     // Time travel across the z-order compact reads the old layouts.
     assert(lake.readAsOf(v0).count() === 64 * 64)
   }
@@ -322,7 +328,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     assert(lake.read().filter(col("k").isin(5L, 6L, 50L, 105L, 106L))
       .count() === 0)
     // Zone-pruned range reads apply the DV too.
-    assert(lake.readRange(3, "k", 0, 10).select("k")
+    assert(lake.readWhere(3, between("k", 0, 10)).select("k")
       .collect().map(_.getLong(0)).sorted.toSeq ===
       Seq(0L, 1L, 2L, 3L, 4L, 7L, 8L, 9L, 10L))
     // COW upsert over DV'd files must not resurrect MOR-deleted rows.
@@ -411,7 +417,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     assert(ins.filter(col("k").isin(5L, 50L, 105L)).count() === 3)
     // Zone maps survive the addLine round-trip: the restored manifest
     // still prunes (k ranges were statted at the original commits).
-    val pruned = lake.pruneFiles(4, "k", 100, 105)
+    val pruned = lake.pruneFiles(4, between("k", 100, 105))
     assert(pruned.nonEmpty && pruned.size < lake.liveFiles(4).size,
       "restored head must keep per-file k stats and prune on them")
     // Restore past the vacuum horizon fails loudly.
@@ -533,22 +539,22 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     }
     val lv = lake.latestVersion
     val total = lake.liveFiles(lv).size
-    val pruned = lake.pruneFilesEq(lv, "tag", "tag-7-13")
+    val pruned = lake.pruneFiles(lv, Seq(EqualTo("tag", "tag-7-13")))
     assert(pruned.nonEmpty && pruned.size < total / 2,
       s"bloom must skip most of $total files, kept ${pruned.size}")
     // No false negatives: the pruned read finds exactly the row.
-    assert(lake.readEq(lv, "tag", "tag-7-13").select("k")
+    assert(lake.readWhere(lv, Seq(EqualTo("tag", "tag-7-13"))).select("k")
       .collect().map(_.getLong(0)).toSeq === Seq(713L))
     // Absent value: zero rows, whatever the false-positive draw.
-    assert(lake.readEq(lv, "tag", "tag-99-99").count() === 0)
+    assert(lake.readWhere(lv, Seq(EqualTo("tag", "tag-99-99"))).count() === 0)
     // Deletion vectors apply inside the pruned read.
     lake.deleteKeysMor(Seq(713L).toDF("k"), "k")
-    assert(lake.readEq(lake.latestVersion, "tag", "tag-7-13").count() === 0)
+    assert(lake.readWhere(lake.latestVersion, Seq(EqualTo("tag", "tag-7-13"))).count() === 0)
     // Restore round-trips the serialized filters bit-exactly.
     val rv = lake.restore(lv)
-    assert(lake.pruneFilesEq(rv, "tag", "tag-7-13").map(_.path).sorted ===
+    assert(lake.pruneFiles(rv, Seq(EqualTo("tag", "tag-7-13"))).map(_.path).sorted ===
       pruned.map(_.path).sorted)
-    assert(lake.readEq(rv, "tag", "tag-7-13").count() === 1)
+    assert(lake.readWhere(rv, Seq(EqualTo("tag", "tag-7-13"))).count() === 1)
   }
 
   test("CHECK constraints: validate-then-publish, violating writes never become versions") {
@@ -711,10 +717,10 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
 
     // Zone-map pruning on the (stable-physical) stats column still
     // prunes: the k=150 probe must not open v0's file.
-    val pruned = lake.pruneFiles(lake.latestVersion, "k", 150L, 150L)
+    val pruned = lake.pruneFiles(lake.latestVersion, between("k", 150L, 150L))
     assert(pruned.size < lake.liveFiles(lake.latestVersion).size,
       "rename must not invalidate the zone-map tier")
-    assert(lake.readRange(lake.latestVersion, "k", 150L, 150L).count() === 1)
+    assert(lake.readWhere(lake.latestVersion, between("k", 150L, 150L)).count() === 1)
 
     // MOR delete keyed by the RENAMED column composes.
     lake.deleteKeysMor(Seq("row7").toDF("label"), "label") // v4
@@ -798,10 +804,10 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     intercept[IllegalArgumentException](lake.dropColumn("shard"))
     // Partition pruning by the NEW logical name spans BOTH eras.
     val v = renamed.latestVersion
-    val kept = renamed.pruneFilesPartition(v, "shard", "1")
+    val kept = renamed.pruneFiles(v, Seq(EqualTo("shard", 1L)))
     assert(kept.nonEmpty && kept.size < renamed.liveFiles(v).size,
       "partition tier must keep pruning across the rename")
-    val p1 = renamed.readPartition(v, "shard", "1")
+    val p1 = renamed.readWhere(v, Seq(EqualTo("shard", 1L)))
     assert(p1.count() === 40, "both eras' shard=1 rows must surface")
     assert(p1.columns.sorted.toSeq === Seq("k", "shard", "v"))
     // clusterBy compact AFTER a rename: reads logical, rewrites
@@ -818,7 +824,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
       .select("body").head().getString(0) === "p5")
     // The rewrite's zone maps landed under the stable physical key:
     // a narrow range opens a strict subset.
-    val keptZ = lake2.pruneFiles(lake2.latestVersion, "k", 0L, 10L)
+    val keptZ = lake2.pruneFiles(lake2.latestVersion, between("k", 0L, 10L))
     assert(keptZ.size < lake2.liveFiles(lake2.latestVersion).size)
   }
 
@@ -955,15 +961,15 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     val files = re.liveFiles(re.latestVersion)
     assert(files.forall(f => f.slo.contains("name") && f.shi.contains("name")))
     // prune: the second append's range only
-    val pruned = re.pruneFilesStr(re.latestVersion, "name",
-      "Customer#000000050", "Customer#000000099")
+    val pruned = re.pruneFiles(re.latestVersion, between("name",
+      "Customer#000000050", "Customer#000000099"))
     assert(pruned.map(_.path).toSet ===
       files.filter(_.slo("name") == "Customer#000000050").map(_.path).toSet)
     assert(pruned.size === 1)
     assert(pruned.size < files.size, "string pruning must drop files")
     // the pruned read is exact
-    assert(re.readRangeStr(re.latestVersion, "name",
-      "Customer#000000050", "Customer#000000099").count() === 50)
+    assert(re.readWhere(re.latestVersion, between("name",
+      "Customer#000000050", "Customer#000000099")).count() === 50)
     // a file with an all-null string column stays must-scan
     val nullish = (200L until 210L).map(k => (k, null: String)).toDF("k", "name")
     re.append(nullish.coalesce(1))
@@ -971,7 +977,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     val nullFile = after.liveFiles(after.latestVersion)
       .filterNot(f => f.slo.contains("name"))
     assert(nullFile.nonEmpty, "all-null file records no szone")
-    assert(after.pruneFilesStr(after.latestVersion, "name", "zzz", "zzzz")
+    assert(after.pruneFiles(after.latestVersion, between("name", "zzz", "zzzz"))
       .map(_.path).toSet === nullFile.map(_.path).toSet,
       "out-of-range probe keeps ONLY the must-scan file")
   }
@@ -1164,11 +1170,11 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     assert(files.nonEmpty && files.forall(_.parts.contains("day")))
     assert(files.forall(_.lo.contains("k")))
     // Partition tier prunes to exactly the probed value's files.
-    val pruned = lake.pruneFilesPartition(0, "day", "1")
+    val pruned = lake.pruneFiles(0, Seq(EqualTo("day", 1L)))
     assert(pruned.nonEmpty && pruned.size < files.size)
     assert(pruned.forall(_.parts("day") === "1"))
     // The pruned read is exact and opens only the survivors.
-    val r1 = lake.readPartition(0, "day", "1")
+    val r1 = lake.readWhere(0, Seq(EqualTo("day", 1L)))
     assert(r1.count() === 100)
     assert(r1.select("k").collect().forall(_.getLong(0) % 3 === 1))
     val scanned = r1.inputFiles.toSet
@@ -1178,7 +1184,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     }
     // MOR delete composes: DVs apply inside the partition-pruned read.
     lake.deleteKeysMor(Seq(1L, 4L).toDF("k"), "k") // v1; both day=1
-    assert(lake.readPartition(1, "day", "1").count() === 98)
+    assert(lake.readWhere(1, Seq(EqualTo("day", 1L))).count() === 98)
     // Overwrite re-partitions through the SAME layout; vacuum walks
     // the nested dirs and drops v0's unreferenced files.
     lake.overwrite(df.filter(col("k") < 150)) // v2
@@ -1186,7 +1192,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     val deleted = lake.vacuum(keepSnapshots = 1)
     assert(deleted > 0)
     assert(lake.read().count() === 150)
-    assert(lake.readPartition(2, "day", "2").count() === 50)
+    assert(lake.readWhere(2, Seq(EqualTo("day", 2L))).count() === 50)
   }
 
   test("stats columns with nulls: file stays must-scan rather than mis-pruned") {
@@ -1196,7 +1202,7 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
       .toDF("k", "v")
     lake.append(df)
     // No k stats on an all-null file ⇒ pruneFiles must keep it.
-    assert(lake.pruneFiles(0, "k", 5, 10).size === lake.liveFiles(0).size)
+    assert(lake.pruneFiles(0, between("k", 5, 10)).size === lake.liveFiles(0).size)
   }
 
   test("null-count tier: IS NULL / IS NOT NULL skip from the manifest alone") {
@@ -1213,27 +1219,27 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     assert(files.forall(_.nulls.contains("x")))
     // IS NULL skips every v0 file; IS NOT NULL skips every v1 file;
     // the mixed file survives both (the conservative branch).
-    val kNull = lake.pruneFilesNull(v, "x", wantNull = true)
-    val kNot = lake.pruneFilesNull(v, "x", wantNull = false)
+    val kNull = lake.pruneFiles(v, Seq(IsNull("x")))
+    val kNot = lake.pruneFiles(v, Seq(IsNotNull("x")))
     assert(kNull.forall(_.nulls("x") > 0))
     assert(kNot.forall(f => f.nulls("x") < f.rows))
     assert(kNull.size < files.size && kNot.size < files.size)
     // Exact reads, and the skipped side's files never open.
-    val rNull = lake.readNull(v, "x", wantNull = true)
+    val rNull = lake.readWhere(v, Seq(IsNull("x")))
     assert(rNull.count() === 31)
     val noNullFiles = files.filter(_.nulls("x") === 0L).map(_.path)
     val scanned = rNull.inputFiles.toSet
     noNullFiles.foreach(p => assert(!scanned.exists(_.endsWith(p)),
       s"null-free file $p opened by an IS NULL read"))
-    assert(lake.readNull(v, "x", wantNull = false).count() === 51)
+    assert(lake.readWhere(v, Seq(IsNotNull("x"))).count() === 51)
     // Unstatted column ⇒ must-scan, reads stay exact.
-    assert(lake.pruneFilesNull(v, "k", wantNull = true).size === files.size)
+    assert(lake.pruneFiles(v, Seq(IsNull("k"))).size === files.size)
     // The nullcnt segments survive a checkpoint round trip.
     Snapshot.writeCheckpoint(
       new org.apache.hadoop.fs.Path(lake.root, "_log")
         .getFileSystem(spark.sparkContext.hadoopConfiguration),
       new org.apache.hadoop.fs.Path(lake.root, "_log"), v)
-    assert(lake.pruneFilesNull(v, "x", wantNull = true).map(_.path).toSet
+    assert(lake.pruneFiles(v, Seq(IsNull("x"))).map(_.path).toSet
       === kNull.map(_.path).toSet)
   }
 
@@ -1246,18 +1252,23 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
       (4L, null: String)).toDF("k", "p"))
     // The manifest stores partitionBy's ESCAPED fragment, not the raw
     // value — the raw-value probe must still match exactly.
-    val kept = lake.pruneFilesPartition(0, "p", "a=b:c")
+    val kept = lake.pruneFiles(0, Seq(EqualTo("p", "a=b:c")))
     assert(kept.nonEmpty)
     assert(kept.forall(_.parts("p") === Snapshot.escapedPartValue("a=b:c")))
-    assert(lake.readPartition(0, "p", "a=b:c").count() === 2)
-    assert(lake.readPartition(0, "p", "plain").count() === 1)
+    assert(lake.readWhere(0, Seq(EqualTo("p", "a=b:c"))).count() === 2)
+    assert(lake.readWhere(0, Seq(EqualTo("p", "plain"))).count() === 1)
     // Null partition: the Hive sentinel directory, IS NULL row filter.
-    val nulls = lake.readPartition(0, "p", null)
+    val nulls = lake.readWhere(0, Seq(IsNull("p")))
     assert(nulls.count() === 1)
     assert(nulls.select("k").head.getLong(0) === 4L)
     // A probe for a value that only LOOKS like a fragment must miss:
     // raw "a%3Db%3Ac" escapes differently from "a=b:c".
-    assert(lake.readPartition(0, "p", "a%3Db%3Ac").count() === 0)
+    assert(lake.readWhere(0, Seq(EqualTo("p", "a%3Db%3Ac"))).count() === 0)
+    // A MOR delete inside the escaped partition masks its rows: the
+    // deletion vector keys rows by the manifest's fragment spelling.
+    val vd = lake.deleteWhere(col("p") === "a=b:c")
+    assert(lake.readWhere(vd, Seq(EqualTo("p", "a=b:c"))).count() === 0)
+    assert(lake.read().count() === 2)
   }
 
   test("string zones: UTF-8 byte order keeps supplementary-plane probes") {
@@ -1274,8 +1285,8 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     // emoji (0xF0...) sorts ABOVE U+E000's 0xEE... encoding.
     assert(Snapshot.utf8Compare(bmp, emoji) < 0 &&
       bmp.compareTo(emoji) > 0) // the orders genuinely disagree
-    assert(lake.pruneFilesStr(0, "s", emoji, emoji).size === 1)
-    assert(lake.readRangeStr(0, "s", emoji, emoji).count() === 1)
+    assert(lake.pruneFiles(0, between("s", emoji, emoji)).size === 1)
+    assert(lake.readWhere(0, between("s", emoji, emoji)).count() === 1)
   }
 
   test("generated columns: derived on write, validated when provided, base-range prunes generated partitions") {
@@ -1315,12 +1326,12 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     // only in-window day values, and the read is row-exact.
     val v = fresh.latestVersion
     val all = fresh.liveFiles(v).size
-    val kept = fresh.pruneFilesGenerated(v, "ts", 1500L, 2500L)
+    val kept = fresh.pruneFiles(v, between("ts", 1500L, 2500L))
     assert(kept.nonEmpty && kept.size < all,
       s"rewrite must prune strictly: kept ${kept.size} of $all")
     assert(kept.forall(_.parts.get("day").forall(d =>
       d.toLong >= 1L && d.toLong <= 2L)))
-    val r = fresh.readRangeGenerated(v, "ts", 1500L, 2500L)
+    val r = fresh.readWhere(v, between("ts", 1500L, 2500L))
     assert(r.count() === 1001)
     assert(r.agg(min("ts"), max("ts")).head().toSeq ===
       Seq(1500L, 2500L))
@@ -1348,13 +1359,13 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
     lake2.append(days)
     val lo2 = java.sql.Date.valueOf("1994-11-15")
     val hi2 = java.sql.Date.valueOf("1995-02-10")
-    val kept2 = lake2.pruneFilesGenerated(0, "d", lo2, hi2)
+    val kept2 = lake2.pruneFiles(0, between("d", lo2, hi2))
     val keptYm = kept2.map(f =>
       (f.parts("yr").toLong, f.parts("mo").toLong)).toSet
     assert(keptYm === Set((1994L, 11L), (1994L, 12L),
       (1995L, 1L), (1995L, 2L)),
       s"composite rewrite must keep exactly the window's months: $keptYm")
-    val r2 = lake2.readRangeGenerated(0, "d", lo2, hi2)
+    val r2 = lake2.readWhere(0, between("d", lo2, hi2))
     assert(r2.count() === 88) // 16 + 31 + 31 + 10 days inclusive
     // month alone (no year generated) must NOT prune: non-monotone.
     val lake3 = Snapshot.Lake(spark,
@@ -1362,10 +1373,10 @@ class SnapshotSpec extends SparkSpec with graft.LowStatePartitions {
       partitionCols = Seq("mo"),
       generatedCols = Seq("mo" -> "month(d)"))
     lake3.append(days)
-    assert(lake3.pruneFilesGenerated(0, "d", lo2, hi2).size ===
+    assert(lake3.pruneFiles(0, between("d", lo2, hi2)).size ===
       lake3.liveFiles(0).size,
       "month without year is non-monotone — everything must-scans")
-    assert(lake3.readRangeGenerated(0, "d", lo2, hi2).count() === 88)
+    assert(lake3.readWhere(0, between("d", lo2, hi2)).count() === 88)
   }
 
   test("identity columns: writer-assigned, manifest high-water, unique and monotone across commits") {

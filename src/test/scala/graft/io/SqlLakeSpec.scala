@@ -3,6 +3,7 @@ package graft.io
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
 import graft.SparkSpec
 
@@ -263,9 +264,10 @@ class SqlLakeSpec extends SparkSpec with graft.LowStatePartitions {
     assert(win.rdd.getNumPartitions < all,
       s"generated rewrite must prune: ${win.rdd.getNumPartitions} of $all")
     assert(win.count() ===
-      lake.readRangeGenerated(lake.latestVersion, "odate",
-        java.sql.Date.valueOf("1994-06-01"),
-        java.sql.Date.valueOf("1995-03-15")).count(),
+      lake.readWhere(lake.latestVersion, Seq(
+        GreaterThanOrEqual("odate", java.sql.Date.valueOf("1994-06-01")),
+        LessThanOrEqual("odate", java.sql.Date.valueOf("1995-03-15"))))
+        .count(),
       "SQL window row set must equal the Lake's rewrite read")
     // Point query on the generated column itself uses the plain
     // partition tier (no rewrite needed).

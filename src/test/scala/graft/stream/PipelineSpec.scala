@@ -372,44 +372,6 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     assert(out("10:05:00") == 1L)
   }
 
-  test("single-scan dual-sink: ONE query feeds both sinks; merged partials ≡ batch agg (J4)") {
-    val dir = tmp()
-    val ms = MemoryStream[SensorReading](spark)
-    val before = spark.streams.active.length
-    var rawTotal = 0L
-    var during = 0
-    var merged: Option[DataFrame] = None
-    val q = Pipeline.runSingleScan(spark, ms.toDF(),
-      writeRaw = b => rawTotal += b.count(),
-      writeAggPartials = p => {
-        val pc = p.localCheckpoint(true) // detach from the streaming batch
-        merged = Some(merged.fold(pc)(m =>
-          Pipeline.mergePartials(m, pc).localCheckpoint(true)))
-        during = math.max(during, spark.streams.active.length - before)
-      },
-      checkpointDir = s"$dir/ckpt",
-      availableNow = false)
-    try {
-      // the 10:00 window SPANS micro-batches — final avg only correct
-      // if the sink-side merge combines the two partials
-      ms.addData(Seq(reading("2025-01-01T10:00:10", v = 10.0)))
-      q.processAllAvailable()
-      ms.addData(Seq(reading("2025-01-01T10:00:40", v = 20.0),
-        reading("2025-01-01T10:02:30", "LATHE-002", "vibration", 1.5)))
-      q.processAllAvailable()
-    } finally q.stop()
-    assert(during == 1)  // a single streaming query drove BOTH sinks
-    assert(rawTotal == 3)
-    val finals = Pipeline.finalizeAggregates(merged.get)
-      .select(date_format(col("window_start"), "HH:mm").as("ws"),
-        col("machine_id"), col("avg_value"), col("count_readings"))
-      .as[(String, String, Double, Long)].collect().toSeq.sortBy(r => (r._1, r._2))
-    // identical to the batch windowed agg over the full input
-    assert(finals == Seq(
-      ("10:00", "CNC-001", 15.0, 2L),
-      ("10:02", "LATHE-002", 1.5, 1L)))
-  }
-
   test("stream-maintained join view ≡ full recompute after N batches (IVM)") {
     // One tagged CDC-shaped stream: plain readings are fact inserts,
     // sensor_type "dim:<type>" rows are dim inserts. Batch 2's dim row
@@ -570,5 +532,32 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     rq.awaitTermination(60000); aq.awaitTermination(60000)
     assert(rawRows == 3)  // malformed dropped (D1)
     assert(aggRows == 2)  // 10:00 windows finalized by the 10:02:30 row
+  }
+
+  test("a streaming file sink's directory read honours _spark_metadata: a stray part file is not read") {
+    val dir = tmp()
+    val ms = MemoryStream[SensorReading](spark)
+    val q = ms.toDF().writeStream.format("parquet")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .start(s"$dir/out")
+    try {
+      ms.addData(Seq(reading("2025-01-01T10:00:10"),
+        reading("2025-01-01T10:00:20")))
+      q.processAllAvailable()
+    } finally q.stop()
+    // A part file the sink never committed: a crashed batch's leftover.
+    Seq(reading("2025-01-01T11:00:00")).toDF()
+      .write.parquet(s"$dir/stray")
+    val stray = new java.io.File(s"$dir/stray").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.copy(stray.toPath,
+      java.nio.file.Paths.get(s"$dir/out/part-99999-stray.parquet"))
+    assert(new java.io.File(s"$dir/out/_spark_metadata").isDirectory)
+    assert(spark.read.parquet(stray.getPath).count() === 1)
+    // The directory read lists files through the sink's log, not the
+    // directory: the stray file stays out, committed rows stay in.
+    assert(graft.io.ParquetSource(s"$dir/out").read(spark)
+      .select("timestamp").as[String].collect().sorted.toSeq ===
+      Seq("2025-01-01T10:00:10", "2025-01-01T10:00:20"))
   }
 }

@@ -38,40 +38,6 @@ class StatefulSpec extends SparkSpec with graft.LowStatePartitions {
       AnomalyAlert("WELD-004", "temperature", 3, 20, 22)))
   }
 
-  test("transformWithState processor produces identical alerts (Spark 4 state API)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    try {
-      // transformWithState requires the RocksDB provider
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val ms = MemoryStream[Keyed](spark)
-      val alerts = Stateful.anomalyRunsTws(spark, ms.toDS(), lo = 80, hi = 90, minRun = 3)
-      val name = s"tws${System.nanoTime()}"
-      val q = alerts.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      try {
-        ms.addData(Seq(r(1, 95), r(2, 96), r(3, 85)))
-        q.processAllAvailable()
-        ms.addData(Seq(r(10, 99), r(11, 99)))
-        q.processAllAvailable()
-        ms.addData(Seq(r(12, 99), r(13, 99), r(14, 85)))
-        q.processAllAvailable()
-        ms.addData(Seq(r(20, 70, "WELD-004"), r(21, 71, "WELD-004"),
-          r(22, 72, "WELD-004"), r(23, 85, "WELD-004")))
-        q.processAllAvailable()
-      } finally q.stop()
-      val out = spark.table(name).as[AnomalyAlert].collect().toSeq.sortBy(_.toString)
-      // byte-identical to the flatMapGroupsWithState formulation
-      assert(out == Seq(
-        AnomalyAlert("CNC-001", "temperature", 4, 10, 13),
-        AnomalyAlert("WELD-004", "temperature", 3, 20, 22)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("open runs stay pending (no premature alert)") {
     val ms = MemoryStream[Keyed](spark)
     val alerts = Stateful.anomalyRuns(spark, ms.toDS(), 80, 90, 2)
