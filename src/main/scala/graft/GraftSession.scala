@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.logging.log4j.Level
-import org.apache.logging.log4j.core.config.Configurator
+import org.apache.logging.log4j.core.{Filter, LoggerContext}
+import org.apache.logging.log4j.core.config.{Configurator, LoggerConfig}
+import org.apache.logging.log4j.core.filter.StringMatchFilter
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
@@ -89,6 +91,8 @@ object GraftSession {
     *    stack trace by every glob read of a sink's files: `PipelineSpec`
     *    checks that a read of a streaming file sink's directory still
     *    honours its `_spark_metadata` log.
+    * Two further messages are dropped by text, each from a logger
+    * whose other warnings stay ([[QuietMessages]]).
     * Spark's own logging is initialised first, since its first use
     * replaces the log4j configuration. */
   private lazy val quietLoggers: Unit = {
@@ -97,7 +101,35 @@ object GraftSession {
       "org.apache.spark.rdd.MapPartitionsRDD",
       "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink")
       .foreach(Configurator.setLevel(_, Level.ERROR))
+    val ctx = LoggerContext.getContext(false)
+    val config = ctx.getConfiguration
+    QuietMessages.foreach { case (logger, text) =>
+      val lc = config.getLoggerConfig(logger) match {
+        case own if own.getName == logger => own
+        case _ =>
+          // no level of its own: it follows its ancestors' level
+          val lc = new LoggerConfig(logger, null, true)
+          config.addLogger(logger, lc)
+          lc
+      }
+      lc.addFilter(StringMatchFilter.newBuilder().setMatchString(text)
+        .setOnMatch(Filter.Result.DENY).setOnMismatch(Filter.Result.NEUTRAL).build())
+    }
+    ctx.updateLoggers()
   }
+
+  /** Warnings dropped by text: every streaming query start logs the
+    * first, and every stateful one the second, because every graft
+    * session turns AQE on for its batch queries and Spark turns it off
+    * for streams. They said nothing a run can act on (10 and 5 lines
+    * per benchmark backfill, 71 and 32 per test run). The loggers'
+    * other warnings, such as `MicroBatchExecution`'s, still get
+    * through (`GraftSessionSpec`). */
+  val QuietMessages: Seq[(String, String)] = Seq(
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream" ->
+      "spark.sql.adaptive.enabled is not supported in streaming DataFrames/Datasets",
+    "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution" ->
+      "Disabling AQE since AQE is not supported in stateful workloads")
 
   private object SparkLogging extends Logging {
     def init(): Unit = { log; () }

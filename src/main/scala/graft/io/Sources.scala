@@ -1,6 +1,8 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.ops.Ingest
 import org.apache.spark.sql.functions._
@@ -52,6 +54,17 @@ final case class ParquetSource(path: String) extends Source {
       .schema(read(spark).schema)
       .parquet(path)
 
-  def probe(spark: SparkSession): Boolean =
-    scala.util.Try(read(spark).schema).isSuccess
+  /** A file-system check that launches no Spark job: true when `path`,
+    * which may be a glob over a sink's batch directories, matches an
+    * entry that Spark's file sources would read (not `_`- or
+    * `.`-prefixed). Inferring the schema here, as [[read]] does, would
+    * run one footer job per probe. */
+  def probe(spark: SparkSession): Boolean = scala.util.Try {
+    val p = new Path(path)
+    Option(p.getFileSystem(PlanBridge.sessionHadoopConf(spark)).globStatus(p))
+      .exists(_.exists { st =>
+        val name = st.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      })
+  }.getOrElse(false)
 }

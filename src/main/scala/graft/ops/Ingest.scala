@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ext.expr.DecodeJson
+
 /** Message decode/encode + scalar projections from the ingestion path
   * (SURVEY §2 C1-C7, D1).
   *
@@ -15,8 +17,9 @@ import org.apache.spark.sql.types._
   * event time via `TO_TIMESTAMP(REPLACE(ts,'T',' '))`
   * (`sensor_aggregation.py:22`).
   *
-  * All pure codegen'd built-ins — no UDFs (SURVEY §2 M: zero custom
-  * expressions needed for parity).
+  * Built-ins, plus one generator kernel for the decode
+  * ([[graft.ext.expr.DecodeJson]]): the parse is Spark's, the kernel
+  * only changes how each message's bytes reach it.
   */
 object Ingest {
 
@@ -40,16 +43,14 @@ object Ingest {
     * dropped, missing fields NULL — exactly the reference's
     * `ignore-parse-errors` / `fail-on-missing-field=false` semantics.
     *
-    * Spark's PERMISSIVE `from_json` yields an all-NULL struct (not a
-    * NULL struct) on parse failure, so "malformed" is detected via the
-    * corrupt-record column, not `isNotNull` — filtered inside the array
-    * `inline` expands, so Catalyst cannot copy the parse into a `Filter`. */
-  def decode(df: DataFrame, json: Column): DataFrame = {
-    val msg = from_json(json, MessageSchema.add("_corrupt", StringType),
-      Map("columnNameOfCorruptRecord" -> "_corrupt"))
-    df.select(inline(filter(array(msg),
-        m => m.isNotNull && m.getField("_corrupt").isNull))).drop("_corrupt")
-  }
+    * One generator, [[graft.ext.expr.DecodeJson]], parses each message
+    * once with Spark's own JSON parser and emits a row only for a
+    * message that parses: `from_json` would yield an all-NULL struct for
+    * a malformed one and need a corrupt-record column to tell the two
+    * apart. The kernel feeds the parser the message's UTF-8 bytes, not a
+    * per-message char decoder. */
+  def decode(df: DataFrame, json: Column): DataFrame =
+    df.select(DecodeJson.decodeJson(json, MessageSchema))
 
   /** C1 event-time projection: ISO-8601 'T'-separated string → timestamp.
     * Keeps the reference's literal SQL `REPLACE` (`replace`, no regex;

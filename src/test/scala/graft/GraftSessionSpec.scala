@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -15,7 +18,8 @@ import graft.stream.Pipeline
 
 /** The engine-wide settings [[GraftSession]] applies beyond plain
   * SQL confs: the generated-class cache size, one executor classloader
-  * for every session, and the two loggers it raises to ERROR. */
+  * for every session, the loggers it raises to ERROR and the two
+  * warnings it drops by text. */
 class GraftSessionSpec extends SparkSpec with LowStatePartitions {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -85,6 +89,50 @@ class GraftSessionSpec extends SparkSpec with LowStatePartitions {
     Seq("org.apache.spark.sql.execution.window.WindowExec",
       "org.apache.spark.rdd.MapPartitionsRDD").foreach { name =>
       assert(LogManager.getLogger(name).getLevel === Level.ERROR, name)
+    }
+  }
+
+  test("a stateful stream logs neither AQE warning; those loggers' other warnings get through") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val capture = new AbstractAppender("graft-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getLoggerName -> e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LoggerContext.getContext(false)
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      val dir = Files.createTempDirectory("graft-aqe").toString
+      Files.createDirectories(Paths.get(s"$dir/topic"))
+      Files.write(Paths.get(s"$dir/topic/f-0.json"), Seq(
+        """{"timestamp":"2025-01-01T10:00:10","machine_id":"CNC-001","sensor_type":"temperature","value":85.5}""",
+        """{"timestamp":"2025-01-01T10:03:30","machine_id":"CNC-001","sensor_type":"temperature","value":86.4}"""
+      ).asJava)
+      assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+      val src = Ingest.decode(spark.readStream.text(s"$dir/topic"), col("value"))
+      var aggRows = 0L
+      val (rq, aq) = Pipeline.run(spark, src, _ => (), b => aggRows += b.count(), s"$dir/ckpt")
+      rq.awaitTermination()
+      aq.awaitTermination()
+      assert(aggRows > 0, "the stateful query finalized no window")
+      GraftSession.QuietMessages.foreach { case (logger, text) =>
+        LogManager.getLogger(logger).warn(s"$text (logged directly)")
+        LogManager.getLogger(logger).warn(s"another warning from $logger")
+      }
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val logs = seen.asScala.toSeq
+    GraftSession.QuietMessages.foreach { case (logger, _) =>
+      val aqe = logs.filter { case (l, m) =>
+        l == logger && (m.contains("AQE") || m.contains("spark.sql.adaptive.enabled"))
+      }
+      assert(aqe.isEmpty, aqe)
+      assert(logs.contains(logger -> s"another warning from $logger"), logs)
     }
   }
 

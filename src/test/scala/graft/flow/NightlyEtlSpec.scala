@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import scala.concurrent.duration._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 
@@ -55,6 +56,62 @@ class NightlyEtlSpec extends SparkSpec with graft.LowStatePartitions {
     assert(res.rows === spark.read.parquet(s"$dir/src").count())
     assert(sink.read(spark).count() === res.rows)
     assert(scanned.value === 500L, "the extract must be scanned once")
+  }
+
+  /** Jobs started while `body` runs under job group `group`. Listener
+    * events arrive in order on one bus, so once a later marker job's
+    * start is seen, every job `body` started has been counted. */
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    try {
+      inGroup(group)(body)
+      val marker = s"$group-marker"
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "the marker job's start never arrived")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ParquetSource.probe checks the file system: no Spark job, globs match, missing paths and empty globs fail") {
+    val dir = tmp()
+    val src = Seq(("2025-01-01T10:00:00", 1.0), ("2025-01-02T11:00:00", 2.0))
+      .toDF("iso", "value")
+      .withColumn("timestamp", to_timestamp_ntz(regexp_replace(col("iso"), "T", " ")))
+      .drop("iso")
+    // one directory per micro-batch, as a streaming sink's batches land
+    Seq(0, 1).foreach(b => src.write.parquet(s"$dir/raw/batch-$b"))
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/empty"))
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/meta/_spark_metadata"))
+    val paths = Seq(s"$dir/raw/*", s"$dir/raw/batch-0", s"$dir/missing",
+      s"$dir/missing/*", s"$dir/empty/*", s"$dir/meta/*")
+    var probes = Seq.empty[Boolean]
+    assert(jobsIn("probe") { probes = paths.map(ParquetSource(_).probe(spark)) } == 0)
+    assert(probes == Seq(true, true, false, false, false, false))
+    // the counter sees the footer job a schema-inferring probe launched
+    assert(jobsIn("schema") { spark.read.parquet(s"$dir/raw/*").schema; () } >= 1)
+
+    val sink = LakeSink(s"$dir/lake")
+    val res = NightlyEtl.runTable(spark, ParquetSource(s"$dir/raw/*"), sink, "timestamp")
+    assert(res == NightlyEtl.StageResult(s"$dir/lake", 4L))
+    assert(sink.read(spark).groupBy("day").count().as[(Int, Long)].collect().sorted.toSeq ==
+      Seq((1, 2L), (2, 2L)))
+    val missing = intercept[IllegalArgumentException] {
+      NightlyEtl.runTable(spark, ParquetSource(s"$dir/empty/*"), LakeSink(s"$dir/lake2"),
+        "timestamp", retries = 1, delay = 10.millis)
+    }
+    assert(missing.getMessage.contains("source probe failed"))
   }
 
   test("overwrite re-run is idempotent (K4)") {

@@ -9,45 +9,27 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.SparkSpec
+import graft.ext.expr.DecodeJson
 import graft.stream.Pipeline
 
 class IngestSpec extends SparkSpec with graft.LowStatePartitions {
   import spark.implicits._
 
-  /** `from_json` evaluations in an executed plan. A scan's `DataFilters`
-    * list pushed predicates the text reader does not evaluate, so scans
-    * are left out. */
+  /** JSON parses in an executed plan: `from_json` or the decode kernel.
+    * A scan's `DataFilters` list pushed predicates the text reader does
+    * not evaluate, so scans are left out. */
   private def parses(plan: SparkPlan): Int = plan.collect {
     case _: DataSourceScanExec => 0
-    case p => p.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    case p => p.expressions.map(_.collect {
+      case j: JsonToStructs => j
+      case d: DecodeJson => d
+    }.size).sum
   }.sum
 
   /** An RDD-backed frame: a local `Seq` frame would be evaluated on the
     * driver by `ConvertToLocalRelation`, leaving no plan to inspect. */
   private def jsonFrame(lines: Seq[String]): DataFrame =
     spark.sparkContext.parallelize(lines, 2).toDF("json")
-
-  /** Fifteen edge inputs; the expected rows were recorded from the
-    * two-operator decode (`Filter` on the parsed struct, then `msg.*`)
-    * this one replaced. `{}` and the two lines with trailing text after
-    * an object are kept (the parser stops after the first object); the
-    * other malformed inputs are dropped. */
-  private val edgeInputs = Seq(
-    """{"timestamp":"2025-11-20T10:00:00.123456","machine_id":"CNC-001","sensor_type":"temperature","value":87.42}""",
-    """{"machine_id":"LATHE-002","value":1.5}""",        // missing fields
-    """not json at all{{{""",                            // malformed
-    "",                                                  // empty
-    "   ",                                               // blank
-    "null",
-    "[1,2]",
-    "[]",
-    "{}",
-    """{"machine_id":"M-3","value":"abc"}""",            // string value
-    """{"machine_id":"M-4","value":7}""",                // int value
-    """{"machine_id":"M-5","extra":{"a":[1,2]},"value":2.5}""",
-    """{"machine_id":"M-6","value":3.5} trailing""",
-    """{"machine_id":"M-7","value":4.5}{"machine_id":"M-8","value":5.5}""",
-    null)                                                // SQL NULL
 
   test("decode drops malformed JSON, keeps missing fields as NULL (D1)") {
     val raw = Seq(
@@ -93,7 +75,7 @@ class IngestSpec extends SparkSpec with graft.LowStatePartitions {
   }
 
   test("decode parses each message once and keeps the recorded rows on edge inputs (D1)") {
-    val out = Ingest.decode(jsonFrame(edgeInputs), col("json"))
+    val out = Ingest.decode(jsonFrame(IngestSpec.EdgeInputs), col("json"))
     assert(parses(out.queryExecution.executedPlan) == 1,
       out.queryExecution.executedPlan.treeString)
     assert(out.schema == Ingest.MessageSchema)
@@ -147,4 +129,29 @@ class IngestSpec extends SparkSpec with graft.LowStatePartitions {
       .select(col("event_time").cast("string")).as[Option[String]].collect().toSeq
     assert(ts == Seq(Some("2025-11-20 10:30:45"), Some("2025-11-20 10:30:45"), None))
   }
+}
+
+object IngestSpec {
+
+  /** Fifteen edge inputs; the expected rows were recorded from the
+    * two-operator decode (`Filter` on the parsed struct, then `msg.*`)
+    * that preceded the kernel. `{}` and the two lines with trailing text
+    * after an object are kept (the parser stops after the first object);
+    * the other malformed inputs are dropped. */
+  val EdgeInputs: Seq[String] = Seq(
+    """{"timestamp":"2025-11-20T10:00:00.123456","machine_id":"CNC-001","sensor_type":"temperature","value":87.42}""",
+    """{"machine_id":"LATHE-002","value":1.5}""",        // missing fields
+    """not json at all{{{""",                            // malformed
+    "",                                                  // empty
+    "   ",                                               // blank
+    "null",
+    "[1,2]",
+    "[]",
+    "{}",
+    """{"machine_id":"M-3","value":"abc"}""",            // string value
+    """{"machine_id":"M-4","value":7}""",                // int value
+    """{"machine_id":"M-5","extra":{"a":[1,2]},"value":2.5}""",
+    """{"machine_id":"M-6","value":3.5} trailing""",
+    """{"machine_id":"M-7","value":4.5}{"machine_id":"M-8","value":5.5}""",
+    null)                                                // SQL NULL
 }
