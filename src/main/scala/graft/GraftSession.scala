@@ -151,16 +151,12 @@ object GraftSession {
       // exact-join/dedup family, +22% waiting_suppliers, +12%
       // big_orders, no repeatable regression. Both knobs are
       // scale-safe production settings (the hash map is bounded per
-      // task by the threshold, not by table size); the threshold is
-      // env-tunable for clusters with tighter task memory, and the
-      // static-planner preference itself is env-gated too (round 21,
-      // ADVICE r20): a deployment whose catalyst size estimates
-      // mis-predict a build side can revert to sort-merge without a
-      // rebuild via SPARK_GRAFT_PREFER_SMJ=true.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", "64m"))
+      // task by the threshold, not by table size). Both are runtime SQL
+      // confs: a deployment whose catalyst size estimates mis-predict a
+      // build side, or whose tasks have tighter memory, sets them with
+      // `spark.conf.set`.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // wide aggregates (e.g. SimHash's 64 bit-sum columns) must stay in

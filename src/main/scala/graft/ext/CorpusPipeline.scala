@@ -282,19 +282,8 @@ object CorpusPipeline {
       afterNearDedup: DataFrame, afterDecontam: DataFrame,
       baseDrops: DataFrame, retroContam: DataFrame, packed: DataFrame)
 
-  // Eager stage checkpoint with optional stderr timing
-  // (-Dgraft.inc.profile=1) — dev-loop visibility into which day-N
-  // seam dominates; zero overhead beyond the checkpoint itself.
-  private def ckpt(label: String, df: DataFrame): DataFrame = {
-    if (sys.props.get("graft.inc.profile").isEmpty) df.localCheckpoint(true)
-    else {
-      val t0 = System.nanoTime()
-      val r = df.localCheckpoint(true)
-      System.err.println(
-        f"[inc-prof] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
+  // Eager stage checkpoint: each day-N seam is a saved lineage cut.
+  private def ckpt(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Stand up the day-N−1 state from a full [[build]] over the base
     * split (doc_id ≤ ⌊4·max/5⌋). Each localCheckpoint = a saved
@@ -386,7 +375,7 @@ object CorpusPipeline {
   private[graft] def dayNIncrement(docs: DataFrame, st: PriorState): DataFrame = {
     val ids = docs.select(col("doc_id"), col("text"), col("source"))
     val cut = ids.agg((max(col("doc_id")) * 4L).as("m")).head().getLong(0) / 5L
-    val incNat = ckpt("incNat", ids.filter(col("doc_id") > cut))
+    val incNat = ckpt(ids.filter(col("doc_id") > cut))
     val crossSrc = st.base.filter(pmod(col("doc_id"), lit(10L)) === 0)
     val toks = TextOps.tokens(col("text"))
     val crossExact = crossSrc.select(
@@ -437,7 +426,7 @@ object CorpusPipeline {
     // upstream chain — nested multiplicatively, the deep i3 plan
     // re-ran the augment/quality/regex tree ~9× and its codegen alone
     // cost ~100 s (measured round 12; with the seams: < 1 s).
-    val i1c = ckpt("i1c", i1.withColumn("__canon", pageCanon))
+    val i1c = ckpt(i1.withColumn("__canon", pageCanon))
     val urlKeepIds = i1c.select(col("__canon"), col("doc_id"))
       .groupBy(col("__canon")).agg(min(col("doc_id")).as("doc_id"))
     val urlHits = urlKeyState.join(
@@ -451,7 +440,7 @@ object CorpusPipeline {
       .join(broadcast(urlHits.select(col("canon").as("__canon"))),
         Seq("__canon"), "left_anti")
       .drop("__canon")
-    val i2 = ckpt("i2", i2Pre)
+    val i2 = ckpt(i2Pre)
 
     // 3. exact-text dedup: same shape on the md5 text key.
     val i2k = i2.withColumn("__tk", textKey)
@@ -466,7 +455,7 @@ object CorpusPipeline {
       .join(broadcast(tkHits.select(col("tk").as("__tk"))), Seq("__tk"),
         "left_anti")
       .drop("__tk")
-    val i3 = ckpt("i3", i3Pre)
+    val i3 = ckpt(i3Pre)
 
     // 4. near dedup: within-increment LSH pairs + the cross probe
     // against the persisted signature table, base endpoints mapped to
@@ -475,11 +464,9 @@ object CorpusPipeline {
     // within-increment self-join and the cross-boundary state probe
     // (round 14 — previously computed twice, once inside minhashPairs
     // and once for incrementalPairs).
-    val incSigs = ckpt("incSigs",
-      Dedup.minhashSignatures(i3, col("doc_id"), col("text")))
+    val incSigs = ckpt(Dedup.minhashSignatures(i3, col("doc_id"), col("text")))
     val incPairs = Dedup.pairsFromSignatures(incSigs, 0.5)
-    val crossPairs = ckpt("crossPairs",
-      Dedup.incrementalPairs(sigState, incSigs, 0.5))
+    val crossPairs = ckpt(Dedup.incrementalPairs(sigState, incSigs, 0.5))
     val canonMap = groupState.join(
       broadcast(crossPairs.select(col("corpus_doc").as("node")).distinct()),
       Seq("node"), "left_semi")
@@ -490,8 +477,7 @@ object CorpusPipeline {
         coalesce(col("group"), col("corpus_doc")).as("doc_b"))
     val allEdges = incPairs.select(col("doc_a"), col("doc_b"))
       .unionByName(crossEdges)
-    val dayGroups = ckpt("dayGroups",
-      Dedup.dedupGroups(allEdges, col("doc_a"), col("doc_b")))
+    val dayGroups = ckpt(Dedup.dedupGroups(allEdges, col("doc_a"), col("doc_b")))
     val incLosers = dayGroups.filter(col("node") =!= col("group"))
       .join(i3.select(col("doc_id").as("node")), Seq("node"), "left_semi")
       .select(col("node").as("doc_id"))
@@ -500,8 +486,7 @@ object CorpusPipeline {
     val baseDrops = dayGroups.filter(col("node") =!= col("group"))
       .join(i3.select(col("doc_id").as("node")), Seq("node"), "left_anti")
       .select(col("node").as("doc_id"))
-    val i4 = ckpt("i4",
-      i3.join(broadcast(incLosers), Seq("doc_id"), "left_anti"))
+    val i4 = ckpt(i3.join(broadcast(incLosers), Seq("doc_id"), "left_anti"))
 
     // 5. decontamination: increment eval-shard docs leave the train
     // split and their shingles extend the eval set; increment train
@@ -511,7 +496,7 @@ object CorpusPipeline {
       col("text"))
     val incEvalSh = incRows.filter(col("shard") < 2).select(col("sh"))
       .distinct()
-    val incTrainSh = ckpt("incTrainSh", incRows.filter(col("shard") >= 2)
+    val incTrainSh = ckpt(incRows.filter(col("shard") >= 2)
       .select(col("doc"), col("sh")).distinct())
     val evalHits = evalShState.unionByName(incEvalSh)
       .join(broadcast(incTrainSh.select(col("sh")).distinct()),

@@ -425,7 +425,6 @@ object Dedup {
     val curParts = edges0.queryExecution.toRdd.getNumPartitions
     val parts = math.max(1L, math.min(curParts.toLong, nEdges / 50000L + 1L)).toInt
     val edges = if (parts < curParts) edges0.coalesce(parts) else edges0
-    val spark2 = pairs.sparkSession
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("group", col("node"))
     var cached: Option[org.apache.spark.rdd.RDD[_]] = None
@@ -468,8 +467,6 @@ object Dedup {
       converged = changed == 0
       i += 1
     }
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(s"[graft] dedupGroupsDF: $i iterations, converged=$converged")
     if (!converged)
       System.err.println(
         s"[graft] dedupGroupsDF: NOT converged after $maxIter iterations — " +

@@ -1,53 +1,37 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** Pluggable sinks (SURVEY §2 B1-B4, K1, K4).
-  *
-  * Delta jars aren't on the offline classpath, so the lake sink is
-  * Parquet behind a `LakeFormat` seam — `mode`/`partitionBy` semantics
-  * are format-independent, and a Delta swap is a config change
-  * (SURVEY §7.1/§7.4).
-  */
-trait Sink {
-  def write(df: DataFrame): Unit
-  def probe(spark: SparkSession): Boolean
-}
 
 /** Partitioned lake sink (B4): year/month/day layout + overwrite-per-run
-  * (K1/K4 — timescale_to_deltalake.py:33-37). `dynamic` overwrite only
-  * replaces partitions present in the incoming frame — at 100 TB a
-  * nightly run rewrites yesterday, not the table. */
+  * (K1/K4 — timescale_to_deltalake.py:33-37). Overwrite is `dynamic`: it
+  * only replaces partitions present in the incoming frame — at 100 TB a
+  * nightly run rewrites yesterday, not the table.
+  *
+  * Delta jars aren't on the offline classpath, so the lake is Parquet;
+  * `mode`/`partitionBy` semantics are format-independent (SURVEY
+  * §7.1/§7.4). zstd over the snappy default: ~30-40% smaller parquet at
+  * similar scan speed — at 100 TB the lake's dominant cost is bytes at
+  * rest and bytes over the scan path, not write CPU. */
 final case class LakeSink(
     path: String,
-    format: String = "parquet",
-    partitionCols: Seq[String] = Seq("year", "month", "day"),
-    dynamicOverwrite: Boolean = true,
-    compression: String = "zstd") extends Sink {
-  // zstd over the snappy default: ~30-40% smaller parquet at similar
-  // scan speed — at 100 TB the lake's dominant cost is bytes at rest
-  // and bytes over the scan path, not write CPU.
+    partitionCols: Seq[String] = Seq("year", "month", "day")) {
 
   def write(df: DataFrame): Unit = {
-    val writer = df.write.format(format).mode("overwrite")
-      .option("compression", compression)
-    val w2 =
-      if (dynamicOverwrite)
-        writer.option("partitionOverwriteMode", "dynamic")
-      else writer
-    (if (partitionCols.nonEmpty) w2.partitionBy(partitionCols: _*) else w2)
-      .save(path)
-  }
-
-  def append(df: DataFrame): Unit = {
-    val w = df.write.format(format).mode("append")
-      .option("compression", compression)
+    val w = df.write.format("parquet").mode("overwrite")
+      .option("compression", "zstd")
+      .option("partitionOverwriteMode", "dynamic")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .save(path)
   }
 
-  def read(spark: SparkSession): DataFrame = spark.read.format(format).load(path)
+  def append(df: DataFrame): Unit = {
+    val w = df.write.format("parquet").mode("append")
+      .option("compression", "zstd")
+    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+      .save(path)
+  }
+
+  def read(spark: SparkSession): DataFrame = spark.read.format("parquet").load(path)
 
   def probe(spark: SparkSession): Boolean =
     new java.io.File(path).getParentFile match {
@@ -75,14 +59,4 @@ object Bucketed {
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
       .saveAsTable(table)
   }
-}
-
-/** Kafka-shaped producer sink (B1), offline: JSON-lines files keyed by
-  * machine_id — `(key, value)` columns exactly as the broker sink
-  * expects, so the broker adapter is a format swap. */
-final case class JsonDirSink(path: String) extends Sink {
-  def write(df: DataFrame): Unit =
-    df.select(col("value")).write.mode("append").text(path)
-
-  def probe(spark: SparkSession): Boolean = LakeSink(path).probe(spark)
 }

@@ -1656,16 +1656,6 @@ object Snapshot {
     /** The latest snapshot. */
     def read(): DataFrame = readAsOf(latestVersion)
 
-    /** Files added in (v0, v1] and still live at v1 — the snapshot-to-
-      * snapshot incremental read: rows arriving between two snapshots
-      * without rescanning the base (files a later commit in the window
-      * removed again never surface). */
-    def deltaFiles(v0: Int, v1: Int): Seq[FileStat] = {
-      require(v0 <= v1, s"delta($v0, $v1): v0 must precede v1")
-      Snapshot.replayLive(
-        Snapshot.readCommitsRange(fs, logPath, v0, v1))
-    }
-
     /** The incremental read: rows of files added in (v0, v1], minus
       * any MOR deletions the window itself applied to them (a dv
       * targeting a pre-window base file is the base's business, not
@@ -1686,13 +1676,13 @@ object Snapshot {
       * rewrite's carried-over rows (old file → rewritten file) cancel
       * in the diff. At 100 TB a CDC read of an increment-sized commit
       * therefore scans ~|touched files|, never the table — and the
-      * exceptAll shuffle rides that same bounded row set. */
+      * diff's one shuffle rides that same bounded row set. */
     def changes(v0: Int, v1: Int): DataFrame = {
       require(v0 <= v1, s"changes($v0, $v1): v0 must precede v1")
       val before = if (v0 < 0) Nil else liveState(v0)
       val ckAfter = ckAt(v1)
       require(ckAfter.version >= 0, s"no snapshot <= $v1 at $root")
-      changesFromStates(before, ckAfter)
+      changesFromStates(before, ckAfter.state, ckAfter.schema)
     }
 
     /** The [[changes]] diff given ALREADY-FOLDED endpoint states —
@@ -1702,14 +1692,13 @@ object Snapshot {
       * folds per sub-window. */
     private def changesFromStates(
         before: Seq[(FileStat, Option[String])],
-        ckAfter: Snapshot.Checkpoint): DataFrame = {
-      val after = ckAfter.state
+        after: Seq[(FileStat, Option[String])],
+        logicalAt: Option[StructType]): DataFrame = {
       // Under column mapping the diff runs in the LOGICAL space of
       // the window end: both sides project to v1's logical columns
       // (stable physical names make pre-rename rows compare equal),
       // so a rename never manufactures change rows and a dropped
       // column's stored values can't keep rows from cancelling.
-      val logicalAt = ckAfter.schema
       def emptyLogical(l: StructType) = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         Snapshot.cleanSchema(l))
@@ -1799,7 +1788,8 @@ object Snapshot {
         val cur = gateRead(Snapshot.foldCheckpoint(prev,
           Snapshot.readCommitsRange(fs, logPath, v - 1, v)))
         require(cur.version >= 0, s"no snapshot <= $v at $root")
-        val f = changesFromStates(prev.map(_.state).getOrElse(Nil), cur)
+        val f = changesFromStates(prev.map(_.state).getOrElse(Nil), cur.state,
+          cur.schema)
           .withColumnRenamed("_op", "_change_type")
           .withColumn("_commit_version", lit(v.toLong))
         prev = Some(cur)
@@ -1896,20 +1886,14 @@ object Snapshot {
         spark.read.option("mergeSchema", "true").schema(schema)
           .parquet(fs.map(f => new Path(rootPath, f.path).toString): _*)
       val plain = entries.collect { case (f, None) => f }
-      val dvd = entries.collect { case (f, Some(dv)) => (f, dv) }
+      val dvd = entries.filter(_._2.isDefined)
       if (dvd.isEmpty) {
         val raw = readWith(plain)
         return logical.map(Snapshot.toLogical(raw, _)).getOrElse(raw)
       }
-      val dvRows = spark.read.parquet(dvd.map(_._2).distinct.map(p =>
-          new Path(rootPath, p).toString): _*)
-        .select(col("data_path").as("__dv_path"), col("pos").as("__dv_pos"))
-      val visible = readWith(dvd.map(_._1))
-        .withColumn("__key", relKey)
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(broadcast(dvRows),
-          col("__key") === col("__dv_path") && col("__pos") === col("__dv_pos"),
-          "left_anti")
+      val visible = dropMasked(readWith(dvd.map(_._1))
+          .withColumn("__key", relKey)
+          .withColumn("__pos", col("_metadata.row_index")), dvd)
         .select(outCols: _*)
       val raw =
         if (plain.isEmpty) visible
@@ -2712,16 +2696,7 @@ object Snapshot {
       val version = lv + 1
       val morLines = morDvLines(state, keys, keyCol, touched, version,
         ck.schema)
-      val cdcL =
-        if (morLines.isEmpty) Nil
-        else cdcLines(state, Nil, Nil, morLines, ck.schema, version,
-          ck.props)
-      publish((s"v\t$version" +:
-        (stampLines(ck, Snapshot.DeletionVectorFeatures) ++
-          (if (cdcL.nonEmpty) stampLines(ck, Snapshot.CdfFeatures)
-           else Nil))) ++
-        morLines ++ cdcL, version)
-      version
+      publishMask(ck, morLines, version)
     }
 
     /** Merge-on-read MERGE (upsert by key): same-key old rows are
@@ -2812,16 +2787,7 @@ object Snapshot {
       if (hitRel.isEmpty) return noop()
       val tEntries = cands.filter(e => hitRel(relKeyOf(e._1.path)))
       val morLines = morDvLinesFromHits(tEntries, hits, version)
-      val cdcL =
-        if (morLines.isEmpty) Nil
-        else cdcLines(ck.state, Nil, Nil, morLines, ck.schema, version,
-          ck.props)
-      publish((s"v\t$version" +:
-        (stampLines(ck, Snapshot.DeletionVectorFeatures) ++
-          (if (cdcL.nonEmpty) stampLines(ck, Snapshot.CdfFeatures)
-           else Nil))) ++
-        morLines ++ cdcL, version)
-      version
+      publishMask(ck, morLines, version)
     }
 
     /** Merge-on-read UPDATE by predicate — SQL `UPDATE ... SET ...
@@ -3063,17 +3029,8 @@ object Snapshot {
       if (frames.isEmpty && hitRel.isEmpty) return noop()
       if (frames.isEmpty) {
         // delete-only merge: pure-mask publish, deleteWhere's shape
-        val morLines = morDvLinesFromHits(tEntries, hits.get, version)
-        val cdcL =
-          if (morLines.isEmpty) Nil
-          else cdcLines(ck.state, Nil, Nil, morLines, ck.schema, version,
-            ck.props)
-        publish((s"v\t$version" +:
-          (stampLines(ck, Snapshot.DeletionVectorFeatures) ++
-            (if (cdcL.nonEmpty) stampLines(ck, Snapshot.CdfFeatures)
-             else Nil))) ++
-          morLines ++ cdcL, version)
-        version
+        publishMask(ck, morDvLinesFromHits(tEntries, hits.get, version),
+          version)
       } else commit(frames.reduce(_.unionByName(_)), removed = Nil,
         dvLines =
           if (hitRel.isEmpty) Nil
@@ -3102,11 +3059,31 @@ object Snapshot {
       version
     }
 
+    /** Publish a pure-mask commit on `ck`: the version line, the DV
+      * feature stamp, the `dv` lines, and (CDF on, something masked)
+      * the change file's `cdc` lines with their feature stamp — the
+      * one shape of [[deleteKeysMor]], [[deleteWhere]] and a
+      * delete-only [[merge]]. Returns `version`. */
+    private def publishMask(ck: Snapshot.Checkpoint, morLines: Seq[String],
+        version: Int): Int = {
+      val cdcL =
+        if (morLines.isEmpty) Nil
+        else cdcLines(ck.state, Nil, Nil, morLines, ck.schema, version,
+          ck.props)
+      publish((s"v\t$version" +:
+        (stampLines(ck, Snapshot.DeletionVectorFeatures) ++
+          (if (cdcL.nonEmpty) stampLines(ck, Snapshot.CdfFeatures)
+           else Nil))) ++
+        morLines ++ cdcL, version)
+      version
+    }
+
     /** DV-live filter for [[readWithPos]] frames: drop rows an
       * existing deletion vector of `entries` already masks — the
       * predicate-shaped DML ops must neither resurrect a masked row as
-      * an updated copy nor re-announce its delete in CDF. Broadcast
-      * anti-join, deletion-sized, exactly [[readState]]'s DV shape. */
+      * an updated copy nor re-announce its delete in CDF, and
+      * [[readState]] masks its dv'd files through it. Broadcast
+      * anti-join, deletion-sized. */
     private def dropMasked(df: DataFrame,
         entries: Seq[(FileStat, Option[String])]): DataFrame = {
       val dvPaths = entries.flatMap(_._2).distinct
@@ -3220,33 +3197,8 @@ object Snapshot {
       val post = Snapshot.replayState(preState, Seq(Commit(version,
         addedPaths.map(p => FileStat(p, 0L, Map.empty, Map.empty)),
         removed, dvs = dvPairs)))
-      val preKeys = preState.map { case (f, dv) => (f.path, dv) }.toSet
-      val postKeys = post.map { case (f, dv) => (f.path, dv) }.toSet
-      val dropped = preState.filterNot { case (f, dv) =>
-        postKeys((f.path, dv)) }
-      val added = post.filterNot { case (f, dv) => preKeys((f.path, dv)) }
-      // The changes() diff algebra verbatim — shared schema, exceptAll
-      // cancellation of carried rows (see [[changes]] for the why).
-      val unified = schema match {
-        case Some(_) => None
-        case None => Some(readFiles((dropped ++ added).map(_._1)).schema)
-      }
-      def side(entries: Seq[(FileStat, Option[String])]): DataFrame =
-        if (entries.isEmpty) schema match {
-          case Some(l) => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            Snapshot.cleanSchema(l))
-          case None => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            unified.get)
-        }
-        else readState(entries, unified, schema)
-      val oldRows = side(dropped)
-      val newRows = side(added)
-      val changesDf = newRows.exceptAll(oldRows)
-        .withColumn("_change_type", lit("insert"))
-        .unionByName(oldRows.exceptAll(newRows)
-          .withColumn("_change_type", lit("delete")))
+      val changesDf = changesFromStates(preState, post, schema)
+        .withColumnRenamed("_op", "_change_type")
       val physDf = schema match {
         case Some(ts) if Snapshot.mappingActive(ts) =>
           changesDf.select(ts.fields.toSeq.map(f =>

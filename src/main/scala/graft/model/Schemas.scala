@@ -1,7 +1,5 @@
 package graft.model
 
-import java.sql.Timestamp
-
 /** Domain model (SURVEY §1, FIXTURES.md §A).
   *
   * Typed edges (`Dataset[T]`) at the API boundary, untyped Column DSL
@@ -16,29 +14,6 @@ case class SensorReading(
     machine_id: String,
     sensor_type: String,
     value: Double)
-
-/** machine_sensors row (raw sink). Reference: init-db.sql:6-13. */
-case class RawSensorRow(
-    timestamp: Timestamp,
-    machine_id: String,
-    machine_type: String,   // NULL until enriched (SURVEY §2 E1)
-    sensor_type: String,
-    value: Double,
-    location: String)
-
-/** sensor_aggregates row (windowed sink). Reference: init-db.sql:24-33.
-  * count_readings stays Long in the engine; the JDBC-shaped sink narrows
-  * to INT at the boundary (the reference's own deliberate narrowing —
-  * init-db.sql:32 vs sensor_aggregation.py:46). */
-case class SensorAggregate(
-    window_start: Timestamp,
-    window_end: Timestamp,
-    machine_id: String,
-    sensor_type: String,
-    avg_value: Double,
-    min_value: Double,
-    max_value: Double,
-    count_readings: Long)
 
 /** Machine dimension. Reference: ingest_data.py:19-24. */
 case class Machine(machine_id: String, machine_type: String, location: String)

@@ -1,17 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Tables
-import graft.ext.{Dedup, HeavyHitters, InvertedIndex, QualityFilter, TextOps}
-import graft.ops.{Drift, Funnel, GapFill, Hierarchy, Incremental, Trend}
-
-/** Round-5 analytics + corpus-governance queries: time-series
-  * densification, trend fitting, behavioral funnels/cohorts, a TPC-H Q8
-  * market-share join tree, and the retrieval/filter side of the
-  * training-data pipeline (inverted index, C4-style quality filter).
+/** Analytics and corpus-governance queries, one family object per file:
+  * time series, statistical tests, privacy/governance, profiling and
+  * sketches, and business analytics over the TPC-H and `events` tables.
   *
   * Cross-engine conventions are SparkEntry's: epoch-micros integer time
   * math, decimal-exact money sums, integer-encoded series for exact
@@ -20,4383 +13,10 @@ import graft.ops.{Drift, Funnel, GapFill, Hierarchy, Incremental, Trend}
   */
 object AnalyticsQueries {
 
-  /** 2024-01-01 00:00 UTC (a Monday) in epoch micros — the fixed origin
-    * for minute/week bucketing of `events.ts` (data spans 2024-01-01 →
-    * 2024-01-30, so offsets are always non-negative and `div` ≡ floor
-    * in both engines). */
-  val OriginUs = 1704067200000000L
-
-  private val WeekUs = 7L * Tables.MicrosPerDay
-
-  /** Benford expected first-digit probabilities floor(1e9·log10(1+1/d)
-    * + 0.5) — computed ONCE here and injected as literals into both
-    * the `benford_audit` Spark plan and its DuckDB oracle (runtime
-    * log10 on each side would gamble on cross-engine libm rounding;
-    * nine constants don't — the RagNdcgWeights convention). */
-  private[queries] val BenfordP9: Seq[(Long, Long)] = (1L to 9L)
-    .map(d => d -> math.floor(1e9 * math.log10(1.0 + 1.0 / d) + 0.5).toLong)
-
-  /** dp_geometric_counts' noise thresholds: the truncated geometric
-    * (discrete Laplace) mechanism at ε = 1, noise k ∈ [−5, 5] with
-    * P(k) ∝ e^−|k|, as cumulative 2^60-scaled integer cut points over
-    * the md5 uniform — computed ONCE here and injected as literals
-    * into both engines (the BenfordP9 convention: runtime exp on each
-    * side would gamble on libm rounding; eleven constants don't). */
-  private[queries] val DpNoiseCuts: Seq[(Int, Long)] = {
-    val ks = -5 to 5
-    val ws = ks.map(k => math.exp(-math.abs(k).toDouble))
-    val z = ws.sum
-    val cum = ws.scanLeft(0.0)(_ + _).tail.map(_ / z)
-    ks.zip(cum).map { case (k, c) =>
-      k -> math.floor(c * math.pow(2.0, 60)).toLong
-    }
-  }
-
-  /** assoc_rules basket-size cap: pair generation is O(size²) per
-    * basket, so oversized baskets are excluded before the explode —
-    * the MaxSemCluster / MaxBandBucket guard, mirrored in the oracle. */
-  val MaxBasketItems = 32
-
-  /** Guarded DECIMAL(38,0)→int64 narrowing for exact sufficient
-    * statistics (trend_slope / autocorr / diff_in_diff): with ANSI off
-    * Spark narrows an oversized decimal to NULL silently while the
-    * DuckDB oracle's HUGEINT→BIGINT throws, so past the encoding
-    * contract's scale the engines would diverge silently —
-    * raise_error makes Spark fail loudly like the oracle. TWO bands
-    * are covered: fits-decimal-but-exceeds-int64 (the range compare)
-    * AND decimal(38,0) sum overflow itself, which under non-ANSI
-    * arithmetic surfaces as a NULL sum — every call site aggregates a
-    * non-null column over a nonempty group, so a NULL here can ONLY
-    * mean overflow, never missing input. */
-  private[queries] def longExact(q: String)(c: Column): Column =
-    when(c.isNull, raise_error(lit(
-      s"graft $q: sufficient statistic overflowed decimal(38,0)")))
-      .when(c > lit(Long.MaxValue) || c < lit(Long.MinValue),
-        raise_error(concat(
-          lit(s"graft $q: sufficient statistic exceeds int64: "),
-          c.cast("string"))))
-      .otherwise(c.cast("long"))
-
-  /** decimal-exact money sum (BenchQueries convention). */
-  private def dsum(c: org.apache.spark.sql.Column, scale: Int) =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double")
-
-  /** Two-level "cumulative count strictly BEFORE each value" over a
-    * value histogram `(valCol: long, c: long, …)` whose cardinality is
-    * SF-PROPORTIONAL (per-customer/per-user sums are near-unique, so
-    * the histogram ≈ the entity count) — the scale-safe replacement
-    * for `Window.orderBy(v)` over such a frame, which funnels every
-    * entity through ONE sort task at 100 TB.
-    *
-    * Level 1: range-bucket v by `bucketWidth` (floor division — order-
-    * preserving, including negatives) and prefix-sum the per-bucket
-    * totals. That frame is VALUE-DOMAIN-bounded (≈ domain/width rows,
-    * flat in table size — the centi-value-histogram argument), so its
-    * unpartitioned window and the broadcast of the resulting offsets
-    * are both provably bounded. Level 2: the per-value cumulative sum
-    * runs PARTITIONED BY bucket — each bucket sorts ~1/buckets of the
-    * histogram, in parallel — and cb = bucket offset + local cum.
-    * Bit-identical to the single-window form, so oracles that keep the
-    * plain SQL window are unchanged. Appends column `cb`. */
-  private[queries] def bucketedCumBefore(
-      hist: DataFrame, valCol: String, bucketWidth: Long): DataFrame = {
-    val b = hist.withColumn("gbkt", expr(
-      s"CASE WHEN $valCol >= 0 THEN $valCol div $bucketWidth " +
-        s"ELSE -((-$valCol + ${bucketWidth - 1}) div $bucketWidth) END"))
-    val wb = Window.orderBy(col("gbkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = b.groupBy(col("gbkt")).agg(sum(col("c")).as("gbc"))
-      .withColumn("goff", coalesce(sum(col("gbc")).over(wb), lit(0L)))
-      .select(col("gbkt"), col("goff"))
-    val wl = Window.partitionBy(col("gbkt")).orderBy(col(valCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    b.withColumn("glcb", coalesce(sum(col("c")).over(wl), lit(0L)))
-      .join(broadcast(offsets), "gbkt")
-      .withColumn("cb", col("goff") + col("glcb"))
-      .drop("gbkt", "goff", "glcb")
-  }
-
-  /** rich_customers runs the SAME SQL text in Spark and DuckDB — one
-    * definition, two engines. Averages are decimal-sum/count (a plain
-    * avg(double) is partition-order dependent in its last ulp, which
-    * both the filter boundary and the rounded output would inherit). */
-  private val LateralTopkSql =
-    """SELECT n.n_name, t.c_custkey, t.c_acctbal
-      |FROM nation n,
-      |LATERAL (SELECT c_custkey, c_acctbal FROM customer c
-      |         WHERE c.c_nationkey = n.n_nationkey
-      |         ORDER BY c_acctbal DESC, c_custkey LIMIT 2) t""".stripMargin
-
-  private val RichCustomersSql =
-    """SELECT c_custkey, c_acctbal,
-      |  round((SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-      |         FROM customer c2
-      |         WHERE c2.c_nationkey = customer.c_nationkey), 4) AS nation_avg,
-      |  round((SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-      |         FROM customer), 4) AS global_avg
-      |FROM customer
-      |WHERE c_acctbal > 1.5 * (SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*)
-      |                         FROM customer c2
-      |                         WHERE c2.c_nationkey = customer.c_nationkey)""".stripMargin
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Time-series gap fill (ops.GapFill): dense hourly grid per user
-    // with forward-filled averages — the TimescaleDB
-    // time_bucket_gapfill/locf capability (init-db.sql hypertable
-    // consumers) rebuilt Spark-side. Raw events cross ONE exchange;
-    // the grid/window stages run on keys × hours rows.
-    "gap_fill" -> { (s, d) =>
-      GapFill.hourlyFill(Tables.events(s, d), Seq(col("user_id")),
-        Tables.tsUs, col("value"), bucketUs = 3600L * Tables.MicrosPerSecond)
-    },
-
-    // Linear-interpolation companion (ops.GapFill.hourlyInterp):
-    // TimescaleDB's interpolate() next to gap_fill's locf. Same
-    // one-scan lead/sequence shape; gap buckets get the exact
-    // HALF_UP-integer interpolation between the surrounding means
-    // (centi-value longs — both engines produce identical integers,
-    // the closing /100.0 double is the same bits).
-    "gap_interp" -> { (s, d) =>
-      GapFill.hourlyInterp(Tables.events(s, d), Seq(col("user_id")),
-        Tables.tsUs, col("value"), bucketUs = 3600L * Tables.MicrosPerSecond)
-    },
-
-    // Per-user value trend (ops.Trend): least-squares slope over
-    // (minutes-since-origin, centi-value) — both LONG-encoded so the
-    // five sufficient statistics are exact integer sums; the single
-    // closing division is the only float op. One partial+final
-    // HashAggregate over the scan.
-    "trend_slope" -> { (s, d) =>
-      // Emit the sufficient statistics as LONG: the operator keeps
-      // DECIMAL(38,0) internally (overflow headroom at cluster scale),
-      // but the driver hashes dtypes too, and the oracle's HUGEINT sums
-      // land in pandas as float64 unless both sides narrow to int64.
-      // They fit in int64 at every test SF by the encoding contract —
-      // and the cast is GUARDED: with ANSI off Spark's decimal→long
-      // overflow yields NULL silently while DuckDB's HUGEINT→BIGINT
-      // throws, so past the contract scale the engines would diverge
-      // silently. raise_error makes Spark fail loudly like the oracle.
-      val longExact = AnalyticsQueries.longExact("trend_slope") _
-      Trend.slope(Tables.events(s, d), Seq(col("user_id")),
-        x = expr(s"(ts div 1000 - $OriginUs) div 60000000"),
-        y = floor(col("value") * 100 + lit(0.5)).cast("long"))
-        .withColumn("sx", longExact(col("sx")))
-        .withColumn("sy", longExact(col("sy")))
-        .withColumn("sxy", longExact(col("sxy")))
-        .withColumn("sxx", longExact(col("sxx")))
-    },
-
-    // Per-user lag-1 autocorrelation (round 8) — the serial-dependence
-    // companion to trend_slope: consecutive (prev, cur) centi-value
-    // pairs over the (ts, event_id) total order, Pearson r over the
-    // pairs. Six sufficient statistics accumulate as exact
-    // DECIMAL(38,0) integer sums (narrowed to int64 under the same
-    // raise_error guard as trend_slope), so the closing r is a FIXED
-    // tree of IEEE double ops over identical integer inputs — both
-    // engines produce the same bits with no rounding (the ewma
-    // unrounded-double convention). Plan shape: ONE sort exchange for
-    // the lag window, then partial+final hash aggregate; the pair
-    // stream never rewidens — at 100 TB this is the same
-    // sort-within-user cost the window family already pays.
-    "autocorr" -> { (s, d) =>
-      val longExact = AnalyticsQueries.longExact("autocorr") _
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("tus"), col("event_id"))
-      val pairs = Tables.events(s, d)
-        .select(col("user_id"), Tables.tsUs.as("tus"), col("event_id"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("y"))
-        .withColumn("x", lag(col("y"), 1).over(w))
-        .filter(col("x").isNotNull)
-      def dsum38(c: Column) = sum(c.cast("decimal(38,0)"))
-      val stats = pairs.groupBy(col("user_id")).agg(
-        count(lit(1)).as("n_pairs"),
-        longExact(dsum38(col("x"))).as("sx"),
-        longExact(dsum38(col("y"))).as("sy"),
-        longExact(dsum38(col("x") * col("y"))).as("sxy"),
-        longExact(dsum38(col("x") * col("x"))).as("sxx"),
-        longExact(dsum38(col("y") * col("y"))).as("syy"))
-      def dbl(name: String) = col(name).cast("double")
-      val num = dbl("n_pairs") * dbl("sxy") - dbl("sx") * dbl("sy")
-      val den1 = dbl("n_pairs") * dbl("sxx") - dbl("sx") * dbl("sx")
-      val den2 = dbl("n_pairs") * dbl("syy") - dbl("sy") * dbl("sy")
-      stats.select(col("user_id"), col("n_pairs"),
-        col("sx"), col("sy"), col("sxy"), col("sxx"), col("syy"),
-        when(den1 > lit(0.0) && den2 > lit(0.0), num / sqrt(den1 * den2))
-          .as("r_lag1"))
-    },
-
-    // Market-basket association rules (round 8) — pairwise
-    // co-occurrence over (order = basket, part = item) with support ≥
-    // 2 and exact-integer confidence/lift at 1e6 scale (truncating
-    // `div` ≡ DuckDB `//` on non-negative operands, the link_rank
-    // convention — no float division to tie-break). Pair generation is
-    // quadratic in basket size, so baskets above MaxBasketItems are
-    // excluded UP FRONT (mirrored in the oracle — the MaxSemCluster /
-    // MaxBandBucket pattern; TPC-H baskets top out at ~13 distinct
-    // items, so the cap is a no-op guard at any SF of this schema).
-    // Plan shape: ONE groupBy(basket) exchange builds the sorted item
-    // arrays; pairs then explode MAP-SIDE from each array (the
-    // textbook self-join shuffles the item table twice and re-shuffles
-    // the join output); the basket frame is localCheckpoint-ed once
-    // for its three consumers (pairs, item supports, basket count).
-    "assoc_rules" -> { (s, d) =>
-      val items = Tables.lineitem(s, d)
-        .select(col("l_orderkey").as("basket"), col("l_partkey").as("item"))
-        .distinct()
-      val baskets = items.groupBy(col("basket"))
-        .agg(sort_array(collect_set(col("item"))).as("its"))
-        .filter(size(col("its")).between(2, MaxBasketItems))
-        .localCheckpoint(true)
-      val ic = baskets.select(explode(col("its")).as("item"))
-        .groupBy(col("item")).agg(count(lit(1)).as("n_i"))
-      val nb = baskets.agg(count(lit(1)).as("n_baskets"))
-      val pairs = baskets
-        .select(col("its"), posexplode(col("its")).as(Seq("i", "part_a")))
-        .select(col("part_a"),
-          explode(slice(col("its"), col("i") + lit(2), size(col("its"))))
-            .as("part_b"))
-        .groupBy(col("part_a"), col("part_b"))
-        .agg(count(lit(1)).as("n_ab"))
-        .filter(col("n_ab") >= 2)
-      pairs
-        .join(ic.select(col("item").as("part_a"), col("n_i").as("n_a")),
-          "part_a")
-        .join(ic.select(col("item").as("part_b"), col("n_i").as("n_b")),
-          "part_b")
-        .crossJoin(broadcast(nb))
-        .select(col("part_a"), col("part_b"), col("n_ab"),
-          col("n_a"), col("n_b"),
-          expr("(n_ab * 1000000) div n_a").as("conf_x1e6"),
-          expr("(n_ab * n_baskets * 1000000) div (n_a * n_b)")
-            .as("lift_x1e6"))
-    },
-
-    // First-touch funnel: of all users, how many ever signed up; of
-    // those, how many first-clicked after first-signup; of those, how
-    // many first-purchased after first-click. Conditional mins make it
-    // ONE pass + one tiny rollup — no per-stage self-joins (the naive
-    // funnel is K joins over the event log; at 100 TB that's K
-    // shuffles of the full stream).
-    "funnel_stages" -> { (s, d) =>
-      val per = Tables.events(s, d)
-        .select(col("user_id"), Tables.tsUs.as("tus"), col("event_type"))
-        .groupBy(col("user_id"))
-        .agg(
-          min(when(col("event_type") === "signup", col("tus"))).as("s"),
-          min(when(col("event_type") === "click", col("tus"))).as("c"),
-          min(when(col("event_type") === "purchase", col("tus"))).as("p"))
-      per.agg(
-        count(lit(1)).as("n_users"),
-        count(col("s")).as("n_signup"),
-        sum(when(col("s") < col("c"), 1L).otherwise(0L)).as("n_click_after"),
-        sum(when(col("s") < col("c") && col("c") < col("p"), 1L).otherwise(0L))
-          .as("n_purchase_after"))
-    },
-
-    // Weekly cohort retention: users bucketed by first-active week,
-    // counted per subsequent active week. distinct(user, week) is one
-    // exchange; the cohort-min window rides the SAME user partitioning
-    // on the collapsed frame (users × weeks, not events); the final
-    // rollup is tiny.
-    "cohort_retention" -> { (s, d) =>
-      val week = expr(s"(ts div 1000 - $OriginUs) div $WeekUs")
-      val uw = Tables.events(s, d)
-        .select(col("user_id"), week.as("week"))
-        .distinct()
-      uw.withColumn("cohort_week",
-          min(col("week")).over(Window.partitionBy(col("user_id"))))
-        .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
-        .agg(count(lit(1)).as("n_users"))
-    },
-
-    // TPC-H Q8 shape — national market share: NATION_7 suppliers' slice
-    // of ASIA customers' revenue per order year. The deepest join tree
-    // in the registry (6 tables): nation/region/supplier broadcast,
-    // customer⋈orders⋈lineitem shuffle on their keys; the CASE rides
-    // the partial aggregate so lineitem is scanned once.
-    "market_share" -> { (s, d) =>
-      val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      val custAsia = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("c_custkey"))
-      val supNation = Tables.supplier(s, d).select(col("s_suppkey"), col("s_nationkey"))
-        .join(broadcast(Tables.nation(s, d).select(
-          col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))),
-          col("s_nationkey") === col("sn_key"))
-        .select(col("s_suppkey"), col("supp_nation"))
-      Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey"), year(col("o_orderdate")).as("o_year"))
-        .join(custAsia, col("o_custkey") === col("c_custkey"))
-        .join(Tables.lineitem(s, d)
-          .select(col("l_orderkey"), col("l_suppkey"), rev.as("rev")),
-          col("o_orderkey") === col("l_orderkey"))
-        .join(supNation, col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("o_year"))
-        .agg(
-          dsum(when(col("supp_nation") === "NATION_7", col("rev")).otherwise(lit(0.0)), 4)
-            .as("nation_rev"),
-          dsum(col("rev"), 4).as("total_rev"))
-        .withColumn("mkt_share", round(col("nation_rev") / col("total_rev"), 6))
-    },
-
-    // Inverted index (ext.InvertedIndex): term → exact document
-    // frequency + bounded posting sample. TopKPerKey heaps cap the
-    // hottest term at k rows per partition — the stopword posting list
-    // that swallows an aggregation buffer at corpus scale never forms.
-    "inverted_index" -> { (s, d) =>
-      InvertedIndex.build(Tables.documents(s, d), col("doc_id"), col("text"),
-        k = 100, minDf = 2L)
-    },
-
-    // C4-style quality filter (ext.QualityFilter): keep/drop verdict +
-    // auditable reasons CSV. The corpus is clean word salad, so the
-    // query unions three doc_id-offset perturbations that each trip a
-    // rule (2-token truncation → too_short; punctuation-run append →
-    // high_punct; whitespace-stripped gluing → word_len+too_short) —
-    // the oracle replicates the synthesis, so the gate verifies real
-    // verdicts, not an all-keep pass-through.
-    "quality_filter" -> { (s, d) =>
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val toks = TextOps.tokens(col("text"))
-      val short = docs.select((col("doc_id") + 2000000000L).as("doc_id"),
-        concat_ws(" ", slice(toks, 1, 2)).as("text"))
-      val punct = docs.select((col("doc_id") + 3000000000L).as("doc_id"),
-        concat(col("text"), lit(" "),
-          expr("repeat('.', CAST(length(text) / 2 AS INT))")).as("text"))
-      val glued = docs.select((col("doc_id") + 4000000000L).as("doc_id"),
-        expr("replace(text, ' ', '')").as("text"))
-      docs.unionByName(short).unionByName(punct).unionByName(glued)
-        .select(col("doc_id"),
-          QualityFilter.keep(col("text")).as("keep"),
-          QualityFilter.reasons(col("text")).as("reasons"))
-    },
-
-    // Per-type z-score outliers with EXACT integer math: flag rows with
-    // z² > 9 via (n·y − S)² > 9·(n·Q − S²) over centi-scaled values —
-    // no float mean/variance, so both engines flag the identical row
-    // set (a float-z formulation can disagree on boundary rows). Two
-    // passes by design: the 5-row stats aggregate broadcasts back onto
-    // the scan — a window-based single-pass would shuffle every raw row
-    // by event_type (5 partitions at any scale: the degenerate layout).
-    "zscore_outliers" -> { (s, d) =>
-      val dec = "decimal(38,0)"
-      val y = floor(col("value") * 100 + lit(0.5)).cast("long")
-      val e = Tables.events(s, d)
-        .select(col("event_id"), col("event_type"), col("value"), y.as("y"))
-      val stats = e.groupBy(col("event_type")).agg(
-        count(lit(1)).as("n"),
-        sum(col("y").cast(dec)).as("s"),
-        sum((col("y") * col("y")).cast(dec)).as("q"))
-      val dev = col("n").cast(dec) * col("y").cast(dec) - col("s")
-      e.join(broadcast(stats), "event_type")
-        .filter(dev * dev > lit(9) * (col("n").cast(dec) * col("q") - col("s") * col("s")))
-        .select(col("event_id"), col("event_type"), col("value"))
-    },
-
-    // Pareto skyline (round 14) — the classic two-criteria frontier
-    // (Börzsönyi/Kossmann/Stocker, ICDE 2001): parts no other part
-    // both undercuts-or-ties on price AND matches-or-beats on size,
-    // strict in at least one dimension (min retail cents, max p_size).
-    // Computed WITHOUT the O(n²) dominance self-join: collapse to one
-    // (price_cents → max size) row per distinct price, run ONE
-    // running-max window over that VALUE-BOUNDED frame (distinct
-    // retail cents is price-range-bounded ≤ ~120k regardless of SF —
-    // the compressed-frame convention), and re-join the bounded group
-    // table broadcast onto the scan. A part is on the frontier iff its
-    // size equals its price group's max (same-price domination must be
-    // strict in size) and that max strictly exceeds every cheaper
-    // group's running max (cheaper is already strict in price). Exact
-    // integers end to end; both engines run the same algebra.
-    "skyline_frontier" -> { (s, d) =>
-      val p = Tables.part(s, d).select(col("p_partkey"),
-        floor(col("p_retailprice") * 100 + lit(0.5)).cast("long")
-          .as("price_cents"),
-        col("p_size").cast("long").as("p_size"))
-      val g = p.groupBy("price_cents").agg(max(col("p_size")).as("gmax"))
-      val w = Window.orderBy(col("price_cents"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val g2 = g.withColumn("prevmax", max(col("gmax")).over(w))
-      p.join(broadcast(g2), Seq("price_cents"))
-        .filter(col("p_size") === col("gmax") &&
-          (col("prevmax").isNull || col("gmax") > col("prevmax")))
-        .select(col("p_partkey"), col("price_cents"), col("p_size"))
-    },
-
-    // Zone-map pruning audit (round 12) — the data-skipping argument
-    // behind every lake layout decision (parquet row-group min/max,
-    // ORC stripe stats; Moerkotte's small materialized aggregates,
-    // VLDB 1998): per-shard min/max "zone maps" let a selective scan
-    // SKIP whole files. The audit COMPUTES the benefit of clustering
-    // instead of asserting it: the same 64-shard corpus is laid out
-    // twice — arrival order (round-robin on event_id: every shard
-    // holds a value mix, so the selective predicate prunes almost
-    // nothing) vs value-clustered (equal-MASS equi-depth buckets on
-    // the compressed centi-value histogram — equal-WIDTH buckets
-    // fail on this corpus's long tail, which is itself the lesson:
-    // cluster by rank mass, not by range) — and both prune fractions
-    // are reported with a computed clustered_wins cell (the
-    // split_leakage convention). The predicate is the exact
-    // nearest-rank p90 (winsorize's formula), so ~10% of rows match
-    // by construction. All exact integers. 100 TB shape: the
-    // cumulative rides the DISTINCT-centi-value compressed histogram
-    // (the equidepth_hist layout; its _scale variant shows the
-    // two-level form); zone maps are one (shard, max) agg; the
-    // prune decision is a 64-row broadcast — exactly how a planner
-    // consults file stats without touching data.
-    "zonemap_prune" -> { (s, d) =>
-      val S = 64
-      val y = floor(col("value") * 100 + lit(0.5)).cast("long")
-      val e = Tables.events(s, d).select(col("event_id"), y.as("y"))
-        .localCheckpoint(true)
-      val nTot = e.agg(count(lit(1)).as("n"))
-      val wv = Window.orderBy(col("y"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val hb = e.groupBy(col("y")).agg(count(lit(1)).as("c"))
-        .withColumn("cum", sum(col("c")).over(wv))
-        .crossJoin(broadcast(nTot))
-        .select(col("y"),
-          least(lit((S - 1).toLong),
-            expr(s"((cum - 1) * $S) div n")).as("shard_clu"),
-          col("cum"), col("n"))
-        .localCheckpoint(true)
-      val p90 = hb.filter(col("cum") >= expr("(9 * n + 9) div 10"))
-        .agg(min(col("y")).as("p"))
-      val laid = e.join(hb.select(col("y"), col("shard_clu")), "y")
-        .crossJoin(broadcast(p90))
-        .select(col("y"), col("p"),
-          pmod(col("event_id"), lit(S.toLong)).as("shard_nat"),
-          col("shard_clu"))
-        .localCheckpoint(true)
-      def audit(shardCol: String, nm: String): DataFrame = {
-        val zones = laid.groupBy(col(shardCol).as("shard"))
-          .agg(count(lit(1)).as("rows"), max(col("y")).as("zmax"),
-            max(col("p")).as("p"))
-        zones.agg(
-          lit(nm).as("layout"),
-          count(lit(1)).as("n_shards"),
-          sum(when(col("zmax") < col("p"), 1L).otherwise(0L))
-            .as("n_pruned"),
-          sum(col("rows")).as("rows_total"),
-          sum(when(col("zmax") >= col("p"), col("rows")).otherwise(0L))
-            .as("rows_scanned"))
-      }
-      val nat = audit("shard_nat", "natural")
-      val clu = audit("shard_clu", "clustered")
-      val winner = clu.select(col("n_pruned").as("cp"))
-        .crossJoin(nat.select(col("n_pruned").as("np")))
-        .select((col("cp") > col("np")).as("clustered_wins"))
-      nat.unionByName(clu).crossJoin(broadcast(winner))
-        .selectExpr("layout", "n_shards", "n_pruned", "rows_total",
-          "rows_scanned",
-          "(2 * 1000000 * n_pruned + n_shards) div (2 * n_shards)" +
-            " AS pruned_frac_x1e6",
-          "clustered_wins")
-    },
-
-    // Simpson's-paradox audit (round 12) — the confounding failure
-    // ab_chisq's randomized arms are DESIGNED to prevent (Simpson
-    // 1951; Bickel et al., Science 1975 — the Berkeley admissions
-    // case): when assignment correlates with a segment that also
-    // drives the outcome, the AGGREGATE comparison inverts the
-    // within-every-segment truth. The plant wires exactly that with
-    // three md5 draws per event: segment z (50/50), arm 1 assigned
-    // 80% in z=1 vs 20% in z=0 (the confound), conversion 60%/20% by
-    // segment MINUS 5pp for arm 1 (arm 1 is truly WORSE everywhere).
-    // The audit computes rate comparisons with cleared denominators
-    // (c₁·n₀ > c₀·n₁ — no division) per scope {all, seg0, seg1} and
-    // a paradox cell: aggregate says arm 1 wins while BOTH segments
-    // say it loses — the reason experimentation platforms stratify.
-    // 100 TB shape: map-side flags, three 4-number aggs, one 3-row
-    // rollup.
-    "simpson_audit" -> { (s, d) =>
-      def h(p: String) = pmod(Dedup.md5Hash60(
-        concat(lit(p), col("event_id"))), lit(100L))
-      val base = Tables.events(s, d).select(col("event_id"))
-        .select(pmod(Dedup.md5Hash60(
-            concat(lit("seg:"), col("event_id"))), lit(2L)).as("seg"),
-          h("arm:").as("ha"), h("cv:").as("hc"))
-        .select(col("seg"), col("hc"),
-          (col("ha") < when(col("seg") === 1L, 80L).otherwise(20L))
-            .as("arm1"))
-        .select(col("seg"), col("arm1"),
-          (col("hc") < when(col("seg") === 1L, 60L).otherwise(20L) -
-            when(col("arm1"), 5L).otherwise(0L)).as("conv"))
-        .localCheckpoint(true)
-      def cells(scope: String, f: Column): DataFrame =
-        base.filter(f).agg(
-          sum(when(!col("arm1"), 1L).otherwise(0L)).as("n0"),
-          sum(when(col("arm1"), 1L).otherwise(0L)).as("n1"),
-          sum(when(!col("arm1") && col("conv"), 1L).otherwise(0L))
-            .as("c0"),
-          sum(when(col("arm1") && col("conv"), 1L).otherwise(0L))
-            .as("c1"))
-        .select(lit(scope).as("scope"), col("n0"), col("n1"),
-          col("c0"), col("c1"),
-          (col("c1") * col("n0") > col("c0") * col("n1")).as("arm1_wins"))
-      val rows = cells("all", lit(true))
-        .unionByName(cells("seg0", col("seg") === 0L))
-        .unionByName(cells("seg1", col("seg") === 1L))
-        .localCheckpoint(true)
-      rows.crossJoin(broadcast(rows.agg(
-        max(when(col("scope") === "all" && col("arm1_wins"), 1L)
-          .otherwise(0L)).as("aw"),
-        max(when(col("scope") =!= "all" && col("arm1_wins"), 1L)
-          .otherwise(0L)).as("sw"))
-        .select((col("aw") === 1L && col("sw") === 0L).as("paradox"))))
-    },
-
-    // Bot detection by timing regularity (round 12) — the behavioral
-    // abuse signal (Tan & Kumar 2002 robot-session detection; every
-    // anti-fraud stack's first heuristic): human inter-event gaps are
-    // bursty, scripted clients fire on a timer, so a LOW coefficient
-    // of variation over a user's gap stream flags automation. Exact
-    // integers with denominators cleared: CV² < 0.05 ⇔ 20·(m·Q − S²)
-    // < S² over micros gaps (Q = Σg² routed DECIMAL(38,0)/HUGEINT —
-    // a single day-long gap squared crosses 2⁶³). Three planted bot
-    // users fire at exactly 60 s × 50 events (CV² = 0, the flag's
-    // floor) — real users' bursty gaps stay unflagged, so the output
-    // IS the planted set unless the corpus genuinely contains a
-    // metronome. 100 TB shape: one per-user ordered window pass
-    // (natural user partitioning), then a per-user 3-number agg —
-    // the sessionize envelope, no event self-joins.
-    "session_bot_detect" -> { (s, d) =>
-      val base = Tables.events(s, d)
-        .select(col("user_id"), expr("ts div 1000").as("tus"),
-          col("event_id"))
-      val plants = s.range(3)
-        .select((col("id") + 9000001L).as("user_id"),
-          explode(sequence(lit(0L), lit(49L))).as("i"))
-        .select(col("user_id"),
-          (lit(1704067200000000L) + col("i") * 60000000L).as("tus"),
-          (col("user_id") * 1000 + col("i")).as("event_id"))
-      val wg = Window.partitionBy(col("user_id"))
-        .orderBy(col("tus"), col("event_id"))
-      val stats = base.unionByName(plants)
-        .withColumn("ptus", lag(col("tus"), 1).over(wg))
-        .filter(col("ptus").isNotNull)
-        .select(col("user_id"), (col("tus") - col("ptus")).as("g"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("m"), sum(col("g")).as("sg"),
-          sum(col("g").cast("decimal(38,0)") * col("g")).as("q"))
-      stats.filter(col("m") >= 19L &&
-          expr("""20 * (CAST(m AS DECIMAL(38,0)) * q -
-                |       CAST(sg AS DECIMAL(38,0)) * sg)
-                | < CAST(sg AS DECIMAL(38,0)) * sg""".stripMargin))
-        .selectExpr("user_id", "m + 1 AS n_events",
-          "(2 * sg + m) div (2 * m) AS mean_gap_us",
-          """CAST((2 * 1000000 * (CAST(m AS DECIMAL(38,0)) * q -
-            |        CAST(sg AS DECIMAL(38,0)) * sg)
-            |      + CAST(sg AS DECIMAL(38,0)) * sg)
-            | div (2 * CAST(sg AS DECIMAL(38,0)) * sg) AS BIGINT)
-            | AS cv2_x1e6""".stripMargin,
-          "user_id >= 9000000 AS is_planted")
-    },
-
-    // A/B-test significance, exact-integer Pearson χ² (round 12) —
-    // the experimentation primitive (Pearson 1900; Kohavi et al.,
-    // Trustworthy Online Controlled Experiments): conversion =
-    // exceeding the exact nearest-rank p90 of the value axis; arms
-    // split by md5. TWO tests ship together, the platform
-    // calibration pair: an A/A test (same hash arms, unbiased
-    // metric — must NOT reach significance; a significant A/A means
-    // the assignment or the stat is broken) and a PLANTED-lift test
-    // (arm B's conversions get a deterministic md5-selected +10%
-    // lift — must reach significance). χ² = N(ad−bc)²/Π(margins)
-    // compared against 3.8415 (α=0.05, df=1) with denominators
-    // CLEARED — the significance decision is an exact integer
-    // comparison (10000·N·(ad−bc)² > 38415·Π), DECIMAL(38,0)/
-    // HUGEINT-routed since (ad−bc)² alone crosses 2⁶³ at 100k rows;
-    // chisq_x100 is reported for reading, the decision never
-    // touches it. 100 TB shape: two global aggs over map-side flags;
-    // the contingency table is 4 numbers.
-    "ab_chisq" -> { (s, d) =>
-      val y = floor(col("value") * 100 + lit(0.5)).cast("long")
-      val e = Tables.events(s, d).select(col("event_id"), y.as("y"))
-        .localCheckpoint(true)
-      val nTot = e.agg(count(lit(1)).as("n"))
-      val wv = Window.orderBy(col("y"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val p90 = e.groupBy(col("y")).agg(count(lit(1)).as("c"))
-        .withColumn("cum", sum(col("c")).over(wv))
-        .crossJoin(broadcast(nTot))
-        .filter(col("cum") >= expr("(9 * n + 9) div 10"))
-        .agg(min(col("y")).as("p"))
-      val base = e.crossJoin(broadcast(p90))
-        .select(
-          pmod(Dedup.md5Hash60(concat(lit("ab:"), col("event_id"))),
-            lit(2L)).as("arm"),
-          (col("y") >= col("p")).as("conv1"),
-          (pmod(Dedup.md5Hash60(concat(lit("lift:"), col("event_id"))),
-            lit(10L)) === 0L).as("lifted"))
-        .withColumn("conv2",
-          col("conv1") || (col("arm") === 1L && col("lifted")))
-        .localCheckpoint(true)
-      def test(nm: String, convCol: String): DataFrame =
-        base.agg(
-          sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n_a"),
-          sum(when(col("arm") === 1L, 1L).otherwise(0L)).as("n_b"),
-          sum(when(col("arm") === 0L && col(convCol), 1L).otherwise(0L))
-            .as("conv_a"),
-          sum(when(col("arm") === 1L && col(convCol), 1L).otherwise(0L))
-            .as("conv_b"))
-        .selectExpr("n_a", "n_b", "conv_a", "conv_b",
-          "CAST(conv_a * (n_b - conv_b) - (n_a - conv_a) * conv_b " +
-            "AS DECIMAL(38,0)) AS dif",
-          "CAST(n_a AS DECIMAL(38,0)) * n_b * (conv_a + conv_b) * " +
-            "(n_a + n_b - conv_a - conv_b) AS den")
-        .selectExpr(s"'$nm' AS test", "n_a", "n_b", "conv_a", "conv_b",
-          "CAST((100 * (n_a + n_b) * dif * dif) div den AS BIGINT)" +
-            " AS chisq_x100",
-          "10000 * (n_a + n_b) * dif * dif > " +
-            "CAST(38415 AS DECIMAL(38,0)) * den AS significant")
-      test("aa_calibration", "conv1")
-        .unionByName(test("ab_planted_lift", "conv2"))
-    },
-
-    // Median/MAD robust outliers (round 12) — the breakdown-resistant
-    // twin of zscore_outliers (Hampel 1974; Leys et al. 2013: a
-    // single wild value inflates mean AND stddev, masking real
-    // outliers — median and MAD have 50% breakdown). EXACT medians,
-    // no percentile_approx: on the centi-quantized compressed
-    // histogram, median×2 is selected by rank arithmetic (the two
-    // middle order statistics k₁=(n+1)div2, k₂=(n+2)div2 fall in a
-    // value's cumulative span [cum−c+1, cum]; summing the hits gives
-    // 2·median exactly, odd or even n — so the ".5 between two
-    // values" case never touches floats). MAD runs the same selection
-    // over |2y − med2| deviations, and the flag is the all-integer
-    // 2·dev > 3·mad2 (≡ |y−med| > 3·MAD). 100 TB shape: the
-    // winsorize/equidepth two-level layout — raw rows collapse to
-    // per-(type, centi-value) cells BEFORE any window; the cumulative
-    // rides the compressed per-type frame; medians broadcast back.
-    "mad_outliers" -> { (s, d) =>
-      val y = floor(col("value") * 100 + lit(0.5)).cast("long")
-      val e = Tables.events(s, d)
-        .select(col("event_id"), col("event_type"), col("value"), y.as("y"))
-        .localCheckpoint(true)
-      val nT = e.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-      def median2(hist: DataFrame): DataFrame = {
-        val cw = Window.partitionBy(col("event_type")).orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, 0)
-        hist.withColumn("cum", sum(col("c")).over(cw))
-          .join(broadcast(nT), "event_type")
-          .withColumn("lo", col("cum") - col("c") + 1)
-          .select(col("event_type"),
-            (when(expr("(n + 1) div 2").between(col("lo"), col("cum")),
-              col("v")).otherwise(lit(0L)) +
-             when(expr("(n + 2) div 2").between(col("lo"), col("cum")),
-               col("v")).otherwise(lit(0L))).as("part"))
-          .groupBy(col("event_type")).agg(sum(col("part")).as("m2"))
-      }
-      val med = median2(e.groupBy(col("event_type"), col("y").as("v"))
-        .agg(count(lit(1)).as("c")))
-      val dev = e.join(broadcast(med), "event_type")
-        .withColumn("dv", abs(lit(2L) * col("y") - col("m2")))
-      val mad = median2(dev.groupBy(col("event_type"), col("dv").as("v"))
-          .agg(count(lit(1)).as("c")))
-        .withColumnRenamed("m2", "mad2")
-      dev.join(broadcast(mad), "event_type")
-        .filter(lit(2L) * col("dv") > lit(3L) * col("mad2"))
-        .select(col("event_id"), col("event_type"), col("value"))
-    },
-
-    // Text normalization — the canonical pre-dedup/pre-tokenize stage:
-    // lowercase, strip non-alphanumerics to spaces, collapse whitespace
-    // runs, trim; emits the normalized text + its md5 (the join key a
-    // normalized-exact dedup would group on). Pure map-side codegen'd
-    // string work.
-    "text_normalize" -> { (s, d) =>
-      val norm = trim(regexp_replace(
-        regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))
-      Tables.documents(s, d).select(
-        col("doc_id"),
-        norm.as("norm_text"),
-        length(norm).cast("long").as("n_chars_norm"),
-        md5(norm.cast("binary")).as("norm_md5"))
-    },
-
-    // Misra–Gries heavy hitters (ext.HeavyHitters): sketch-based token
-    // frequency, ≤ k−1 counters per partition and on the driver
-    // regardless of corpus size. The sketch's RETAINED SET and raw
-    // estimates are partition-layout-dependent (like HLL) — but its
-    // GUARANTEES are not: every token with true count > n/k is
-    // provably retained, and estimates bracket truth as
-    // true − n/k ≤ est ≤ true (Misra & Gries 1982; merge per Agarwal
-    // et al. 2012). So the query emits the GUARANTEED set — the exact
-    // frequencies of tokens above the n/k threshold (pure relational
-    // algebra, DuckDB-replayable) — plus three TRUE-asserted guarantee
-    // cells the oracle pins as literals (the approx_distinct /
-    // hll_daily_union error-bound-boolean discipline): `retained`
-    // (the sketch kept it), `no_overcount` (est ≤ true), `slack_ok`
-    // ((true − est)·k ≤ n, cross-multiplied — no division). Any MG
-    // implementation bug that loses a guaranteed hitter or inflates a
-    // counter flips a cell and hash-fails. The exact branch GATES the
-    // sketch at test scale; at 100 TB only the sketch path ships
-    // (map-side fold to ≤ k−1 counters, sketches alone cross the
-    // exchange — the exact groupBy here shuffles one row per distinct
-    // token, which is the cost the sketch exists to avoid).
-    "heavy_hitters" -> { (s, d) =>
-      import s.implicits._
-      val k = 40
-      val toks = Tables.documents(s, d)
-        .select(explode(TextOps.tokens(lower(col("text")))).as("token"))
-        .localCheckpoint(true)
-      val sketch = toks.as[String]
-        .select(HeavyHitters.misraGries(k)) // typed select: global fold
-        .toDF("hh")
-        .select(explode(col("hh")).as("h"))
-        .select(col("h._1").as("token"), col("h._2").as("est_count"))
-      val n = toks.agg(count(lit(1)).as("n"))
-      toks.groupBy(col("token")).agg(count(lit(1)).as("exact_count"))
-        .crossJoin(broadcast(n))
-        .filter(col("exact_count") * k > col("n"))
-        .join(broadcast(sketch), Seq("token"), "left")
-        .select(col("token"), col("exact_count"),
-          col("est_count").isNotNull.as("retained"),
-          coalesce(col("est_count") <= col("exact_count"), lit(false))
-            .as("no_overcount"),
-          coalesce((col("exact_count") - col("est_count")) * k <= col("n"),
-            lit(false)).as("slack_ok"))
-    },
-
-    // Re-aggregatable distinct-count sketches: per-(type, day) HLL
-    // sketches (the granularity a daily rollup job materializes), then
-    // hll_union_agg + estimate per type — distinct users over ANY day
-    // range without re-touching raw data. THE pattern that replaces
-    // count(DISTINCT) at 100 TB: raw rows fold into fixed-size binary
-    // sketches map-side; only sketches move from then on. Datasketches
-    // estimates are implementation-specific (no cross-engine value
-    // oracle), so the query emits the exact per-type counts plus an
-    // ERROR-BOUND BOOLEAN the DuckDB oracle asserts as literal TRUE:
-    // the union-of-366-daily-sketches estimate must land within 5% of
-    // exact (lgK=14 → rsd 0.8%, so 5% is >6σ; register max-merge makes
-    // the estimate partition-layout-invariant). The exact branch GATES
-    // the sketch — at 100 TB only the sketch path ships.
-    "hll_daily_union" -> { (s, d) =>
-      val day = (Tables.tsUs - pmod(Tables.tsUs, lit(Tables.MicrosPerDay)))
-      val daily = Tables.events(s, d)
-        .groupBy(col("event_type"), day.as("day_us"))
-        .agg(hll_sketch_agg(col("user_id"), lit(14)).as("sketch"))
-      val unioned = daily.groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n_days"),
-          hll_sketch_estimate(hll_union_agg(col("sketch"))).as("au"))
-      val exact = Tables.events(s, d).groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-      unioned.join(exact, Seq("event_type"))
-        .select(col("event_type"), col("n_days"), col("n_users"),
-          (abs(col("au") - col("n_users")) <=
-            greatest(ceil(col("n_users") * lit(0.05)), lit(5L)))
-            .as("union_est_ok"))
-    },
-
-    // FULL OUTER join — the one join type the registry didn't yet
-    // exercise. Order custkeys ≡ 0 (mod 7) are offset out of the
-    // customer domain so the right-only branch is non-empty on
-    // read-only inputs; the left-only branch is the orderless-customer
-    // set (semi_anti_join's complement). At scale: both sides shuffle
-    // on the key — full-outer has no broadcast form (every unmatched
-    // row of BOTH sides must surface), which is exactly why cdc_merge
-    // uses broadcast left + union-insert instead.
-    "full_outer_join" -> { (s, d) =>
-      val o = Tables.orders(s, d).select(
-        when(pmod(col("o_custkey"), lit(7)) === 0, col("o_custkey") + 1000000000L)
-          .otherwise(col("o_custkey")).as("o_custkey"),
-        col("o_totalprice"))
-        .groupBy(col("o_custkey"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("sum_price"))
-      Tables.customer(s, d).select(col("c_custkey"), col("c_name"))
-        .join(o, col("c_custkey") === col("o_custkey"), "full_outer")
-        .select(
-          coalesce(col("c_custkey"), col("o_custkey")).as("key"),
-          when(col("c_custkey").isNull, "order_only")
-            .when(col("o_custkey").isNull, "customer_only")
-            .otherwise("both").as("side"),
-          col("c_name"),
-          coalesce(col("n_orders"), lit(0L)).as("n_orders"),
-          col("sum_price"))
-    },
-
-    // Incremental MV refresh (ops.Incremental): the standing daily
-    // rollup is built from history, then ONLY the newest week's events
-    // fold in — output must equal the full recompute (which is exactly
-    // what the oracle computes). The split cutoff derives from the
-    // data's own max ts, so the gate exercises a genuine
-    // history+increment merge at every scale factor. avg_value is
-    // derived from the merged exact sum at read time — stored averages
-    // don't merge.
-    "mv_refresh" -> { (s, d) =>
-      val keys = Seq("day_us", "event_type")
-      val e = Tables.events(s, d)
-        .select((Tables.tsUs - pmod(Tables.tsUs, lit(Tables.MicrosPerDay))).as("day_us"),
-          col("event_type"), col("value"))
-      // lazy cutoff: 1-row aggregate broadcast-crossed into both
-      // branches (no eager driver action; Incremental.splitAt).
-      val cut = e.agg((max(col("day_us")) - lit(7L * Tables.MicrosPerDay)).as("cutoff"))
-      val history = Incremental.partials(
-        Incremental.splitAt(e, cut, col("day_us") < _), keys, "value")
-      val fresh = Incremental.partials(
-        Incremental.splitAt(e, cut, col("day_us") >= _), keys, "value")
-      // avg at 4 dp via EXACT integer HALF_UP ((2a + n) div 2n over
-      // a = cents·100) — round(double/count) straddles engines on
-      // half-points like 307.03/8 (the sensor_stats convention).
-      // `div` (not `/` + floor): long division stays exact where the
-      // double quotient degrades past 2^53.
-      Incremental.merge(history, fresh, keys)
-        .withColumn("cents", (col("sum_v") * 100).cast("long"))
-        .selectExpr("day_us", "event_type", "n",
-          "CAST(sum_v AS DOUBLE) AS sum_value",
-          "min_v AS min_value", "max_v AS max_value",
-          "CAST((2 * cents * 100 + n) div (2 * n) AS DOUBLE) / 10000.0 AS avg_value")
-    },
-
-    // Incremental JOIN-view maintenance (round 8) — mv_refresh's IVM
-    // story extended from one table to a join: the (priority, year)
-    // revenue view over lineitem⋈orders refreshed via the classic
-    // delta decomposition (Incremental.deltaJoinTerms): standing
-    // old⋈old partials + ΔL⋈O_old + L_old⋈ΔO + ΔL⋈ΔO, all merged by
-    // the algebraic view merge. The four quadrants partition the join
-    // exactly, so the oracle IS the full recompute — the incremental
-    // path must be indistinguishable from one pass over everything.
-    // The cutoff derives from the data's own max shipdate (both
-    // tables split at the SAME instant), so every SF exercises all
-    // delta terms its data can produce.
-    "mv_refresh_join" -> { (s, d) =>
-      val keys = Seq("o_orderpriority", "o_year")
-      val l = Tables.lineitem(s, d).select(col("l_orderkey"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"),
-        col("l_shipdate"))
-      val o = Tables.orders(s, d).select(col("o_orderkey"),
-        col("o_orderpriority"), year(col("o_orderdate")).as("o_year"),
-        col("o_orderdate"))
-      val cut = l.agg((max(col("l_shipdate")) - expr("INTERVAL 90 DAYS"))
-        .as("cutoff"))
-      val (lOld, lNew) = (Incremental.splitAt(l, cut, col("l_shipdate") < _),
-        Incremental.splitAt(l, cut, col("l_shipdate") >= _))
-      val (oOld, oNew) = (Incremental.splitAt(o, cut, col("o_orderdate") < _),
-        Incremental.splitAt(o, cut, col("o_orderdate") >= _))
-      def joined(lf: DataFrame, of: DataFrame) =
-        Incremental.partials(
-          lf.join(of, col("l_orderkey") === col("o_orderkey")), keys, "rev",
-          scale = 4)
-      val standing = joined(lOld, oOld)
-      val refreshed = Incremental
-        .deltaJoinTerms(lOld, lNew, oOld, oNew, joined)
-        .foldLeft(standing)(Incremental.merge(_, _, keys))
-      refreshed.select(col("o_orderpriority"), col("o_year"), col("n"),
-        col("sum_v").cast("double").as("revenue"))
-    },
-
-    // Share-of-total: each order priority's slice of total revenue via
-    // a window over the AGGREGATE output (5 rows) — the
-    // ratio_to_report shape. The global window is an empty-partition
-    // spec, which is exactly why it must sit on the post-aggregate
-    // frame: over raw data it would serialize the corpus through one
-    // partition (the plan's single-partition Exchange is fine for 5
-    // rows, fatal for 10^12).
-    "share_of_total" -> { (s, d) =>
-      val agg = Tables.orders(s, d).groupBy(col("o_orderpriority"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-      agg.withColumn("total", sum(col("rev")).over(Window.partitionBy()))
-        .select(col("o_orderpriority"),
-          col("rev").cast("double").as("revenue"),
-          round(col("rev").cast("double") / col("total").cast("double"), 6).as("rev_share"))
-    },
-
-    // Explicit GROUPING SETS — the general form behind rollup_agg/
-    // cube_agg: two disjoint groupings (by region; by nation) in ONE
-    // Expand + hash aggregate pass over the post-broadcast-join rows.
-    // The set id derives from key nullness CASE (keys are non-null in
-    // this schema) so both engines compute it identically.
-    "grouping_sets" -> { (s, d) =>
-      val joined = Tables.customer(s, d)
-        .join(broadcast(Tables.nation(s, d)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)), col("n_regionkey") === col("r_regionkey"))
-      joined
-        .groupingSets(Seq(Seq(col("r_name")), Seq(col("n_name"))),
-          col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_cust"),
-          sum(col("c_acctbal").cast("decimal(18,2)")).cast("double").as("sum_bal"))
-        .withColumn("set_id",
-          when(col("r_name").isNotNull, lit(0)).otherwise(lit(1)))
-    },
-
-    // One-pass table profiling — the "ANALYZE TABLE" governance op:
-    // per-column null counts, ranges, and two exact distinct counts in
-    // a single aggregate over the scan (multi-column distinct plans an
-    // Expand: rows × #distinct-aggs, all map-side partials — one pass
-    // over the fact table, no joins).
-    "profile_table" -> { (s, d) =>
-      Tables.lineitem(s, d).agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("l_quantity").isNull.cast("long")).as("null_qty"),
-        sum(col("l_shipdate").isNull.cast("long")).as("null_shipdate"),
-        countDistinct(col("l_returnflag")).as("distinct_flags"),
-        countDistinct(col("l_linestatus")).as("distinct_status"),
-        min(col("l_quantity")).as("min_qty"), max(col("l_quantity")).as("max_qty"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price"),
-        sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
-    },
-
-    // EWMA (exponential smoothing, alpha = 0.1) — the sequential-
-    // recurrence class: acc' = 0.9·acc + 0.1·x has a true loop-carried
-    // dependency no window frame or algebraic aggregate expresses, so
-    // it runs as a typed per-key sorted fold (mapGroups). Determinism:
-    // the fold order is total (ts, event_id) and both engines execute
-    // the IDENTICAL chain of IEEE ops — Spark in JVM doubles, DuckDB
-    // via list_reduce over the same-ordered list — so the raw doubles
-    // agree bit-for-bit and the output is emitted UNROUNDED (a closing
-    // round(double) is the one construct that can straddle engines on
-    // half-point rows; identical-op-chain outputs need no rounding).
-    // 100 TB shape: state is one double per key and each key's fold is
-    // sequential BY DEFINITION — the parallelism axis is keys, which
-    // is exactly how groupByKey partitions it.
-    "ewma" -> { (s, d) =>
-      import s.implicits._
-      Tables.events(s, d)
-        .select(col("user_id"), Tables.tsUs.as("tus"), col("event_id"), col("value"))
-        .as[(Long, Long, Long, Double)]
-        .groupByKey(_._1)
-        // flatMapSortedGroups = secondary sort: the shuffle's external
-        // sorter (spillable) delivers each key's rows already ordered
-        // by (tus, event_id), so the fold is a streaming O(1)-state
-        // pass — no per-key Vector materialization (a hot key with
-        // billions of events would OOM the round-5 toVector.sortBy).
-        .flatMapSortedGroups(col("tus"), col("event_id")) { (k, it) =>
-          var n = 0L
-          var acc = 0.0
-          it.foreach { r =>
-            acc = if (n == 0L) r._4 else 0.9 * acc + 0.1 * r._4
-            n += 1
-          }
-          Iterator.single((k, n, acc))
-        }
-        .toDF("user_id", "n", "ewma")
-    },
-
-    // Equi-depth histogram — per-type deciles (equal ROW counts per
-    // bin, unlike value_histogram's fixed widths): ntile(10) over a
-    // TOTAL ordering (event_id tiebreak — ntile splits ties
-    // arbitrarily otherwise), then bin ranges. One exchange + sort per
-    // type — with only a handful of event types, a few partitions
-    // carry the whole table through that sort, so this exact row-level
-    // form is the SMALL-DATA member of a pair: equidepth_hist_scale
-    // below is the 100 TB member (sort over the compressed histogram,
-    // never the raw rows; approx_quantiles is the sketched third
-    // option when even quantized cardinality is unbounded).
-    "equidepth_hist" -> { (s, d) =>
-      val w = Window.partitionBy(col("event_type"))
-        .orderBy(col("value"), col("event_id"))
-      Tables.events(s, d)
-        .select(col("event_type"), col("event_id"), col("value"))
-        .withColumn("decile", ntile(10).over(w))
-        .groupBy(col("event_type"), col("decile"))
-        .agg(count(lit(1)).as("n"),
-          round(min(col("value")), 4).as("lo"),
-          round(max(col("value")), 4).as("hi"))
-    },
-
-    // Equi-depth histogram, SCALE form — the classic two-level shape:
-    // (1) quantize values to centi-units and hash-aggregate the
-    // per-type histogram (map-side partials; the only pass over raw
-    // rows), (2) run the cumulative window + decile assignment over
-    // the COMPRESSED histogram — thousands of (type, quantum) rows,
-    // not the table — then re-aggregate to bins. Deciles are assigned
-    // by each quantum's starting row index (a quantum never splits
-    // across bins: the quantization step is the histogram's stated
-    // resolution), all in exact integer math, so the result is
-    // engine-independent and hash-oracled — unlike an
-    // approx_percentile variant. The per-type sort cost is
-    // O(distinct quanta), flat in table size.
-    "equidepth_hist_scale" -> { (s, d) =>
-      val byQ = Window.partitionBy(col("event_type")).orderBy(col("q"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val byType = Window.partitionBy(col("event_type"))
-      Tables.events(s, d)
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("q"))
-        .groupBy(col("event_type"), col("q"))
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("cum", sum(col("cnt")).over(byQ))
-        .withColumn("total", sum(col("cnt")).over(byType))
-        .withColumn("decile",
-          least(lit(10L), lit(1L) + expr("((cum - cnt) * 10) div total")))
-        .groupBy(col("event_type"), col("decile"))
-        .agg(sum(col("cnt")).as("n"),
-          (min(col("q")).cast("double") / 100.0).as("lo"),
-          (max(col("q")).cast("double") / 100.0).as("hi"))
-    },
-
-    // Correlated LATERAL subquery with ORDER BY + LIMIT — per-nation
-    // top-2 customers by balance through the LATERAL planner path
-    // (Catalyst decorrelates the limited subquery into a ranked join —
-    // a different plan family than grouped_topk's custom operator or
-    // the window formulation, and the third way this engine can answer
-    // grouped top-k). One SQL text, both engines.
-    "lateral_topk" -> { (s, d) => graft.Sql.sql(s, d, LateralTopkSql) },
-
-    // Correlated + uncorrelated scalar subqueries — the query class the
-    // registry hadn't exercised (Catalyst plans the correlated scalar
-    // as a left outer aggregate-join under the hood; the uncorrelated
-    // one becomes a reusable subquery broadcast). Customers holding
-    // more than 1.5x their own nation's average balance, with both
-    // averages surfaced. Expressed through the SQL interface (the
-    // reference's own surface) — same text runs in DuckDB.
-    "rich_customers" -> { (s, d) => graft.Sql.sql(s, d, RichCustomersSql) },
-
-    // Hierarchy flattening (ops.Hierarchy): every order key climbs a
-    // synthesized forest (parent = key div 10 where that key exists) to
-    // its root with its depth — the recursive-CTE workload Spark lacks,
-    // answered in O(log depth) pointer-doubling self-joins instead of
-    // one join per level. The DuckDB oracle IS a recursive CTE, so the
-    // gate proves the doubling loop ≡ true recursion.
-    "hierarchy_flatten" -> { (s, d) =>
-      val keys = Tables.orders(s, d).select(col("o_orderkey").as("node"))
-      val cand = keys.select(col("node"),
-        when(col("node") >= 10, expr("node div 10")).as("cand"))
-      val edges = cand.join(
-        keys.select(col("node").as("p")), col("cand") === col("p"), "left")
-        .select(col("node"), col("p").as("parent"))
-      Hierarchy.rootAndDepth(edges)
-    },
-
-    // Skew diagnostics — the operational first step before choosing a
-    // salting/AQE strategy: per-key cardinality rollup, then the 20
-    // heaviest keys with their share of all rows. The per-key count is
-    // one partial+final aggregate; the global top-k is
-    // TakeOrderedAndProject over the collapsed key frame (heap of 20
-    // per partition — never a full sort); the 1-row total broadcasts.
-    // Order-insensitive table reconciliation checksum — "is this copy
-    // of a 100 TB table identical?" answered with ONE map-side pass and
-    // a 1-row aggregate: per-row md5Hash60 over a canonical projection
-    // (integers + strings render identically in any engine; the double
-    // is cents-quantized first), summed modulo 2⁶¹−1. Addition is
-    // commutative/associative, so the checksum is independent of row
-    // order, partition layout, and engine — and MERGEABLE: per-shard
-    // checksums from different clusters combine by modular addition.
-    // No sort, no shuffle beyond the 1-row rollup; compare against
-    // sort-then-hash (a full-table sort to one writer) at scale.
-    "table_checksum" -> { (s, d) =>
-      val cents = floor(col("o_totalprice") * 100 + lit(0.5)).cast("long")
-      val rowStr = concat_ws("|", col("o_orderkey"), col("o_custkey"),
-        col("o_orderstatus"), col("o_orderpriority"), cents)
-      Tables.orders(s, d)
-        .select(graft.ext.Dedup.md5Hash60(rowStr).as("h"))
-        .agg(count(lit(1)).as("n_rows"),
-          pmod(sum(col("h").cast("decimal(38,0)")), lit(2305843009213693951L))
-            .cast("long").as("checksum"))
-    },
-
-    "skew_report" -> { (s, d) =>
-      val counts = Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n_rows"))
-      val total = counts.agg(sum(col("n_rows")).as("total"))
-      counts.crossJoin(broadcast(total))
-        .select(col("l_orderkey"), col("n_rows"),
-          round(col("n_rows").cast("double") / col("total"), 9).as("row_share"))
-        .orderBy(col("n_rows").desc, col("l_orderkey"))
-        .limit(20)
-    },
-
-    // Data-quality audit — referential integrity (orphan facts),
-    // duplicate primary keys, null keys: one row per check with its
-    // violation count. Orphans/dups are synthesized from read-only
-    // inputs (≡0 mod 13 lineitem orderkeys offset out of the orders
-    // domain; ≡0 mod 11 orders re-unioned) so every check exercises a
-    // non-zero path. Scale shapes: orphan check is a shuffle anti-join
-    // on the fact key (count-only — no row payload survives the join);
-    // dup check is a count>1 aggregate over the key frame.
-    // Benford first-digit audit (round 14) — the classic DQ/fraud
-    // screen beside dq_audit's structural checks (Benford 1938; Hill
-    // 1995: naturally-occurring multiplicative magnitudes put digit d
-    // first with probability log10(1+1/d) — fabricated or truncated
-    // data doesn't): per leading digit of the extended-price cents,
-    // the observed count, the expected count at 1e9 scale, and the
-    // per-digit chi-square term as a HALF_UP 1e4 cell — all exact
-    // integers over DECIMAL(38,0) (expected probabilities are
-    // driver-computed literals injected into BOTH engines, the
-    // RagNdcgWeights convention — runtime log10 on each side would
-    // gamble on libm rounding). 100 TB shape: one map-side digit
-    // projection + a 9-key partial+final agg; the digit table joins
-    // broadcast.
-    "benford_audit" -> { (s, d) =>
-      import s.implicits._
-      val digits = Tables.lineitem(s, d)
-        .select(floor(col("l_extendedprice") * 100 + lit(0.5))
-          .cast("long").as("cents"))
-        .selectExpr("CAST(substr(CAST(cents AS STRING), 1, 1) AS BIGINT)" +
-          " AS digit")
-        .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
-      val tot = digits.agg(sum(col("n_obs")).as("n"))
-      val pFrame = broadcast(BenfordP9.map { case (dg, p) => (dg, p) }
-        .toDF("digit", "p9"))
-      def longExact(c: Column): Column =
-        when(c > lit(Long.MaxValue) || c < lit(Long.MinValue),
-          raise_error(concat(
-            lit("graft benford_audit: statistic exceeds int64: "),
-            c.cast("string"))))
-          .otherwise(c.cast("long"))
-      digits.join(pFrame, "digit")
-        .crossJoin(broadcast(tot))
-        .withColumn("ed", expr("CAST(n AS DECIMAL(38,0)) * p9"))
-        .withColumn("dev",
-          expr("CAST(n_obs AS DECIMAL(38,0)) * 1000000000 - ed"))
-        .select(col("digit"), col("n_obs"),
-          longExact(col("ed")).as("expected_x1e9"),
-          longExact(expr(
-            "(2 * 10000 * dev * dev + " +
-              "CAST(1000000000 AS DECIMAL(38,0)) * ed) div " +
-              "(2 * CAST(1000000000 AS DECIMAL(38,0)) * ed)"))
-            .as("chi_term_x1e4"))
-        .orderBy("digit")
-    },
-
-    "dq_audit" -> { (s, d) =>
-      val o = Tables.orders(s, d)
-      val li = Tables.lineitem(s, d).select(
-        when(pmod(col("l_orderkey"), lit(13)) === 0, col("l_orderkey") + 1000000000L)
-          .otherwise(col("l_orderkey")).as("lok"))
-      val orphans = li
-        .join(o.select(col("o_orderkey")), col("lok") === col("o_orderkey"), "left_anti")
-        .agg(count(lit(1)).as("n_violations"))
-        .withColumn("check_name", lit("orphan_lineitem"))
-      val dupPk = o.select(col("o_orderkey"))
-        .unionByName(o.filter(pmod(col("o_orderkey"), lit(11)) === 0)
-          .select(col("o_orderkey")))
-        .groupBy(col("o_orderkey")).agg(count(lit(1)).as("c"))
-        .filter(col("c") > 1)
-        .agg(count(lit(1)).as("n_violations"))
-        .withColumn("check_name", lit("duplicate_order_pk"))
-      val nullKey = o.filter(col("o_custkey").isNull)
-        .agg(count(lit(1)).as("n_violations"))
-        .withColumn("check_name", lit("null_custkey"))
-      orphans.unionByName(dupPk).unionByName(nullKey)
-        .select(col("check_name"), col("n_violations"))
-    },
-
-    // Weighted mixture sampling (ext.Sampling.mixtureSample): each
-    // source keeps its own deterministic fraction — the training-mix
-    // primitive (sample src A at 20%, B at 40%, ...). Per-stratum
-    // permille rates derive from the source name itself so the gate
-    // runs on read-only inputs; the keep test is an exact integer
-    // threshold on the row's own md5 hash (membership never migrates,
-    // task retries idempotent, both engines agree on every boundary).
-    // Broadcast weights + scan-riding filter: no shuffle at any scale.
-    "mixture_sample" -> { (s, d) =>
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
-      val weights = docs.select(col("source")).distinct()
-        .select(col("source").as("stratum"),
-          ((substring(col("source"), 4, 10).cast("int") % 4 + 1) * 200).as("permille"))
-      graft.ext.Sampling.mixtureSample(docs, col("doc_id"), col("source"), weights)
-    },
-
-    // Boilerplate-span detection: shingles appearing in ≥100 documents
-    // are corpus boilerplate (headers, licenses, navigation chrome);
-    // each doc reports how much of it is boilerplate — the span-level
-    // complement of whole-doc dedup (Lee et al., "Deduplicating
-    // Training Data Makes Language Models Better", ACL 2022 motivates
-    // span-level repetition removal). distinct (doc, shingle) is one
-    // exchange; the frequent-shingle set (tiny by definition at any
-    // scale — df ≥ threshold caps its size at |corpus|/threshold)
-    // joins back against the per-doc shingles.
-    // Single pass over the shingle frame: df via a count window on the
-    // shingle partitioning, then one per-doc aggregate — the
-    // three-consumer formulation (freq set + per-doc counts + join
-    // back) recomputed the explode+distinct subtree per consumer and
-    // benched 7.7 s at sf0.1; this shape runs in well under a second.
-    // rebalance: the corpus is one small file — without it the explode
-    // and shingle hashing run on a single partition (vocab_topk's
-    // lesson).
-    "boilerplate_spans" -> { (s, d) =>
-      val sh = graft.ext.Dedup.rebalance(Tables.documents(s, d))
-        .select(col("doc_id"),
-          explode(TextOps.shingles(TextOps.tokens(col("text")), 3)).as("s"))
-        .distinct()
-      sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("s"))))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_shingles"),
-          sum(when(col("df") >= 100, 1L).otherwise(0L)).as("n_boiler"))
-        .select(col("doc_id"), col("n_shingles"), col("n_boiler"),
-          round(col("n_boiler").cast("double") / col("n_shingles"), 4)
-            .as("boiler_frac"))
-    },
-
-    // Approximate percentiles (KLL-style sketch) next to the exact
-    // `quantiles` oracle: the single-pass mergeable form that replaces
-    // exact percentile's full per-group sort+materialization at scale.
-    // Sketch VALUES are accuracy-parameter- and merge-order-dependent
-    // (no cross-engine oracle), so the query emits RANK-BRACKET
-    // BOOLEANS the DuckDB oracle asserts as literal TRUE: each approx
-    // percentile must land between the exact percentiles at p∓0.02 —
-    // a ±2% rank window, 200× the sketch's 1e-4 rank error, yet tight
-    // enough that a wrong column / wrong pct / broken merge fails the
-    // driver's hash gate. The bracket is SNAPPED OUTWARD to the
-    // nearest ACTUAL elements: percentile_approx returns a data value,
-    // while interpolated percentile fabricates one — for a small group
-    // the open interpolated interval can contain no element at all,
-    // flipping the cell on a CORRECT sketch. Snapping (largest element
-    // ≤ lo, smallest ≥ hi, group min/max when none exists) makes the
-    // bracket attainable at every group size without loosening it
-    // where groups are large. The exact branch exists to GATE the
-    // sketch (at 100 TB only the sketch path ships; `quantiles` is the
-    // exact baseline query).
-    "approx_quantiles" -> { (s, d) =>
-      val ev = Tables.events(s, d).select(col("event_type"), col("value"))
-      val bounds = ev.groupBy(col("event_type")).agg(
-        expr("percentile(value, 0.23)").as("lo25"),
-        expr("percentile(value, 0.27)").as("hi25"),
-        expr("percentile(value, 0.48)").as("lo50"),
-        expr("percentile(value, 0.52)").as("hi50"),
-        expr("percentile(value, 0.88)").as("lo90"),
-        expr("percentile(value, 0.92)").as("hi90"))
-      def snapLo(t: String): Column =
-        coalesce(max(when(col("value") <= col(s"lo$t"), col("value"))),
-          min(col("value")))
-      def snapHi(t: String): Column =
-        coalesce(min(when(col("value") >= col(s"hi$t"), col("value"))),
-          max(col("value")))
-      def appr(p: Double): Column =
-        percentile_approx(col("value"), lit(p), lit(10000))
-      ev.join(broadcast(bounds), Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(
-          count(lit(1)).as("n"),
-          (appr(0.25) >= snapLo("25") && appr(0.25) <= snapHi("25"))
-            .as("p25_ok"),
-          (appr(0.5) >= snapLo("50") && appr(0.5) <= snapHi("50"))
-            .as("p50_ok"),
-          (appr(0.9) >= snapLo("90") && appr(0.9) <= snapHi("90"))
-            .as("p90_ok"))
-    },
-
-    // Two-sample Kolmogorov–Smirnov drift test (round 10) — the
-    // distribution-shift monitor a production pipeline runs between
-    // deployment windows: per event_type, split the table at the
-    // midpoint of its time range (exact epoch-micros integer midpoint,
-    // 1-row broadcast) and compare the early/late value distributions.
-    // The statistic is EXACT integer end to end: at each observed value
-    // the scaled CDF gap is |nb·cumA − na·cumB| (common denominator
-    // na·nb deferred), d_num = max over values, and only the final
-    // d_x1e6 divides — HALF_UP on non-negative BIGINTs. No sketch, no
-    // float compare. 100 TB shape: raw rows collapse to the compressed
-    // (type, value) histogram FIRST (one partial+final agg — the
-    // equidepth_hist_scale move); the cumulative window then rides
-    // distinct values per type, not rows, and a quantized `value`
-    // (centi-units) bounds that domain outright if a corpus arrives
-    // with unbounded distinct doubles. na·nb ≤ (rows/type)² stays
-    // inside BIGINT through na, nb < 3e9 per type (the gap products
-    // bind; the final 1e6-scaled division rides DECIMAL(38,0) so it
-    // costs no headroom), and types seen on only ONE side of the
-    // split are dropped rather than emitting a null statistic.
-    "ks_drift" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), Tables.tsUs.as("tus"), col("value"))
-      val mid = ev.agg(min(col("tus")).as("lo"), max(col("tus")).as("hi"))
-        .selectExpr("(lo + hi) div 2 AS tmid")
-      Drift.ks(ev.crossJoin(broadcast(mid)),
-          col("event_type"), col("tus") < col("tmid"), col("value"))
-        .withColumnRenamed("k", "event_type")
-    },
-
-    // Population Stability Index drift (round 10) — the banded
-    // companion to ks_drift (PSI is the score-drift metric model-risk
-    // teams actually chart; Karakoulas 2004): same early/late midpoint
-    // split, value_histogram's fixed width-5 bins, add-1 smoothing
-    // over the per-type observed bin set (so empty-on-one-side bins
-    // contribute finitely — the standard ε floor, made exact).
-    // Exact-integer discipline: both lns are floored to 1e6-scaled
-    // BIGINTs from exact-integer-valued ratios (unigram_logprob
-    // convention); each bin's term is
-    //   ((ca+1)(nb+v) − (cb+1)(na+v)) · dln  /  ((na+v)(nb+v))
-    // whose factors provably share sign (floor(x·1e6+0.5) is
-    // monotone), so every term is ≥ 0 and the per-bin HALF_UP division
-    // stays on non-negative operands — computed in DECIMAL(38,0) /
-    // HUGEINT on the two engines (the products exceed Int64 around a
-    // few 1e5 rows per side under concentrated drift; DECIMAL holds
-    // to ~1e15); psi_x1e6 is their exact sum. 100 TB shape: one
-    // partial+final agg to the (type, bin) frame, a per-type 1-row
-    // broadcastable totals join, everything after rides the bin count.
-    "psi_drift" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("event_type"), Tables.tsUs.as("tus"), col("value"))
-      val mid = ev.agg(min(col("tus")).as("lo"), max(col("tus")).as("hi"))
-        .selectExpr("(lo + hi) div 2 AS tmid")
-      Drift.psi(ev.crossJoin(broadcast(mid)),
-          col("event_type"), col("tus") < col("tmid"), col("value"),
-          binWidth = 5.0)
-        .withColumnRenamed("k", "event_type")
-    },
-
-    // CUSUM change-point detection (round 10) — Page (Biometrika
-    // 1954): the in-series shift alarm beside ks_drift/psi_drift's
-    // two-window comparisons (those need the windows chosen up front;
-    // CUSUM locates the shift itself). Per event_type over the
-    // (ts, event_id)-ordered value series: max excursion of the
-    // mean-centered cumulative sum, exact-integer via centi-quantized
-    // values and n-scaled centering (no division until the final
-    // HALF_UP report); detection point = earliest row attaining the
-    // max, picked by a partial-aggregable struct-max, not a second
-    // sort. One ordered Window pass per type (row_number + running
-    // sum + running min share ONE sort), then the struct-max agg —
-    // see Drift.cusum for the 100 TB overflow envelope and escape.
-    "cusum_shift" -> { (s, d) =>
-      Drift.cusum(Tables.events(s, d),
-          col("event_type"), Tables.tsUs, col("event_id"), col("value"))
-        .withColumnRenamed("k", "event_type")
-        .withColumnRenamed("cp_t", "cp_tus")
-    },
-
-    // Last-touch attribution (round 11) — the marketing-analytics
-    // closer beside the funnels: every purchase attributes to the
-    // LAST preceding non-purchase touch by the same user within a
-    // 7-day lookback (last-touch is the deterministic industry
-    // default; the first-touch variant is funnel_stages' shape).
-    // Exact: one per-user ordered window pass carrying the running
-    // last touch (ignoreNulls over the preceding frame — no self
-    // join), then a rollup per touch channel with HALF_UP mean lag;
-    // purchases with no in-window touch report as 'none'.
-    "conversion_attribution" -> { (s, d) =>
-      val w = Window.partitionBy("user_id").orderBy(col("tus"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), Tables.tsUs.as("tus"), col("event_id"),
-          col("event_type"))
-      ev.withColumn("touch", last(
-          when(col("event_type") =!= "purchase",
-            struct(col("tus").as("t_tus"), col("event_type").as("t_type"))),
-          ignoreNulls = true).over(w))
-        .filter(col("event_type") === "purchase")
-        .select(
-          when(col("touch").isNotNull &&
-              col("tus") - col("touch.t_tus") <= lit(7L * 86400L * 1000000L),
-            col("touch.t_type")).otherwise(lit("none")).as("touch_type"),
-          when(col("touch").isNotNull &&
-              col("tus") - col("touch.t_tus") <= lit(7L * 86400L * 1000000L),
-            col("tus") - col("touch.t_tus")).as("lag_us"))
-        .groupBy(col("touch_type"))
-        .agg(count(lit(1)).as("n_purchases"), sum(col("lag_us")).as("sl"))
-        .selectExpr("touch_type", "n_purchases",
-          """CASE WHEN sl IS NULL THEN NULL
-            |     ELSE (2 * sl + n_purchases) div (2 * n_purchases) END
-            |  AS avg_lag_us""".stripMargin)
-    },
-
-    // Daily burst detection (round 11) — the RATE-anomaly monitor
-    // beside cusum_shift's level shifts: per (event_type, day), the
-    // event count against its trailing 7-day baseline (a range window
-    // over DAY indices, so missing days shrink the baseline instead
-    // of silently sliding it); burst ratio = HALF_UP(100·c·base_days /
-    // base_sum), flagged at ≥ 2×. Exact integers throughout. Shape:
-    // raw rows collapse to the (type, day) frame in ONE partial+final
-    // agg; the range window rides ~30 rows per type.
-    "burst_detect" -> { (s, d) =>
-      val byDay = Window.partitionBy("event_type").orderBy("day")
-        .rangeBetween(-7, -1)
-      Tables.events(s, d)
-        .select(col("event_type"), expr("(ts div 1000) div 86400000000 AS day"))
-        .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("c"))
-        .withColumn("base_sum", sum(col("c")).over(byDay))
-        .withColumn("base_days", count(col("c")).over(byDay))
-        .filter(col("base_sum").isNotNull && col("base_sum") > 0)
-        .selectExpr("event_type", "day", "c", "base_sum", "base_days",
-          "(2 * 100 * c * base_days + base_sum) div (2 * base_sum) AS burst_x100")
-        .withColumn("is_burst", col("burst_x100") >= 200L)
-    },
-
-    // k-anonymity generalization ladder (round 11) — the release-
-    // governance operator beside pii_scrub/gdpr Forget (Samarati &
-    // Sweeney 1998): quasi-identifier (geography, segment) classes
-    // must hold ≥ k = 10 individuals before release. Groups below k
-    // climb the generalization hierarchy nation → region; still-small
-    // region groups suppress to '*' entirely — every customer lands
-    // in exactly ONE released class (conservation spec-gated). Shape:
-    // dimension joins broadcast; each ladder level is one count agg +
-    // one left-semi against the previous level's SMALL-group list
-    // (class-cardinality-sized, broadcastable) — the base never
-    // shuffles twice.
-    "k_anonymity" -> { (s, d) =>
-      val K = 10
-      val base = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_nationkey"),
-          col("c_mktsegment").as("segment"))
-        .join(broadcast(Tables.nation(s, d)
-          .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, d)
-          .select(col("r_regionkey"), col("r_name"))),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("c_custkey"), col("n_name").as("nation"),
-          col("r_name").as("region"), col("segment"))
-        .localCheckpoint(true)
-      val g0 = base.groupBy(col("nation"), col("region"), col("segment"))
-        .agg(count(lit(1)).as("n"))
-      val keep0 = g0.filter(col("n") >= K)
-        .select(lit(0L).as("level"), col("nation").as("geo"),
-          col("segment"), col("n"))
-      val rest0 = base.join(broadcast(g0.filter(col("n") < K)
-          .select(col("nation"), col("segment"))),
-        Seq("nation", "segment"), "left_semi")
-      val g1 = rest0.groupBy(col("region"), col("segment"))
-        .agg(count(lit(1)).as("n"))
-      val keep1 = g1.filter(col("n") >= K)
-        .select(lit(1L).as("level"), col("region").as("geo"),
-          col("segment"), col("n"))
-      val rest1 = rest0.join(broadcast(g1.filter(col("n") < K)
-          .select(col("region"), col("segment"))),
-        Seq("region", "segment"), "left_semi")
-      val keep2 = rest1.agg(count(lit(1)).as("n"))
-        .select(lit(2L).as("level"), lit("*").as("geo"),
-          lit("*").as("segment"), col("n"))
-        .filter(col("n") > 0)
-      keep0.unionByName(keep1).unionByName(keep2)
-    },
-
-    // Distinct l-diversity (round 12) — Machanavajjhala et al. (ICDE
-    // 2006): k-anonymity bounds CLASS SIZE but a class whose members
-    // all share one sensitive value still leaks it (the homogeneity
-    // attack); distinct l-diversity additionally requires ≥ L distinct
-    // sensitive values per published equivalence class. Classes are
-    // k_anonymity's level-0 QI pairs (nation, segment) at K=10; the
-    // sensitive attribute is the 3-band account standing (negative /
-    // 0–5000 / 5000+, exact-cents thresholds) — the skewed small
-    // band (negative, ~9% of customers) is what makes the audit
-    // ENGAGE: small classes genuinely miss it and flag diverse=false.
-    // 100 TB shape: one (QI, band) partial+final agg; the class list
-    // is QI-cardinality-sized and broadcasts.
-    "l_diversity" -> { (s, d) =>
-      val K = 10; val L = 3
-      val base = Tables.customer(s, d)
-        .select(col("c_nationkey"), col("c_mktsegment").as("segment"),
-          expr("""CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-                |            AS BIGINT) < 0 THEN 0
-                |       WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-                |            AS BIGINT) < 500000 THEN 1
-                |       ELSE 2 END""".stripMargin).as("band"))
-        .join(broadcast(Tables.nation(s, d)
-          .select(col("n_nationkey"), col("n_name"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("segment"), col("band"))
-        .localCheckpoint(true)
-      val classes = base.groupBy(col("nation"), col("segment"))
-        .agg(count(lit(1)).as("n")).filter(col("n") >= K)
-      val divr = base.join(broadcast(classes.select("nation", "segment")),
-          Seq("nation", "segment"), "left_semi")
-        .groupBy(col("nation"), col("segment"))
-        .agg(countDistinct(col("band")).as("n_bands"))
-      classes.join(divr, Seq("nation", "segment"))
-        .select(col("nation"), col("segment"), col("n"), col("n_bands"),
-          (col("n_bands") >= L).as("diverse"))
-    },
-
-    // t-closeness (round 12) — Li, Li & Venkatasubramanian (ICDE
-    // 2007): l-diversity counts values but ignores their
-    // DISTRIBUTION (a class can be 3-diverse yet 90% negative-balance
-    // — the skewness attack); t-closeness bounds the earth-mover's
-    // distance between each class's sensitive distribution and the
-    // global one. For an ORDERED attribute EMD reduces to the mean
-    // |cumulative difference| (the paper's ordered-distance formula),
-    // which is EXACT in integers after clearing denominators: cum_i =
-    // Σ_{j≤i} (c_j·N − g_j·n), emd = Σ|cum_i| / ((B−1)·n·N), emitted
-    // as one HALF_UP 1e6 cell with the Σ routed through
-    // DECIMAL(38,0)/HUGEINT (the ks_drift overflow envelope — n·N
-    // crosses 2⁶³ at corpus scale). Same K=10 classes and 3-band
-    // sensitive attribute as l_diversity; gate t ≤ 0.2. 100 TB
-    // shape: the grid is classes × bands (QI-cardinality-bounded);
-    // the cumulative window partitions BY CLASS over ≤ B rows.
-    "t_closeness" -> { (s, d) =>
-      val K = 10
-      val base = Tables.customer(s, d)
-        .select(col("c_nationkey"), col("c_mktsegment").as("segment"),
-          expr("""CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-                |            AS BIGINT) < 0 THEN 0
-                |       WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-                |            AS BIGINT) < 500000 THEN 1
-                |       ELSE 2 END""".stripMargin).as("band"))
-        .join(broadcast(Tables.nation(s, d)
-          .select(col("n_nationkey"), col("n_name"))),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name").as("nation"), col("segment"), col("band"))
-        .localCheckpoint(true)
-      val classes = base.groupBy(col("nation"), col("segment"))
-        .agg(count(lit(1)).as("n")).filter(col("n") >= K)
-      val gb = base.groupBy(col("band")).agg(count(lit(1)).as("g"))
-        .localCheckpoint(true)
-      val tot = gb.agg(sum(col("g")).as("nn"),
-        count(lit(1)).cast("long").as("nb"))
-      val cb = base.join(broadcast(classes.select("nation", "segment")),
-          Seq("nation", "segment"), "left_semi")
-        .groupBy(col("nation"), col("segment"), col("band"))
-        .agg(count(lit(1)).as("c"))
-      val grid = classes.crossJoin(broadcast(gb))
-        .join(cb, Seq("nation", "segment", "band"), "left")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      val w = Window.partitionBy(col("nation"), col("segment"))
-        .orderBy(col("band"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      grid.crossJoin(broadcast(tot))
-        .withColumn("cum",
-          sum(col("c") * col("nn") - col("g") * col("n")).over(w))
-        .groupBy(col("nation"), col("segment"), col("n"), col("nn"),
-          col("nb"))
-        .agg(sum(abs(col("cum"))).as("dsum"))
-        .selectExpr("nation", "segment", "n",
-          "CAST((2 * 1000000 * CAST(dsum AS DECIMAL(38,0)) + " +
-            "(nb - 1) * CAST(n AS DECIMAL(38,0)) * nn) div " +
-            "(2 * (nb - 1) * CAST(n AS DECIMAL(38,0)) * nn) AS BIGINT) " +
-            "AS emd_x1e6")
-        .withColumn("t_close", col("emd_x1e6") <= 200000L)
-    },
-
-    // Winsorization (round 11) — the outlier-clipping REWRITE the
-    // histogram family only describes (equidepth_hist/approx_quantiles
-    // locate the tails; production feature pipelines then CLIP to
-    // them): per event_type, exact nearest-rank p5/p95 bounds over the
-    // centi-quantized value domain, rows outside clamp to the bounds,
-    // and the output reports the bounds, clip counts, and the
-    // winsorized mean — all exact integers (nearest-rank r =
-    // ceil(p·n) as (p·n + 99) div 100; signed HALF_UP mean). 100 TB
-    // shape: the equidepth_hist_scale two-level layout — raw rows
-    // collapse to the (type, quantum) histogram FIRST; the cumulative
-    // window and every bound/clip statistic ride distinct quanta.
-    "winsorize" -> { (s, d) =>
-      val hist = Tables.events(s, d)
-        .select(col("event_type"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("q"))
-        .groupBy(col("event_type"), col("q")).agg(count(lit(1)).as("c"))
-        .localCheckpoint(true)
-      val byQ = Window.partitionBy("event_type").orderBy("q")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val byT = Window.partitionBy("event_type")
-      val bounds = hist
-        .withColumn("cum", sum(col("c")).over(byQ))
-        .withColumn("n", sum(col("c")).over(byT))
-        .groupBy(col("event_type"), col("n"))
-        .agg(
-          min(when(col("cum") >= expr("(5 * n + 99) div 100"), col("q")))
-            .as("lo_c"),
-          min(when(col("cum") >= expr("(95 * n + 99) div 100"), col("q")))
-            .as("hi_c"))
-      hist.join(bounds, "event_type")
-        .groupBy(col("event_type"), col("n"), col("lo_c"), col("hi_c"))
-        .agg(
-          sum(when(col("q") < col("lo_c"), col("c")).otherwise(0L))
-            .as("n_clip_lo"),
-          sum(when(col("q") > col("hi_c"), col("c")).otherwise(0L))
-            .as("n_clip_hi"),
-          sum(greatest(least(col("q"), col("hi_c")), col("lo_c")) * col("c"))
-            .as("sw"))
-        .selectExpr("event_type", "n", "lo_c", "hi_c", "n_clip_lo",
-          "n_clip_hi",
-          """CASE WHEN sw >= 0 THEN (2 * sw + n) div (2 * n)
-            |     ELSE -((2 * -sw + n) div (2 * n)) END AS wmean_c"""
-            .stripMargin)
-    },
-
-    // First-order Markov transition matrix (round 11) — the behavioral
-    // sequence model beside funnel_stages/funnel_windowed's fixed
-    // chains: per user, consecutive event pairs in (ts, event_id)
-    // order; per (from, to) the transition count and the HALF_UP
-    // 1e6-scaled row-conditional probability. The classic session-
-    // modeling primitive (next-event prediction, anomaly paths).
-    // Shape: ONE per-user ordered window pass (the sessionize sort),
-    // then two tiny aggs on the |types|² pair frame — nothing
-    // event-sized crosses a second exchange.
-    "event_transitions" -> { (s, d) =>
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("tus"), col("event_id"))
-      val pairs = Tables.events(s, d)
-        .select(col("user_id"), Tables.tsUs.as("tus"), col("event_id"),
-          col("event_type"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("from_type"),
-          col("next_type").as("to_type"))
-        .agg(count(lit(1)).as("n_trans"))
-      val totals = pairs.groupBy(col("from_type"))
-        .agg(sum(col("n_trans")).as("n_from"))
-      pairs.join(totals, "from_type")
-        .selectExpr("from_type", "to_type", "n_trans", "n_from",
-          "(2 * 1000000 * n_trans + n_from) div (2 * n_from) AS p_x1e6")
-    },
-
-    // Holt double exponential smoothing (round 14) — the level+trend
-    // forecaster completing the family (trend_slope = global
-    // regression, ewma = level-only smoothing, seasonal_decompose =
-    // the cyclic factor; Holt 1957): over the ≤30-row daily cent-sum
-    // series, l_t = α·y_t + (1−α)(l_{t−1} + b_{t−1}), b_t =
-    // β(l_t − l_{t−1}) + (1−β)b_{t−1} with α = 3/10, β = 1/10 —
-    // every step an exact HALF_UP at 1e6 scale, folded driver-side in
-    // BigInt over the bounded day frame (the survival_km discipline —
-    // a smoothing recurrence is inherently sequential) and replayed
-    // by the oracle as the identical HUGEINT recursive CTE. Output
-    // carries the one-step-ahead forecast l+b per day. 100 TB shape:
-    // one day-keyed map-side-combinable agg; the fold is ≤31 rows.
-    "holt_linear" -> { (s, d) =>
-      import s.implicits._
-      val daily = Tables.events(s, d)
-        .select(expr(s"(ts div 1000 - $OriginUs) div ${Tables.MicrosPerDay}")
-          .as("day"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("y_cents"))
-        .localCheckpoint(true)
-      val rows = daily.orderBy(col("day")).collect()
-      // HALF_UP(n/d) for signed n, positive d (trend can be negative).
-      def sHalf(n: BigInt, dd: BigInt): BigInt =
-        if (n.signum >= 0) (2 * n + dd) / (2 * dd)
-        else -((2 * -n + dd) / (2 * dd))
-      var lv = BigInt(rows.head.getLong(1)) * 1000000
-      var bv = BigInt(0)
-      val folded = rows.zipWithIndex.map { case (r, i) =>
-        if (i > 0) {
-          val y6 = BigInt(r.getLong(1)) * 1000000
-          val lPrev = lv
-          lv = sHalf(3 * y6 + 7 * (lPrev + bv), BigInt(10))
-          bv = sHalf((lv - lPrev) + 9 * bv, BigInt(10))
-        }
-        (r.getLong(0), lv.toLong, bv.toLong, (lv + bv).toLong)
-      }.toSeq
-      daily.join(broadcast(folded
-          .toDF("day", "level_x1e6", "trend_x1e6", "forecast_x1e6")),
-        "day")
-        .select(col("day"), col("y_cents"), col("level_x1e6"),
-          col("trend_x1e6"), col("forecast_x1e6"))
-    },
-
-    // MASE forecast evaluation (round 15) — the scale-free accuracy
-    // metric closing the forecast family's loop (holt_linear FITS;
-    // nothing previously scored it; Hyndman & Koehler 2006): mean
-    // absolute one-step error of the Holt forecast over the daily
-    // series, scaled by the naive random-walk MAE on the same steps —
-    // MASE < 1 ⟺ the model beats "tomorrow = today". The Holt
-    // recursion is the identical BigInt driver fold as holt_linear
-    // (the survival_km discipline — inherently sequential, ≤31 rows);
-    // error sums stay BigInt/HUGEINT internally and report as HALF_UP
-    // cents cells (an x1e6 sum would overflow int64 at corpus-scale
-    // daily totals), mase_x1e6 from the raw sums, sn = 0 guarded to 0
-    // identically on both engines. 100 TB shape: one map-side day agg;
-    // the fold and every cell ride ≤31 rows.
-    "mase" -> { (s, d) =>
-      import s.implicits._
-      val daily = Tables.events(s, d)
-        .select(expr(s"(ts div 1000 - $OriginUs) div ${Tables.MicrosPerDay}")
-          .as("day"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("y_cents"))
-        .localCheckpoint(true)
-      val rows = daily.orderBy(col("day")).collect()
-      def sHalf(n: BigInt, dd: BigInt): BigInt =
-        if (n.signum >= 0) (2 * n + dd) / (2 * dd)
-        else -((2 * -n + dd) / (2 * dd))
-      var lv = BigInt(rows.head.getLong(1)) * 1000000
-      var bv = BigInt(0)
-      var prevY = rows.head.getLong(1)
-      var sumH = BigInt(0)
-      var sumN = BigInt(0)
-      rows.zipWithIndex.foreach { case (r, i) =>
-        if (i > 0) {
-          val y = r.getLong(1)
-          val y6 = BigInt(y) * 1000000
-          sumH += (y6 - (lv + bv)).abs
-          sumN += (BigInt(y - prevY) * 1000000).abs
-          val lPrev = lv
-          lv = sHalf(3 * y6 + 7 * (lPrev + bv), BigInt(10))
-          bv = sHalf((lv - lPrev) + 9 * bv, BigInt(10))
-          prevY = y
-        }
-      }
-      val steps = BigInt(rows.length - 1).max(1)
-      val mase =
-        if (sumN == 0) BigInt(0) else sHalf(1000000 * sumH, sumN)
-      Seq((rows.length.toLong,
-        sHalf(sumH, 1000000 * steps).toLong,
-        sHalf(sumN, 1000000 * steps).toLong,
-        mase.toLong, mase < 1000000))
-        .toDF("n_days", "holt_mae_c", "naive_mae_c", "mase_x1e6",
-          "beats_naive")
-    },
-
-    // Kaplan-Meier survival (round 14) — the right-censoring-aware
-    // time-to-event estimator the retention family lacked
-    // (cohort_retention counts presence; THIS estimates time-to-
-    // conversion under censoring, Kaplan & Meier 1958): duration =
-    // days from a user's first event to their first HIGH-VALUE
-    // purchase (cents > 9500 — ~17% of users never convert and are
-    // right-censored at the corpus horizon, so the naive "average
-    // conversion time over converters" is biased and KM is the
-    // correct tool). Per duration t: the risk set n_t (reverse
-    // cumulative), events d_t, censorings c_t — exact integers — and
-    // S(t) as the ITERATIVE HALF_UP product at 1e12 scale, computed
-    // driver-side in BigInt over the ≤31-row interval frame (the
-    // pcaPower model-collect discipline; a product is inherently
-    // sequential) and replayed by the oracle as a recursive CTE with
-    // the identical HUGEINT recurrence. 100 TB shape: one user-keyed
-    // agg (map-side combinable), then everything rides the
-    // day-bounded interval frame; the collect is model-sized.
-    "survival_km" -> { (s, d) =>
-      import s.implicits._
-      val ev = Tables.events(s, d).select(col("user_id"),
-        expr(s"(ts div 1000 - $OriginUs) div ${Tables.MicrosPerDay}")
-          .as("day"),
-        (col("event_type") === "purchase" &&
-          floor(col("value") * 100 + lit(0.5)).cast("long") > 9500)
-          .as("hit"))
-      val life = ev.groupBy(col("user_id")).agg(
-        min(col("day")).as("d0"),
-        min(when(col("hit"), col("day"))).as("dp"))
-      val mx = ev.agg(max(col("day")).as("mx"))
-      val durs = life.crossJoin(broadcast(mx))
-        .select(
-          coalesce(col("dp") - col("d0") + 1,
-            col("mx") - col("d0") + 1).as("t"),
-          col("dp").isNull.as("censored"))
-      val byT = durs.groupBy(col("t")).agg(
-        count(lit(1)).as("ended"),
-        sum(when(col("censored"), 1L).otherwise(0L)).as("n_censor"))
-        .withColumn("n_event", col("ended") - col("n_censor"))
-      val wrev = Window.orderBy(col("t"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      val km = byT
-        .withColumn("n_risk", sum(col("ended")).over(wrev))
-        .select(col("t"), col("n_risk"), col("n_event"), col("n_censor"))
-        .localCheckpoint(true)
-      val rows = km.orderBy(col("t")).collect()
-      var sAcc = BigInt(1000000000000L)
-      val surv = rows.map { r =>
-        val n = BigInt(r.getLong(1)); val de = BigInt(r.getLong(2))
-        sAcc = (2 * sAcc * (n - de) + n) / (2 * n)
-        (r.getLong(0), sAcc.toLong)
-      }.toSeq
-      km.join(broadcast(surv.toDF("t", "surv_x1e12")), "t")
-        .select(col("t"), col("n_risk"), col("n_event"), col("n_censor"),
-          col("surv_x1e12"))
-    },
-
-    // Herfindahl-Hirschman index (round 14) — the market-concentration
-    // scalar beside gini_index's inequality curve (Herfindahl 1950,
-    // Hirschman 1945; THE antitrust screening statistic): HHI =
-    // Σ share_g² over per-nation revenue shares, as the exact rational
-    // Σ r_g² / (Σ r_g)² in DECIMAL(38,0), HALF_UP 1e6 cell (1e6/k =
-    // perfect equality, 1e6 = monopoly). One orders⋈customer shuffle
-    // with nation broadcast, then 25-row arithmetic.
-    "herfindahl_index" -> { (s, d) =>
-      val rev = Tables.orders(s, d)
-        .join(Tables.customer(s, d),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.nation(s, d)),
-          col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("r"))
-      rev.agg(count(lit(1)).as("k"),
-          sum(col("r").cast("decimal(38,0)")).as("tot"),
-          sum(expr("CAST(r AS DECIMAL(38,0)) * r")).as("sq"))
-        .selectExpr("k", "CAST(tot AS BIGINT) AS total_cents",
-          "CAST((2 * 1000000 * sq + tot * tot) div (2 * tot * tot)" +
-            " AS BIGINT) AS hhi_x1e6")
-    },
-
-    // Spearman rank correlation (round 14) — the robust CROSS-variable
-    // dependence measure the family lacked (autocorr = serial Pearson,
-    // feature_mi = discretized MI; Spearman 1904): does a user's event
-    // COUNT co-move with their total spend-cents? Both variables rank
-    // via doubled midranks on their own compressed value histograms
-    // (the mannwhitney machinery, applied per variable), so ties are
-    // exact and no row-level sort exists; ρ is then Pearson over the
-    // doubled ranks — six DECIMAL(38,0) sufficient statistics narrowed
-    // under the raise_error guard, closed by one fixed IEEE tree over
-    // identical int64 inputs (the shared 2× rank scale cancels in ρ).
-    // 100 TB shape: one user agg; each variable's rank map is the
-    // SF-PROPORTIONAL distinct-sums frame, so the midrank cumulative
-    // sums run through bucketedCumBefore's two-level bucket-offset
-    // form (partitioned local windows + a bounded broadcast offset
-    // frame — never one global sort task), and the rank maps attach
-    // by PLAIN shuffle joins: hinting broadcast on an SF-proportional
-    // frame would ship millions of rows to every executor at 100×
-    // (the round-8 hint discipline — hints only on provably-bounded
-    // frames; size-based planning may still broadcast at small SF).
-    "spearman_rho" -> { (s, d) =>
-      def longExact(c: Column): Column =
-        when(c > lit(Long.MaxValue) || c < lit(Long.MinValue),
-          raise_error(concat(
-            lit("graft spearman_rho: statistic exceeds int64: "),
-            c.cast("string"))))
-          .otherwise(c.cast("long"))
-      val users = Tables.events(s, d).groupBy(col("user_id")).agg(
-        count(lit(1)).as("xv"),
-        sum(floor(col("value") * 100 + lit(0.5)).cast("long")).as("yv"))
-        .localCheckpoint(true)
-      // Bucket widths are value-DOMAIN constants (per-user event counts
-      // ~tens; per-user spend cents ~1e4-scale), not SF-dependent.
-      def midranks(valCol: String, width: Long): DataFrame = {
-        val h = users.groupBy(col(valCol).as("v"))
-          .agg(count(lit(1)).as("c"))
-        bucketedCumBefore(h, "v", width)
-          .select(col("v"), (lit(2L) * col("cb") + col("c") + 1L)
-            .as(s"r_$valCol"))
-      }
-      users
-        .join(midranks("xv", 16L), users("xv") === col("v"))
-        .drop("v")
-        .join(midranks("yv", 10000L), users("yv") === col("v"))
-        .drop("v")
-        .agg(count(lit(1)).as("n_users"),
-          longExact(sum(col("r_xv").cast("decimal(38,0)"))).as("sx"),
-          longExact(sum(col("r_yv").cast("decimal(38,0)"))).as("sy"),
-          longExact(sum(expr(
-            "CAST(r_xv AS DECIMAL(38,0)) * r_yv"))).as("sxy"),
-          longExact(sum(expr(
-            "CAST(r_xv AS DECIMAL(38,0)) * r_xv"))).as("sxx"),
-          longExact(sum(expr(
-            "CAST(r_yv AS DECIMAL(38,0)) * r_yv"))).as("syy"))
-        .selectExpr("n_users", "sx", "sy", "sxy", "sxx", "syy",
-          "CASE WHEN CAST(n_users AS DOUBLE) * CAST(sxx AS DOUBLE)" +
-            " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0.0 AND" +
-            " CAST(n_users AS DOUBLE) * CAST(syy AS DOUBLE)" +
-            " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0.0 THEN" +
-            " (CAST(n_users AS DOUBLE) * CAST(sxy AS DOUBLE)" +
-            " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / sqrt(" +
-            "(CAST(n_users AS DOUBLE) * CAST(sxx AS DOUBLE)" +
-            " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * " +
-            "(CAST(n_users AS DOUBLE) * CAST(syy AS DOUBLE)" +
-            " - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) END AS rho")
-    },
-
-    // Kruskal-Wallis H (round 14) — the k-group RANK test beside
-    // anova_f's parametric means (Kruskal & Wallis 1952; the k-sample
-    // generalization of mannwhitney_u, same doubled-midrank machinery
-    // on the compressed histogram): with doubled rank sums R2_g the
-    // tie-corrected statistic collapses to the EXACT rational
-    // H = 3·(A − N(N+1)²)·(N−1) / ((N³−N) − T), where A = Σ_g
-    // HALF_UP(R2_g²/n_g) (the rounded-term contract — order-free
-    // integer summation), T = Σ(t³−t). Emitted as a HALF_UP 1e3 cell;
-    // significance is a PURE INTEGER cross-multiplied compare against
-    // the χ²(k−1) 5% critical value 9.488. 100 TB shape: one
-    // (y, type) hash agg, the midrank window on the compressed
-    // histogram, then k-row arithmetic.
-    "kruskal_wallis" -> { (s, d) =>
-      def longExact(c: Column): Column =
-        when(c > lit(Long.MaxValue) || c < lit(Long.MinValue),
-          raise_error(concat(
-            lit("graft kruskal_wallis: statistic exceeds int64: "),
-            c.cast("string"))))
-          .otherwise(c.cast("long"))
-      val e = Tables.events(s, d).select(col("event_type"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("y"))
-      val grp = e.groupBy(col("y"), col("event_type"))
-        .agg(count(lit(1)).as("cg")).localCheckpoint(true)
-      val tot = grp.groupBy(col("y")).agg(sum(col("cg")).as("c"))
-      val wv = Window.orderBy(col("y"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ranked = tot.withColumn("cumb",
-        coalesce(sum(col("c")).over(wv), lit(0L)))
-      val r2 = grp.join(ranked, "y")
-        .groupBy(col("event_type"))
-        .agg(sum(col("cg")).as("ng"),
-          longExact(sum(expr(
-            "CAST(cg AS DECIMAL(38,0)) * (2 * cumb + c + 1)")))
-            .as("r2"))
-      val ties = ranked.agg(longExact(sum(expr(
-        "CAST(c AS DECIMAL(38,0)) * c * c - c"))).as("t3"))
-      r2.select(col("ng"), col("r2"),
-          longExact(expr(
-            "(2 * CAST(r2 AS DECIMAL(38,0)) * r2 + ng) div (2 * ng)"))
-            .as("ug"))
-        .agg(sum(col("ng")).as("n"), count(lit(1)).as("k"),
-          longExact(sum(col("ug").cast("decimal(38,0)"))).as("a"))
-        .crossJoin(broadcast(ties))
-        .selectExpr("n", "k", "a", "t3",
-          "CAST(a AS DECIMAL(38,0)) - CAST(n AS DECIMAL(38,0)) * (n + 1)" +
-            " * (n + 1) AS hnum0",
-          "CAST(n AS DECIMAL(38,0)) * n * n - n - t3 AS hden")
-        .selectExpr("n", "k", "a", "t3",
-          "CAST(CASE WHEN hnum0 >= 0 THEN " +
-            "(2 * 3000 * hnum0 * (n - 1) + hden) div (2 * hden) " +
-            "ELSE -((2 * 3000 * (-hnum0) * (n - 1) + hden) div (2 * hden))" +
-            " END AS BIGINT) AS h_x1e3",
-          "1000 * 3 * hnum0 * (n - 1) > 9488 * hden AS significant")
-    },
-
-    // One-way ANOVA (round 14) — the k-group mean test completing the
-    // family (ab_chisq = proportions, mannwhitney_u = two-sample
-    // ranks, THIS = k-sample means; Fisher 1925): does mean centi-
-    // value differ across the five event types? Sufficient statistics
-    // are exact (n_g, Σy, Σy² per group, DECIMAL(38,0)-routed); the
-    // per-group s_g²/n_g terms round HALF_UP at integer scale AS THE
-    // CONTRACT (a raw double Σ over groups would be summation-order-
-    // dependent; rounded integer terms sum exactly), giving exact SSB
-    // and SSW. Significance is a PURE INTEGER compare against the
-    // F(4, ∞) 5% critical value 2.372 (1000·SSB·(N−k) > 2372·SSW·
-    // (k−1)); the F value itself is one fixed IEEE tree over the same
-    // exact int64 inputs (autocorr convention). 100 TB shape: ONE
-    // partial+final hash agg to k=5 rows; everything after is
-    // driver-free arithmetic on that bounded frame.
-    "anova_f" -> { (s, d) =>
-      def longExact(c: Column): Column =
-        when(c > lit(Long.MaxValue) || c < lit(Long.MinValue),
-          raise_error(concat(
-            lit("graft anova_f: statistic exceeds int64: "),
-            c.cast("string"))))
-          .otherwise(c.cast("long"))
-      val e = Tables.events(s, d).select(col("event_type"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("y"))
-      val g = e.groupBy(col("event_type")).agg(
-        count(lit(1)).as("ng"),
-        longExact(sum(col("y").cast("decimal(38,0)"))).as("sg"),
-        longExact(sum(expr("CAST(y AS DECIMAL(38,0)) * y"))).as("qg"))
-        .localCheckpoint(true)
-      val terms = g.select(col("ng"), col("sg"), col("qg"),
-        longExact(expr(
-          "(2 * CAST(sg AS DECIMAL(38,0)) * sg + ng) div (2 * ng)"))
-          .as("tg"))
-      terms.agg(sum(col("ng")).as("n"), count(lit(1)).as("k"),
-          longExact(sum(col("sg").cast("decimal(38,0)"))).as("st"),
-          longExact(sum(col("qg").cast("decimal(38,0)"))).as("qt"),
-          longExact(sum(col("tg").cast("decimal(38,0)"))).as("a"))
-        .selectExpr("n", "k", "st", "qt",
-          "a - ((2 * CAST(st AS DECIMAL(38,0)) * st + n) div (2 * n))" +
-            " AS ssb",
-          "qt - a AS ssw")
-        .selectExpr("n", "k", "CAST(ssb AS BIGINT) AS ssb",
-          "CAST(ssw AS BIGINT) AS ssw",
-          "(CAST(ssb AS DOUBLE) / (CAST(k AS DOUBLE) - 1.0)) / " +
-            "(CAST(ssw AS DOUBLE) / (CAST(n AS DOUBLE) - " +
-            "CAST(k AS DOUBLE))) AS f",
-          "1000 * CAST(ssb AS DECIMAL(38,0)) * (n - k) > " +
-            "2372 * CAST(ssw AS DECIMAL(38,0)) * (k - 1)" +
-            " AS significant")
-    },
-
-    // Gini coefficient (round 14) — the inequality-of-concentration
-    // scalar beside value_concentration's threshold filter (Gini 1912;
-    // the classic spend/market-share concentration audit): over
-    // per-customer total spend cents, G = (2·Σ i·x_(i) − (n+1)·Σx) /
-    // (n·Σx) with ascending ranks i — computed EXACTLY on the
-    // compressed per-value histogram (ties contribute v·(c·C_before +
-    // c(c+1)/2), so no row-level rank sort exists; the mad_outliers
-    // compression move), DECIMAL(38,0)-routed, HALF_UP 1e6 cell.
-    // 100 TB shape: one custkey agg (map-side combinable), one hash
-    // agg to the distinct-spend histogram — but that histogram is
-    // SF-PROPORTIONAL (per-customer cent sums are near-unique, so
-    // |hist| ≈ |customers|, unlike the domain-bounded centi-value
-    // histograms), so the cumulative ranks run through
-    // bucketedCumBefore's two-level bucket-offset form: partitioned
-    // per-bucket windows in parallel + a value-domain-bounded
-    // broadcast offset frame, never one global sort task. Bucket
-    // width $10k of spend (domain constant — TPC-H orders/customer is
-    // SF-independent).
-    "gini_index" -> { (s, d) =>
-      val spend = Tables.orders(s, d)
-        .groupBy(col("o_custkey"))
-        .agg(sum(floor(col("o_totalprice") * 100 + lit(0.5)).cast("long"))
-          .as("x"))
-      val hist = spend.groupBy(col("x")).agg(count(lit(1)).as("c"))
-      bucketedCumBefore(hist, "x", 1000000L)
-        .agg(sum(col("c")).as("n_customers"),
-          sum(expr("CAST(x AS DECIMAL(38,0)) * c")).as("sx"),
-          sum(expr("CAST(x AS DECIMAL(38,0)) * " +
-            "(c * cb + (c * (c + 1)) div 2)")).as("sxi"))
-        .selectExpr("n_customers",
-          "CAST(sx AS BIGINT) AS sum_cents",
-          "CAST(CASE WHEN n_customers > 0 AND sx > 0 THEN " +
-            "(2 * 1000000 * (2 * sxi - (n_customers + 1) * sx) " +
-            "+ n_customers * sx) div (2 * n_customers * sx) " +
-            "ELSE 0 END AS BIGINT) AS gini_x1e6")
-    },
-
-    // Mann-Whitney U rank test (round 14) — the NONPARAMETRIC two-
-    // sample companion to ab_chisq (proportions) and ks_drift
-    // (distribution distance): does arm B's value distribution
-    // stochastically dominate arm A's? Arms split by the same
-    // md5Hash60 coin as ab_chisq (deterministic A/A here — the
-    // calibration read: U must sit near its null mean). Exact
-    // integers throughout the sufficient statistics: midranks ride
-    // the COMPRESSED per-value histogram (2·midrank = 2·cum_before +
-    // c + 1, so doubled rank sums are integers — ties never touch
-    // floats), R2/U2 are DECIMAL(38,0)-routed sums, and the tie
-    // correction Σ(c³−c) is exact; z is then one fixed IEEE tree over
-    // identical int64 inputs (the autocorr convention — both engines
-    // produce the same bits). 100 TB shape: ONE partial+final hash
-    // agg to the bounded centi-value histogram; the midrank window
-    // rides that compressed frame (mad_outliers precedent), never
-    // rows.
-    "mannwhitney_u" -> { (s, d) =>
-      val e = Tables.events(s, d).select(
-        pmod(Dedup.md5Hash60(concat(lit("mwu:"), col("event_id"))),
-          lit(2L)).as("arm"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("y"))
-      val hist = e.groupBy(col("y")).agg(
-        count(lit(1)).as("c"),
-        sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("ca"))
-      val wv = Window.orderBy(col("y"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ranked = hist.withColumn("cumb",
-        coalesce(sum(col("c")).over(wv), lit(0L)))
-      ranked.agg(
-          sum(col("ca")).as("n_a"),
-          sum(col("c") - col("ca")).as("n_b"),
-          sum(expr("CAST(ca AS DECIMAL(38,0)) * (2 * cumb + c + 1)"))
-            .as("r2"),
-          sum(expr("CAST(c AS DECIMAL(38,0)) * c * c - c")).as("t3"))
-        .selectExpr("CAST(n_a AS BIGINT) AS n_a",
-          "CAST(n_b AS BIGINT) AS n_b",
-          "CAST(r2 AS BIGINT) AS r2_a",
-          "CAST(r2 - CAST(n_a AS DECIMAL(38,0)) * (n_a + 1) AS BIGINT)" +
-            " AS u2_a",
-          "CAST(t3 AS BIGINT) AS tie_t3")
-        .selectExpr("n_a", "n_b", "r2_a", "u2_a", "tie_t3",
-          "CAST(u2_a - n_a * n_b AS DOUBLE) / (2.0 * sqrt(" +
-            "CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 * (" +
-            "(CAST(n_a + n_b AS DOUBLE) + 1.0) - " +
-            "CAST(tie_t3 AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) * " +
-            "(CAST(n_a + n_b AS DOUBLE) - 1.0))))) AS z")
-        .selectExpr("*", "abs(z) > 1.96 AS significant")
-    },
-
-    // Welch two-sample t-test (round 15) — the UNEQUAL-VARIANCE mean
-    // comparison completing the testing family (ab_chisq =
-    // proportions, mannwhitney_u = 2-sample ranks, anova_f = k
-    // equal-variance means, THIS = 2-sample means without the pooled
-    // assumption; Welch 1947): arms split by the same md5 coin as
-    // ab_chisq/mannwhitney_u ("wtt:" salt — a deterministic A/A
-    // split, so t must sit near 0: the calibration read). Sufficient
-    // statistics exact per arm (n, Σy, Σy², DECIMAL(38,0)-routed
-    // under the raise_error guard); the anova_f rounded-term CONTRACT
-    // carries the division points: mean1e4 = HALF_UP(1e4·S/n) and the
-    // variance-over-n term w = HALF_UP(1e8·(nQ−S²)/(n²(n−1))) are
-    // exact integers (y ≥ 0 ⇒ all numerators non-negative, HALF_UP
-    // needs no sign split), t is ONE fixed IEEE tree over those int64s
-    // (the 1e4/√1e8 scales cancel — identical bits in both engines),
-    // and significance is a PURE-INTEGER cross-multiplied compare
-    // against z 1.96: 1e4·(Δmean1e4)² > 38416·(w1+w2). 100 TB shape:
-    // ONE partial+final hash agg to 2 rows; everything after is
-    // bounded-frame arithmetic.
-    "welch_ttest" -> { (s, d) =>
-      def longExact(c: Column): Column =
-        when(c > lit(Long.MaxValue) || c < lit(Long.MinValue),
-          raise_error(concat(
-            lit("graft welch_ttest: statistic exceeds int64: "),
-            c.cast("string"))))
-          .otherwise(c.cast("long"))
-      val e = Tables.events(s, d).select(
-        pmod(Dedup.md5Hash60(concat(lit("wtt:"), col("event_id"))),
-          lit(2L)).as("arm"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("y"))
-      val g = e.groupBy(col("arm")).agg(
-        count(lit(1)).as("n"),
-        longExact(sum(col("y").cast("decimal(38,0)"))).as("sy"),
-        longExact(sum(expr("CAST(y AS DECIMAL(38,0)) * y"))).as("qy"))
-      g.agg(
-          sum(when(col("arm") === 0L, col("n"))).as("n1"),
-          sum(when(col("arm") === 1L, col("n"))).as("n2"),
-          sum(when(col("arm") === 0L, col("sy"))).as("s1"),
-          sum(when(col("arm") === 1L, col("sy"))).as("s2"),
-          sum(when(col("arm") === 0L, col("qy"))).as("q1"),
-          sum(when(col("arm") === 1L, col("qy"))).as("q2"))
-        .selectExpr("CAST(n1 AS BIGINT) AS n1", "CAST(n2 AS BIGINT) AS n2",
-          "CAST(s1 AS BIGINT) AS s1", "CAST(s2 AS BIGINT) AS s2",
-          "CAST(q1 AS BIGINT) AS q1", "CAST(q2 AS BIGINT) AS q2")
-        .selectExpr("n1", "n2", "s1", "s2", "q1", "q2",
-          "CAST((2 * 10000 * CAST(s1 AS DECIMAL(38,0)) + n1)" +
-            " div (2 * n1) AS BIGINT) AS mean1_x1e4",
-          "CAST((2 * 10000 * CAST(s2 AS DECIMAL(38,0)) + n2)" +
-            " div (2 * n2) AS BIGINT) AS mean2_x1e4",
-          "CAST((2 * 100000000 * (CAST(n1 AS DECIMAL(38,0)) * q1" +
-            " - CAST(s1 AS DECIMAL(38,0)) * s1)" +
-            " + CAST(n1 AS DECIMAL(38,0)) * n1 * (n1 - 1))" +
-            " div (2 * CAST(n1 AS DECIMAL(38,0)) * n1 * (n1 - 1))" +
-            " AS BIGINT) AS w1_x1e8",
-          "CAST((2 * 100000000 * (CAST(n2 AS DECIMAL(38,0)) * q2" +
-            " - CAST(s2 AS DECIMAL(38,0)) * s2)" +
-            " + CAST(n2 AS DECIMAL(38,0)) * n2 * (n2 - 1))" +
-            " div (2 * CAST(n2 AS DECIMAL(38,0)) * n2 * (n2 - 1))" +
-            " AS BIGINT) AS w2_x1e8")
-        .selectExpr("*",
-          "(CAST(mean1_x1e4 AS DOUBLE) - CAST(mean2_x1e4 AS DOUBLE)) / " +
-            "sqrt(CAST(w1_x1e8 AS DOUBLE) + CAST(w2_x1e8 AS DOUBLE))" +
-            " AS t",
-          "10000 * CAST(mean1_x1e4 - mean2_x1e4 AS DECIMAL(38,0)) * " +
-            "(mean1_x1e4 - mean2_x1e4) > " +
-            "38416 * (CAST(w1_x1e8 AS DECIMAL(38,0)) + w2_x1e8)" +
-            " AS significant")
-    },
-
-    // Mann-Kendall trend test (round 15) — the NONPARAMETRIC monotone-
-    // trend verdict completing the forecast/trend family (trend_slope
-    // = parametric OLS slope, ewma/holt = smoothing, cusum_shift =
-    // changepoint; Mann 1945, Kendall 1975): over the ≤31-row daily
-    // cent-sum series (the holt_linear frame), S = Σ_{i<j}
-    // sgn(y_j − y_i) — exact integers via when/otherwise, never a
-    // float sign — with the exact tie term Σ t(t−1)(2t+5) and
-    // 18·Var(S) = n(n−1)(2n+5) − Σt(t−1)(2t+5) kept as the integer
-    // v18; z is one fixed IEEE tree over (S, v18) with the continuity
-    // correction, and the trend verdict is a PURE-INTEGER compare:
-    // 180000·(|S|−1)² > 38416·v18 (z² > 1.96² cross-multiplied
-    // through the /18). 100 TB shape: one day-keyed map-side-
-    // combinable agg to ≤31 rows; the O(n²) pairwise join runs on
-    // THAT bounded frame (≤465 pairs at any SF), never on rows.
-    "mann_kendall" -> { (s, d) =>
-      val daily = Tables.events(s, d)
-        .select(expr(s"(ts div 1000 - $OriginUs) div ${Tables.MicrosPerDay}")
-          .as("day"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("y"))
-        .localCheckpoint(true)
-      val a = daily.select(col("day").as("di"), col("y").as("yi"))
-      val b = daily.select(col("day").as("dj"), col("y").as("yj"))
-      val sStat = a.join(b, col("di") < col("dj"))
-        .agg(coalesce(sum(when(col("yj") > col("yi"), 1L)
-          .when(col("yj") < col("yi"), -1L).otherwise(0L)), lit(0L))
-          .as("s_stat"))
-      val tie = daily.groupBy(col("y")).agg(count(lit(1)).as("t"))
-        .agg(count(lit(1)).as("n_distinct"),
-          sum(col("t")).as("n_days"),
-          sum(col("t") * (col("t") - 1) * (col("t") * 2 + 5)).as("tsum"))
-      sStat.crossJoin(broadcast(tie))
-        .selectExpr("n_days", "s_stat",
-          "n_days * (n_days - 1) * (2 * n_days + 5) - tsum AS v18")
-        .selectExpr("n_days", "s_stat", "v18",
-          "CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0) / " +
-            "sqrt(CAST(v18 AS DOUBLE) / 18.0) " +
-            "WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1.0) / " +
-            "sqrt(CAST(v18 AS DOUBLE) / 18.0) ELSE 0.0 END AS z",
-          "CASE WHEN abs(s_stat) >= 1 THEN " +
-            "180000 * (abs(s_stat) - 1) * (abs(s_stat) - 1) > " +
-            "38416 * v18 ELSE false END AS trending",
-          "s_stat > 0 AS upward")
-    },
-
-    // Difference-in-differences (round 15) — the CAUSAL-PANEL
-    // estimator completing the experimentation family (ab_chisq =
-    // proportions, welch_ttest = two-arm means; Card & Krueger 1994's
-    // 2×2 DiD): md5-coin treatment arms ("did:" salt — an A/A split)
-    // crossed with a pre/post period cut at the exact integer time
-    // midpoint, so the true DiD is 0 and the cell is a calibration
-    // read. Exact discipline is welch_ttest's, four cells wide: per
-    // (arm, post) the exact (n, Σy, Σy²) in DECIMAL(38,0), HALF_UP
-    // mean (1e4) and variance-of-the-mean (1e8) cells; did_x1e4 is
-    // pure subtraction of exact cells, t one fixed IEEE tree, and the
-    // significance verdict the pure-integer cross-multiplied z-1.96
-    // compare over the FOUR-cell variance sum. 100 TB shape: one
-    // (min, max) agg broadcasts the midpoint back; ONE partial+final
-    // hash agg to 4 rows; everything after is 4-row algebra.
-    "diff_in_diff" -> { (s, d) =>
-      val longExact = AnalyticsQueries.longExact("diff_in_diff") _
-      val ev = Tables.events(s, d).select(Tables.tsUs.as("tus"),
-        pmod(Dedup.md5Hash60(concat(lit("did:"), col("event_id"))),
-          lit(2L)).as("arm"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("y"))
-      val mid = ev.agg(min(col("tus")).as("lo"), max(col("tus")).as("hi"))
-        .selectExpr("(lo + hi) div 2 AS tmid")
-      val cells = ev.crossJoin(broadcast(mid))
-        .select(col("arm"),
-          when(col("tus") >= col("tmid"), 1L).otherwise(0L).as("post"),
-          col("y"))
-        .groupBy(col("arm"), col("post"))
-        .agg(count(lit(1)).as("n"),
-          longExact(sum(col("y").cast("decimal(38,0)"))).as("sy"),
-          longExact(sum(expr("CAST(y AS DECIMAL(38,0)) * y"))).as("qq"))
-        .selectExpr("arm", "post", "n",
-          "CAST((2 * 10000 * CAST(sy AS DECIMAL(38,0)) + n)" +
-            " div (2 * n) AS BIGINT) AS m_x1e4",
-          "CAST((2 * 100000000 * (CAST(n AS DECIMAL(38,0)) * qq" +
-            " - CAST(sy AS DECIMAL(38,0)) * sy)" +
-            " + CAST(n AS DECIMAL(38,0)) * n * (n - 1))" +
-            " div (2 * CAST(n AS DECIMAL(38,0)) * n * (n - 1))" +
-            " AS BIGINT) AS w_x1e8")
-      def cell(c: String, a: Int, p: Int) =
-        max(when(col("arm") === a.toLong && col("post") === p.toLong,
-          col(c))).as(s"${c.take(1)}$a$p")
-      cells.agg(
-        cell("n", 0, 0), cell("n", 0, 1), cell("n", 1, 0), cell("n", 1, 1),
-        cell("m_x1e4", 0, 0), cell("m_x1e4", 0, 1),
-        cell("m_x1e4", 1, 0), cell("m_x1e4", 1, 1),
-        cell("w_x1e8", 0, 0), cell("w_x1e8", 0, 1),
-        cell("w_x1e8", 1, 0), cell("w_x1e8", 1, 1))
-        .selectExpr("n00", "n01", "n10", "n11",
-          "m00", "m01", "m10", "m11",
-          "(m11 - m10) - (m01 - m00) AS did_x1e4",
-          "w00 + w01 + w10 + w11 AS w_sum_x1e8")
-        .selectExpr("n00", "n01", "n10", "n11",
-          "m00", "m01", "m10", "m11", "did_x1e4",
-          "CAST(did_x1e4 AS DOUBLE) / sqrt(CAST(w_sum_x1e8 AS DOUBLE))" +
-            " AS t",
-          "10000 * CAST(did_x1e4 AS DECIMAL(38,0)) * did_x1e4 >" +
-            " 38416 * CAST(w_sum_x1e8 AS DECIMAL(38,0)) AS significant")
-    },
-
-    // Cramér's V (round 15) — the EFFECT-SIZE companion the
-    // chi-square family lacked (ab_chisq answers "is there an
-    // association", THIS answers "how strong"; Cramér 1946): the
-    // event_type × md5-coin contingency ("crv:" salt — an A/A-style
-    // independent split, so V must sit near 0: the calibration read).
-    // Per-cell chi term exactly rationalized: (O−E)²/E with E = RC/n
-    // collapses to (On − RC)²/(nRC), each term a HALF_UP 1e4 integer
-    // cell (the benford_audit rounded-term contract — a raw double Σ
-    // would be order-dependent), so chi2_x1e4 = Σ terms is exact;
-    // V² = χ²/(n·min(r−1,c−1)) with min = 1 (two arms) collapses to
-    // the exact HALF_UP 1e6 cell v2_x1e6 = HALF_UP(100·chi2_x1e4/n).
-    // 100 TB shape: ONE partial+final hash agg to the 10-cell
-    // contingency; margins re-aggregate the 10-row frame.
-    "cramers_v" -> { (s, d) =>
-      val e = Tables.events(s, d).select(col("event_type"),
-        pmod(Dedup.md5Hash60(concat(lit("crv:"), col("event_id"))),
-          lit(2L)).as("arm"))
-      val cells = e.groupBy(col("event_type"), col("arm"))
-        .agg(count(lit(1)).as("o"))
-        .localCheckpoint(true)
-      val rows = cells.groupBy(col("event_type"))
-        .agg(sum(col("o")).as("r"))
-      val cols = cells.groupBy(col("arm")).agg(sum(col("o")).as("cc"))
-      val n = cells.agg(sum(col("o")).as("n"))
-      cells.join(rows, "event_type").join(cols, "arm").crossJoin(n)
-        .selectExpr("n",
-          "CAST((2 * 10000 * (CAST(o AS DECIMAL(38,0)) * n" +
-            " - CAST(r AS DECIMAL(38,0)) * cc)" +
-            " * (CAST(o AS DECIMAL(38,0)) * n" +
-            " - CAST(r AS DECIMAL(38,0)) * cc)" +
-            " + CAST(n AS DECIMAL(38,0)) * r * cc)" +
-            " div (2 * CAST(n AS DECIMAL(38,0)) * r * cc)" +
-            " AS BIGINT) AS term_x1e4")
-        .groupBy(col("n"))
-        .agg(count(lit(1)).as("n_cells"),
-          sum(col("term_x1e4")).as("chi2_x1e4"))
-        .selectExpr("n", "n_cells", "chi2_x1e4",
-          "CAST((2 * 100 * CAST(chi2_x1e4 AS DECIMAL(38,0)) + n)" +
-            " div (2 * CAST(n AS DECIMAL(38,0))) AS BIGINT) AS v2_x1e6")
-    },
-
-    // Theil–Sen slope estimator (round 15) — the ROBUST trend
-    // magnitude beside mann_kendall's monotone verdict and
-    // trend_slope's OLS fit (Theil 1950, Sen 1968): the median of all
-    // pairwise slopes (y_j−y_i)/(d_j−d_i) over the ≤31-row daily
-    // cent-sum frame (the holt_linear/mann_kendall frame — one
-    // outlier day bends an OLS slope but moves a median of 465 pair
-    // slopes by at most one rank). Exactness: each slope is a
-    // sign-split HALF_UP 1e6 integer cell (cent numerator
-    // DECIMAL(38,0)-routed, day-gap denominator strictly positive),
-    // the median a pure rank pick over the slope frame — odd pair
-    // count takes the middle rank, even count the sign-split HALF_UP
-    // mean of the two middles — so the output replays bit-exact.
-    // 100 TB shape: ONE map-side-combinable day agg to ≤31 rows; the
-    // O(n²) pair join, the rank window and the median pick all live
-    // on THAT bounded frame (≤465 rows at any SF), never on raw rows.
-    "theil_sen" -> { (s, d) =>
-      val daily = Tables.events(s, d)
-        .select(expr(s"(ts div 1000 - $OriginUs) div ${Tables.MicrosPerDay}")
-          .as("day"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("y"))
-        .localCheckpoint(true)
-      val a = daily.select(col("day").as("di"), col("y").as("yi"))
-      val b = daily.select(col("day").as("dj"), col("y").as("yj"))
-      val slopes = a.join(b, col("di") < col("dj"))
-        .selectExpr("di", "dj",
-          "CASE WHEN yj >= yi THEN " +
-            "CAST((2 * 1000000 * CAST(yj - yi AS DECIMAL(38,0)) + (dj - di))" +
-            " div (2 * (dj - di)) AS BIGINT) " +
-            "ELSE -CAST((2 * 1000000 * CAST(yi - yj AS DECIMAL(38,0)) + (dj - di))" +
-            " div (2 * (dj - di)) AS BIGINT) END AS slope_x1e6")
-      val ranked = slopes.withColumn("rn", row_number()
-        .over(Window.orderBy(col("slope_x1e6"), col("di"), col("dj"))))
-      val n = slopes.agg(count(lit(1)).as("n_pairs"))
-      ranked.crossJoin(broadcast(n))
-        .filter(expr("rn = (n_pairs + 1) div 2 OR rn = (n_pairs + 2) div 2"))
-        .groupBy(col("n_pairs"))
-        .agg(sum(col("slope_x1e6")).as("msum"), count(lit(1)).as("n_mid"))
-        .selectExpr("n_pairs",
-          "CASE WHEN msum >= 0 THEN (2 * msum + n_mid) div (2 * n_mid) " +
-            "ELSE -((2 * (-msum) + n_mid) div (2 * n_mid)) END" +
-            " AS median_slope_x1e6")
-        .selectExpr("n_pairs", "median_slope_x1e6",
-          "median_slope_x1e6 > 0 AS upward")
-    },
-
-    // One-pass bootstrap CI (round 15) — resampling uncertainty for
-    // the mean, the interval the point estimators (sensor_stats,
-    // welch_ttest's arms) never report (Efron 1979; the one-pass
-    // weighted form is Kleiner et al.'s scalable-bootstrap shape):
-    // B = 30 replicates, each row's replicate weight drawn from ONE
-    // md5 per row — bits (2b, 2b+1) of the 60-bit hash map to
-    // multinomial-ish weights {0→2, 3→0, else→1} (mean 1, variance
-    // ½) — so the whole resample is 60 partial-aggregable sums in a
-    // SINGLE scan: no explode, no per-replicate pass, no shuffle
-    // growth with B. Replicate means are exact HALF_UP 1e4 cells
-    // (values ≥ 0 — TESTDATA bounds — keeps HALF_UP sign-free; sums
-    // DECIMAL(38,0)-routed); the CI is a pure rank pick (2nd / 29th
-    // of the 30 sorted means ≈ central 90%) on the 30-row stacked
-    // frame, and `covered` pins that the full-data mean sits inside.
-    // 100 TB shape: ONE scan, 62 map-side-combinable aggregates to a
-    // 1-row frame; everything after rides 30 rows.
-    "bootstrap_ci" -> { (s, d) =>
-      val B = 30
-      val ev = Tables.events(s, d).select(
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"),
-        Dedup.md5Hash60(concat(lit("bs:"), col("event_id"))).as("h"))
-      def wSql(b: Int) =
-        s"(CASE WHEN shiftright(h, ${2 * b}) & 3 = 0 THEN 2L " +
-          s"WHEN shiftright(h, ${2 * b}) & 3 = 3 THEN 0L ELSE 1L END)"
-      val aggs = (0 until B).flatMap(b => Seq(
-        sum(expr(wSql(b))).as(s"n_$b"),
-        sum(expr(s"${wSql(b)} * cents")).as(s"s_$b"))) ++ Seq(
-        count(lit(1)).as("full_n"), sum(col("cents")).as("full_s"))
-      val one = ev.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
-      val stackArgs = (0 until B).map(b => s"${b}L, n_$b, s_$b")
-        .mkString(", ")
-      val means = one
-        .selectExpr(s"stack($B, $stackArgs) AS (b, n_b, s_b)")
-        .selectExpr("b",
-          "CAST((2 * 10000 * CAST(s_b AS DECIMAL(38,0)) + n_b)" +
-            " div (2 * n_b) AS BIGINT) AS mean_x1e4")
-        .withColumn("rn", row_number()
-          .over(Window.orderBy(col("mean_x1e4"), col("b"))))
-      val ci = means.agg(
-        count(lit(1)).as("n_reps"),
-        max(when(col("rn") === 2, col("mean_x1e4"))).as("ci_lo_x1e4"),
-        max(when(col("rn") === B - 1, col("mean_x1e4"))).as("ci_hi_x1e4"))
-      one.selectExpr(
-        "CAST((2 * 10000 * CAST(full_s AS DECIMAL(38,0)) + full_n)" +
-          " div (2 * full_n) AS BIGINT) AS full_mean_x1e4")
-        .crossJoin(broadcast(ci))
-        .selectExpr("n_reps", "full_mean_x1e4", "ci_lo_x1e4", "ci_hi_x1e4",
-          "full_mean_x1e4 BETWEEN ci_lo_x1e4 AND ci_hi_x1e4 AS covered")
-    },
-
-    // Page–Hinkley test (round 15) — the SEQUENTIAL upward-drift
-    // detector completing the changepoint family (cusum_shift =
-    // fixed-reference two-sided CUSUM; Page 1954, Hinkley 1971; the
-    // Gama et al. 2014 drift-survey form): over the ≤31-row daily
-    // cent-sum frame, each day's deviation from the RUNNING mean —
-    // dev_x1e6 = sign-split HALF_UP(1e6·(t·y_t − S_t)/t), numerator
-    // DECIMAL(38,0)-routed — cumulates to m_t, and PH_t = m_t −
-    // min_{i≤t} m_i peaks where an upward level shift begins. The
-    // output pins (peak value, peak day, n_days) exactly; no fixed-λ
-    // verdict — λ is scale-dependent and the replayed ph_x1e6 cell IS
-    // the cross-engine gate. 100 TB shape: ONE map-side day agg to
-    // ≤31 rows; every window (rank, running sum/min) rides THAT
-    // bounded frame.
-    "page_hinkley" -> { (s, d) =>
-      val daily = Tables.events(s, d)
-        .select(expr(s"(ts div 1000 - $OriginUs) div ${Tables.MicrosPerDay}")
-          .as("day"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .groupBy(col("day")).agg(sum(col("cents")).as("y"))
-        .localCheckpoint(true)
-      val w = Window.orderBy(col("day"))
-      val dev = daily
-        .withColumn("t", row_number().over(w).cast("long"))
-        .withColumn("s_t", sum(col("y")).over(w))
-        .selectExpr("day",
-          "CASE WHEN CAST(t AS DECIMAL(38,0)) * y - s_t >= 0 THEN " +
-            "CAST((2 * 1000000 * (CAST(t AS DECIMAL(38,0)) * y - s_t) + t)" +
-            " div (2 * t) AS BIGINT) " +
-            "ELSE -CAST((2 * 1000000 * (CAST(s_t AS DECIMAL(38,0)) - " +
-            "CAST(t AS DECIMAL(38,0)) * y) + t)" +
-            " div (2 * t) AS BIGINT) END AS dev_x1e6")
-      val ph = dev.withColumn("m_t", sum(col("dev_x1e6")).over(w))
-        .withColumn("ph_t", col("m_t") - min(col("m_t")).over(w))
-      val n = daily.agg(count(lit(1)).as("n_days"))
-      ph.orderBy(col("ph_t").desc, col("day")).limit(1)
-        .select(col("day").as("ph_day"), col("ph_t").as("ph_x1e6"))
-        .crossJoin(broadcast(n))
-    },
-
-    // Differentially-private counts (round 15) — the DISCLOSURE-
-    // CONTROL release the governance family lacked (k_anonymity/
-    // l_diversity/t_closeness SUPPRESS, THIS perturbs-and-publishes;
-    // Ghosh, Roughgarden & Sundararajan 2012's geometric mechanism,
-    // the discrete Laplace, at ε = 1 truncated to |k| ≤ 5 — truncation
-    // costs a δ≈2e-3 tail, documented, and buys integer-exact replay):
-    // per event_type, noise k drawn by inverse-CDF over the 2^60 md5
-    // uniform against the [[DpNoiseCuts]] literal thresholds — fully
-    // deterministic, so the oracle replays the released value. The
-    // true count rides along as the calibration read (a production
-    // release publishes only n_noisy). 100 TB shape: ONE partial+final
-    // hash agg to |types| rows; the noise is map-side literal algebra.
-    "dp_geometric_counts" -> { (s, d) =>
-      val cuts = DpNoiseCuts
-      val noiseSql = cuts.init.foldRight(s"${cuts.last._1}L") {
-        case ((k, cut), rest) => s"CASE WHEN u < ${cut}L THEN ${k}L " +
-          s"ELSE $rest END"
-      }
-      Tables.events(s, d).groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_true"))
-        .withColumn("u",
-          Dedup.md5Hash60(concat(lit("dp:"), col("event_type"))))
-        .selectExpr("event_type", "n_true", s"$noiseSql AS noise")
-        .selectExpr("event_type", "n_true", "noise",
-          "n_true + noise AS n_noisy",
-          "CAST(1000000 AS BIGINT) AS epsilon_x1e6")
-    },
-
-    // RFM segmentation (round 15) — the classic customer-base
-    // partition (Hughes 1994) beside cohort_retention's time view:
-    // per user recency (days since last event, inverted so higher =
-    // fresher), frequency and monetary quintiles, crossed into
-    // segment cells with the standard labels. Quintiles are exact
-    // lower-rank buckets q = 5·cb div N over each metric's value
-    // histogram — and because per-user cent SUMS are near-unique
-    // (the histogram is SF-proportional), cb comes from
-    // bucketedCumBefore's two-level bucket-offset form, NOT an
-    // unpartitioned rank window (the gini_index/spearman_rho lesson);
-    // quintile maps attach back by plain UNHINTED joins. 100 TB
-    // shape: one user hash agg; three bounded bucket frames +
-    // parallel per-bucket windows; the only broadcasts are 1-row
-    // (max day, N) and the bounded bucket offsets.
-    "rfm_segments" -> { (s, d) =>
-      val e = Tables.events(s, d).select(col("user_id"),
-        expr(s"(ts div 1000 - $OriginUs) div ${Tables.MicrosPerDay}")
-          .as("day"),
-        floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-      val life = e.groupBy(col("user_id"))
-        .agg(max(col("day")).as("last_day"), count(lit(1)).as("f"),
-          sum(col("cents")).as("m"))
-      val mx = e.agg(max(col("day")).as("mxd"))
-      val lf = life.crossJoin(broadcast(mx))
-        .select(col("user_id"), (col("mxd") - col("last_day")).as("r"),
-          col("f"), col("m"))
-        .localCheckpoint(true)
-      val n = lf.agg(count(lit(1)).as("nu"))
-      def qmap(c: String, width: Long) = {
-        val hist = lf.groupBy(col(c).as("v")).agg(count(lit(1)).as("c"))
-        bucketedCumBefore(hist, "v", width)
-          .crossJoin(broadcast(n))
-          .selectExpr(s"v AS ${c}_v", s"(5 * cb) div nu AS ${c}_q")
-      }
-      lf.join(qmap("r", 8L), col("r") === col("r_v"))
-        .join(qmap("f", 4L), col("f") === col("f_v"))
-        .join(qmap("m", 10000L), col("m") === col("m_v"))
-        .selectExpr("4 - r_q AS rs", "f_q AS fs", "m_q AS ms", "m")
-        .groupBy(col("rs"), col("fs"), col("ms"))
-        .agg(count(lit(1)).as("n_users"), sum(col("m")).as("sum_m_cents"))
-        .withColumn("segment", expr(
-          "CASE WHEN rs >= 3 AND fs >= 3 AND ms >= 3 THEN 'champions' " +
-            "WHEN rs <= 1 AND fs >= 2 THEN 'at_risk' " +
-            "WHEN rs <= 1 THEN 'hibernating' ELSE 'regular' END"))
-    },
-
-    // KMV distinct sketch (round 15) — the k-minimum-values estimator
-    // (Bar-Yossef et al. 2002; the theta-sketch core) completing the
-    // sketch family with what HLL union / CMS / MG can't do: SET
-    // ALGEBRA on distinct counts (union by sketch merge, intersection
-    // by inclusion-exclusion). Two sets — customers ordering in 1995
-    // vs 1996 — hashed by md5Hash60 (uniform on [0, 2^60)); each
-    // sketch is the K = 256 smallest hashes (TakeOrdered — a bounded
-    // heap, never a global sort), est = (K−1)·2^60 div h_(K) routed
-    // through DECIMAL(38,0), degenerating to the EXACT count when the
-    // set is smaller than K; the union sketch is the K smallest of
-    // the two sketches' union (sketch-sized merge — the property that
-    // makes KMV shippable from 1000 executors). Exact distinct counts
-    // ride along as the calibration read (dropped at 100 TB — they
-    // are what the sketch replaces); ok-cells pin ±20% by pure-integer
-    // cross-multiplication, and every cell is md5-deterministic so
-    // the oracle replays the whole estimate. 100 TB shape: one
-    // distinct-key agg per set feeding a 256-row heap; merges and
-    // estimates ride 256-row frames.
-    "kmv_sketch" -> { (s, d) =>
-      val K = 256
-      val two60 = "1152921504606846976"
-      def hashes(yr: Int) = Tables.orders(s, d)
-        .filter(year(col("o_orderdate")) === yr)
-        .select(col("o_custkey")).distinct()
-        .select(Dedup.md5Hash60(concat(lit("kmv:"), col("o_custkey")))
-          .as("h"))
-        .localCheckpoint(true)
-      val sa = hashes(1995)
-      val sb = hashes(1996)
-      def estSql(k: String, hk: String) =
-        s"CASE WHEN $k < $K THEN $k ELSE " +
-          s"CAST(CAST(${K - 1} AS DECIMAL(38,0)) * $two60 div $hk" +
-          " AS BIGINT) END"
-      def sketch(sx: DataFrame, p: String) =
-        sx.orderBy(col("h")).limit(K)
-          .agg(count(lit(1)).as(s"k_$p"), max(col("h")).as(s"hk_$p"))
-          .crossJoin(sx.agg(count(lit(1)).as(s"n_$p")))
-          .selectExpr(s"n_$p",
-            s"${estSql(s"k_$p", s"hk_$p")} AS est_$p")
-      val merged = sa.orderBy(col("h")).limit(K)
-        .unionByName(sb.orderBy(col("h")).limit(K))
-        .distinct().orderBy(col("h")).limit(K)
-        .agg(count(lit(1)).as("k_u"), max(col("h")).as("hk_u"))
-        .crossJoin(sa.unionByName(sb).distinct()
-          .agg(count(lit(1)).as("n_union")))
-        .selectExpr("n_union", s"${estSql("k_u", "hk_u")} AS est_union")
-      sketch(sa, "a").crossJoin(sketch(sb, "b")).crossJoin(merged)
-        .selectExpr("n_a", "est_a", "n_b", "est_b", "n_union",
-          "est_union", "est_a + est_b - est_union AS est_intersect",
-          "5 * abs(est_a - n_a) <= n_a AS a_ok",
-          "5 * abs(est_b - n_b) <= n_b AS b_ok",
-          "5 * abs(est_union - n_union) <= n_union AS union_ok")
-    },
-
-    // Hour-of-day seasonal decomposition (round 14) — the classical
-    // additive-seasonality extraction the time-series family lacked
-    // (trend_slope = trend, autocorr = serial dependence, THIS = the
-    // seasonal component; Cleveland et al.'s STL reduced to the
-    // single cyclic factor a fixed-period sensor feed has): per
-    // hour-of-day h, the deviation of the hour's mean centi-value
-    // from the global mean. Exact integers throughout: dev_num =
-    // sum_h·n_tot − sum_tot·n_h over the common denominator
-    // n_h·n_tot, DECIMAL(38,0)-routed (the product is ~1e16 at sf0.1
-    // and grows with corpus²), narrowed under the trend_slope
-    // raise_error guard; the 1e6 cell is sign-split HALF_UP with the
-    // 2e6-scaled numerator kept in decimal (2·1e6·dev_num overflows
-    // int64 two orders before dev_num itself does). Plan shape: ONE
-    // partial+final hash agg to ≤24 rows; the global totals
-    // re-aggregate THE 24-ROW FRAME (never a second scan) and
-    // broadcast back — at 100 TB this is one map-side-combined pass.
-    "seasonal_decompose" -> { (s, d) =>
-      def longExact(c: Column): Column =
-        when(c > lit(Long.MaxValue) || c < lit(Long.MinValue),
-          raise_error(concat(
-            lit("graft seasonal_decompose: statistic exceeds int64: "),
-            c.cast("string"))))
-          .otherwise(c.cast("long"))
-      val byHour = Tables.events(s, d)
-        .select(
-          expr(s"((ts div 1000 - $OriginUs) div 3600000000) % 24")
-            .as("hour"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .groupBy(col("hour"))
-        .agg(count(lit(1)).as("n_rows"),
-          longExact(sum(col("cents").cast("decimal(38,0)")))
-            .as("sum_cents"))
-        // seam: the ≤24-row frame feeds BOTH the output and the totals
-        // re-aggregate — without it Spark re-plans the corpus scan for
-        // the totals branch (PlanSpec's one-scan guard).
-        .localCheckpoint(true)
-      val tot = byHour.agg(sum(col("n_rows")).as("n_tot"),
-        longExact(sum(col("sum_cents").cast("decimal(38,0)")))
-          .as("sum_tot"))
-      byHour.crossJoin(broadcast(tot))
-        .withColumn("dev_num", longExact(
-          expr("CAST(sum_cents AS DECIMAL(38,0)) * n_tot" +
-            " - CAST(sum_tot AS DECIMAL(38,0)) * n_rows")))
-        .withColumn("den",
-          expr("CAST(n_rows AS DECIMAL(38,0)) * n_tot"))
-        .selectExpr("hour", "n_rows", "sum_cents", "dev_num",
-          "CAST(CASE WHEN dev_num >= 0 THEN" +
-            " (2 * 1000000 * CAST(dev_num AS DECIMAL(38,0)) + den)" +
-            " div (2 * den)" +
-            " ELSE -((2 * 1000000 * CAST(-dev_num AS DECIMAL(38,0)) + den)" +
-            " div (2 * den)) END AS BIGINT) AS seasonal_x1e6")
-    },
-
-    // Windowed conversion funnel (round 11) — the TIME-BOUNDED funnel
-    // beside funnel_stages' first-touch ordering (ClickHouse's
-    // windowFunnel shape): view → click → purchase must complete
-    // within 7 days of the view anchor, and the output carries the
-    // mean conversion lag per stage. Deterministic earliest-anchor
-    // semantics (every step a min — see ops.Funnel for the contrast
-    // with retrying windowFunnel). Shape: one filtered partial+final
-    // min-agg per stage; later stages join the previous stage's
-    // USER-sized frame — events never self-join.
-    "funnel_windowed" -> { (s, d) =>
-      Funnel.staged(Tables.events(s, d), col("user_id"), Tables.tsUs,
-        col("event_type"), Seq("view", "click", "purchase"),
-        windowUs = 7L * 86400L * 1000000L)
-    }
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "gap_fill" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, value FROM events),
-        |a AS (SELECT user_id, tus - tus % 3600000000 AS bucket_us,
-        |             count(*) AS n_events, round(avg(value), 4) AS avg_value
-        |      FROM e GROUP BY 1, 2),
-        |b AS (SELECT user_id, min(bucket_us) AS lo, max(bucket_us) AS hi
-        |      FROM a GROUP BY 1),
-        |g AS (SELECT user_id, unnest(generate_series(lo, hi, 3600000000)) AS bucket_us
-        |      FROM b)
-        |SELECT g.user_id, g.bucket_us,
-        |       CAST(coalesce(a.n_events, 0) AS BIGINT) AS n_events,
-        |       a.avg_value,
-        |       f.avg_value AS filled_value
-        |FROM g
-        |LEFT JOIN a ON a.user_id = g.user_id AND a.bucket_us = g.bucket_us
-        |ASOF LEFT JOIN a f
-        |  ON f.user_id = g.user_id AND g.bucket_us >= f.bucket_us""".stripMargin,
-
-    // Mirrors GapFill.hourlyInterp exactly: HALF_UP centi-mean per
-    // observed bucket, lead() to the next observation, gap rows
-    // generated between consecutive observations, HALF_UP integer
-    // interpolation (sign-split so DuckDB's floor `//` matches Spark's
-    // truncating `div` — numerators are kept non-negative in both).
-    "gap_interp" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS c
-        |           FROM events),
-        |a AS (SELECT user_id, tus - tus % 3600000000 AS obs_us,
-        |             count(*) AS n_obs, sum(c) AS sc
-        |      FROM e GROUP BY 1, 2),
-        |m AS (SELECT user_id, obs_us,
-        |        CASE WHEN sc >= 0 THEN (2 * sc + n_obs) // (2 * n_obs)
-        |             ELSE -((2 * -sc + n_obs) // (2 * n_obs)) END AS cx
-        |      FROM a),
-        |l AS (SELECT user_id, obs_us, cx,
-        |        lead(obs_us) OVER w AS next_us,
-        |        lead(cx) OVER w AS next_cx
-        |      FROM m WINDOW w AS (PARTITION BY user_id ORDER BY obs_us)),
-        |g AS (SELECT user_id, obs_us, cx, next_us, next_cx,
-        |        unnest(generate_series(obs_us,
-        |          coalesce(next_us - 3600000000, obs_us), 3600000000)) AS bucket_us
-        |      FROM l),
-        |r AS (SELECT user_id, bucket_us, bucket_us = obs_us AS observed,
-        |        CASE WHEN bucket_us = obs_us THEN cx
-        |             ELSE cx + CAST(CASE WHEN next_cx - cx >= 0
-        |               THEN (2 * CAST(next_cx - cx AS HUGEINT) * (bucket_us - obs_us)
-        |                     + (next_us - obs_us)) // (2 * (next_us - obs_us))
-        |               ELSE -((2 * CAST(cx - next_cx AS HUGEINT) * (bucket_us - obs_us)
-        |                       + (next_us - obs_us)) // (2 * (next_us - obs_us)))
-        |               END AS BIGINT)
-        |        END AS interp_cx
-        |      FROM g)
-        |SELECT user_id, bucket_us, observed,
-        |       CAST(interp_cx AS BIGINT) AS interp_cx,
-        |       CAST(interp_cx AS DOUBLE) / 100.0 AS interp_value
-        |FROM r""".stripMargin,
-
-    // Sketch-gating oracles: the exact columns replay relationally;
-    // the *_ok booleans are asserted literal TRUE, so a Spark sketch
-    // outside its bound flips the cell and fails the driver hash gate.
-    "approx_quantiles" ->
-      """SELECT event_type, count(*) AS n,
-        |       TRUE AS p25_ok, TRUE AS p50_ok, TRUE AS p90_ok
-        |FROM events GROUP BY 1""".stripMargin,
-
-    "hll_daily_union" ->
-      """WITH e AS (SELECT event_type,
-        |             epoch_us(ts) - epoch_us(ts) % 86400000000 AS day_us,
-        |             user_id
-        |           FROM events)
-        |SELECT event_type,
-        |       count(DISTINCT day_us) AS n_days,
-        |       count(DISTINCT user_id) AS n_users,
-        |       TRUE AS union_est_ok
-        |FROM e GROUP BY 1""".stripMargin,
-
-    // heavy_hitters: the guaranteed set replays as exact relational
-    // token counts above the n/k threshold (k = 40, cross-multiplied);
-    // the three Misra–Gries guarantee cells are literal TRUE — a
-    // sketch that loses a guaranteed hitter, overcounts, or drifts
-    // past n/k flips one and hash-fails.
-    "heavy_hitters" ->
-      """WITH toks AS (SELECT unnest(list_filter(
-        |    string_split_regex(trim(lower(text)), '\s+'),
-        |    x -> x <> '')) AS token FROM documents),
-        |n AS (SELECT count(*) AS n FROM toks),
-        |exact AS (SELECT token, count(*) AS exact_count FROM toks
-        |          GROUP BY token)
-        |SELECT token, exact_count, TRUE AS retained,
-        |       TRUE AS no_overcount, TRUE AS slack_ok
-        |FROM exact, n WHERE exact_count * 40 > n""".stripMargin,
-
-    // HUGEINT (DuckDB) and DECIMAL(38,0) (Spark) are both exact for the
-    // closed-form products; the nearest-double cast of the same integer
-    // and the final IEEE division agree bit-for-bit.
-    "trend_slope" ->
-      """WITH e AS (SELECT user_id,
-        |             (epoch_us(ts) - 1704067200000000) // 60000000 AS x,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |           FROM events),
-        |s AS (SELECT user_id, count(*) AS n,
-        |             sum(x) AS sx, sum(y) AS sy,
-        |             sum(x * y) AS sxy, sum(x * x) AS sxx
-        |      FROM e GROUP BY 1),
-        |t AS (SELECT user_id, n, sx, sy, sxy, sxx,
-        |        CAST(n AS HUGEINT) * CAST(sxy AS HUGEINT)
-        |          - CAST(sx AS HUGEINT) * CAST(sy AS HUGEINT) AS num,
-        |        CAST(n AS HUGEINT) * CAST(sxx AS HUGEINT)
-        |          - CAST(sx AS HUGEINT) * CAST(sx AS HUGEINT) AS den
-        |      FROM s)
-        |SELECT user_id, n,
-        |       CAST(sx AS BIGINT) AS sx, CAST(sy AS BIGINT) AS sy,
-        |       CAST(sxy AS BIGINT) AS sxy, CAST(sxx AS BIGINT) AS sxx,
-        |       CASE WHEN den <> 0
-        |            THEN CAST(CASE WHEN num >= 0
-        |                      THEN (2 * num * 100000000 + den) // (2 * den)
-        |                      ELSE -((2 * -num * 100000000 + den) // (2 * den))
-        |                 END AS DOUBLE) / 100000000.0
-        |       END AS slope
-        |FROM t""".stripMargin,
-
-    // r_lag1 is emitted UNROUNDED (ewma convention): both engines
-    // evaluate the same fixed IEEE-double tree over the same exact
-    // int64 sufficient statistics, so the bits agree by construction.
-    "autocorr" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |           FROM events),
-        |p AS (SELECT user_id, y,
-        |        lag(y) OVER (PARTITION BY user_id ORDER BY tus, event_id) AS x
-        |      FROM e),
-        |s AS (SELECT user_id, count(*) AS n_pairs,
-        |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |        CAST(sum(x * y) AS BIGINT) AS sxy,
-        |        CAST(sum(x * x) AS BIGINT) AS sxx,
-        |        CAST(sum(y * y) AS BIGINT) AS syy
-        |      FROM p WHERE x IS NOT NULL GROUP BY 1)
-        |SELECT user_id, n_pairs, sx, sy, sxy, sxx, syy,
-        |  CASE WHEN CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-        |        AND CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-        |              - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-        |       THEN (CAST(n_pairs AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |               - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |            / sqrt((CAST(n_pairs AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |                      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |                 * (CAST(n_pairs AS DOUBLE) * CAST(syy AS DOUBLE)
-        |                      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |       END AS r_lag1
-        |FROM s""".stripMargin,
-
-    // holt_linear: the identical signed HALF_UP recurrence as a
-    // recursive CTE (l_t appears twice — once as the level, once
-    // inside b_t's delta — so the recursive arm nests one derivation).
-    "holt_linear" ->
-      s"""WITH RECURSIVE e AS (SELECT
-         |    (epoch_us(ts) - $OriginUs) // ${Tables.MicrosPerDay} AS day,
-         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-         |  FROM events),
-         |dl AS (SELECT day, CAST(sum(cents) AS BIGINT) AS y_cents
-         |       FROM e GROUP BY 1),
-         |ord AS (SELECT day, y_cents, row_number() OVER (ORDER BY day)
-         |          AS i FROM dl),
-         |rec AS (
-         |  SELECT i, day, y_cents,
-         |         CAST(y_cents AS HUGEINT) * 1000000 AS lv,
-         |         CAST(0 AS HUGEINT) AS bv
-         |  FROM ord WHERE i = 1
-         |  UNION ALL
-         |  SELECT i, day, y_cents, lv,
-         |    CASE WHEN (lv - lprev) + 9 * bprev >= 0
-         |         THEN (2 * ((lv - lprev) + 9 * bprev) + 10) // 20
-         |         ELSE -((2 * (-((lv - lprev) + 9 * bprev)) + 10) // 20)
-         |    END AS bv
-         |  FROM (
-         |    SELECT o.i, o.day, o.y_cents, r.lv AS lprev, r.bv AS bprev,
-         |      CASE WHEN 3 * CAST(o.y_cents AS HUGEINT) * 1000000
-         |                 + 7 * (r.lv + r.bv) >= 0
-         |           THEN (2 * (3 * CAST(o.y_cents AS HUGEINT) * 1000000
-         |                 + 7 * (r.lv + r.bv)) + 10) // 20
-         |           ELSE -((2 * (-(3 * CAST(o.y_cents AS HUGEINT) * 1000000
-         |                 + 7 * (r.lv + r.bv))) + 10) // 20)
-         |      END AS lv
-         |    FROM ord o JOIN rec r ON o.i = r.i + 1) t)
-         |SELECT day, y_cents, CAST(lv AS BIGINT) AS level_x1e6,
-         |       CAST(bv AS BIGINT) AS trend_x1e6,
-         |       CAST(lv + bv AS BIGINT) AS forecast_x1e6
-         |FROM rec""".stripMargin,
-
-    // mase: holt_linear's recursive CTE plus one-step error algebra —
-    // eh joins each day to the PREVIOUS day's (l + b); sums stay
-    // HUGEINT, cells are the identical HALF_UP forms.
-    "mase" ->
-      s"""WITH RECURSIVE e AS (SELECT
-         |    (epoch_us(ts) - $OriginUs) // ${Tables.MicrosPerDay} AS day,
-         |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-         |  FROM events),
-         |dl AS (SELECT day, CAST(sum(cents) AS BIGINT) AS y_cents
-         |       FROM e GROUP BY 1),
-         |ord AS (SELECT day, y_cents, row_number() OVER (ORDER BY day)
-         |          AS i FROM dl),
-         |rec AS (
-         |  SELECT i, day, y_cents,
-         |         CAST(y_cents AS HUGEINT) * 1000000 AS lv,
-         |         CAST(0 AS HUGEINT) AS bv
-         |  FROM ord WHERE i = 1
-         |  UNION ALL
-         |  SELECT i, day, y_cents, lv,
-         |    CASE WHEN (lv - lprev) + 9 * bprev >= 0
-         |         THEN (2 * ((lv - lprev) + 9 * bprev) + 10) // 20
-         |         ELSE -((2 * (-((lv - lprev) + 9 * bprev)) + 10) // 20)
-         |    END AS bv
-         |  FROM (
-         |    SELECT o.i, o.day, o.y_cents, r.lv AS lprev, r.bv AS bprev,
-         |      CASE WHEN 3 * CAST(o.y_cents AS HUGEINT) * 1000000
-         |                 + 7 * (r.lv + r.bv) >= 0
-         |           THEN (2 * (3 * CAST(o.y_cents AS HUGEINT) * 1000000
-         |                 + 7 * (r.lv + r.bv)) + 10) // 20
-         |           ELSE -((2 * (-(3 * CAST(o.y_cents AS HUGEINT) * 1000000
-         |                 + 7 * (r.lv + r.bv))) + 10) // 20)
-         |      END AS lv
-         |    FROM ord o JOIN rec r ON o.i = r.i + 1) t),
-         |err AS (SELECT c.i,
-         |          abs(CAST(c.y_cents AS HUGEINT) * 1000000
-         |              - (p.lv + p.bv)) AS eh,
-         |          abs(CAST(c.y_cents - p.y_cents AS HUGEINT) * 1000000)
-         |            AS en
-         |        FROM rec c JOIN rec p ON c.i = p.i + 1),
-         |s AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM dl) AS n_days,
-         |        CAST(greatest(count(*), 1) AS HUGEINT) AS steps,
-         |        CAST(coalesce(sum(eh), 0) AS HUGEINT) AS sh,
-         |        CAST(coalesce(sum(en), 0) AS HUGEINT) AS sn
-         |      FROM err)
-         |SELECT n_days,
-         |       CAST((2 * sh + 1000000 * steps) // (2 * 1000000 * steps)
-         |            AS BIGINT) AS holt_mae_c,
-         |       CAST((2 * sn + 1000000 * steps) // (2 * 1000000 * steps)
-         |            AS BIGINT) AS naive_mae_c,
-         |       CAST(CASE WHEN sn = 0 THEN 0
-         |            ELSE (2 * 1000000 * sh + sn) // (2 * sn) END
-         |         AS BIGINT) AS mase_x1e6,
-         |       CASE WHEN sn = 0 THEN 0
-         |            ELSE (2 * 1000000 * sh + sn) // (2 * sn) END
-         |         < 1000000 AS beats_naive
-         |FROM s""".stripMargin,
-
-    // survival_km: the identical interval algebra; the sequential
-    // HALF_UP survival recurrence replays as a recursive CTE over the
-    // row-numbered interval frame (HUGEINT mirror of the driver-side
-    // BigInt fold).
-    "survival_km" ->
-      s"""WITH RECURSIVE e AS (SELECT user_id,
-         |    (epoch_us(ts) - $OriginUs) // ${Tables.MicrosPerDay} AS day,
-         |    (event_type = 'purchase' AND
-         |     CAST(floor(value * 100 + 0.5) AS BIGINT) > 9500) AS hit
-         |  FROM events),
-         |l AS (SELECT user_id, min(day) AS d0,
-         |        min(CASE WHEN hit THEN day END) AS dp
-         |      FROM e GROUP BY 1),
-         |m AS (SELECT max(day) AS mx FROM e),
-         |dur AS (SELECT coalesce(dp - d0 + 1, m.mx - d0 + 1) AS t,
-         |          (dp IS NULL) AS censored
-         |        FROM l CROSS JOIN m),
-         |bt AS (SELECT t, CAST(count(*) AS BIGINT) AS ended,
-         |         CAST(sum(CASE WHEN censored THEN 1 ELSE 0 END)
-         |           AS BIGINT) AS n_censor
-         |       FROM dur GROUP BY 1),
-         |km AS (SELECT t,
-         |         CAST(sum(ended) OVER (ORDER BY t ROWS BETWEEN
-         |           CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
-         |           AS n_risk,
-         |         ended - n_censor AS n_event, n_censor
-         |       FROM bt),
-         |ord AS (SELECT t, n_risk, n_event, n_censor,
-         |          row_number() OVER (ORDER BY t) AS i FROM km),
-         |rec AS (
-         |  SELECT i, t, n_risk, n_event, n_censor,
-         |         (2 * CAST(1000000000000 AS HUGEINT) * (n_risk - n_event)
-         |           + n_risk) // (2 * CAST(n_risk AS HUGEINT)) AS sv
-         |  FROM ord WHERE i = 1
-         |  UNION ALL
-         |  SELECT o.i, o.t, o.n_risk, o.n_event, o.n_censor,
-         |         (2 * r.sv * (o.n_risk - o.n_event) + o.n_risk)
-         |           // (2 * CAST(o.n_risk AS HUGEINT))
-         |  FROM ord o JOIN rec r ON o.i = r.i + 1)
-         |SELECT t, n_risk, n_event, n_censor,
-         |       CAST(sv AS BIGINT) AS surv_x1e12
-         |FROM rec""".stripMargin,
-
-    // herfindahl_index: the exact share-square rational in HUGEINT.
-    "herfindahl_index" ->
-      """WITH rev AS (SELECT n_name,
-        |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS r
-        |  FROM orders
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  GROUP BY 1),
-        |a AS (SELECT CAST(count(*) AS BIGINT) AS k,
-        |        CAST(sum(r) AS BIGINT) AS tot,
-        |        sum(CAST(r AS HUGEINT) * r) AS sq
-        |      FROM rev)
-        |SELECT k, tot AS total_cents,
-        |  CAST((2 * 1000000 * sq + CAST(tot AS HUGEINT) * tot)
-        |    // (2 * CAST(tot AS HUGEINT) * tot) AS BIGINT) AS hhi_x1e6
-        |FROM a""".stripMargin,
-
-    // spearman_rho: both variables' doubled midranks replay on their
-    // compressed histograms; rho is the identical IEEE tree over the
-    // same int64 sufficient statistics.
-    "spearman_rho" ->
-      """WITH u AS (SELECT user_id, CAST(count(*) AS BIGINT) AS xv,
-        |    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS yv
-        |  FROM events GROUP BY 1),
-        |hx AS (SELECT xv AS v, CAST(count(*) AS BIGINT) AS c
-        |       FROM u GROUP BY 1),
-        |rx AS (SELECT v, 2 * coalesce(sum(c) OVER (ORDER BY v
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |         + c + 1 AS r
-        |       FROM hx),
-        |hy AS (SELECT yv AS v, CAST(count(*) AS BIGINT) AS c
-        |       FROM u GROUP BY 1),
-        |ry AS (SELECT v, 2 * coalesce(sum(c) OVER (ORDER BY v
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |         + c + 1 AS r
-        |       FROM hy),
-        |j AS (SELECT rx.r AS r_xv, ry.r AS r_yv
-        |      FROM u JOIN rx ON rx.v = u.xv JOIN ry ON ry.v = u.yv),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n_users,
-        |        CAST(sum(r_xv) AS BIGINT) AS sx,
-        |        CAST(sum(r_yv) AS BIGINT) AS sy,
-        |        CAST(sum(CAST(r_xv AS HUGEINT) * r_yv) AS BIGINT) AS sxy,
-        |        CAST(sum(CAST(r_xv AS HUGEINT) * r_xv) AS BIGINT) AS sxx,
-        |        CAST(sum(CAST(r_yv AS HUGEINT) * r_yv) AS BIGINT) AS syy
-        |      FROM j)
-        |SELECT n_users, sx, sy, sxy, sxx, syy,
-        |  CASE WHEN CAST(n_users AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |         - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0.0 AND
-        |       CAST(n_users AS DOUBLE) * CAST(syy AS DOUBLE)
-        |         - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0.0 THEN
-        |    (CAST(n_users AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / sqrt(
-        |    (CAST(n_users AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
-        |    (CAST(n_users AS DOUBLE) * CAST(syy AS DOUBLE)
-        |     - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) END AS rho
-        |FROM s""".stripMargin,
-
-    // kruskal_wallis: the exact rational H replayed in HUGEINT over
-    // the same midrank/rounded-term algebra.
-    "kruskal_wallis" ->
-      """WITH e AS (SELECT event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y FROM events),
-        |grp AS (SELECT y, event_type, CAST(count(*) AS BIGINT) AS cg
-        |        FROM e GROUP BY 1, 2),
-        |tot AS (SELECT y, CAST(sum(cg) AS BIGINT) AS c
-        |        FROM grp GROUP BY 1),
-        |rk AS (SELECT y, c,
-        |         coalesce(sum(c) OVER (ORDER BY y
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           AS cumb
-        |       FROM tot),
-        |r2 AS (SELECT g.event_type, CAST(sum(g.cg) AS BIGINT) AS ng,
-        |         CAST(sum(CAST(g.cg AS HUGEINT) * (2 * r.cumb + r.c + 1))
-        |           AS BIGINT) AS r2
-        |       FROM grp g JOIN rk r USING (y) GROUP BY 1),
-        |tie AS (SELECT CAST(sum(CAST(c AS HUGEINT) * c * c - c)
-        |          AS BIGINT) AS t3 FROM rk),
-        |u AS (SELECT ng, r2,
-        |        CAST((2 * CAST(r2 AS HUGEINT) * r2 + ng) // (2 * ng)
-        |          AS BIGINT) AS ug
-        |      FROM r2),
-        |s AS (SELECT CAST(sum(ng) AS BIGINT) AS n,
-        |        CAST(count(*) AS BIGINT) AS k,
-        |        CAST(sum(ug) AS BIGINT) AS a
-        |      FROM u),
-        |x AS (SELECT n, k, a, t3,
-        |        CAST(a AS HUGEINT)
-        |          - CAST(n AS HUGEINT) * (n + 1) * (n + 1) AS hnum0,
-        |        CAST(n AS HUGEINT) * n * n - n - t3 AS hden
-        |      FROM s CROSS JOIN tie)
-        |SELECT n, k, a, t3,
-        |  CAST(CASE WHEN hnum0 >= 0 THEN
-        |    (2 * 3000 * hnum0 * (n - 1) + hden) // (2 * hden)
-        |    ELSE -((2 * 3000 * (-hnum0) * (n - 1) + hden) // (2 * hden))
-        |    END AS BIGINT) AS h_x1e3,
-        |  1000 * 3 * hnum0 * (n - 1) > 9488 * hden AS significant
-        |FROM x""".stripMargin,
-
-    // anova_f: the same rounded-term contract; f is the identical
-    // IEEE tree over identical int64 inputs.
-    "anova_f" ->
-      """WITH e AS (SELECT event_type,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y FROM events),
-        |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS ng,
-        |        CAST(sum(y) AS BIGINT) AS sg,
-        |        CAST(sum(CAST(y AS HUGEINT) * y) AS BIGINT) AS qg
-        |      FROM e GROUP BY 1),
-        |t AS (SELECT ng, sg, qg,
-        |        CAST((2 * CAST(sg AS HUGEINT) * sg + ng) // (2 * ng)
-        |          AS BIGINT) AS tg
-        |      FROM g),
-        |s AS (SELECT CAST(sum(ng) AS BIGINT) AS n,
-        |        CAST(count(*) AS BIGINT) AS k,
-        |        CAST(sum(sg) AS BIGINT) AS st,
-        |        CAST(sum(qg) AS BIGINT) AS qt,
-        |        CAST(sum(tg) AS BIGINT) AS sa
-        |      FROM t),
-        |x AS (SELECT n, k,
-        |        CAST(sa - ((2 * CAST(st AS HUGEINT) * st + n) // (2 * n))
-        |          AS BIGINT) AS ssb,
-        |        qt - sa AS ssw
-        |      FROM s)
-        |SELECT n, k, ssb, ssw,
-        |  (CAST(ssb AS DOUBLE) / (CAST(k AS DOUBLE) - 1.0)) /
-        |  (CAST(ssw AS DOUBLE) / (CAST(n AS DOUBLE) - CAST(k AS DOUBLE)))
-        |    AS f,
-        |  1000 * CAST(ssb AS HUGEINT) * (n - k) >
-        |    2372 * CAST(ssw AS HUGEINT) * (k - 1) AS significant
-        |FROM x""".stripMargin,
-
-    // gini_index: the tie-compressed rank-sum identity replays in
-    // HUGEINT over the same histogram.
-    "gini_index" ->
-      """WITH s AS (SELECT o_custkey,
-        |    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS x
-        |  FROM orders GROUP BY 1),
-        |h AS (SELECT x, CAST(count(*) AS BIGINT) AS c FROM s GROUP BY 1),
-        |r AS (SELECT x, c,
-        |        coalesce(sum(c) OVER (ORDER BY x
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |          AS cb
-        |      FROM h),
-        |a AS (SELECT CAST(sum(c) AS BIGINT) AS n_customers,
-        |        sum(CAST(x AS HUGEINT) * c) AS sx,
-        |        sum(CAST(x AS HUGEINT) *
-        |            (c * cb + (c * (c + 1)) // 2)) AS sxi
-        |      FROM r)
-        |SELECT n_customers, CAST(sx AS BIGINT) AS sum_cents,
-        |       CAST(CASE WHEN n_customers > 0 AND sx > 0 THEN
-        |         (2 * 1000000 * (2 * sxi - (n_customers + 1) * sx)
-        |          + n_customers * sx) // (2 * n_customers * sx)
-        |         ELSE 0 END AS BIGINT) AS gini_x1e6
-        |FROM a""".stripMargin,
-
-    // mannwhitney_u: doubled midranks on the compressed histogram keep
-    // every tie exact; z replays as the identical IEEE tree over the
-    // same int64 sufficient statistics.
-    "mannwhitney_u" ->
-      """WITH e AS (SELECT
-        |    CAST('0x' || substr(md5('mwu:' || CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 2 AS arm,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |  FROM events),
-        |h AS (SELECT y, CAST(count(*) AS BIGINT) AS c,
-        |        CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |          AS ca
-        |      FROM e GROUP BY 1),
-        |r AS (SELECT y, c, ca,
-        |        coalesce(sum(c) OVER (ORDER BY y
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |          AS cumb
-        |      FROM h),
-        |s AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |        CAST(sum(c - ca) AS BIGINT) AS n_b,
-        |        CAST(sum(CAST(ca AS HUGEINT) * (2 * cumb + c + 1))
-        |          AS BIGINT) AS r2_a,
-        |        CAST(sum(CAST(c AS HUGEINT) * c * c - c) AS BIGINT)
-        |          AS tie_t3
-        |      FROM r),
-        |u AS (SELECT n_a, n_b, r2_a,
-        |        CAST(CAST(r2_a AS HUGEINT)
-        |          - CAST(n_a AS HUGEINT) * (n_a + 1) AS BIGINT) AS u2_a,
-        |        tie_t3
-        |      FROM s)
-        |SELECT n_a, n_b, r2_a, u2_a, tie_t3,
-        |       CAST(u2_a - n_a * n_b AS DOUBLE) / (2.0 * sqrt(
-        |         CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 * (
-        |         (CAST(n_a + n_b AS DOUBLE) + 1.0) -
-        |         CAST(tie_t3 AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) *
-        |         (CAST(n_a + n_b AS DOUBLE) - 1.0))))) AS z,
-        |       abs(CAST(u2_a - n_a * n_b AS DOUBLE) / (2.0 * sqrt(
-        |         CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 * (
-        |         (CAST(n_a + n_b AS DOUBLE) + 1.0) -
-        |         CAST(tie_t3 AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) *
-        |         (CAST(n_a + n_b AS DOUBLE) - 1.0)))))) > 1.96
-        |         AS significant
-        |FROM u""".stripMargin,
-
-    // welch_ttest: the rounded-term contract replays in HUGEINT (all
-    // numerators non-negative, so // ≡ Spark div); t is the identical
-    // IEEE tree over the identical int64 inputs.
-    "welch_ttest" ->
-      """WITH e AS (SELECT
-        |    CAST('0x' || substr(md5('wtt:' || CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 2 AS arm,
-        |    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |  FROM events),
-        |g AS (SELECT arm, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(y) AS BIGINT) AS sy,
-        |        CAST(sum(CAST(y AS HUGEINT) * y) AS BIGINT) AS qy
-        |      FROM e GROUP BY 1),
-        |p AS (SELECT
-        |        CAST(sum(CASE WHEN arm = 0 THEN n END) AS BIGINT) AS n1,
-        |        CAST(sum(CASE WHEN arm = 1 THEN n END) AS BIGINT) AS n2,
-        |        CAST(sum(CASE WHEN arm = 0 THEN sy END) AS BIGINT) AS s1,
-        |        CAST(sum(CASE WHEN arm = 1 THEN sy END) AS BIGINT) AS s2,
-        |        CAST(sum(CASE WHEN arm = 0 THEN qy END) AS BIGINT) AS q1,
-        |        CAST(sum(CASE WHEN arm = 1 THEN qy END) AS BIGINT) AS q2
-        |      FROM g),
-        |m AS (SELECT n1, n2, s1, s2, q1, q2,
-        |        CAST((2 * 10000 * CAST(s1 AS HUGEINT) + n1) // (2 * n1)
-        |          AS BIGINT) AS mean1_x1e4,
-        |        CAST((2 * 10000 * CAST(s2 AS HUGEINT) + n2) // (2 * n2)
-        |          AS BIGINT) AS mean2_x1e4,
-        |        CAST((2 * 100000000 * (CAST(n1 AS HUGEINT) * q1
-        |              - CAST(s1 AS HUGEINT) * s1)
-        |              + CAST(n1 AS HUGEINT) * n1 * (n1 - 1))
-        |             // (2 * CAST(n1 AS HUGEINT) * n1 * (n1 - 1))
-        |          AS BIGINT) AS w1_x1e8,
-        |        CAST((2 * 100000000 * (CAST(n2 AS HUGEINT) * q2
-        |              - CAST(s2 AS HUGEINT) * s2)
-        |              + CAST(n2 AS HUGEINT) * n2 * (n2 - 1))
-        |             // (2 * CAST(n2 AS HUGEINT) * n2 * (n2 - 1))
-        |          AS BIGINT) AS w2_x1e8
-        |      FROM p)
-        |SELECT n1, n2, s1, s2, q1, q2, mean1_x1e4, mean2_x1e4,
-        |  w1_x1e8, w2_x1e8,
-        |  (CAST(mean1_x1e4 AS DOUBLE) - CAST(mean2_x1e4 AS DOUBLE)) /
-        |    sqrt(CAST(w1_x1e8 AS DOUBLE) + CAST(w2_x1e8 AS DOUBLE)) AS t,
-        |  10000 * CAST(mean1_x1e4 - mean2_x1e4 AS HUGEINT)
-        |    * (mean1_x1e4 - mean2_x1e4) >
-        |    38416 * (CAST(w1_x1e8 AS HUGEINT) + w2_x1e8) AS significant
-        |FROM m""".stripMargin,
-
-    // mann_kendall: exact pairwise S and the tie-corrected v18 replay
-    // on the same ≤31-row daily frame; z is the identical IEEE tree.
-    "mann_kendall" ->
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |             // 86400000000 AS day,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |           FROM events),
-        |daily AS (SELECT day, CAST(sum(cents) AS BIGINT) AS y
-        |          FROM e GROUP BY 1),
-        |s AS (SELECT CAST(coalesce(sum(CASE WHEN b.y > a.y THEN 1
-        |        WHEN b.y < a.y THEN -1 ELSE 0 END), 0) AS BIGINT)
-        |        AS s_stat
-        |      FROM daily a JOIN daily b ON a.day < b.day),
-        |t0 AS (SELECT y, CAST(count(*) AS BIGINT) AS t
-        |       FROM daily GROUP BY 1),
-        |t1 AS (SELECT CAST(sum(t) AS BIGINT) AS n_days,
-        |         CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tsum
-        |       FROM t0),
-        |x AS (SELECT n_days, s_stat,
-        |        n_days * (n_days - 1) * (2 * n_days + 5) - tsum AS v18
-        |      FROM s CROSS JOIN t1)
-        |SELECT n_days, s_stat, v18,
-        |  CASE WHEN s_stat > 0 THEN (CAST(s_stat AS DOUBLE) - 1.0) /
-        |    sqrt(CAST(v18 AS DOUBLE) / 18.0)
-        |  WHEN s_stat < 0 THEN (CAST(s_stat AS DOUBLE) + 1.0) /
-        |    sqrt(CAST(v18 AS DOUBLE) / 18.0) ELSE 0.0 END AS z,
-        |  CASE WHEN abs(s_stat) >= 1 THEN
-        |    180000 * (abs(s_stat) - 1) * (abs(s_stat) - 1) >
-        |    38416 * v18 ELSE false END AS trending,
-        |  s_stat > 0 AS upward
-        |FROM x""".stripMargin,
-
-    // diff_in_diff: the four (arm, post) cells' exact sufficient
-    // statistics, HALF_UP mean/variance cells, the subtraction-only
-    // DiD and the cross-multiplied verdict replay in HUGEINT.
-    "diff_in_diff" ->
-      """WITH e AS (SELECT epoch_us(ts) AS tus,
-        |             CAST('0x' || substr(md5('did:' ||
-        |               CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT) % 2
-        |               AS arm,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |           FROM events),
-        |mid AS (SELECT (min(tus) + max(tus)) // 2 AS tmid FROM e),
-        |cells AS (SELECT arm,
-        |            CASE WHEN tus >= tmid THEN 1 ELSE 0 END AS post,
-        |            CAST(count(*) AS BIGINT) AS n,
-        |            CAST(sum(y) AS BIGINT) AS sy,
-        |            CAST(sum(y * y) AS BIGINT) AS qq
-        |          FROM e CROSS JOIN mid GROUP BY 1, 2),
-        |mw AS (SELECT arm, post, n,
-        |         CAST((2 * 10000 * CAST(sy AS HUGEINT) + n) // (2 * n)
-        |              AS BIGINT) AS m,
-        |         CAST((2 * 100000000 * (CAST(n AS HUGEINT) * qq
-        |               - CAST(sy AS HUGEINT) * sy)
-        |               + CAST(n AS HUGEINT) * n * (n - 1))
-        |              // (2 * CAST(n AS HUGEINT) * n * (n - 1))
-        |           AS BIGINT) AS w
-        |       FROM cells),
-        |p AS (SELECT
-        |        max(CASE WHEN arm = 0 AND post = 0 THEN n END) AS n00,
-        |        max(CASE WHEN arm = 0 AND post = 1 THEN n END) AS n01,
-        |        max(CASE WHEN arm = 1 AND post = 0 THEN n END) AS n10,
-        |        max(CASE WHEN arm = 1 AND post = 1 THEN n END) AS n11,
-        |        max(CASE WHEN arm = 0 AND post = 0 THEN m END) AS m00,
-        |        max(CASE WHEN arm = 0 AND post = 1 THEN m END) AS m01,
-        |        max(CASE WHEN arm = 1 AND post = 0 THEN m END) AS m10,
-        |        max(CASE WHEN arm = 1 AND post = 1 THEN m END) AS m11,
-        |        max(CASE WHEN arm = 0 AND post = 0 THEN w END) +
-        |        max(CASE WHEN arm = 0 AND post = 1 THEN w END) +
-        |        max(CASE WHEN arm = 1 AND post = 0 THEN w END) +
-        |        max(CASE WHEN arm = 1 AND post = 1 THEN w END) AS w_sum
-        |      FROM mw)
-        |SELECT n00, n01, n10, n11, m00, m01, m10, m11,
-        |       (m11 - m10) - (m01 - m00) AS did_x1e4,
-        |       CAST((m11 - m10) - (m01 - m00) AS DOUBLE)
-        |         / sqrt(CAST(w_sum AS DOUBLE)) AS t,
-        |       10000 * CAST((m11 - m10) - (m01 - m00) AS HUGEINT)
-        |         * ((m11 - m10) - (m01 - m00)) >
-        |         38416 * CAST(w_sum AS HUGEINT) AS significant
-        |FROM p""".stripMargin,
-
-    // cramers_v: the rationalized per-cell terms replay in HUGEINT
-    // (the squared numerator keeps every term non-negative, // ≡ div).
-    "cramers_v" ->
-      """WITH e AS (SELECT event_type,
-        |    CAST('0x' || substr(md5('crv:' || CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 2 AS arm
-        |  FROM events),
-        |cells AS (SELECT event_type, arm, CAST(count(*) AS BIGINT) AS o
-        |          FROM e GROUP BY 1, 2),
-        |rr AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS r
-        |       FROM cells GROUP BY 1),
-        |c2 AS (SELECT arm, CAST(sum(o) AS BIGINT) AS cc
-        |       FROM cells GROUP BY 1),
-        |nn AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells),
-        |terms AS (SELECT n,
-        |    CAST((2 * 10000 * (CAST(o AS HUGEINT) * n
-        |          - CAST(r AS HUGEINT) * cc)
-        |          * (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * cc)
-        |          + CAST(n AS HUGEINT) * r * cc)
-        |         // (2 * CAST(n AS HUGEINT) * r * cc) AS BIGINT)
-        |      AS term_x1e4
-        |  FROM cells JOIN rr USING (event_type) JOIN c2 USING (arm)
-        |  CROSS JOIN nn)
-        |SELECT n, CAST(count(*) AS BIGINT) AS n_cells,
-        |       CAST(sum(term_x1e4) AS BIGINT) AS chi2_x1e4,
-        |       CAST((2 * 100 * CAST(sum(term_x1e4) AS HUGEINT) + n)
-        |         // (2 * CAST(n AS HUGEINT)) AS BIGINT) AS v2_x1e6
-        |FROM terms GROUP BY n""".stripMargin,
-
-    // theil_sen: the pairwise HALF_UP slope cells, the rank window and
-    // the median pick replay on the same ≤31-row daily frame; HUGEINT
-    // mirrors the DECIMAL(38,0) routing, sign splits keep // ≡ div.
-    "theil_sen" ->
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |             // 86400000000 AS day,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |           FROM events),
-        |daily AS (SELECT day, CAST(sum(cents) AS BIGINT) AS y
-        |          FROM e GROUP BY 1),
-        |p AS (SELECT a.day AS di, b.day AS dj,
-        |        CASE WHEN b.y >= a.y
-        |          THEN CAST((2 * 1000000 * CAST(b.y - a.y AS HUGEINT)
-        |                 + (b.day - a.day))
-        |               // (2 * (b.day - a.day)) AS BIGINT)
-        |          ELSE -CAST((2 * 1000000 * CAST(a.y - b.y AS HUGEINT)
-        |                 + (b.day - a.day))
-        |               // (2 * (b.day - a.day)) AS BIGINT)
-        |        END AS slope_x1e6
-        |      FROM daily a JOIN daily b ON a.day < b.day),
-        |r AS (SELECT slope_x1e6,
-        |        row_number() OVER (ORDER BY slope_x1e6, di, dj) AS rn
-        |      FROM p),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_pairs FROM p),
-        |m AS (SELECT n_pairs, CAST(sum(slope_x1e6) AS BIGINT) AS msum,
-        |        CAST(count(*) AS BIGINT) AS n_mid
-        |      FROM r CROSS JOIN n
-        |      WHERE rn = (n_pairs + 1) // 2 OR rn = (n_pairs + 2) // 2
-        |      GROUP BY n_pairs),
-        |f AS (SELECT n_pairs,
-        |        CASE WHEN msum >= 0 THEN (2 * msum + n_mid) // (2 * n_mid)
-        |          ELSE -((2 * (-msum) + n_mid) // (2 * n_mid))
-        |        END AS median_slope_x1e6
-        |      FROM m)
-        |SELECT n_pairs, median_slope_x1e6, median_slope_x1e6 > 0 AS upward
-        |FROM f""".stripMargin,
-
-    // bootstrap_ci: the same single-hash weight derivation, 30
-    // replicate sums and the rank-picked CI replay exactly (HUGEINT
-    // mirrors the DECIMAL routing; >> and & agree on non-negative
-    // 60-bit hashes).
-    "bootstrap_ci" ->
-      """WITH e AS (SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-        |             CAST('0x' || substr(md5('bs:' ||
-        |               CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-        |           FROM events),
-        |bb AS (SELECT CAST(i AS BIGINT) AS b FROM range(30) t(i)),
-        |reps AS (SELECT b,
-        |    CAST(sum(CASE WHEN (h >> CAST(2 * b AS INT)) & 3 = 0 THEN 2
-        |             WHEN (h >> CAST(2 * b AS INT)) & 3 = 3 THEN 0
-        |             ELSE 1 END) AS BIGINT) AS n_b,
-        |    CAST(sum((CASE WHEN (h >> CAST(2 * b AS INT)) & 3 = 0 THEN 2
-        |              WHEN (h >> CAST(2 * b AS INT)) & 3 = 3 THEN 0
-        |              ELSE 1 END) * cents) AS BIGINT) AS s_b
-        |  FROM e CROSS JOIN bb GROUP BY b),
-        |m AS (SELECT b,
-        |        CAST((2 * 10000 * CAST(s_b AS HUGEINT) + n_b)
-        |             // (2 * n_b) AS BIGINT) AS mean_x1e4
-        |      FROM reps),
-        |r AS (SELECT mean_x1e4,
-        |        row_number() OVER (ORDER BY mean_x1e4, b) AS rn
-        |      FROM m),
-        |f AS (SELECT CAST(count(*) AS BIGINT) AS full_n,
-        |        CAST(sum(cents) AS BIGINT) AS full_s
-        |      FROM e),
-        |c AS (SELECT CAST(30 AS BIGINT) AS n_reps,
-        |        (SELECT mean_x1e4 FROM r WHERE rn = 2) AS ci_lo_x1e4,
-        |        (SELECT mean_x1e4 FROM r WHERE rn = 29) AS ci_hi_x1e4,
-        |        CAST((2 * 10000 * CAST(full_s AS HUGEINT) + full_n)
-        |             // (2 * full_n) AS BIGINT) AS full_mean_x1e4
-        |      FROM f)
-        |SELECT n_reps, full_mean_x1e4, ci_lo_x1e4, ci_hi_x1e4,
-        |       full_mean_x1e4 BETWEEN ci_lo_x1e4 AND ci_hi_x1e4 AS covered
-        |FROM c""".stripMargin,
-
-    // page_hinkley: running-mean deviations, cumulative m_t and the
-    // PH peak replay on the same ≤31-row daily frame; HUGEINT mirrors
-    // the DECIMAL(38,0) routing, sign splits keep // ≡ div. Both
-    // engines' default cumulative window frame (RANGE UNBOUNDED
-    // PRECEDING) coincide because days are distinct.
-    "page_hinkley" ->
-      """WITH e AS (SELECT (epoch_us(ts) - 1704067200000000)
-        |             // 86400000000 AS day,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |           FROM events),
-        |daily AS (SELECT day, CAST(sum(cents) AS BIGINT) AS y
-        |          FROM e GROUP BY 1),
-        |c AS (SELECT day, y,
-        |        CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t,
-        |        CAST(sum(y) OVER (ORDER BY day) AS BIGINT) AS s_t
-        |      FROM daily),
-        |dv AS (SELECT day,
-        |         CASE WHEN CAST(t AS HUGEINT) * y - s_t >= 0 THEN
-        |           CAST((2 * 1000000 * (CAST(t AS HUGEINT) * y - s_t) + t)
-        |                // (2 * t) AS BIGINT)
-        |         ELSE -CAST((2 * 1000000 * (CAST(s_t AS HUGEINT)
-        |                - CAST(t AS HUGEINT) * y) + t)
-        |                // (2 * t) AS BIGINT) END AS dev_x1e6
-        |       FROM c),
-        |mm AS (SELECT day,
-        |         CAST(sum(dev_x1e6) OVER (ORDER BY day) AS BIGINT) AS m_t
-        |       FROM dv),
-        |ph AS (SELECT day,
-        |         m_t - min(m_t) OVER (ORDER BY day) AS ph_t
-        |       FROM mm),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n_days FROM daily)
-        |SELECT day AS ph_day, ph_t AS ph_x1e6, n_days
-        |FROM ph CROSS JOIN n ORDER BY ph_t DESC, day LIMIT 1""".stripMargin,
-
-    // dp_geometric_counts: the identical literal threshold chain (one
-    // Scala constant feeds both engines), same md5 uniform.
-    "dp_geometric_counts" -> {
-      val cuts = DpNoiseCuts
-      val noiseSql = cuts.init.foldRight(s"${cuts.last._1}") {
-        case ((k, cut), rest) =>
-          s"CASE WHEN u < $cut THEN $k ELSE $rest END"
-      }
-      s"""WITH t AS (SELECT event_type,
-         |    CAST(count(*) AS BIGINT) AS n_true,
-         |    CAST('0x' || substr(md5('dp:' || event_type), 1, 15)
-         |      AS BIGINT) AS u
-         |  FROM events GROUP BY event_type)
-         |SELECT event_type, n_true,
-         |  CAST($noiseSql AS BIGINT) AS noise,
-         |  n_true + CAST($noiseSql AS BIGINT) AS n_noisy,
-         |  CAST(1000000 AS BIGINT) AS epsilon_x1e6
-         |FROM t""".stripMargin
-    },
-
-    // rfm_segments: the oracle keeps the PLAIN single-window
-    // cumulative (bucketedCumBefore is bit-identical to it by
-    // contract); quintiles, segment cells and labels replay exactly.
-    "rfm_segments" ->
-      """WITH e AS (SELECT user_id,
-        |             (epoch_us(ts) - 1704067200000000)
-        |               // 86400000000 AS day,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |           FROM events),
-        |life AS (SELECT user_id, max(day) AS last_day,
-        |           CAST(count(*) AS BIGINT) AS f,
-        |           CAST(sum(cents) AS BIGINT) AS m
-        |         FROM e GROUP BY 1),
-        |mx AS (SELECT max(day) AS mxd FROM e),
-        |lf AS (SELECT user_id, mxd - last_day AS r, f, m
-        |       FROM life CROSS JOIN mx),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS nu FROM lf),
-        |rh AS (SELECT r AS v, CAST(count(*) AS BIGINT) AS c
-        |       FROM lf GROUP BY 1),
-        |rq AS (SELECT v, (5 * coalesce(sum(c) OVER (ORDER BY v
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))
-        |           // nu AS q
-        |       FROM rh CROSS JOIN n),
-        |fh AS (SELECT f AS v, CAST(count(*) AS BIGINT) AS c
-        |       FROM lf GROUP BY 1),
-        |fq AS (SELECT v, (5 * coalesce(sum(c) OVER (ORDER BY v
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))
-        |           // nu AS q
-        |       FROM fh CROSS JOIN n),
-        |mh AS (SELECT m AS v, CAST(count(*) AS BIGINT) AS c
-        |       FROM lf GROUP BY 1),
-        |mq AS (SELECT v, (5 * coalesce(sum(c) OVER (ORDER BY v
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0))
-        |           // nu AS q
-        |       FROM mh CROSS JOIN n),
-        |seg AS (SELECT CAST(4 - rq.q AS BIGINT) AS rs,
-        |          CAST(fq.q AS BIGINT) AS fs, CAST(mq.q AS BIGINT) AS ms,
-        |          lf.m
-        |        FROM lf JOIN rq ON lf.r = rq.v
-        |        JOIN fq ON lf.f = fq.v
-        |        JOIN mq ON lf.m = mq.v)
-        |SELECT rs, fs, ms, CAST(count(*) AS BIGINT) AS n_users,
-        |       CAST(sum(m) AS BIGINT) AS sum_m_cents,
-        |       CASE WHEN rs >= 3 AND fs >= 3 AND ms >= 3 THEN 'champions'
-        |            WHEN rs <= 1 AND fs >= 2 THEN 'at_risk'
-        |            WHEN rs <= 1 THEN 'hibernating'
-        |            ELSE 'regular' END AS segment
-        |FROM seg GROUP BY 1, 2, 3""".stripMargin,
-
-    // kmv_sketch: the same md5 axis, 256-row ORDER BY h LIMIT heaps,
-    // HUGEINT estimate arithmetic and inclusion-exclusion replay
-    // exactly; // ≡ div on the non-negative operands.
-    "kmv_sketch" ->
-      """WITH ca AS (SELECT DISTINCT o_custkey FROM orders
-        |            WHERE date_part('year', o_orderdate) = 1995),
-        |cb AS (SELECT DISTINCT o_custkey FROM orders
-        |       WHERE date_part('year', o_orderdate) = 1996),
-        |ha AS (SELECT CAST('0x' || substr(md5('kmv:' ||
-        |         CAST(o_custkey AS VARCHAR)), 1, 15) AS BIGINT) AS h
-        |       FROM ca),
-        |hb AS (SELECT CAST('0x' || substr(md5('kmv:' ||
-        |         CAST(o_custkey AS VARCHAR)), 1, 15) AS BIGINT) AS h
-        |       FROM cb),
-        |ka AS (SELECT h FROM ha ORDER BY h LIMIT 256),
-        |kb AS (SELECT h FROM hb ORDER BY h LIMIT 256),
-        |ku AS (SELECT DISTINCT h FROM
-        |         (SELECT h FROM ka UNION ALL SELECT h FROM kb)
-        |       ORDER BY h LIMIT 256),
-        |aa AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM ha) AS n_a,
-        |         CAST(count(*) AS BIGINT) AS k_a,
-        |         max(h) AS hk_a FROM ka),
-        |bb AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM hb) AS n_b,
-        |         CAST(count(*) AS BIGINT) AS k_b,
-        |         max(h) AS hk_b FROM kb),
-        |uu AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM
-        |           (SELECT DISTINCT h FROM
-        |             (SELECT h FROM ha UNION ALL SELECT h FROM hb)))
-        |           AS n_union,
-        |         CAST(count(*) AS BIGINT) AS k_u,
-        |         max(h) AS hk_u FROM ku),
-        |est AS (SELECT n_a,
-        |         CASE WHEN k_a < 256 THEN k_a ELSE
-        |           CAST(255 * CAST(1152921504606846976 AS HUGEINT)
-        |                // hk_a AS BIGINT) END AS est_a,
-        |         n_b,
-        |         CASE WHEN k_b < 256 THEN k_b ELSE
-        |           CAST(255 * CAST(1152921504606846976 AS HUGEINT)
-        |                // hk_b AS BIGINT) END AS est_b,
-        |         n_union,
-        |         CASE WHEN k_u < 256 THEN k_u ELSE
-        |           CAST(255 * CAST(1152921504606846976 AS HUGEINT)
-        |                // hk_u AS BIGINT) END AS est_union
-        |       FROM aa CROSS JOIN bb CROSS JOIN uu)
-        |SELECT n_a, est_a, n_b, est_b, n_union, est_union,
-        |       est_a + est_b - est_union AS est_intersect,
-        |       5 * abs(est_a - n_a) <= n_a AS a_ok,
-        |       5 * abs(est_b - n_b) <= n_b AS b_ok,
-        |       5 * abs(est_union - n_union) <= n_union AS union_ok
-        |FROM est""".stripMargin,
-
-    // seasonal_decompose: dev_num and the HALF_UP cell replay in
-    // HUGEINT (the decimal(38,0) mirror); the sign split keeps //
-    // truncation ≡ Spark div on non-negative operands.
-    "seasonal_decompose" ->
-      """WITH e AS (SELECT ((epoch_us(ts) - 1704067200000000)
-        |               // 3600000000) % 24 AS hour,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        |           FROM events),
-        |h AS (SELECT hour, CAST(count(*) AS BIGINT) AS n_rows,
-        |             CAST(sum(cents) AS BIGINT) AS sum_cents
-        |      FROM e GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_rows) AS BIGINT) AS n_tot,
-        |             CAST(sum(sum_cents) AS BIGINT) AS sum_tot FROM h),
-        |x AS (SELECT h.hour, h.n_rows, h.sum_cents,
-        |             CAST(h.sum_cents AS HUGEINT) * t.n_tot
-        |               - CAST(t.sum_tot AS HUGEINT) * h.n_rows AS dev_num,
-        |             CAST(h.n_rows AS HUGEINT) * t.n_tot AS den
-        |      FROM h CROSS JOIN t)
-        |SELECT hour, n_rows, sum_cents, CAST(dev_num AS BIGINT) AS dev_num,
-        |       CAST(CASE WHEN dev_num >= 0
-        |            THEN (2 * 1000000 * dev_num + den) // (2 * den)
-        |            ELSE -((2 * 1000000 * (-dev_num) + den) // (2 * den))
-        |            END AS BIGINT) AS seasonal_x1e6
-        |FROM x""".stripMargin,
-
-    "assoc_rules" ->
-      s"""WITH items AS (SELECT DISTINCT l_orderkey AS basket,
-         |                 l_partkey AS item FROM lineitem),
-         |sz AS (SELECT basket, count(*) AS bs FROM items GROUP BY 1),
-         |ok AS (SELECT i.basket, i.item FROM items i JOIN sz USING (basket)
-         |       WHERE bs BETWEEN 2 AND $MaxBasketItems),
-         |pairs AS (SELECT a.item AS part_a, b.item AS part_b,
-         |            CAST(count(*) AS BIGINT) AS n_ab
-         |          FROM ok a JOIN ok b
-         |            ON a.basket = b.basket AND a.item < b.item
-         |          GROUP BY 1, 2 HAVING count(*) >= 2),
-         |ic AS (SELECT item, CAST(count(*) AS BIGINT) AS n_i
-         |       FROM ok GROUP BY 1),
-         |nb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM sz
-         |       WHERE bs BETWEEN 2 AND $MaxBasketItems)
-         |SELECT part_a, part_b, n_ab, ia.n_i AS n_a, ib.n_i AS n_b,
-         |       (n_ab * 1000000) // ia.n_i AS conf_x1e6,
-         |       (n_ab * nb.n * 1000000) // (ia.n_i * ib.n_i) AS lift_x1e6
-         |FROM pairs
-         |JOIN ic ia ON ia.item = pairs.part_a
-         |JOIN ic ib ON ib.item = pairs.part_b
-         |CROSS JOIN nb""".stripMargin,
-
-    "funnel_stages" ->
-      """WITH per AS (
-        |  SELECT user_id,
-        |         min(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END) AS s,
-        |         min(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS c,
-        |         min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS p
-        |  FROM events GROUP BY 1)
-        |SELECT count(*) AS n_users,
-        |       count(s) AS n_signup,
-        |       CAST(sum(CASE WHEN s < c THEN 1 ELSE 0 END) AS BIGINT) AS n_click_after,
-        |       CAST(sum(CASE WHEN s < c AND c < p THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase_after
-        |FROM per""".stripMargin,
-
-    "cohort_retention" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-        |              (epoch_us(ts) - 1704067200000000) // 604800000000 AS week
-        |            FROM events),
-        |c AS (SELECT user_id, week,
-        |             min(week) OVER (PARTITION BY user_id) AS cohort_week
-        |      FROM uw)
-        |SELECT cohort_week, week - cohort_week AS week_offset,
-        |       count(*) AS n_users
-        |FROM c GROUP BY 1, 2""".stripMargin,
-
-    "market_share" ->
-      """WITH l AS (
-        |  SELECT year(o_orderdate) AS o_year,
-        |         l_extendedprice * (1 - l_discount) AS rev,
-        |         n2.n_name AS supp_nation
-        |  FROM lineitem
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey AND r_name = 'ASIA'
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey)
-        |SELECT o_year,
-        |  CAST(SUM(CAST(CASE WHEN supp_nation = 'NATION_7' THEN rev ELSE 0.0 END
-        |       AS DECIMAL(18,4))) AS DOUBLE) AS nation_rev,
-        |  CAST(SUM(CAST(rev AS DECIMAL(18,4))) AS DOUBLE) AS total_rev,
-        |  round(CAST(SUM(CAST(CASE WHEN supp_nation = 'NATION_7' THEN rev ELSE 0.0 END
-        |       AS DECIMAL(18,4))) AS DOUBLE)
-        |      / CAST(SUM(CAST(rev AS DECIMAL(18,4))) AS DOUBLE), 6) AS mkt_share
-        |FROM l GROUP BY 1""".stripMargin,
-
-    "inverted_index" ->
-      """WITH td AS (
-        |  SELECT DISTINCT doc_id, term FROM (
-        |    SELECT doc_id,
-        |           unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-        |                  x -> x <> '')) AS term
-        |    FROM documents) u),
-        |c AS (SELECT term, count(*) AS n_docs FROM td
-        |      GROUP BY 1 HAVING count(*) >= 2),
-        |p AS (SELECT term,
-        |             array_to_string((list(doc_id ORDER BY doc_id))[1:100], ',') AS postings_csv
-        |      FROM td GROUP BY 1)
-        |SELECT c.term, c.n_docs, p.postings_csv
-        |FROM c JOIN p USING (term)""".stripMargin,
-
-    "quality_filter" ->
-      """WITH aug AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 2000000000,
-        |         array_to_string(
-        |           (list_filter(string_split_regex(trim(text), '\s+'), x -> x <> ''))[1:2], ' ')
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 3000000000,
-        |         text || ' ' || repeat('.', length(text) // 2)
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 4000000000, replace(text, ' ', '') FROM documents),
-        |m AS (SELECT doc_id, text,
-        |        list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks,
-        |        CAST(length(regexp_replace(text, '[^.!?,;:]', '', 'g')) AS BIGINT) AS n_punct
-        |      FROM aug),
-        |r AS (SELECT doc_id,
-        |        CAST(len(toks) AS BIGINT) AS n_words,
-        |        CAST(length(array_to_string(toks, '')) AS BIGINT) AS char_sum,
-        |        n_punct,
-        |        CAST(length(text) AS BIGINT) AS text_len
-        |      FROM m),
-        |f AS (SELECT doc_id,
-        |        (n_words < 5) AS too_short,
-        |        (n_words > 50000) AS too_long,
-        |        (n_words > 0 AND (CAST(char_sum AS DOUBLE) / n_words < 2.0
-        |                          OR CAST(char_sum AS DOUBLE) / n_words > 15.0)) AS word_len,
-        |        (text_len > 0 AND CAST(n_punct AS DOUBLE) / text_len > 0.2) AS high_punct
-        |      FROM r)
-        |SELECT doc_id,
-        |       NOT (too_short OR too_long OR word_len OR high_punct) AS keep,
-        |       concat_ws(',',
-        |         CASE WHEN too_short THEN 'too_short' END,
-        |         CASE WHEN too_long THEN 'too_long' END,
-        |         CASE WHEN word_len THEN 'word_len' END,
-        |         CASE WHEN high_punct THEN 'high_punct' END) AS reasons
-        |FROM f""".stripMargin,
-
-    // HUGEINT products are exact int128 — DuckDB's analog of the Spark
-    // side's DECIMAL(38,0); identical integer comparisons flag the
-    // identical row set.
-    "zscore_outliers" ->
-      """WITH e AS (SELECT event_id, event_type, value,
-        |                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |           FROM events),
-        |st AS (SELECT event_type, count(*) AS n,
-        |              sum(CAST(y AS HUGEINT)) AS s,
-        |              sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS q
-        |       FROM e GROUP BY 1)
-        |SELECT event_id, e.event_type, value
-        |FROM e JOIN st ON e.event_type = st.event_type
-        |WHERE (CAST(n AS HUGEINT) * y - s) * (CAST(n AS HUGEINT) * y - s)
-        |      > 9 * (CAST(n AS HUGEINT) * q - s * s)""".stripMargin,
-
-    // skyline_frontier: the same value-bounded group + running-max
-    // algebra — one row per distinct price, ROWS-framed running max,
-    // frontier = group max that strictly clears every cheaper group.
-    "skyline_frontier" ->
-      """WITH p AS (SELECT p_partkey,
-        |             CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT)
-        |               AS price_cents,
-        |             CAST(p_size AS BIGINT) AS p_size
-        |           FROM part),
-        |g AS (SELECT price_cents, max(p_size) AS gmax FROM p GROUP BY 1),
-        |g2 AS (SELECT price_cents, gmax,
-        |         max(gmax) OVER (ORDER BY price_cents
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |           AS prevmax
-        |       FROM g)
-        |SELECT p.p_partkey, p.price_cents, p.p_size
-        |FROM p JOIN g2 USING (price_cents)
-        |WHERE p.p_size = g2.gmax
-        |  AND (g2.prevmax IS NULL OR g2.gmax > g2.prevmax)""".stripMargin,
-
-    // mad_outliers: the same compressed-histogram rank selection —
-    // 2·median via the two middle order statistics — run twice
-    // (values, then |2y − med2| deviations), then the integer
-    // 2·dev > 3·mad2 flag.
-    "mad_outliers" ->
-      """WITH e AS (SELECT event_id, event_type, value,
-        |                  CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |           FROM events),
-        |n AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-        |      FROM e GROUP BY 1),
-        |h AS (SELECT event_type, y AS v, CAST(count(*) AS BIGINT) AS c
-        |      FROM e GROUP BY 1, 2),
-        |hc AS (SELECT event_type, v, c,
-        |         sum(c) OVER (PARTITION BY event_type ORDER BY v
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM h),
-        |med AS (SELECT hc.event_type, CAST(sum(
-        |          CASE WHEN (n.n + 1) // 2 BETWEEN cum - c + 1 AND cum
-        |               THEN v ELSE 0 END +
-        |          CASE WHEN (n.n + 2) // 2 BETWEEN cum - c + 1 AND cum
-        |               THEN v ELSE 0 END) AS BIGINT) AS m2
-        |        FROM hc JOIN n USING (event_type) GROUP BY 1),
-        |dv AS (SELECT e.event_id, e.event_type, e.value,
-        |              abs(2 * e.y - med.m2) AS dvv
-        |       FROM e JOIN med USING (event_type)),
-        |dh AS (SELECT event_type, dvv AS v, CAST(count(*) AS BIGINT) AS c
-        |       FROM dv GROUP BY 1, 2),
-        |dhc AS (SELECT event_type, v, c,
-        |          sum(c) OVER (PARTITION BY event_type ORDER BY v
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |        FROM dh),
-        |mad AS (SELECT dhc.event_type, CAST(sum(
-        |          CASE WHEN (n.n + 1) // 2 BETWEEN cum - c + 1 AND cum
-        |               THEN v ELSE 0 END +
-        |          CASE WHEN (n.n + 2) // 2 BETWEEN cum - c + 1 AND cum
-        |               THEN v ELSE 0 END) AS BIGINT) AS mad2
-        |        FROM dhc JOIN n USING (event_type) GROUP BY 1)
-        |SELECT d.event_id, d.event_type, d.value
-        |FROM dv d JOIN mad USING (event_type)
-        |WHERE 2 * d.dvv > 3 * mad.mad2""".stripMargin,
-
-    // simpson_audit: same three md5 draws, cleared-denominator rate
-    // comparisons per scope, the computed paradox cell.
-    "simpson_audit" ->
-      """WITH base AS (SELECT
-        |    CAST('0x' || substr(md5('seg:' || CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 2 AS seg,
-        |    CAST('0x' || substr(md5('arm:' || CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 100 AS ha,
-        |    CAST('0x' || substr(md5('cv:' || CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 100 AS hc
-        |  FROM events),
-        |b2 AS (SELECT seg, hc,
-        |         (ha < CASE WHEN seg = 1 THEN 80 ELSE 20 END) AS arm1
-        |       FROM base),
-        |b3 AS (SELECT seg, arm1,
-        |         (hc < CASE WHEN seg = 1 THEN 60 ELSE 20 END
-        |               - CASE WHEN arm1 THEN 5 ELSE 0 END) AS conv
-        |       FROM b2),
-        |sc AS (
-        |  SELECT 'all' AS scope,
-        |    CAST(sum(CASE WHEN NOT arm1 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-        |    CAST(sum(CASE WHEN arm1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |    CAST(sum(CASE WHEN NOT arm1 AND conv THEN 1 ELSE 0 END) AS BIGINT) AS c0,
-        |    CAST(sum(CASE WHEN arm1 AND conv THEN 1 ELSE 0 END) AS BIGINT) AS c1
-        |  FROM b3
-        |  UNION ALL
-        |  SELECT 'seg0',
-        |    CAST(sum(CASE WHEN NOT arm1 THEN 1 ELSE 0 END) AS BIGINT),
-        |    CAST(sum(CASE WHEN arm1 THEN 1 ELSE 0 END) AS BIGINT),
-        |    CAST(sum(CASE WHEN NOT arm1 AND conv THEN 1 ELSE 0 END) AS BIGINT),
-        |    CAST(sum(CASE WHEN arm1 AND conv THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM b3 WHERE seg = 0
-        |  UNION ALL
-        |  SELECT 'seg1',
-        |    CAST(sum(CASE WHEN NOT arm1 THEN 1 ELSE 0 END) AS BIGINT),
-        |    CAST(sum(CASE WHEN arm1 THEN 1 ELSE 0 END) AS BIGINT),
-        |    CAST(sum(CASE WHEN NOT arm1 AND conv THEN 1 ELSE 0 END) AS BIGINT),
-        |    CAST(sum(CASE WHEN arm1 AND conv THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM b3 WHERE seg = 1),
-        |w AS (SELECT scope, n0, n1, c0, c1,
-        |        (c1 * n0 > c0 * n1) AS arm1_wins
-        |      FROM sc),
-        |px AS (SELECT (max(CASE WHEN scope = 'all' AND arm1_wins
-        |                        THEN 1 ELSE 0 END) = 1
-        |          AND max(CASE WHEN scope <> 'all' AND arm1_wins
-        |                       THEN 1 ELSE 0 END) = 0) AS paradox
-        |       FROM w)
-        |SELECT w.scope, w.n0, w.n1, w.c0, w.c1, w.arm1_wins, px.paradox
-        |FROM w CROSS JOIN px""".stripMargin,
-
-    // session_bot_detect: same planted metronome users, lag-window
-    // gaps, cleared-denominator CV² flag in HUGEINT.
-    "session_bot_detect" ->
-      """WITH base AS (
-        |  SELECT user_id, epoch_us(ts) AS tus, event_id FROM events
-        |  UNION ALL
-        |  SELECT 9000001 + b.b AS user_id,
-        |         1704067200000000 + i.i * 60000000 AS tus,
-        |         (9000001 + b.b) * 1000 + i.i AS event_id
-        |  FROM range(0, 3) b(b) CROSS JOIN range(0, 50) i(i)),
-        |g AS (SELECT user_id,
-        |        tus - lag(tus) OVER (PARTITION BY user_id
-        |          ORDER BY tus, event_id) AS g
-        |      FROM base),
-        |st AS (SELECT user_id, CAST(count(*) AS BIGINT) AS m,
-        |         CAST(sum(g) AS BIGINT) AS sg,
-        |         CAST(sum(CAST(g AS HUGEINT) * g) AS HUGEINT) AS q
-        |       FROM g WHERE g IS NOT NULL GROUP BY 1),
-        |f AS (SELECT * FROM st WHERE m >= 19
-        |        AND 20 * (CAST(m AS HUGEINT) * q
-        |                  - CAST(sg AS HUGEINT) * sg)
-        |            < CAST(sg AS HUGEINT) * sg)
-        |SELECT user_id, m + 1 AS n_events,
-        |  (2 * sg + m) // (2 * m) AS mean_gap_us,
-        |  CAST((2 * 1000000 * (CAST(m AS HUGEINT) * q
-        |          - CAST(sg AS HUGEINT) * sg)
-        |        + CAST(sg AS HUGEINT) * sg)
-        |       // (2 * CAST(sg AS HUGEINT) * sg) AS BIGINT) AS cv2_x1e6,
-        |  (user_id >= 9000000) AS is_planted
-        |FROM f""".stripMargin,
-
-    // ab_chisq: same p90 conversion metric, md5 arms + planted lift,
-    // cleared-denominator χ² decision in HUGEINT.
-    "ab_chisq" ->
-      """WITH e AS (SELECT event_id,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |           FROM events),
-        |nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
-        |hb AS (SELECT y, sum(CAST(c AS BIGINT)) OVER (ORDER BY y
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM (SELECT y, count(*) AS c FROM e GROUP BY 1)),
-        |p90 AS (SELECT min(y) AS p FROM hb CROSS JOIN nt
-        |        WHERE cum >= (9 * nt.n + 9) // 10),
-        |base AS (SELECT
-        |    CAST('0x' || substr(md5('ab:' || CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 2 AS arm,
-        |    (y >= p) AS conv1,
-        |    (CAST('0x' || substr(md5('lift:' ||
-        |       CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT) % 10 = 0)
-        |      AS lifted
-        |  FROM e CROSS JOIN p90),
-        |b2 AS (SELECT arm, conv1,
-        |         (conv1 OR (arm = 1 AND lifted)) AS conv2
-        |       FROM base),
-        |t1 AS (SELECT 'aa_calibration' AS test,
-        |         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |         CAST(sum(CASE WHEN arm = 0 AND conv1 THEN 1 ELSE 0 END) AS BIGINT) AS conv_a,
-        |         CAST(sum(CASE WHEN arm = 1 AND conv1 THEN 1 ELSE 0 END) AS BIGINT) AS conv_b
-        |       FROM b2),
-        |t2 AS (SELECT 'ab_planted_lift' AS test,
-        |         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |         CAST(sum(CASE WHEN arm = 0 AND conv2 THEN 1 ELSE 0 END) AS BIGINT) AS conv_a,
-        |         CAST(sum(CASE WHEN arm = 1 AND conv2 THEN 1 ELSE 0 END) AS BIGINT) AS conv_b
-        |       FROM b2),
-        |u AS (SELECT * FROM t1 UNION ALL SELECT * FROM t2),
-        |f AS (SELECT test, n_a, n_b, conv_a, conv_b,
-        |        CAST(conv_a * (n_b - conv_b) - (n_a - conv_a) * conv_b
-        |             AS HUGEINT) AS dif,
-        |        CAST(n_a AS HUGEINT) * n_b * (conv_a + conv_b) *
-        |          (n_a + n_b - conv_a - conv_b) AS den
-        |      FROM u)
-        |SELECT test, n_a, n_b, conv_a, conv_b,
-        |  CAST((100 * (n_a + n_b) * dif * dif) // den AS BIGINT)
-        |    AS chisq_x100,
-        |  (10000 * (n_a + n_b) * dif * dif >
-        |   CAST(38415 AS HUGEINT) * den) AS significant
-        |FROM f""".stripMargin,
-
-    // zonemap_prune: same two layouts (round-robin vs equi-depth on
-    // the compressed histogram), exact nearest-rank p90 predicate,
-    // per-shard max zone maps, prune fractions + computed winner.
-    "zonemap_prune" ->
-      """WITH e AS (SELECT event_id,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS y
-        |           FROM events),
-        |nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM e),
-        |hb AS (SELECT y, sum(CAST(c AS BIGINT)) OVER (ORDER BY y
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |       FROM (SELECT y, count(*) AS c FROM e GROUP BY 1)),
-        |hb2 AS (SELECT y, least(63, ((cum - 1) * 64) // nt.n)
-        |          AS shard_clu, cum
-        |        FROM hb CROSS JOIN nt),
-        |p90 AS (SELECT min(y) AS p FROM hb2 CROSS JOIN nt
-        |        WHERE cum >= (9 * nt.n + 9) // 10),
-        |laid AS (SELECT e.y, p90.p,
-        |           e.event_id % 64 AS shard_nat, h.shard_clu
-        |         FROM e JOIN hb2 h USING (y) CROSS JOIN p90),
-        |zn AS (SELECT shard_nat AS shard, CAST(count(*) AS BIGINT) AS nr,
-        |              max(y) AS zmax, max(p) AS p
-        |       FROM laid GROUP BY 1),
-        |zc AS (SELECT shard_clu AS shard, CAST(count(*) AS BIGINT) AS nr,
-        |              max(y) AS zmax, max(p) AS p
-        |       FROM laid GROUP BY 1),
-        |an AS (SELECT 'natural' AS layout,
-        |         CAST(count(*) AS BIGINT) AS n_shards,
-        |         CAST(sum(CASE WHEN zmax < p THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS n_pruned,
-        |         CAST(sum(nr) AS BIGINT) AS rows_total,
-        |         CAST(sum(CASE WHEN zmax >= p THEN nr ELSE 0 END)
-        |              AS BIGINT) AS rows_scanned
-        |       FROM zn),
-        |ac AS (SELECT 'clustered' AS layout,
-        |         CAST(count(*) AS BIGINT) AS n_shards,
-        |         CAST(sum(CASE WHEN zmax < p THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS n_pruned,
-        |         CAST(sum(nr) AS BIGINT) AS rows_total,
-        |         CAST(sum(CASE WHEN zmax >= p THEN nr ELSE 0 END)
-        |              AS BIGINT) AS rows_scanned
-        |       FROM zc),
-        |w AS (SELECT (ac.n_pruned > an.n_pruned) AS clustered_wins
-        |      FROM ac, an)
-        |SELECT layout, n_shards, n_pruned, rows_total, rows_scanned,
-        |  (2 * 1000000 * n_pruned + n_shards) // (2 * n_shards)
-        |    AS pruned_frac_x1e6,
-        |  w.clustered_wins
-        |FROM (SELECT * FROM an UNION ALL SELECT * FROM ac) u
-        |CROSS JOIN w""".stripMargin,
-
-    "text_normalize" ->
-      """WITH t AS (SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-        |       ' +', ' ', 'g')) AS norm_text
-        |  FROM documents)
-        |SELECT doc_id, norm_text,
-        |       CAST(length(norm_text) AS BIGINT) AS n_chars_norm,
-        |       md5(norm_text) AS norm_md5
-        |FROM t""".stripMargin,
-
-    // The oracle IS the full recompute — merge(history, increment)
-    // must be indistinguishable from one pass over everything.
-    "mv_refresh" ->
-      """WITH e AS (SELECT epoch_us(ts) - epoch_us(ts) % 86400000000 AS day_us,
-        |                  event_type, value FROM events),
-        |a AS (SELECT day_us, event_type, count(*) AS n,
-        |             SUM(CAST(value AS DECIMAL(18,2))) AS sum_v,
-        |             min(value) AS min_value, max(value) AS max_value
-        |      FROM e GROUP BY 1, 2)
-        |SELECT day_us, event_type, n,
-        |  CAST(sum_v AS DOUBLE) AS sum_value, min_value, max_value,
-        |  CAST((2 * CAST(sum_v * 100 AS BIGINT) * 100 + n) // (2 * n) AS DOUBLE)
-        |    / 10000.0 AS avg_value
-        |FROM a""".stripMargin,
-
-    // The oracle IS the full re-join — the four-quadrant incremental
-    // path must be indistinguishable from one pass over everything.
-    "mv_refresh_join" ->
-      """SELECT o_orderpriority, year(o_orderdate) AS o_year,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "share_of_total" ->
-      """WITH a AS (SELECT o_orderpriority,
-        |                  SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |           FROM orders GROUP BY 1)
-        |SELECT o_orderpriority, CAST(rev AS DOUBLE) AS revenue,
-        |       round(CAST(rev AS DOUBLE) / CAST(sum(rev) OVER () AS DOUBLE), 6)
-        |         AS rev_share
-        |FROM a""".stripMargin,
-
-    "grouping_sets" ->
-      """SELECT r_name, n_name, count(*) AS n_cust,
-        |  CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal,
-        |  CASE WHEN r_name IS NOT NULL THEN 0 ELSE 1 END AS set_id
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY GROUPING SETS ((r_name), (n_name))""".stripMargin,
-
-    "profile_table" ->
-      """SELECT count(*) AS n_rows,
-        |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_qty,
-        |  CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_shipdate,
-        |  count(DISTINCT l_returnflag) AS distinct_flags,
-        |  count(DISTINCT l_linestatus) AS distinct_status,
-        |  min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
-        |  min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem""".stripMargin,
-
-    // 2^60 = 1152921504606846976; div/mod 1000 → 1152921504606846 / 976.
-    "mixture_sample" ->
-      """WITH w AS (SELECT source AS stratum,
-        |                  (CAST(substr(source, 4) AS INTEGER) % 4 + 1) * 200 AS permille
-        |           FROM (SELECT DISTINCT source FROM documents) s),
-        |d AS (SELECT doc_id, source,
-        |             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
-        |      FROM documents)
-        |SELECT doc_id, source, permille
-        |FROM d JOIN w ON d.source = w.stratum
-        |WHERE h < permille * 1152921504606846 + (permille * 976) // 1000""".stripMargin,
-
-    "boilerplate_spans" ->
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |u AS (SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS pos FROM t),
-        |sh0 AS (SELECT doc_id, w, lead(w, 1) OVER win AS w1, lead(w, 2) OVER win AS w2
-        |        FROM u WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
-        |sh AS (SELECT DISTINCT doc_id, concat_ws(' ', w, w1, w2) AS s
-        |       FROM sh0 WHERE w2 IS NOT NULL),
-        |f AS (SELECT s FROM sh GROUP BY s HAVING count(*) >= 100),
-        |per AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY 1),
-        |hit AS (SELECT doc_id, count(*) AS nb FROM sh JOIN f USING (s) GROUP BY 1)
-        |SELECT per.doc_id, n_shingles,
-        |       CAST(coalesce(nb, 0) AS BIGINT) AS n_boiler,
-        |       round(CAST(coalesce(nb, 0) AS DOUBLE) / n_shingles, 4) AS boiler_frac
-        |FROM per LEFT JOIN hit ON per.doc_id = hit.doc_id""".stripMargin,
-
-    "rich_customers" -> RichCustomersSql,
-    "lateral_topk" -> LateralTopkSql,
-
-    "ewma" ->
-      """WITH l AS (SELECT user_id,
-        |             list(value ORDER BY epoch_us(ts), event_id) AS vs
-        |           FROM events GROUP BY 1)
-        |SELECT user_id, CAST(len(vs) AS BIGINT) AS n,
-        |       list_reduce(vs, (acc, x) -> 0.9 * acc + 0.1 * x) AS ewma
-        |FROM l""".stripMargin,
-
-    "equidepth_hist" ->
-      """WITH t AS (SELECT event_type, value,
-        |             ntile(10) OVER (PARTITION BY event_type
-        |                             ORDER BY value, event_id) AS decile
-        |           FROM events)
-        |SELECT event_type, decile, count(*) AS n,
-        |       round(min(value), 4) AS lo,
-        |       round(max(value), 4) AS hi
-        |FROM t GROUP BY 1, 2""".stripMargin,
-
-    // All-integer until the closing /100.0 — engine-independent.
-    "equidepth_hist_scale" ->
-      """WITH q AS (SELECT event_type,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS q
-        |           FROM events),
-        |h AS (SELECT event_type, q, count(*) AS cnt FROM q GROUP BY 1, 2),
-        |c AS (SELECT event_type, q, cnt,
-        |        sum(cnt) OVER (PARTITION BY event_type ORDER BY q
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |        sum(cnt) OVER (PARTITION BY event_type) AS total
-        |      FROM h),
-        |b AS (SELECT event_type, cnt, q,
-        |        CAST(least(10, 1 + ((cum - cnt) * 10) // total) AS BIGINT) AS decile
-        |      FROM c)
-        |SELECT event_type, decile, CAST(sum(cnt) AS BIGINT) AS n,
-        |       CAST(min(q) AS DOUBLE) / 100.0 AS lo,
-        |       CAST(max(q) AS DOUBLE) / 100.0 AS hi
-        |FROM b GROUP BY 1, 2""".stripMargin,
-
-    "hierarchy_flatten" ->
-      """WITH RECURSIVE k AS (SELECT o_orderkey AS node FROM orders),
-        |e AS (SELECT node,
-        |        CASE WHEN node >= 10 AND node // 10 IN (SELECT node FROM k)
-        |             THEN node // 10 END AS parent
-        |      FROM k),
-        |anc(node, root, depth) AS (
-        |  SELECT node, node, CAST(0 AS BIGINT) FROM e WHERE parent IS NULL
-        |  UNION ALL
-        |  SELECT e.node, a.root, a.depth + 1
-        |  FROM e JOIN anc a ON e.parent = a.node)
-        |SELECT node, root, depth FROM anc""".stripMargin,
-
-    "table_checksum" ->
-      """WITH h AS (SELECT CAST('0x' || substr(md5(concat_ws('|',
-        |    o_orderkey, o_custkey, o_orderstatus, o_orderpriority,
-        |    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))), 1, 15)
-        |  AS BIGINT) AS h FROM orders)
-        |SELECT count(*) AS n_rows,
-        |       CAST(sum(h) % 2305843009213693951 AS BIGINT) AS checksum
-        |FROM h""".stripMargin,
-
-    "skew_report" ->
-      """WITH c AS (SELECT l_orderkey, count(*) AS n_rows
-        |           FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(n_rows) AS total FROM c)
-        |SELECT l_orderkey, n_rows,
-        |       round(CAST(n_rows AS DOUBLE) / total, 9) AS row_share
-        |FROM c, t
-        |ORDER BY n_rows DESC, l_orderkey LIMIT 20""".stripMargin,
-
-    // benford_audit: the same injected 1e9-scale digit probabilities;
-    // HUGEINT mirrors the DECIMAL(38,0) chi-term algebra.
-    "benford_audit" -> {
-      val vals = BenfordP9.map { case (dg, p) => s"($dg, $p)" }
-        .mkString(", ")
-      s"""WITH c AS (SELECT CAST(floor(l_extendedprice * 100 + 0.5)
-         |             AS BIGINT) AS cents FROM lineitem),
-         |d AS (SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1)
-         |        AS BIGINT) AS digit FROM c),
-         |g AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_obs
-         |      FROM d GROUP BY 1),
-         |t AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n FROM g),
-         |p AS (SELECT * FROM (VALUES $vals) AS v(digit, p9)),
-         |x AS (SELECT g.digit, g.n_obs,
-         |        CAST(t.n AS HUGEINT) * p.p9 AS ed,
-         |        CAST(g.n_obs AS HUGEINT) * 1000000000
-         |          - CAST(t.n AS HUGEINT) * p.p9 AS dev
-         |      FROM g JOIN p ON g.digit = p.digit CROSS JOIN t)
-         |SELECT digit, n_obs, CAST(ed AS BIGINT) AS expected_x1e9,
-         |       CAST((2 * 10000 * dev * dev + 1000000000 * ed)
-         |         // (2 * 1000000000 * ed) AS BIGINT) AS chi_term_x1e4
-         |FROM x ORDER BY digit""".stripMargin
-    },
-
-    "dq_audit" ->
-      """WITH li AS (SELECT CASE WHEN l_orderkey % 13 = 0
-        |                        THEN l_orderkey + 1000000000
-        |                        ELSE l_orderkey END AS lok FROM lineitem)
-        |SELECT 'orphan_lineitem' AS check_name, count(*) AS n_violations
-        |FROM li WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = lok)
-        |UNION ALL
-        |SELECT 'duplicate_order_pk', count(*) FROM (
-        |  SELECT o_orderkey FROM (
-        |    SELECT o_orderkey FROM orders
-        |    UNION ALL
-        |    SELECT o_orderkey FROM orders WHERE o_orderkey % 11 = 0) u
-        |  GROUP BY 1 HAVING count(*) > 1) d
-        |UNION ALL
-        |SELECT 'null_custkey', count(*) FROM orders WHERE o_custkey IS NULL""".stripMargin,
-
-    "full_outer_join" ->
-      """WITH o AS (
-        |  SELECT CASE WHEN o_custkey % 7 = 0 THEN o_custkey + 1000000000
-        |              ELSE o_custkey END AS o_custkey,
-        |         count(*) AS n_orders,
-        |         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |  FROM orders GROUP BY 1)
-        |SELECT coalesce(c_custkey, o_custkey) AS key,
-        |       CASE WHEN c_custkey IS NULL THEN 'order_only'
-        |            WHEN o_custkey IS NULL THEN 'customer_only'
-        |            ELSE 'both' END AS side,
-        |       c_name,
-        |       CAST(coalesce(n_orders, 0) AS BIGINT) AS n_orders,
-        |       sum_price
-        |FROM customer FULL OUTER JOIN o ON c_custkey = o_custkey""".stripMargin,
-
-    // ks_drift: same integer-midpoint split, compressed (type, value)
-    // histogram, deferred common denominator, HALF_UP only at the end.
-    "ks_drift" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) AS tus, value FROM events),
-        |m AS (SELECT (min(tus) + max(tus)) // 2 AS tmid FROM e),
-        |cc AS (SELECT event_type, value,
-        |         CAST(sum(CASE WHEN tus < tmid THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |         CAST(sum(CASE WHEN tus >= tmid THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |       FROM e CROSS JOIN m GROUP BY 1, 2),
-        |w AS (SELECT event_type,
-        |        sum(ca) OVER (PARTITION BY event_type) AS na,
-        |        sum(cb) OVER (PARTITION BY event_type) AS nb,
-        |        abs(sum(cb) OVER (PARTITION BY event_type)
-        |              * sum(ca) OVER (PARTITION BY event_type ORDER BY value
-        |                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            - sum(ca) OVER (PARTITION BY event_type)
-        |              * sum(cb) OVER (PARTITION BY event_type ORDER BY value
-        |                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |          AS gap
-        |      FROM cc),
-        |g AS (SELECT event_type, CAST(na AS BIGINT) AS na,
-        |             CAST(nb AS BIGINT) AS nb, CAST(max(gap) AS BIGINT) AS d_num
-        |      FROM w GROUP BY 1, 2, 3)
-        |SELECT event_type, na, nb, d_num,
-        |       CAST((2000000 * CAST(d_num AS HUGEINT) + CAST(na AS HUGEINT) * nb)
-        |            // (2 * CAST(na AS HUGEINT) * nb) AS BIGINT) AS d_x1e6
-        |FROM g WHERE na > 0 AND nb > 0""".stripMargin,
-
-    // psi_drift: width-5 bins, add-1 smoothing over the observed bin
-    // set, 1e6-floored lns over exact-integer ratios, per-bin HALF_UP
-    // terms (factors share sign, so every term is non-negative).
-    "psi_drift" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) AS tus, value FROM events),
-        |m AS (SELECT (min(tus) + max(tus)) // 2 AS tmid FROM e),
-        |cc AS (SELECT event_type, CAST(floor(value / 5) AS BIGINT) AS bin,
-        |         CAST(sum(CASE WHEN tus < tmid THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-        |         CAST(sum(CASE WHEN tus >= tmid THEN 1 ELSE 0 END) AS BIGINT) AS cb
-        |       FROM e CROSS JOIN m GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(sum(ca) AS BIGINT) AS na,
-        |               CAST(sum(cb) AS BIGINT) AS nb,
-        |               CAST(count(*) AS BIGINT) AS v
-        |        FROM cc GROUP BY 1),
-        |t AS (SELECT cc.event_type, na, nb, v,
-        |        (CAST(ca + 1 AS HUGEINT) * (nb + v)
-        |           - CAST(cb + 1 AS HUGEINT) * (na + v))
-        |          * (CAST(floor(ln(CAST(ca + 1 AS DOUBLE) / CAST(na + v AS DOUBLE))
-        |                        * 1e6 + 0.5) AS BIGINT)
-        |             - CAST(floor(ln(CAST(cb + 1 AS DOUBLE) / CAST(nb + v AS DOUBLE))
-        |                          * 1e6 + 0.5) AS BIGINT)) AS nd
-        |      FROM cc JOIN tot USING (event_type))
-        |SELECT event_type, na, nb, v AS n_bins,
-        |       CAST(sum((2 * nd + CAST(na + v AS HUGEINT) * (nb + v))
-        |                // (2 * CAST(na + v AS HUGEINT) * (nb + v))) AS BIGINT)
-        |         AS psi_x1e6
-        |FROM t GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    // cusum_shift: same centi-quantization, n-scaled centered cumsum,
-    // running min, earliest-argmax detection point via min(ROW()) on
-    // (-e, t, tb) — the mirror of Spark's max(struct(e, -t, -tb)).
-    "cusum_shift" ->
-      """WITH e AS (SELECT event_type AS k, epoch_us(ts) AS t, event_id AS tb,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc
-        |           FROM events),
-        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS n,
-        |               CAST(sum(vc) AS BIGINT) AS s
-        |        FROM e GROUP BY 1),
-        |c AS (SELECT e.k, t, tb, n,
-        |        n * sum(vc) OVER (PARTITION BY e.k ORDER BY t, tb
-        |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |        - row_number() OVER (PARTITION BY e.k ORDER BY t, tb) * s AS cv
-        |      FROM e JOIN tot ON tot.k = e.k),
-        |x AS (SELECT k, t, tb, n,
-        |        cv - min(cv) OVER (PARTITION BY k ORDER BY t, tb
-        |                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |          AS ex
-        |      FROM c),
-        |p AS (SELECT k, n, min(struct_pack(ne := -ex, t := t, tb := tb)) AS m
-        |      FROM x GROUP BY 1, 2)
-        |SELECT k AS event_type, n, CAST(-m.ne AS BIGINT) AS d_num,
-        |       CAST(m.t AS BIGINT) AS cp_tus,
-        |       CAST((2 * -m.ne + n) // (2 * n) AS BIGINT) AS d_x100
-        |FROM p""".stripMargin,
-
-    // conversion_attribution: same running last-touch frame (IGNORE
-    // NULLS), 7-day lookback, HALF_UP mean lag.
-    "conversion_attribution" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
-        |           FROM events),
-        |t AS (SELECT user_id, tus, event_id, event_type,
-        |        last_value(CASE WHEN event_type <> 'purchase'
-        |                        THEN struct_pack(t_tus := tus,
-        |                                         t_type := event_type) END
-        |                   IGNORE NULLS)
-        |          OVER (PARTITION BY user_id ORDER BY tus, event_id
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |          AS touch
-        |      FROM e),
-        |p AS (SELECT CASE WHEN touch IS NOT NULL
-        |                   AND tus - touch.t_tus <= 604800000000
-        |                  THEN touch.t_type ELSE 'none' END AS touch_type,
-        |             CASE WHEN touch IS NOT NULL
-        |                   AND tus - touch.t_tus <= 604800000000
-        |                  THEN tus - touch.t_tus END AS lag_us
-        |      FROM t WHERE event_type = 'purchase')
-        |SELECT touch_type, CAST(count(*) AS BIGINT) AS n_purchases,
-        |       CASE WHEN sum(lag_us) IS NULL THEN NULL
-        |            ELSE CAST((2 * sum(lag_us) + count(*)) // (2 * count(*))
-        |                 AS BIGINT) END AS avg_lag_us
-        |FROM p GROUP BY 1""".stripMargin,
-
-    // burst_detect: same (type, day) collapse, RANGE window baseline,
-    // HALF_UP ratio.
-    "burst_detect" ->
-      """WITH e AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day
-        |           FROM events),
-        |c AS (SELECT event_type, day, CAST(count(*) AS BIGINT) AS c
-        |      FROM e GROUP BY 1, 2),
-        |w AS (SELECT event_type, day, c,
-        |        sum(c) OVER (PARTITION BY event_type ORDER BY day
-        |          RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING) AS base_sum,
-        |        count(c) OVER (PARTITION BY event_type ORDER BY day
-        |          RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING) AS base_days
-        |      FROM c)
-        |SELECT event_type, day, c, CAST(base_sum AS BIGINT) AS base_sum,
-        |       CAST(base_days AS BIGINT) AS base_days,
-        |       CAST((2 * 100 * c * base_days + base_sum) // (2 * base_sum)
-        |            AS BIGINT) AS burst_x100,
-        |       ((2 * 100 * c * base_days + base_sum) // (2 * base_sum) >= 200)
-        |         AS is_burst
-        |FROM w WHERE base_sum IS NOT NULL AND base_sum > 0""".stripMargin,
-
-    // k_anonymity: the same two-level ladder — small (nation, segment)
-    // classes re-count at (region, segment), stragglers suppress.
-    "k_anonymity" ->
-      """WITH base AS (SELECT c_custkey, n_name AS nation, r_name AS region,
-        |                     c_mktsegment AS segment
-        |              FROM customer
-        |              JOIN nation ON n_nationkey = c_nationkey
-        |              JOIN region ON r_regionkey = n_regionkey),
-        |g0 AS (SELECT nation, region, segment, CAST(count(*) AS BIGINT) AS n
-        |       FROM base GROUP BY 1, 2, 3),
-        |k0 AS (SELECT CAST(0 AS BIGINT) AS level, nation AS geo, segment, n
-        |       FROM g0 WHERE n >= 10),
-        |r0 AS (SELECT base.* FROM base
-        |       JOIN g0 ON g0.nation = base.nation AND g0.segment = base.segment
-        |                AND g0.region = base.region
-        |       WHERE g0.n < 10),
-        |g1 AS (SELECT region, segment, CAST(count(*) AS BIGINT) AS n
-        |       FROM r0 GROUP BY 1, 2),
-        |k1 AS (SELECT CAST(1 AS BIGINT) AS level, region AS geo, segment, n
-        |       FROM g1 WHERE n >= 10),
-        |r1 AS (SELECT r0.* FROM r0
-        |       JOIN g1 ON g1.region = r0.region AND g1.segment = r0.segment
-        |       WHERE g1.n < 10),
-        |k2 AS (SELECT CAST(2 AS BIGINT) AS level, '*' AS geo, '*' AS segment,
-        |              CAST(count(*) AS BIGINT) AS n
-        |       FROM r1 HAVING count(*) > 0)
-        |SELECT level, geo, segment, n FROM k0
-        |UNION ALL SELECT level, geo, segment, n FROM k1
-        |UNION ALL SELECT level, geo, segment, n FROM k2""".stripMargin,
-
-    // l_diversity: same K=10 classes, 3-band exact-cents sensitive
-    // attribute, count-distinct per class.
-    "l_diversity" ->
-      """WITH base AS (
-        |  SELECT n_name AS nation, c_mktsegment AS segment,
-        |         CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-        |                   AS BIGINT) < 0 THEN 0
-        |              WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-        |                   AS BIGINT) < 500000 THEN 1
-        |              ELSE 2 END AS band
-        |  FROM customer JOIN nation ON n_nationkey = c_nationkey),
-        |cls AS (SELECT nation, segment, CAST(count(*) AS BIGINT) AS n
-        |        FROM base GROUP BY 1, 2 HAVING count(*) >= 10),
-        |dv AS (SELECT b.nation, b.segment,
-        |              CAST(count(DISTINCT b.band) AS BIGINT) AS n_bands
-        |       FROM base b JOIN cls USING (nation, segment)
-        |       GROUP BY 1, 2)
-        |SELECT cls.nation, cls.segment, cls.n, dv.n_bands,
-        |       (dv.n_bands >= 3) AS diverse
-        |FROM cls JOIN dv USING (nation, segment)""".stripMargin,
-
-    // t_closeness: same classes/bands; ordered-attribute EMD as mean
-    // |cumulative difference| with cleared denominators, HUGEINT-routed.
-    "t_closeness" ->
-      """WITH base AS (
-        |  SELECT n_name AS nation, c_mktsegment AS segment,
-        |         CASE WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-        |                   AS BIGINT) < 0 THEN 0
-        |              WHEN CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100
-        |                   AS BIGINT) < 500000 THEN 1
-        |              ELSE 2 END AS band
-        |  FROM customer JOIN nation ON n_nationkey = c_nationkey),
-        |cls AS (SELECT nation, segment, CAST(count(*) AS BIGINT) AS n
-        |        FROM base GROUP BY 1, 2 HAVING count(*) >= 10),
-        |gb AS (SELECT band, CAST(count(*) AS BIGINT) AS g
-        |       FROM base GROUP BY 1),
-        |tot AS (SELECT CAST(sum(g) AS BIGINT) AS nn,
-        |               CAST(count(*) AS BIGINT) AS nb FROM gb),
-        |cb AS (SELECT b.nation, b.segment, b.band,
-        |              CAST(count(*) AS BIGINT) AS c
-        |       FROM base b JOIN cls USING (nation, segment)
-        |       GROUP BY 1, 2, 3),
-        |grid AS (SELECT cls.nation, cls.segment, cls.n, gb.band, gb.g,
-        |                coalesce(cb.c, 0) AS c
-        |         FROM cls CROSS JOIN gb
-        |         LEFT JOIN cb ON cb.nation = cls.nation
-        |           AND cb.segment = cls.segment AND cb.band = gb.band),
-        |cum AS (SELECT nation, segment, n,
-        |          sum(c * nn - g * n) OVER (PARTITION BY nation, segment
-        |            ORDER BY band
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |            AS cumv
-        |        FROM grid CROSS JOIN tot),
-        |ag AS (SELECT nation, segment, n,
-        |              CAST(sum(abs(cumv)) AS HUGEINT) AS dsum
-        |       FROM cum GROUP BY 1, 2, 3),
-        |e AS (SELECT a.nation, a.segment, a.n,
-        |        CAST((2 * 1000000 * a.dsum +
-        |              (t.nb - 1) * CAST(a.n AS HUGEINT) * t.nn) //
-        |             (2 * (t.nb - 1) * CAST(a.n AS HUGEINT) * t.nn)
-        |             AS BIGINT) AS emd_x1e6
-        |      FROM ag a CROSS JOIN tot t)
-        |SELECT nation, segment, n, emd_x1e6,
-        |       (emd_x1e6 <= 200000) AS t_close
-        |FROM e""".stripMargin,
-
-    // winsorize: same compressed-histogram layout, nearest-rank
-    // bounds, clamp + clip counts + signed HALF_UP winsorized mean.
-    "winsorize" ->
-      """WITH h AS (SELECT event_type,
-        |             CAST(floor(value * 100 + 0.5) AS BIGINT) AS q,
-        |             CAST(count(*) AS BIGINT) AS c
-        |           FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, q, c,
-        |        sum(c) OVER (PARTITION BY event_type ORDER BY q
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |        sum(c) OVER (PARTITION BY event_type) AS n
-        |      FROM h),
-        |b AS (SELECT event_type, CAST(n AS BIGINT) AS n,
-        |        min(CASE WHEN cum >= (5 * n + 99) // 100 THEN q END) AS lo_c,
-        |        min(CASE WHEN cum >= (95 * n + 99) // 100 THEN q END) AS hi_c
-        |      FROM w GROUP BY 1, 2),
-        |a AS (SELECT h.event_type, n, lo_c, hi_c,
-        |        CAST(sum(CASE WHEN q < lo_c THEN c ELSE 0 END) AS BIGINT)
-        |          AS n_clip_lo,
-        |        CAST(sum(CASE WHEN q > hi_c THEN c ELSE 0 END) AS BIGINT)
-        |          AS n_clip_hi,
-        |        CAST(sum(greatest(least(q, hi_c), lo_c) * c) AS BIGINT) AS sw
-        |      FROM h JOIN b ON b.event_type = h.event_type
-        |      GROUP BY 1, 2, 3, 4)
-        |SELECT event_type, n, lo_c, hi_c, n_clip_lo, n_clip_hi,
-        |       CASE WHEN sw >= 0 THEN (2 * sw + n) // (2 * n)
-        |            ELSE -((2 * -sw + n) // (2 * n)) END AS wmean_c
-        |FROM a""".stripMargin,
-
-    // event_transitions: same per-user lead() pairing, HALF_UP
-    // conditional probabilities.
-    "event_transitions" ->
-      """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
-        |           FROM events),
-        |p AS (SELECT event_type AS from_type,
-        |        lead(event_type, 1) OVER (PARTITION BY user_id
-        |                                  ORDER BY tus, event_id) AS to_type
-        |      FROM e),
-        |c AS (SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n_trans
-        |      FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_type, CAST(sum(n_trans) AS BIGINT) AS n_from
-        |      FROM c GROUP BY 1)
-        |SELECT c.from_type, to_type, n_trans, n_from,
-        |       (2 * 1000000 * n_trans + n_from) // (2 * n_from) AS p_x1e6
-        |FROM c JOIN t ON t.from_type = c.from_type""".stripMargin,
-
-    // funnel_windowed: the same earliest-anchor chain — per-stage
-    // conditional mins, strict ordering, 7-day anchor window, HALF_UP
-    // mean lag.
-    "funnel_windowed" ->
-      """WITH e AS (SELECT user_id AS u, epoch_us(ts) AS t, event_type AS et
-        |           FROM events),
-        |s1 AS (SELECT u, min(t) AS t1 FROM e WHERE et = 'view' GROUP BY 1),
-        |s2 AS (SELECT e.u, t1, min(t) AS tk FROM e JOIN s1 ON s1.u = e.u
-        |       WHERE et = 'click' AND t > t1 AND t <= t1 + 604800000000
-        |       GROUP BY 1, 2),
-        |s3 AS (SELECT e.u, s2.t1, min(t) AS tk FROM e JOIN s2 ON s2.u = e.u
-        |       WHERE et = 'purchase' AND t > s2.tk AND t <= s2.t1 + 604800000000
-        |       GROUP BY 1, 2)
-        |SELECT CAST(1 AS BIGINT) AS stage, 'view' AS stage_name,
-        |       CAST(count(*) AS BIGINT) AS n_users,
-        |       CAST(0 AS BIGINT) AS avg_lag_us FROM s1
-        |UNION ALL
-        |SELECT 2, 'click', CAST(count(*) AS BIGINT),
-        |       CAST((2 * sum(tk - t1) + count(*)) // (2 * count(*)) AS BIGINT)
-        |FROM s2
-        |UNION ALL
-        |SELECT 3, 'purchase', CAST(count(*) AS BIGINT),
-        |       CAST((2 * sum(tk - t1) + count(*)) // (2 * count(*)) AS BIGINT)
-        |FROM s3""".stripMargin
-  )
+  val all: Seq[Query] =
+    TimeSeriesQueries.all ++ StatTestQueries.all ++ GovernanceQueries.all ++
+      ProfilingQueries.all ++ BusinessQueries.all
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Query.builds(all)
+  val oracleSql: Map[String, String] = Query.oracles(all)
 }

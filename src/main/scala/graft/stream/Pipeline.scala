@@ -140,57 +140,29 @@ object Pipeline {
     * watermark passes the interval bound (state O(window), not
     * O(stream)); Spark requires exactly this combination — equality
     * key + two-sided event-time bound — to plan a state-bounded
-    * streaming join. */
+    * streaming join, whatever the join type.
+    *
+    * `joinType` is `inner`, `left_outer` or `full_outer`. The outer
+    * forms emit unmatched events null-padded: "readings that had no
+    * preceding alert" (left) and also "alerts that no reading
+    * followed" (full). An unmatched left row can only be emitted once
+    * the left watermark passes its interval (before that a match could
+    * still arrive), an unmatched right row once the right watermark
+    * passes `rightTime + lookback`; so outer results trail the inner
+    * ones by the watermark delay — same rows as a batch join on the
+    * closed stream, later arrival. Outer joins add no state, only the
+    * "emit leftover as null-padded on eviction" action. `key` is the
+    * coalesce of both sides' keys, which a full outer join needs for
+    * its right-only rows and which is the left key otherwise. */
   def correlate(
       left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String, lookback: String): DataFrame = {
-    val r = right.withColumnRenamed(key, s"__rk")
-    left.join(r,
-      expr(s"$key = __rk AND " +
-        s"$rightTime BETWEEN $leftTime - INTERVAL $lookback AND $leftTime"))
-      .drop("__rk")
-  }
-
-  /** LEFT OUTER variant of [[correlate]]: left events with NO matching
-    * right event still emit (null-padded) — "readings that had no
-    * preceding alert" as a stream. The null row for an unmatched left
-    * event can only be emitted once the left-side watermark passes the
-    * event's interval (before that a match could still arrive), so
-    * outer results trail the inner ones by the watermark delay — same
-    * rows as a batch left join on the closed stream, later arrival.
-    * State bounds are identical to the inner form: equality key +
-    * two-sided time bound is what lets Spark purge state at the
-    * watermark instead of holding both streams forever. */
-  def correlateOuter(
-      left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String, lookback: String): DataFrame = {
+      leftTime: String, rightTime: String, lookback: String,
+      joinType: String): DataFrame = {
     val r = right.withColumnRenamed(key, s"__rk")
     left.join(r,
       expr(s"$key = __rk AND " +
         s"$rightTime BETWEEN $leftTime - INTERVAL $lookback AND $leftTime"),
-      "left_outer")
-      .drop("__rk")
-  }
-
-  /** FULL OUTER variant of [[correlate]]: unmatched events on EITHER
-    * side emit null-padded — readings with no preceding alert AND
-    * alerts that no reading followed, in one stream. Emission timing
-    * is per-side: an unmatched left row finalizes when the left
-    * watermark passes its interval, an unmatched right row when the
-    * right watermark passes `rightTime + lookback` (the last instant a
-    * left partner could still arrive). State bounds are unchanged from
-    * the inner form — the equality key + two-sided event-time bound is
-    * what lets Spark purge both sides' state at the watermark; full
-    * outer adds no state, only the "emit leftover as null-padded on
-    * eviction" action for both stores. */
-  def correlateFull(
-      left: DataFrame, right: DataFrame, key: String,
-      leftTime: String, rightTime: String, lookback: String): DataFrame = {
-    val r = right.withColumnRenamed(key, s"__rk")
-    left.join(r,
-      expr(s"$key = __rk AND " +
-        s"$rightTime BETWEEN $leftTime - INTERVAL $lookback AND $leftTime"),
-      "full_outer")
+      joinType)
       .withColumn(key, coalesce(col(key), col("__rk")))
       .drop("__rk")
   }

@@ -88,7 +88,7 @@ class PlanSpec extends SparkSpec {
     // the pushed-down predicate — guide §4.4, measured 2×), and the
     // plan carries no aggregate and no sort at all.
     import org.apache.spark.sql.functions.col
-    val docs = queries.ExtQueries.withNearDups(Tables.documents(spark, sf))
+    val docs = queries.DedupQueries.withNearDups(Tables.documents(spark, sf))
     val p = graft.ext.Dedup.minhashSignatures(docs, col("doc_id"), col("text"))
       .queryExecution.executedPlan.toString
     assert("minhash_sig_tokens".r.findAllIn(p).length == 1, p)

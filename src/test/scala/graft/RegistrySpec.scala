@@ -65,4 +65,41 @@ class RegistrySpec extends AnyFunSuite {
       dup = a.intersect(b)
     } assert(dup.isEmpty, s"$an and $bn both define: $dup")
   }
+
+  private val modules = {
+    import graft.queries._
+    Seq(
+      "ParityQueries" -> ParityQueries.all,
+      "BenchQueries" -> BenchQueries.all,
+      "ExtQueries" -> ExtQueries.all,
+      "AnalyticsQueries" -> AnalyticsQueries.all)
+  }
+
+  test("the registry holds 264 queries and 264 oracles, each name declared once") {
+    for ((m, qs) <- modules) {
+      val twice = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+      assert(twice.isEmpty, s"$m declares more than once: $twice")
+    }
+    val declared = modules.flatMap(_._2.map(_.name))
+    assert(declared.distinct.size == declared.size,
+      s"declared in two modules: ${declared.diff(declared.distinct)}")
+    assert(declared.size == 264)
+    assert(SparkEntry.queries.size == 264)
+    assert(SparkEntry.oracleSql.size == 264)
+  }
+
+  test("a repeated query name fails loudly instead of keeping the last") {
+    val q = graft.queries.Query("q", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](graft.queries.Query.builds(Seq(q, q)))
+    assert(e.getMessage.contains("q"))
+  }
+
+  test("README's registry counts match SparkEntry") {
+    val src = scala.io.Source.fromFile("README.md", "UTF-8")
+    val readme = try src.mkString finally src.close()
+    val m = """\*\*(\d+) queries, (\d+) DuckDB-oracled\*\*""".r.findFirstMatchIn(readme)
+    assert(m.isDefined, "README lost its registry counts")
+    assert(m.get.group(1).toInt == SparkEntry.queries.size)
+    assert(m.get.group(2).toInt == SparkEntry.oracleSql.size)
+  }
 }

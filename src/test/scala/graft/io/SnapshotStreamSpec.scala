@@ -301,6 +301,24 @@ class SnapshotStreamSpec extends SparkSpec with graft.LowStatePartitions {
     assert(replayed === streamed.count(_.getLong(3) >= 1L))
   }
 
+  test("CDF counts duplicates: a rewrite dropping one of two identical rows emits exactly one delete") {
+    val lake = Snapshot.Lake(spark,
+      Files.createTempDirectory("snap-cdf-dup-").toString,
+      statsCols = Seq("k"), changeDataFeed = true)
+    lake.append(Seq((1L, "a"), (1L, "a"), (2L, "b")).toDF("k", "v")) // v0
+    lake.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))         // v1
+    assert(lake.commits.find(_.version == 1).get.cdcFiles.nonEmpty)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "v", "_change_type", "_commit_version")
+        .as[(Long, String, String, Long)].collect().toSeq
+    val want = Seq((1L, "a", "delete", 1L))
+    assert(rows(lake.changesByVersion(0, 1)) === want)
+    // the writer-side change file serves the same single delete
+    assert(rows(spark.read.format(Fmt).option("readChangeFeed", "true")
+      .option("startingVersion", "1").option("endingVersion", "1")
+      .load(lake.root)) === want)
+  }
+
   test("append-only guard: a rewrite commit fails the stream; ignoreChanges accepts") {
     val lake = freshLake()
     lake.append(kv(0, 50))

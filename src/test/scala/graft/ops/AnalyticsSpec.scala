@@ -434,7 +434,7 @@ class AnalyticsSpec extends SparkSpec {
     val baskets = li.distinct.groupBy(_._1).values
       .map(_.map(_._2).toSet)
       .filter(s => s.size >= 2 &&
-        s.size <= graft.queries.AnalyticsQueries.MaxBasketItems)
+        s.size <= graft.queries.BusinessQueries.MaxBasketItems)
       .toSeq
     val nB = baskets.size.toLong
     val ic = baskets.flatten.groupBy(identity).map { case (i, xs) =>

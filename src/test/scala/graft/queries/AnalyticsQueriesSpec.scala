@@ -231,7 +231,7 @@ class AnalyticsQueriesSpec extends SparkSpec {
     // digits is n·Σp9 exactly (Σ of the 9 rounded constants is
     // 1e9 + 1, not 1e9 — the identity holds either way).
     val expSum = out.map(t => BigInt(t._3)).sum
-    val p9 = AnalyticsQueries.BenfordP9.toMap
+    val p9 = GovernanceQueries.BenfordP9.toMap
     val want = out.map(t => BigInt(n) * p9(t._1)).sum
     assert(expSum === want, s"expected mass $expSum vs $want")
   }

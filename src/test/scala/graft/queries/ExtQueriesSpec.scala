@@ -14,25 +14,25 @@ class ExtQueriesSpec extends SparkSpec {
       .select(col("id").as("doc_id"),
         concat_ws(" ", lit("alpha beta gamma delta epsilon zeta"),
           col("id").cast("string")).as("text"))
-    val out = ExtQueries.withNearDups(docs)
+    val out = DedupQueries.withNearDups(docs)
     assert(out.count() == 2L * n)
     assert(out.select("doc_id").distinct().count() == 2L * n)
     // originals and perturbed copies occupy provably disjoint id ranges
     val (loMax, hiMin) = (
-      out.filter(col("doc_id") < ExtQueries.NearDupOffset).agg(max("doc_id")).as[Long].head(),
-      out.filter(col("doc_id") >= ExtQueries.NearDupOffset).agg(min("doc_id")).as[Long].head())
-    assert(loMax < ExtQueries.NearDupOffset && hiMin >= ExtQueries.NearDupOffset)
+      out.filter(col("doc_id") < DedupQueries.NearDupOffset).agg(max("doc_id")).as[Long].head(),
+      out.filter(col("doc_id") >= DedupQueries.NearDupOffset).agg(min("doc_id")).as[Long].head())
+    assert(loMax < DedupQueries.NearDupOffset && hiMin >= DedupQueries.NearDupOffset)
   }
 
   test("near-dup pairing joins originals to their own perturbed copy only") {
     val docs = Seq((7L, "one two three four five six seven eight"))
       .toDF("doc_id", "text")
-    val rows = ExtQueries.withNearDups(docs).collect()
+    val rows = DedupQueries.withNearDups(docs).collect()
     assert(rows.length == 2, rows.mkString(", "))
     val both = rows.map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(both.keySet == Set(7L, 7L + ExtQueries.NearDupOffset))
+    assert(both.keySet == Set(7L, 7L + DedupQueries.NearDupOffset))
     // perturbed copy drops the last 3 tokens
-    assert(both(7L + ExtQueries.NearDupOffset) == "one two three four five")
+    assert(both(7L + DedupQueries.NearDupOffset) == "one two three four five")
   }
 
   test("rouge_n: prefix candidates score precision exactly 1; F cells bounded") {
@@ -147,12 +147,12 @@ class ExtQueriesSpec extends SparkSpec {
       // A perturbed copy is its original minus the last 3 tokens, so
       // every one of its 8-token windows also occurs in the original —
       // dup fraction must be exactly 1.0 for all copies.
-      val copies = out.filter(col("doc_id") >= ExtQueries.NearDupOffset)
+      val copies = out.filter(col("doc_id") >= DedupQueries.NearDupOffset)
       assert(copies.count() > 0)
       assert(copies.filter(col("dup_frac_x1e6") =!= 1000000L).isEmpty,
         "every near-dup copy's windows all recur in its original")
       // And symmetrically the originals' matching prefixes are flagged.
-      assert(out.filter(col("doc_id") < ExtQueries.NearDupOffset &&
+      assert(out.filter(col("doc_id") < DedupQueries.NearDupOffset &&
         col("dup_windows") > 0).count() > 0)
       // Sanity: fraction bounded, windows consistent.
       assert(out.filter(col("dup_windows") > col("n_windows")).isEmpty)
@@ -245,7 +245,7 @@ class ExtQueriesSpec extends SparkSpec {
       // smaller group id is impossible by construction (originals have
       // smaller ids) — so instead assert the invariant directly: no
       // group member outscores the winner. Recompute member qualities.
-      val docs = ExtQueries.withNearDups(
+      val docs = DedupQueries.withNearDups(
         graft.Tables.documents(spark, sf).select(col("doc_id"), col("text")))
       val toks = size(graft.ext.TextOps.tokens(col("text"))).cast("long")
       val len = length(col("text")).cast("long")
@@ -607,11 +607,11 @@ class ExtQueriesSpec extends SparkSpec {
     val auc = row.getAs[Long]("auc_x1e6")
     // the axis bound is the whole point: the cumulative window input
     // can never exceed AucBuckets rows
-    assert(nBuckets >= 2L && nBuckets <= ExtQueries.AucBuckets.toLong,
-      s"bucket frame $nBuckets outside (2, ${ExtQueries.AucBuckets}]")
+    assert(nBuckets >= 2L && nBuckets <= EvalQueries.AucBuckets.toLong,
+      s"bucket frame $nBuckets outside (2, ${EvalQueries.AucBuckets}]")
     // quantization really ENGAGES at this SF: strictly more distinct
     // raw held-out scores than buckets, so ties are being created
-    val rawDistinct = ExtQueries.nbScores(spark, sf)
+    val rawDistinct = EvalQueries.nbScores(spark, sf)
       .filter(!col("is_train")).select("score").distinct().count()
     assert(rawDistinct > nBuckets,
       s"quantization inert: $rawDistinct distinct raw scores in $nBuckets buckets")

@@ -181,7 +181,7 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
       .select(col("machine_id"), col("value").as("alert_value"),
         col("event_time").as("alert_time"))
     val joined = Pipeline.correlate(l, r, "machine_id",
-      "event_time", "alert_time", "30 SECONDS")
+      "event_time", "alert_time", "30 SECONDS", "inner")
       .select(col("machine_id"),
         date_format(col("event_time"), "HH:mm:ss").as("rt"),
         date_format(col("alert_time"), "HH:mm:ss").as("at"))
@@ -221,7 +221,7 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
       .select(col("machine_id"), col("value").as("alert_value"),
         col("event_time").as("alert_time"))
     val joined = Pipeline.correlate(l, r, "machine_id",
-      "event_time", "alert_time", "30 SECONDS")
+      "event_time", "alert_time", "30 SECONDS", "inner")
     val name = s"ssjstate${System.nanoTime()}"
     val q = joined.writeStream.outputMode("append")
       .format("memory").queryName(name).start()
@@ -256,8 +256,8 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     val r = Pipeline.prepare(alerts.toDF(), watermark = "5 seconds")
       .select(col("machine_id"), col("value").as("alert_value"),
         col("event_time").as("alert_time"))
-    val joined = Pipeline.correlateOuter(l, r, "machine_id",
-      "event_time", "alert_time", "30 SECONDS")
+    val joined = Pipeline.correlate(l, r, "machine_id",
+      "event_time", "alert_time", "30 SECONDS", "left_outer")
       .select(col("machine_id"),
         date_format(col("event_time"), "HH:mm:ss").as("rt"),
         date_format(col("alert_time"), "HH:mm:ss").as("at"))
@@ -292,8 +292,8 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     val r = Pipeline.prepare(alerts.toDF(), watermark = "5 seconds")
       .select(col("machine_id"), col("value").as("alert_value"),
         col("event_time").as("alert_time"))
-    val joined = Pipeline.correlateFull(l, r, "machine_id",
-      "event_time", "alert_time", "30 SECONDS")
+    val joined = Pipeline.correlate(l, r, "machine_id",
+      "event_time", "alert_time", "30 SECONDS", "full_outer")
       .select(col("machine_id"),
         date_format(col("event_time"), "HH:mm:ss").as("rt"),
         date_format(col("alert_time"), "HH:mm:ss").as("at"))
