@@ -108,6 +108,10 @@ object Bench {
     }
   }
 
+  /** The minima file of a run at `sfDir` on `cores` cores. */
+  def minimaName(sfDir: String, cores: Int): String =
+    s"BENCH_MINIMA_${new java.io.File(sfDir).getName}_c$cores.json"
+
   private def oneMin(s: String): Option[Double] =
     s.split(",").headOption.flatMap(_.toDoubleOption)
 
@@ -116,9 +120,13 @@ object Bench {
     * `probes` waits of `sleepSec` for a quiet machine. */
   final case class Passes(runs: Int, sleepSec: Int, probes: Int, extra: Int)
 
-  /** Times `names` in round-robin passes, writes `BENCH_MINIMA_<sf>.json`
-    * and `BENCH_DETAIL.json` under `outDir`, prints the stdout line and
-    * returns the names of the queries that failed in every pass. */
+  /** Times `names` in round-robin passes, writes
+    * `BENCH_MINIMA_<sf>_c<cores>.json` and `BENCH_DETAIL.json` under
+    * `outDir`, prints the stdout line and returns the names of the
+    * queries that failed in every pass. A query's time is its build plus
+    * a write of its full output to the `noop` sink, the plan whose rows
+    * `Verify` hands to the oracle; a `count()` would let Catalyst prune
+    * every column the count does not need. */
   def suite(spark: SparkSession, sfDir: String,
       names: Seq[(String, (SparkSession, String) => DataFrame)], outDir: String,
       passes: Passes, loadStart: String = loadavg(), quietWaitSec: Int = 0,
@@ -163,7 +171,7 @@ object Bench {
         clearAllState(spark)
         val t0 = System.nanoTime()
         val status =
-          try { fn(spark, sfDir).count(); "ok" }
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); "ok" }
           catch { case t: Throwable => s"${t.getClass.getSimpleName}: ${t.getMessage}" }
         val sec = (System.nanoTime() - t0) / 1e9
         samples(name) :+= ((sec, status))
@@ -234,14 +242,15 @@ object Bench {
     val failedNames = results.filter(_._4 != "ok").map(_._1)
     val total = results.filter(_._4 == "ok").map(_._2).sum
     // Mechanical per-query regression tracking: diff this run's
-    // minima against the COMMITTED per-SF minima file and surface
+    // minima against the COMMITTED minima file and surface
     // >20% carried-query regressions in one artifact field instead of
-    // hand-joining rounds. The file is PER SF (BENCH_MINIMA_sf0.1
-    // .json etc.) so a smoke run at another scale can never clobber
-    // the recorded baseline; it is rewritten after each run — commit
-    // it with each recorded round.
-    val minimaPath = java.nio.file.Paths.get(outDir,
-      s"BENCH_MINIMA_${new java.io.File(sfDir).getName}.json")
+    // hand-joining rounds. The file is PER SF AND CORE COUNT
+    // (BENCH_MINIMA_sf0.1_c8.json etc.) so a smoke run at another scale
+    // or on another core count can never clobber the recorded baseline;
+    // it is rewritten after each run — commit it with each recorded
+    // round.
+    val minimaPath = java.nio.file.Paths.get(outDir, minimaName(sfDir,
+      spark.sparkContext.defaultParallelism))
     val prevMinima: Map[String, Double] =
       try {
         val txt = new String(java.nio.file.Files.readAllBytes(minimaPath),

@@ -26,6 +26,9 @@ import org.apache.spark.sql.SparkSession
   *    `FileSystem` per scheme and user, whatever the conf, so these confs
   *    take effect only when a session built here is the first to resolve
   *    `file:` in the JVM.
+  *  - a Hadoop conf without per-key provenance
+  *    ([[graft.io.HadoopConfPlugin]], set as `spark.plugins`), so that the
+  *    conf every file-write task carries is not a gzip stream per key.
   */
 object GraftSession {
   val Cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -91,8 +94,8 @@ object GraftSession {
     *    stack trace by every glob read of a sink's files: `PipelineSpec`
     *    checks that a read of a streaming file sink's directory still
     *    honours its `_spark_metadata` log.
-    * Two further messages are dropped by text, each from a logger
-    * whose other warnings stay ([[QuietMessages]]).
+    * Three further messages are dropped by text, each from a logger
+    * whose other messages stay ([[QuietMessages]]).
     * Spark's own logging is initialised first, since its first use
     * replaces the log4j configuration. */
   private lazy val quietLoggers: Unit = {
@@ -118,18 +121,25 @@ object GraftSession {
     ctx.updateLoggers()
   }
 
-  /** Warnings dropped by text: every streaming query start logs the
-    * first, and every stateful one the second, because every graft
-    * session turns AQE on for its batch queries and Spark turns it off
-    * for streams. They said nothing a run can act on (10 and 5 lines
-    * per benchmark backfill, 71 and 32 per test run). The loggers'
-    * other warnings, such as `MicroBatchExecution`'s, still get
-    * through (`GraftSessionSpec`). */
+  /** Messages dropped by text. Every streaming query start logs the
+    * first warning, and every stateful one the second, because every
+    * graft session turns AQE on for its batch queries and Spark turns it
+    * off for streams. They said nothing a run can act on (10 and 5 lines
+    * per benchmark backfill, 71 and 32 per test run).
+    * The third is an ERROR with a second stack trace for a query that
+    * already failed: once a session has used `Dataset.observe` (as
+    * `NightlyEtl.runTable` does), Spark's `ObservationManager` listener,
+    * an object named `Listener`, re-reads the failed plan and rethrows
+    * its error for every query that fails in planning. Other listeners'
+    * errors and the loggers' other messages still get through
+    * (`GraftSessionSpec`). */
   val QuietMessages: Seq[(String, String)] = Seq(
     "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream" ->
       "spark.sql.adaptive.enabled is not supported in streaming DataFrames/Datasets",
     "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution" ->
-      "Disabling AQE since AQE is not supported in stateful workloads")
+      "Disabling AQE since AQE is not supported in stateful workloads",
+    "org.apache.spark.sql.util.ExecutionListenerBus" ->
+      "Listener Listener threw an exception")
 
   private object SparkLogging extends Logging {
     def init(): Unit = { log; () }
@@ -166,6 +176,7 @@ object GraftSession {
       .config("spark.sql.artifact.isolation.enabled", ArtifactIsolation.toString)
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.GraftLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.GraftLocalFs].getName)
+      .config("spark.plugins", classOf[graft.io.HadoopConfPlugin].getName)
       // engine optimizer rules (top-1-per-key window → max_by rewrite)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // session-catalog tables (bucketed writes) land in tmp, not cwd

@@ -9,17 +9,34 @@ import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.Ingest
 import graft.stream.Pipeline
 
+/** A plan no strategy plans: running it fails in planning. */
+case class Unplannable() extends LeafNode {
+  override def output: Seq[Attribute] = Nil
+}
+
+/** A listener that throws on every failed query. */
+class ThrowingListener extends QueryExecutionListener {
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ()
+  override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+    throw new IllegalStateException("thrown by the listener")
+}
+
 /** The engine-wide settings [[GraftSession]] applies beyond plain
   * SQL confs: the generated-class cache size, one executor classloader
-  * for every session, the loggers it raises to ERROR and the two
-  * warnings it drops by text. */
+  * for every session, the loggers it raises to ERROR and the three
+  * messages it drops by text. */
 class GraftSessionSpec extends SparkSpec with LowStatePartitions {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -92,7 +109,10 @@ class GraftSessionSpec extends SparkSpec with LowStatePartitions {
     }
   }
 
-  test("a stateful stream logs neither AQE warning; those loggers' other warnings get through") {
+  /** The (logger, message) pairs logged at WARN or above while `body`
+    * runs and, if `awaited` is given, after it until a message
+    * containing `awaited` is seen (at most 30 s). */
+  private def logged(awaited: String = "")(body: => Unit): Seq[(String, String)] = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
     val capture = new AbstractAppender("graft-capture", null, null, true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
@@ -104,6 +124,21 @@ class GraftSessionSpec extends SparkSpec with LowStatePartitions {
     root.addAppender(capture, Level.WARN, null)
     ctx.updateLoggers()
     try {
+      body
+      val deadline = System.nanoTime() + 30000000000L
+      while (awaited.nonEmpty && !seen.asScala.exists(_._2.contains(awaited)) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("a stateful stream logs neither AQE warning; those loggers' other warnings get through") {
+    val logs = logged() {
       val dir = Files.createTempDirectory("graft-aqe").toString
       Files.createDirectories(Paths.get(s"$dir/topic"))
       Files.write(Paths.get(s"$dir/topic/f-0.json"), Seq(
@@ -121,12 +156,7 @@ class GraftSessionSpec extends SparkSpec with LowStatePartitions {
         LogManager.getLogger(logger).warn(s"$text (logged directly)")
         LogManager.getLogger(logger).warn(s"another warning from $logger")
       }
-    } finally {
-      root.removeAppender(capture.getName)
-      ctx.updateLoggers()
-      capture.stop()
     }
-    val logs = seen.asScala.toSeq
     GraftSession.QuietMessages.foreach { case (logger, _) =>
       val aqe = logs.filter { case (l, m) =>
         l == logger && (m.contains("AQE") || m.contains("spark.sql.adaptive.enabled"))
@@ -134,6 +164,25 @@ class GraftSessionSpec extends SparkSpec with LowStatePartitions {
       assert(aqe.isEmpty, aqe)
       assert(logs.contains(logger -> s"another warning from $logger"), logs)
     }
+  }
+
+  test("after an observe, a query that fails in planning logs no second trace from Spark's " +
+      "observation listener; another listener's error still gets through") {
+    val bus = "org.apache.spark.sql.util.ExecutionListenerBus"
+    val thrown = "Listener ThrowingListener threw an exception"
+    val observed = Observation("rows")
+    assert(spark.range(5).observe(observed, count(lit(1)).as("n")).collect().length === 5)
+    assert(observed.get("n") === 5L)
+    val thrower = new ThrowingListener
+    // Listeners run on the listener bus, in the order they were
+    // registered: the observation listener before this one.
+    val logs = logged(awaited = thrown) {
+      spark.listenerManager.register(thrower)
+      intercept[Exception](PlanBridge.ofRows(spark, Unplannable()).collect())
+    }
+    spark.listenerManager.unregister(thrower)
+    assert(logs.contains(bus -> thrown), logs)
+    assert(!logs.exists(_._2.contains("Listener Listener threw")), logs)
   }
 
   test("a query rebuilt after its local checkpoints are unpersisted returns the same rows") {
