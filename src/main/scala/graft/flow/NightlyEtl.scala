@@ -59,14 +59,15 @@ object NightlyEtl {
     }
     // The write counts its own rows (one scan of the extract); each
     // attempt observes through a fresh Observation, which fires once.
-    val written = retry(retries, delay) {
+    val (written, schema) = retry(retries, delay) {
       val rows = Observation("etl_rows")
       val partitioned = Ingest.withDateParts(source.read(spark), col(timeCol))
       sink.write(partitioned.observe(rows, count(lit(1)).as("rows")))
-      rows.get("rows").asInstanceOf[Long]
+      (rows.get("rows").asInstanceOf[Long], partitioned.schema)
     }
-    // post-write verification (L1 step 4): lake row count matches extract
-    val inLake = sink.read(spark).count()
+    // post-write verification (L1 step 4): lake row count matches
+    // extract, counted through the schema just written
+    val inLake = sink.read(spark, schema).count()
     require(inLake == written,
       s"verification failed: wrote $written rows, lake has $inLake")
     StageResult(sink.path, inLake)

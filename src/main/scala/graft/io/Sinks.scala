@@ -1,6 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Partitioned lake sink (B4): year/month/day layout + overwrite-per-run
   * (K1/K4 — timescale_to_deltalake.py:33-37). Overwrite is `dynamic`: it
@@ -32,6 +33,12 @@ final case class LakeSink(
   }
 
   def read(spark: SparkSession): DataFrame = spark.read.format("parquet").load(path)
+
+  /** The lake read through `schema`, the schema of the frame a run just
+    * wrote here: the files are listed and scanned as by [[read]], without
+    * the footer job that infers the schema. */
+  def read(spark: SparkSession, schema: StructType): DataFrame =
+    spark.read.format("parquet").schema(schema).load(path)
 
   def probe(spark: SparkSession): Boolean =
     new java.io.File(path).getParentFile match {

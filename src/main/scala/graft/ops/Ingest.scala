@@ -18,8 +18,9 @@ import graft.ext.expr.DecodeJson
   * (`sensor_aggregation.py:22`).
   *
   * Built-ins, plus one generator kernel for the decode
-  * ([[graft.ext.expr.DecodeJson]]): the parse is Spark's, the kernel
-  * only changes how each message's bytes reach it.
+  * ([[graft.ext.expr.DecodeJson]]): it builds the row of each canonical
+  * message in one byte scan and leaves every other message to Spark's
+  * parser.
   */
 object Ingest {
 
@@ -44,20 +45,27 @@ object Ingest {
     * `ignore-parse-errors` / `fail-on-missing-field=false` semantics.
     *
     * One generator, [[graft.ext.expr.DecodeJson]], parses each message
-    * once with Spark's own JSON parser and emits a row only for a
-    * message that parses: `from_json` would yield an all-NULL struct for
-    * a malformed one and need a corrupt-record column to tell the two
-    * apart. The kernel feeds the parser the message's UTF-8 bytes, not a
-    * per-message char decoder. */
+    * once and emits a row only for a message that parses: `from_json`
+    * would yield an all-NULL struct for a malformed one and need a
+    * corrupt-record column to tell the two apart. A flat message of the
+    * schema without escapes, and without whitespace but for one space
+    * after a colon or comma (the shapes [[encode]] and Python's
+    * `json.dumps` write), is scanned from its bytes; every other goes
+    * to Spark's own JSON parser, fed the message's UTF-8 bytes. The rows
+    * are Spark's either way. */
   def decode(df: DataFrame, json: Column): DataFrame =
     df.select(DecodeJson.decodeJson(json, MessageSchema))
 
   /** C1 event-time projection: ISO-8601 'T'-separated string → timestamp.
     * Keeps the reference's literal SQL `REPLACE` (`replace`, no regex;
-    * Spark parses ISO-8601 natively, but the contract is the expression). */
+    * Spark parses ISO-8601 natively, but the contract is the expression).
+    * A try-cast to `timestamp_ntz`: the same value as `to_timestamp_ntz`
+    * for every string that parses, and NULL, like a missing field, for
+    * one that does not, where `to_timestamp_ntz` under ANSI mode throws
+    * and ends the stream. */
   def withEventTime(df: DataFrame, tsString: Column): DataFrame =
     df.withColumn("event_time",
-      to_timestamp_ntz(replace(tsString, lit("T"), lit(" "))))
+      replace(tsString, lit("T"), lit(" ")).try_cast(TimestampNTZType))
 
   /** C3 date-part derivation for partitioned lake writes
     * (`spark-jobs/timescale_to_deltalake.py:36`). */

@@ -114,6 +114,19 @@ class NightlyEtlSpec extends SparkSpec with graft.LowStatePartitions {
     assert(missing.getMessage.contains("source probe failed"))
   }
 
+  test("one runTable call runs 4 jobs: the source's footer read, the write and the verify count's two") {
+    val dir = tmp()
+    spark.range(0, 48, 1, 2)
+      .select(timestamp_seconds(lit(1735689600L) + col("id") * 3600L).cast("timestamp_ntz").as("timestamp"),
+        col("id").cast("double").as("value"))
+      .write.parquet(s"$dir/src")
+    val sink = LakeSink(s"$dir/lake")
+    var res: NightlyEtl.StageResult = null
+    val jobs = jobsIn("run") { res = NightlyEtl.runTable(spark, ParquetSource(s"$dir/src"), sink, "timestamp") }
+    assert(res.rows == 48L)
+    assert(jobs == 4)
+  }
+
   test("overwrite re-run is idempotent (K4)") {
     val dir = tmp()
     Seq(("2025-03-05T00:00:00", 1.0), ("2025-03-05T01:00:00", 2.0))

@@ -124,10 +124,30 @@ class IngestSpec extends SparkSpec with graft.LowStatePartitions {
     assert(out.map(_._1) == Seq(Some("2025-11-20 10:30:45"),
       Some("2025-11-20 10:30:45"), Some(" 2025-11-20  10:30:45 "), None))
     assert(out.forall { case (l, r) => l == r })
-    val parseable = df.filter(col("s").isNull || !col("s").startsWith("T"))
-    val ts = Ingest.withEventTime(parseable, col("s"))
+    // The string that does not parse gives NULL, as a missing one does.
+    val ts = Ingest.withEventTime(df, col("s"))
       .select(col("event_time").cast("string")).as[Option[String]].collect().toSeq
-    assert(ts == Seq(Some("2025-11-20 10:30:45"), Some("2025-11-20 10:30:45"), None))
+    assert(ts == Seq(Some("2025-11-20 10:30:45"), Some("2025-11-20 10:30:45"), None, None))
+  }
+
+  test("encode → decode returns bit-identical doubles for every form Spark's JSON writer prints (C7)") {
+    val values = Seq(1.0E-4, 1.0E21, -0.0, 0.0, 42.0, -42.0, 87.42, 0.1 + 0.2, 1.0E7, 1.0E-3,
+      9007199254740993.0, Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, Double.MaxValue,
+      Double.MinValue, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val src = values.zipWithIndex.map { case (v, i) => (s"M-$i", "t", v) }
+      .toDF("machine_id", "sensor_type", "value")
+      .withColumn("event_time", to_timestamp_ntz(lit("2025-11-20 10:00:00")))
+    val encoded = Ingest.encode(src)
+    val printed = encoded.select("value").as[String].collect().map(_.replaceAll(".*\"value\":", ""))
+    assert(Seq("1.0E-4}", "1.0E21}", "-0.0}", "42.0}", "4.9E-324}", "\"NaN\"}", "\"-Infinity\"}")
+      .forall(printed.contains), printed.mkString(" "))
+    val decoded = Ingest.decode(encoded, col("value")).select("machine_id", "value")
+      .as[(String, Double)].collect().toMap
+    val bits = java.lang.Double.doubleToRawLongBits _
+    assert(decoded.size == values.size)
+    values.zipWithIndex.foreach { case (v, i) =>
+      assert(bits(decoded(s"M-$i")) == bits(v), s"$v decoded as ${decoded(s"M-$i")}")
+    }
   }
 }
 

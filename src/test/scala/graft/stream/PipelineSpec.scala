@@ -534,6 +534,35 @@ class PipelineSpec extends SparkSpec with graft.LowStatePartitions {
     assert(aggRows == 2)  // 10:00 windows finalized by the 10:02:30 row
   }
 
+  test("a malformed timestamp gives a NULL event time: both queries finish with the valid messages' windows") {
+    def msg(t: String, m: String, v: Double) =
+      s"""{"timestamp":"$t","machine_id":"$m","sensor_type":"temperature","value":$v}"""
+    val valid = Seq(msg("2025-01-01T10:00:10", "CNC-001", 85.5),
+      msg("2025-01-01T10:00:20", "LATHE-002", 1.4), msg("2025-01-01T10:02:30", "CNC-001", 86.1))
+    val malformed = msg("garbage", "PRESS-003", 150.0)
+    /** Raw rows as (machine, timestamp is NULL) and the windows, from
+      * one `Pipeline.run` over `lines`. */
+    def run(lines: Seq[String]): (Seq[(String, Boolean)], Set[String]) = {
+      val dir = tmp()
+      Files.write(java.nio.file.Paths.get(s"$dir/batch1.json"), lines.mkString("\n").getBytes)
+      var raw = Seq.empty[(String, Boolean)]
+      var windows = Set.empty[String]
+      val (rq, aq) = Pipeline.run(spark, graft.io.JsonDirSource(dir).readStream(spark),
+        writeRaw = b => raw ++= b.select(col("machine_id"), col("timestamp").isNull)
+          .as[(String, Boolean)].collect(),
+        writeAgg = b => windows ++= b.collect().map(_.toString),
+        checkpointDir = s"$dir/ckpt")
+      rq.awaitTermination(60000); aq.awaitTermination(60000)
+      assert(rq.exception.isEmpty && aq.exception.isEmpty, (rq.exception, aq.exception))
+      assert(!rq.isActive && !aq.isActive)
+      (raw.sorted, windows)
+    }
+    val (raw, windows) = run(valid.take(2) ++ Seq(malformed) ++ valid.drop(2))
+    assert(raw == Seq(("CNC-001", false), ("CNC-001", false), ("LATHE-002", false), ("PRESS-003", true)))
+    val (_, validWindows) = run(valid)
+    assert(validWindows.size == 2 && windows == validWindows)
+  }
+
   test("a streaming file sink's directory read honours _spark_metadata: a stray part file is not read") {
     val dir = tmp()
     val ms = MemoryStream[SensorReading](spark)
