@@ -147,7 +147,7 @@ object NightlyEtl {
     retry(retries, delay) {
       require(sink.probe(spark), s"sink probe failed: $sink")
     }
-    val counts = retry(retries, delay) {
+    val (counts, schema) = retry(retries, delay) {
       val st = graft.ext.CorpusPipeline.build(source.read(spark))
       val cs = Seq(
         "base" -> st.base.count(),
@@ -182,10 +182,11 @@ object NightlyEtl {
         s"packing must cover every mixture survivor exactly once: " +
           s"${m("packed")} != ${m("after_mixture")}")
       sink.write(st.packed)
-      cs
+      (cs, st.packed.schema)
     }
     val packedRows = counts.toMap.apply("packed")
-    val inLake = sink.read(spark).count()
+    // counted through the schema just written: no footer job
+    val inLake = sink.read(spark, schema).count()
     require(inLake == packedRows,
       s"verification failed: packed $packedRows rows, lake has $inLake")
     counts.map { case (n, r) => StageResult(n, r) } :+
@@ -219,7 +220,7 @@ object NightlyEtl {
     retry(retries, delay) {
       require(sink.probe(spark), s"sink probe failed: $sink")
     }
-    val counts = retry(retries, delay) {
+    val (counts, schema) = retry(retries, delay) {
       val st = graft.ext.CorpusPipeline
         .buildIncrementalStages(source.read(spark))
       val packed = st.packed.localCheckpoint(true)
@@ -255,10 +256,11 @@ object NightlyEtl {
       require(leaked == 0,
         s"$leaked retro-retracted docs still in the packed output")
       sink.write(packed)
-      cs
+      (cs, packed.schema)
     }
     val packedRows = counts.toMap.apply("packed")
-    val inLake = sink.read(spark).count()
+    // counted through the schema just written: no footer job
+    val inLake = sink.read(spark, schema).count()
     require(inLake == packedRows,
       s"verification failed: packed $packedRows rows, lake has $inLake")
     counts.map { case (n, r) => StageResult(n, r) } :+

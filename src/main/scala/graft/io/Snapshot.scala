@@ -808,6 +808,70 @@ object Snapshot {
         .filter(_.startsWith("ts\t")).map(_.stripPrefix("ts\t").toLong)
     } catch { case _: java.io.FileNotFoundException => None }
 
+  /** Timestamp → version over the publish stamps (Delta's
+    * `timestampAsOf`): the LAST version whose stamp is ≤ `tsMillis`.
+    * Fails when `tsMillis` predates the first commit, exactly like
+    * Delta. */
+  def versionAtOrBefore(fs: FileSystem, logPath: Path, tsMillis: Long): Int = {
+    val versions = listVersions(fs, logPath)
+    require(versions.nonEmpty, s"no commits at ${logPath.getParent}")
+    val i = firstStampedAfter(fs, logPath, versions, tsMillis)
+    require(i > 0,
+      s"timestampAsOf($tsMillis) predates the first commit at ${logPath.getParent}")
+    versions(i - 1)
+  }
+
+  /** The mirror (Delta's `startingTimestamp`): the FIRST version whose
+    * stamp is ≥ `tsMillis`; a timestamp past the head resolves to
+    * head + 1 (future commits only), an empty log to 0. */
+  def versionAtOrAfter(fs: FileSystem, logPath: Path, tsMillis: Long): Int = {
+    val versions = listVersions(fs, logPath)
+    if (versions.isEmpty) 0
+    else {
+      val i = firstStampedAfter(fs, logPath, versions, tsMillis - 1)
+      if (i == versions.size) versions.last + 1 else versions(i)
+    }
+  }
+
+  /** Index of the first of `versions` stamped after `tsMillis`
+    * (`versions.size` when none is) — a binary search, O(log versions)
+    * probes. Publish stamps are STRICTLY INCREASING by construction
+    * (the in-commit-timestamps stamp in `tryPublish`: max(wall clock,
+    * prev ts + 1)), so the search is correct under clock skew across
+    * writers and same-millisecond bursts. Each probe is a fixed-size
+    * [[tailTs]] read, whatever the commit's manifest size; commits
+    * predating the `ts` line count as infinitely old. */
+  private def firstStampedAfter(fs: FileSystem, logPath: Path,
+      versions: Seq[Int], tsMillis: Long): Int = {
+    def tsOf(v: Int): Long =
+      tailTs(fs, new Path(logPath, f"$v%08d.commit")).getOrElse(Long.MinValue)
+    var lo = 0
+    var hi = versions.size
+    while (lo < hi) {
+      val mid = (lo + hi) / 2
+      if (tsOf(versions(mid)) > tsMillis) hi = mid else lo = mid + 1
+    }
+    lo
+  }
+
+  /** Schema evolution on the read side (Delta's mergeSchema
+    * semantic): `files` under `root` read as the UNION of their
+    * footers' fields, older files null-filling columns they predate —
+    * so an append that adds a column needs no table rewrite, and time
+    * travel to a pre-evolution snapshot still sees the narrow schema
+    * (SnapshotSpec). The schema of a log that records none (pre-meta
+    * logs), for the Lake and the DSv2 connector alike. Cost: one footer
+    * read per file at planning; at production scale the log would
+    * carry the schema per commit and skip the footer pass — the read
+    * semantics are identical. */
+  def readFiles(spark: SparkSession, root: Path,
+      files: Seq[FileStat]): DataFrame =
+    if (files.isEmpty)
+      spark.emptyDataFrame
+    else
+      spark.read.option("mergeSchema", "true").parquet(files.map(f =>
+        new Path(root, f.path).toString): _*)
+
   /** Parse ONE commit record (the shared line grammar). */
   private def parseCommit(fs: FileSystem, p: Path, v: Int): Commit = {
     logFilesParsed.incrementAndGet()
@@ -1611,37 +1675,10 @@ object Snapshot {
     }
 
     /** Timestamp-based time travel (Delta's `timestampAsOf`): the last
-      * version whose publish timestamp is ≤ `tsMillis`. Resolution is
-      * a BINARY SEARCH over the version listing — O(log versions)
-      * commit-file parses, no full replay. Publish timestamps are
-      * STRICTLY INCREASING by construction (the in-commit-timestamps
-      * stamp in [[tryPublish]]: max(wall clock, prev ts + 1)), so the
-      * search is correct under clock skew across writers and
-      * same-millisecond bursts. Commits from logs predating the `ts` line resolve
-      * as "infinitely old". Fails when `tsMillis` predates the first
-      * commit, exactly like Delta. */
-    def versionAtTimestamp(tsMillis: Long): Int = {
-      val versions = Snapshot.listVersions(fs, logPath)
-      require(versions.nonEmpty, s"no commits at $root")
-      // O(1) per probe: the ts line is always a commit's LAST line
-      // (tryPublish appends it), so each binary-search step is a
-      // fixed-size tail read — an overwrite commit's O(manifest)
-      // record costs the same 256 bytes as an append's. Legacy
-      // commits without a ts line resolve as "infinitely old".
-      def tsOf(v: Int): Long =
-        Snapshot.tailTs(fs, new Path(logPath, f"$v%08d.commit"))
-          .getOrElse(Long.MinValue)
-      require(tsOf(versions.head) <= tsMillis,
-        s"timestampAsOf($tsMillis) predates the first commit at $root")
-      // binary search: greatest version with ts <= tsMillis
-      var lo = 0
-      var hi = versions.size - 1
-      while (lo < hi) {
-        val mid = (lo + hi + 1) / 2
-        if (tsOf(versions(mid)) <= tsMillis) lo = mid else hi = mid - 1
-      }
-      versions(lo)
-    }
+      * version whose publish timestamp is ≤ `tsMillis` — the log's
+      * O(log versions) tail-read search, [[Snapshot.versionAtOrBefore]]. */
+    def versionAtTimestamp(tsMillis: Long): Int =
+      Snapshot.versionAtOrBefore(fs, logPath, tsMillis)
 
     /** [[readAsOf]] at [[versionAtTimestamp]]'s resolution. */
     def readAsOfTimestamp(tsMillis: Long): DataFrame =
@@ -1830,21 +1867,8 @@ object Snapshot {
       else rows.foldLeft(readState(entries, logical = ck.schema))(_ filter _)
     }
 
-    /** Schema evolution on the read side (Delta's mergeSchema
-      * semantic): a snapshot whose commits carry different schemas
-      * reads as the UNION of their fields, older files null-filling
-      * columns they predate — so an append that adds a column needs no
-      * table rewrite, and time travel to a pre-evolution snapshot
-      * still sees the narrow schema (SnapshotSpec). Cost: one footer
-      * read per file at planning; at production scale the log would
-      * carry the schema per commit and skip the footer pass — the
-      * read semantics are identical. */
     private def readFiles(files: Seq[FileStat]): DataFrame =
-      if (files.isEmpty)
-        spark.emptyDataFrame
-      else
-        spark.read.option("mergeSchema", "true").parquet(files.map(f =>
-          new Path(rootPath, f.path).toString): _*)
+      Snapshot.readFiles(spark, rootPath, files)
 
     /** A row's source file as the log's rel path — derivable on the
       * read side from `_metadata.file_path`, matching the

@@ -15,6 +15,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory,
   LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.sources.{EqualTo, Filter}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -101,7 +102,7 @@ class SensorJsonBatchWrite(path: String, schema: StructType) extends BatchWrite 
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
-    val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = root.getFileSystem(PlanBridge.activeHadoopConf())
     // Committed names must sort strictly AFTER every file already in
     // the topic — the streaming offset contract (a lexicographic
     // boundary) breaks if an append can insert a name inside the
@@ -127,7 +128,7 @@ class SensorJsonBatchWrite(path: String, schema: StructType) extends BatchWrite 
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path).getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = new Path(path).getFileSystem(PlanBridge.activeHadoopConf())
     fs.delete(new Path(stagingDir), true)
   }
 }
@@ -225,7 +226,7 @@ object SensorJsonScan {
   /** Lexicographically-sorted data files (stable offset base). */
   def listFiles(path: String): Array[String] = {
     val root = new Path(path)
-    val fs = root.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val fs = root.getFileSystem(PlanBridge.activeHadoopConf())
     if (!fs.exists(root)) Array.empty
     else fs.listStatus(root)
       .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&

@@ -4,16 +4,11 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader,
@@ -21,9 +16,11 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
   SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
   ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{BooleanType, DateType, DoubleType,
-  FloatType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -52,18 +49,18 @@ import graft.io.Snapshot
   *    rewritten file's carried-over rows would re-emit (with the
   *    option, they do, documented at-least-once for rewrites);
   *  - BATCH_READ of the latest snapshot through the same scan;
-  *  - COLUMN PRUNING pushed to the parquet page level: each reader
-  *    builds its file's projection from (file schema ∩ required
-  *    columns), so a `select(k)` never decodes other columns' pages —
-  *    and a column added by schema evolution null-fills for files
-  *    that predate it (the Lake.readFiles mergeSchema semantic).
+  *  - COLUMN PRUNING pushed to the parquet page level: each file is
+  *    read under the required columns only, so a `select(k)` never
+  *    decodes other columns' pages — and a column (or nested field)
+  *    added by schema evolution null-fills for files that predate it
+  *    (the Lake.readFiles mergeSchema semantic).
   *
-  * Readers decode parquet through parquet-hadoop's Group API directly
-  * (no SparkSession on executors in a V2 reader) — flat primitive
-  * schemas (long/int/double/float/boolean/string), which is exactly
-  * what the lake's tables are. At 100 TB: planning reads the
-  * file-count-sized log, each micro-batch scans only its commits' own
-  * files, and partitions parallelize per file.
+  * Readers decode parquet through Spark's own parquet reader — the
+  * one `Snapshot.Lake`'s reads use — built on the driver and shipped
+  * to the tasks, so the connector reads every Spark type the lake
+  * writes. At 100 TB: planning reads the file-count-sized log, each
+  * micro-batch scans only its commits' own files, and partitions
+  * parallelize per file.
   */
 class SnapshotStreamSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -91,7 +88,9 @@ class SnapshotStreamSource extends TableProvider {
 }
 
 object SnapshotStreamSource {
-  private def conf = new Configuration()
+  // The session's Hadoop conf: a lake on a filesystem registered there
+  // (an object store's endpoint and credentials) resolves here too.
+  private def conf = PlanBridge.activeHadoopConf()
 
   /** The change-feed metadata columns (Delta CDF's `_change_type` /
     * `_commit_version`), appended to the table schema when
@@ -146,30 +145,13 @@ object SnapshotStreamSource {
   }
 
   /** `startingTimestamp` (Delta's stream option): the FIRST version
-    * whose publish wall-clock is at or after `tsMillis` — binary
-    * search over the version listing (O(log versions) file parses,
-    * the versionAtTimestamp discipline). A timestamp past the head
-    * resolves to head + 1: the stream starts empty and picks up
-    * future commits only. Mutually exclusive with `startingVersion`. */
+    * whose publish wall-clock is at or after `tsMillis`
+    * ([[Snapshot.versionAtOrAfter]]). A timestamp past the head
+    * resolves to head + 1: the stream starts empty and picks up future
+    * commits only. Mutually exclusive with `startingVersion`. */
   def versionAtOrAfter(root: String, tsMillis: Long): Int = {
-    val fs = logPathOf(root).getFileSystem(conf)
     val logPath = logPathOf(root)
-    val versions = Snapshot.listVersions(fs, logPath)
-    if (versions.isEmpty) return 0
-    // O(1) per probe (the versionAtTimestamp discipline): the ts line
-    // is a commit's last line, so each step is a fixed-size tail read
-    // regardless of the commit's manifest size.
-    def tsOf(v: Int): Long =
-      Snapshot.tailTs(fs, new Path(logPath, f"$v%08d.commit"))
-        .getOrElse(Long.MinValue)
-    if (tsOf(versions.last) < tsMillis) return versions.last + 1
-    var lo = 0
-    var hi = versions.size - 1
-    while (lo < hi) { // smallest version with ts >= tsMillis
-      val mid = (lo + hi) / 2
-      if (tsOf(versions(mid)) >= tsMillis) hi = mid else lo = mid + 1
-    }
-    versions(lo)
+    Snapshot.versionAtOrAfter(logPath.getFileSystem(conf), logPath, tsMillis)
   }
 
   /** The recorded schema with the lake's field metadata INTACT
@@ -190,29 +172,6 @@ object SnapshotStreamSource {
     val logPath = logPathOf(root)
     Snapshot.checkpointAt(logPath.getFileSystem(conf), logPath,
       Int.MaxValue).props
-  }
-
-  /** `timestampAsOf` resolution for the catalog's TIMESTAMP AS OF:
-    * the LAST version whose publish stamp is ≤ `tsMillis` —
-    * Lake.versionAtTimestamp's O(log n) tail-read binary search,
-    * session-free. */
-  def versionAtOrBefore(root: String, tsMillis: Long): Int = {
-    val logPath = logPathOf(root)
-    val fs = logPath.getFileSystem(conf)
-    val versions = Snapshot.listVersions(fs, logPath)
-    require(versions.nonEmpty, s"no commits at $root")
-    def tsOf(v: Int): Long =
-      Snapshot.tailTs(fs, new Path(logPath, f"$v%08d.commit"))
-        .getOrElse(Long.MinValue)
-    require(tsOf(versions.head) <= tsMillis,
-      s"timestampAsOf($tsMillis) predates the first commit at $root")
-    var lo = 0
-    var hi = versions.size - 1
-    while (lo < hi) { // greatest version with ts <= tsMillis
-      val mid = (lo + hi + 1) / 2
-      if (tsOf(versions(mid)) <= tsMillis) lo = mid else hi = mid - 1
-    }
-    versions(lo)
   }
 
   /** The scan's starting version from the option pair. */
@@ -265,38 +224,57 @@ object SnapshotStreamSource {
     }.toArray
 
   /** Masked row positions per DATA file for a batch plan's DV'd
-    * entries: the deletion-vector parquet files — (data_path, pos)
-    * rows, deletion-sized by construction — are read ONCE at planning
-    * through the same Group API the partition readers use (no
-    * SparkSession needed), grouped by the data file's rel path and
-    * sorted so the sequential readers skip with a single cursor. At
-    * 100 TB this is the Delta shape: the driver touches only the
-    * deletion-sized dv files; the table's data files are never opened
-    * at planning. */
+    * entries: the deletion-vector parquet directories — (data_path,
+    * pos) rows, deletion-sized by construction — are read ONCE at
+    * planning on the driver through the same [[fileReader]] the
+    * partition readers use (no job), grouped by the data file's rel
+    * path and sorted so the sequential readers skip with a single
+    * cursor. At 100 TB this is the Delta shape: the driver touches only
+    * the deletion-sized dv files; the table's data files are never
+    * opened at planning. */
   private[v2] def dvPositions(root: String, dvPaths: Seq[String])
       : Map[String, Array[Long]] = {
-    val acc = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-    dvPaths.distinct.foreach { dp =>
-      val reader = ParquetReader.builder(new GroupReadSupport(),
-        new Path(root, dp)).withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          acc.getOrElseUpdate(g.getString("data_path", 0),
-            scala.collection.mutable.ArrayBuffer.empty) +=
-            g.getLong("pos", 0)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
+    val fs = new Path(root).getFileSystem(conf)
+    val parts = dvPaths.distinct
+      .flatMap(dp => fs.listStatus(new Path(root, dp)).map(_.getPath))
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+    val read = fileReader(DvSchema)
     // sorted + dedup'd: the write side already dedups carried
     // positions, but the reader's single-cursor skip REQUIRES strict
     // ascension — a duplicate would strand the cursor behind the
     // stream and un-mask every later position.
-    acc.iterator.map { case (k, v) =>
-      k -> v.distinct.sorted.toArray }.toMap
+    parts
+      .flatMap(p => read(wholeFile(p.toString))
+        .map(r => r.getUTF8String(0).toString -> r.getLong(1)))
+      .groupMap(_._1)(_._2)
+      .map { case (k, v) => k -> v.distinct.sorted.toArray }
   }
+
+  private val DvSchema = StructType(Seq(
+    StructField("data_path", StringType), StructField("pos", LongType)))
+
+  /** Spark's parquet reader over whole lake files, projected to
+    * `schema` by name: columns (and nested fields) a file lacks
+    * null-fill. Built on the driver with the session active, under the
+    * session's Hadoop conf; the returned function is serializable and
+    * reads on executors and, for the DV files, on the driver. No
+    * filters are pushed, so every row of a file is read in order. */
+  private[v2] def fileReader(schema: StructType)
+      : PartitionedFile => Iterator[InternalRow] = {
+    val spark = SparkSession.active
+    new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+      dataSchema = schema, partitionSchema = StructType(Nil),
+      requiredSchema = schema, filters = Nil,
+      options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      hadoopConf = PlanBridge.sessionHadoopConf(spark))
+  }
+
+  /** All of `file` as one split: every row group's midpoint falls in
+    * [0, Long.MaxValue), so a row counter equals the
+    * `_metadata.row_index` the DV writer recorded. */
+  private[v2] def wholeFile(file: String): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(file),
+      0L, Long.MaxValue)
 
   /** Commits in (fromExclusive, toInclusive] — parses only the window,
     * never the whole log (the micro-batch planning read). */
@@ -328,51 +306,14 @@ object SnapshotStreamSource {
   def stateAt(root: String, asOf: Int)
       : Seq[(Snapshot.FileStat, Option[String])] = ckAt(root, asOf).state
 
-  /** Union of the live files' footer schemas in first-appearance order
-    * (the mergeSchema semantic). One footer read per COMMIT directory,
-    * not per file — a commit's files are written by one frame and
-    * share a schema — so planning cost is commit-count-sized; at
-    * production scale the log would carry the schema per commit and
-    * skip even that. */
+  /** The schema of a log that records none (legacy pre-meta logs):
+    * the live files' footer union, inferred as `Lake.read()` infers it
+    * ([[Snapshot.readFiles]]). */
   def unionSchema(root: String): StructType = {
     val live = stateAt(root, Int.MaxValue).map(_._1)
     require(live.nonEmpty,
       s"SnapshotStreamSource: no live files at $root — commit first")
-    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-    val seenDirs = scala.collection.mutable.Set.empty[String]
-    live.foreach { f =>
-      val dir = f.path.split('/').dropRight(1).mkString("/")
-      if (seenDirs.add(dir)) {
-        footerSchema(new Path(root, f.path)).getFields.asScala.foreach { t =>
-          if (!fields.contains(t.getName)) fields(t.getName) = toStructField(t)
-        }
-      }
-    }
-    StructType(fields.values.toSeq)
-  }
-
-  def footerSchema(p: Path): MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
-
-  private def toStructField(t: Type): StructField = {
-    val dt = t.asPrimitiveType().getPrimitiveTypeName match {
-      case PrimitiveTypeName.INT64 => LongType
-      case PrimitiveTypeName.INT32
-        if t.asPrimitiveType().getLogicalTypeAnnotation != null &&
-          t.asPrimitiveType().getLogicalTypeAnnotation.isInstanceOf[
-            org.apache.parquet.schema.LogicalTypeAnnotation
-              .DateLogicalTypeAnnotation] => DateType
-      case PrimitiveTypeName.INT32 => IntegerType
-      case PrimitiveTypeName.DOUBLE => DoubleType
-      case PrimitiveTypeName.FLOAT => FloatType
-      case PrimitiveTypeName.BOOLEAN => BooleanType
-      case PrimitiveTypeName.BINARY => StringType
-      case other => sys.error("SnapshotStreamSource supports flat " +
-        s"primitive columns; got $other for ${t.getName}")
-    }
-    StructField(t.getName, dt)
+    Snapshot.readFiles(SparkSession.active, new Path(root), live).schema
   }
 }
 
@@ -506,7 +447,7 @@ class SnapshotScan(root: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(physRequired)
+    new SnapshotReaderFactory(physRequired, readChangeFeed)
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new SnapshotMicroBatch(root, physRequired, startingVersion,
@@ -597,7 +538,7 @@ class SnapshotMicroBatch(root: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(required)
+    new SnapshotReaderFactory(required, readChangeFeed)
 
   override def commit(end: Offset): Unit = () // the log is immutable
   override def stop(): Unit = ()
@@ -613,66 +554,61 @@ case class LakeFilePartition(file: String, commitVersion: Long = -1L,
     changeType: String = null,
     masked: Array[Long] = Array.empty) extends InputPartition
 
-class SnapshotReaderFactory(required: StructType)
+/** Reads each [[LakeFilePartition]] whole through one
+  * [[SnapshotStreamSource.fileReader]], built on the driver when the
+  * scan or micro-batch creates this factory. `required` is in PHYSICAL
+  * names. */
+class SnapshotReaderFactory(required: StructType, readChangeFeed: Boolean)
     extends PartitionReaderFactory {
+  // `_commit_version` is a planning constant, never read from a file;
+  // `_change_type` is read (change files store it) and, on add-file
+  // partitions, overridden by the partition's constant.
+  private val fileSchema =
+    if (readChangeFeed) StructType(required.filterNot(_.name == "_commit_version"))
+    else required
+  private val read = SnapshotStreamSource.fileReader(fileSchema)
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[LakeFilePartition]
-    new SnapshotParquetReader(p.file, required, p.commitVersion,
-      p.changeType, p.masked)
+    new LakeFileReader(read(SnapshotStreamSource.wholeFile(p.file)), p.masked,
+      if (readChangeFeed) cdfRow(p) else identity)
+  }
+
+  /** A change-feed row from a file row: `_commit_version` and (when
+    * the partition sets it) `_change_type` are the partition's
+    * constants, every other column is the file's. */
+  private def cdfRow(p: LakeFilePartition): InternalRow => InternalRow = {
+    val slots: Array[InternalRow => Any] = required.fields.map { f =>
+      f.name match {
+        case "_commit_version" =>
+          val v = p.commitVersion
+          (_: InternalRow) => v
+        case "_change_type" if p.changeType != null =>
+          val c = UTF8String.fromString(p.changeType)
+          (_: InternalRow) => c
+        case name =>
+          val j = fileSchema.fieldIndex(name)
+          (r: InternalRow) => if (r.isNullAt(j)) null else r.get(j, f.dataType)
+      }
+    }
+    r => new GenericInternalRow(slots.map(_(r)))
   }
 }
 
-/** Raw parquet → InternalRow for ONE lake file: projection = (file
-  * schema ∩ required columns) pushed to the page level via
-  * PARQUET_READ_SCHEMA; required columns the file predates (schema
-  * evolution) null-fill. */
-class SnapshotParquetReader(file: String, required: StructType,
-    commitVersion: Long = -1L, changeType: String = null,
-    masked: Array[Long] = Array.empty)
-    extends PartitionReader[InternalRow] {
-
-  /** Constant value for a change-feed metadata column, or None for a
-    * data column. A cdc-file partition passes changeType = null —
-    * its `_change_type` is STORED in the file (both sides' rows live
-    * there) and reads like any data column; `_commit_version` stays a
-    * planning-time constant either way. */
-  private def cdfConst(name: String): Option[Any] = name match {
-    case "_change_type" if changeType != null =>
-      Some(UTF8String.fromString(changeType))
-    case "_commit_version" if commitVersion >= 0 => Some(commitVersion)
-    case _ => None
-  }
-  private val path = new Path(file)
-  private val fileSchema = SnapshotStreamSource.footerSchema(path)
-  // Type, not PrimitiveType: STRUCT columns arrive as parquet GROUPS
-  // (round 20, nested schema tier) — the projection ships the file's
-  // own group type whole and [[get]] converts recursively.
-  private val present: Map[String, Type] =
-    fileSchema.getFields.asScala.map(t => t.getName -> t).toMap
-  private val projected = required.fields.filter(f => present.contains(f.name))
-
-  private val reader: ParquetReader[Group] = {
-    val conf = new Configuration()
-    if (projected.nonEmpty) {
-      val proj = new MessageType("projection",
-        projected.map(f => present(f.name): Type).toList.asJava)
-      conf.set(ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
-    }
-    ParquetReader.builder(new GroupReadSupport(), path).withConf(conf).build()
-  }
-
-  private var current: Group = _
-  // Deletion-vector skip: the reader is sequential, `masked` is
-  // sorted, so one cursor suffices — a masked index compares equal
-  // exactly once (rowIdx mirrors Spark's _metadata.row_index, which
-  // is what the write side recorded positions against).
+/** One lake file's rows in file order, deletion-vector positions
+  * skipped: `masked` is sorted, so one cursor suffices — a masked
+  * index compares equal exactly once (the row counter mirrors Spark's
+  * `_metadata.row_index`, which is what the write side recorded
+  * positions against). */
+class LakeFileReader(rows: Iterator[InternalRow], masked: Array[Long],
+    project: InternalRow => InternalRow) extends PartitionReader[InternalRow] {
+  private var current: InternalRow = _
   private var rowIdx = -1L
   private var mi = 0
 
   override def next(): Boolean = {
-    while (true) {
-      current = reader.read()
-      if (current == null) return false
+    while (rows.hasNext) {
+      current = rows.next()
       rowIdx += 1
       // self-healing catch-up: a stale cursor (defensive — positions
       // arrive strictly ascending) must never un-mask later rows
@@ -680,45 +616,15 @@ class SnapshotParquetReader(file: String, required: StructType,
       if (mi < masked.length && masked(mi) == rowIdx) mi += 1 // skip
       else return true
     }
-    false // unreachable
+    false
   }
 
-  /** One field of group `g` as its InternalRow encoding. STRUCTS
-    * recurse: inner fields the FILE's group type lacks (written before
-    * a nested additive evolution) null-fill, mirroring parquet schema
-    * clipping on the DataFrame read path. */
-  private def convert(g: org.apache.parquet.example.data.Group,
-      name: String, dt: org.apache.spark.sql.types.DataType): Any =
-    dt match {
-      case st: StructType =>
-        val sub = g.getGroup(name, 0)
-        val gt = sub.getType
-        InternalRow.fromSeq(st.fields.toIndexedSeq.map { sf =>
-          if (!gt.containsField(sf.name) ||
-              sub.getFieldRepetitionCount(sf.name) == 0) null
-          else convert(sub, sf.name, sf.dataType)
-        })
-      case LongType => g.getLong(name, 0)
-      case IntegerType => g.getInteger(name, 0)
-      case DoubleType => g.getDouble(name, 0)
-      case FloatType => g.getFloat(name, 0)
-      case BooleanType => g.getBoolean(name, 0)
-      case StringType => UTF8String.fromString(g.getString(name, 0))
-      // parquet DATE is INT32 days-since-epoch — exactly
-      // InternalRow's DateType encoding, a pass-through
-      case DateType => g.getInteger(name, 0)
-      case other => sys.error(s"unsupported type $other for $name")
-    }
+  override def get(): InternalRow = project(current)
 
-  override def get(): InternalRow = {
-    val values: Array[Any] = required.fields.map { f =>
-      if (cdfConst(f.name).isDefined) cdfConst(f.name).get
-      else if (!present.contains(f.name) ||
-          current.getFieldRepetitionCount(f.name) == 0) null
-      else convert(current, f.name, f.dataType)
-    }
-    InternalRow.fromSeq(values.toIndexedSeq)
+  // A drained reader has closed itself, and Spark closes an undrained
+  // one at task end; this closes one a LIMIT left open.
+  override def close(): Unit = rows match {
+    case c: java.io.Closeable => c.close()
+    case _ => ()
   }
-
-  override def close(): Unit = reader.close()
 }

@@ -390,9 +390,9 @@ object LakeQueries {
   // `props = struct(a: priority)`; v1 widens props with `b BIGINT` in
   // ONE metadata-only commit (asserted from the commit log — zero
   // add/rm/dv lines); v2 appends the odd-key slice carrying
-  // `b = cents`. Old files must null-fill props.b on read, on BOTH
-  // read paths (DataFrame parquet clipping AND the connector's
-  // recursive Group conversion — compared row-for-row in the query).
+  // `b = cents`. Old files must null-fill props.b on read, through
+  // BOTH front doors (Lake.read() AND the DSv2 connector, each through
+  // Spark's parquet clipping — compared row-for-row in the query).
   private val nestedDirs = scala.collection.mutable.Map.empty[String, String]
 
   private def nestedLake(s: SparkSession, d: String)
@@ -1395,9 +1395,8 @@ object LakeQueries {
     // Nested additive evolution (round 20): the struct-widening tier
     // end-to-end — a metadata-only evolve commit (zero add/rm/dv lines,
     // read from the log), pre-evolution files null-filling the new
-    // nested field, and the TWO read paths (DataFrame parquet clipping
-    // vs the connector's recursive Group conversion) agreeing
-    // row-for-row. The final aggregate replays relationally: even keys
+    // nested field, and the TWO front doors (Lake.read() vs the DSv2
+    // connector) agreeing row-for-row. The final aggregate replays relationally: even keys
     // predate the evolution (b NULL), odd keys carry b = cents.
     Query("lake_nested_evolve", { (s, d) =>
       val lake = nestedLake(s, d)

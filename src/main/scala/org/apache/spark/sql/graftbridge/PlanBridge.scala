@@ -23,6 +23,16 @@ object PlanBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.newHadoopConf()
 
+  /** [[sessionHadoopConf]] of the active session, else of the default
+    * one (threads that never set an active session: listener callbacks,
+    * custom pools driving table resolution); an empty conf only when no
+    * session exists. */
+  def activeHadoopConf(): org.apache.hadoop.conf.Configuration =
+    SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .map(sessionHadoopConf)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
   /** Truncate a DataFrame's logical plan at a persisted-RDD boundary
     * WITHOUT the InternalRow→Row→InternalRow round-trip of
     * `df.rdd` + `createDataFrame`: the physical plan's UnsafeRows are

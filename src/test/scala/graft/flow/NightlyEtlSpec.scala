@@ -307,9 +307,14 @@ class NightlyEtlSpec extends SparkSpec with graft.LowStatePartitions {
     assert(new java.io.File(s"$dir/packed/shard=0").exists(), "shard partition layout")
 
     // re-run is idempotent (K4 over the curation flow)
-    val res2 = NightlyEtl.runCorpus(spark, flaky, sink,
-      retries = 1, delay = 10.millis)
+    var res2 = Seq.empty[NightlyEtl.StageResult]
+    val jobs = jobsIn("corpus") {
+      res2 = NightlyEtl.runCorpus(spark, flaky, sink, retries = 1, delay = 10.millis)
+    }
     assert(res2.map(r => r.name -> r.rows).toMap == m)
+    // the stage counts, the write and the verify count: a verify that
+    // infers the lake's schema adds a footer job (75)
+    assert(jobs == 74)
   }
 
   test("incremental curation flow: state-probe audits + retry + partitioned lake") {
@@ -341,8 +346,13 @@ class NightlyEtlSpec extends SparkSpec with graft.LowStatePartitions {
     assert(m(sink.path) == m("packed"))
     assert(new java.io.File(s"$dir/packed_inc/shard=0").exists())
     // idempotent re-run (K4 over the incremental flow)
-    val res2 = NightlyEtl.runCorpusIncremental(spark, flaky, sink,
-      retries = 1, delay = 10.millis)
+    var res2 = Seq.empty[NightlyEtl.StageResult]
+    val jobs = jobsIn("corpus-inc") {
+      res2 = NightlyEtl.runCorpusIncremental(spark, flaky, sink, retries = 1, delay = 10.millis)
+    }
     assert(res2.map(r => r.name -> r.rows).toMap == m)
+    // the stage counts and audits, the write and the verify count: a
+    // verify that infers the lake's schema adds a footer job (157)
+    assert(jobs == 156)
   }
 }
